@@ -2,7 +2,7 @@
 parity re-checked under a session deliberately hostile to latent
 planning assumptions —
 
-- ``spark.sql.shuffle.partitions = 7`` (weird prime, not the tuned 32):
+- ``spark.sql.shuffle.partitions = 7`` (weird prime, not the default slot count):
   catches anything keyed on partition counts or ids;
 - ``spark.sql.exchange.reuse = false``: catches plans that silently
   rely on exchange dedup for two branches to see the same data (the

@@ -26,7 +26,12 @@ Design notes:
   falls through to an unhandled branch; the 400 is the documented fix).
 - Responses are ``application/json; charset=utf-8`` with
   ``ensure_ascii=False`` — the bucket names are Chinese (女/男/20岁以下)
-  and the dashboard consumes them verbatim.
+  and the dashboard consumes them verbatim. DATE/TIMESTAMP cells (a
+  sink partitioned by a date column reads it back as DATE) render as
+  ISO strings.
+- Any other failure (a plan that does not resolve against the served
+  frame, a provider that raises) is a 500 with a JSON error body, never
+  a connection dropped without a status.
 
 Scale: the HTTP layer adds no data path — every collect it triggers is
 one of the publisher plans, which prune to a single dt partition first
@@ -36,6 +41,7 @@ sidecar exactly like the reference's Spring app beside the Spark jobs.
 
 from __future__ import annotations
 
+import datetime
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -58,6 +64,12 @@ def _as_provider(x: DataFrame | Provider) -> Provider:
     return x if callable(x) else (lambda: x)
 
 
+def _json_default(o):
+    if isinstance(o, (datetime.date, datetime.datetime)):
+        return o.isoformat()
+    raise TypeError(f"Object of type {type(o).__name__} is not JSON serializable")
+
+
 class _Handler(BaseHTTPRequestHandler):
     # providers are injected per-server via the factory below
     dau_provider: Provider
@@ -67,7 +79,9 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _send(self, code: int, payload) -> None:
-        body = json.dumps(payload, ensure_ascii=False).encode("utf-8")
+        body = json.dumps(
+            payload, ensure_ascii=False, default=_json_default
+        ).encode("utf-8")
         self.send_response(code)
         self.send_header("Content-Type", "application/json; charset=utf-8")
         self.send_header("Content-Length", str(len(body)))
@@ -141,6 +155,8 @@ class _Handler(BaseHTTPRequestHandler):
             self._send(400, {"error": f"missing required param {e.args[0]!r}"})
         except ValueError as e:
             self._send(400, {"error": str(e)})
+        except Exception as e:  # noqa: BLE001 (every request gets a status)
+            self._send(500, {"error": f"{type(e).__name__}: {e}"})
 
 
 def publisher_server(

@@ -169,6 +169,49 @@ def test_http_errors(http_base):
     assert status == 404
 
 
+def _serve_once(dau, wide, path: str):
+    from sparkstreaming_realtime_project_spark.http_api import (
+        publisher_server,
+        serve_in_background,
+    )
+
+    server = publisher_server(dau, wide)
+    serve_in_background(server)
+    host, port = server.server_address
+    try:
+        return _get(f"http://{host}:{port}{path}")
+    finally:
+        server.shutdown()
+
+
+def test_http_failure_is_a_500_with_json_body(dau_table):
+    """A request that fails for any reason other than a bad parameter
+    still gets a status and a JSON body, not a dropped connection."""
+
+    def broken():
+        raise RuntimeError("sink unavailable")
+
+    status, out = _serve_once(
+        dau_table, broken, "/statsByItem?itemName=x&date=2024-01-02&t=age"
+    )
+    assert status == 500
+    assert "sink unavailable" in out["error"]
+
+
+def test_http_serves_date_columns_as_iso_strings(dau_table, wide_table):
+    """A wide frame carrying a DATE column (the order-wide sink read back
+    with its ``create_date`` partition) serves as ISO strings."""
+    from urllib.parse import quote
+
+    wide = wide_table.withColumn("create_date", wide_table.dt.cast("date"))
+    status, out = _serve_once(
+        dau_table, wide, f"/detailByItem?date=2024-01-02&itemName={quote('小米')}&pageSize=2"
+    )
+    assert status == 200
+    assert out["total"] == 3
+    assert {d["create_date"] for d in out["detail"]} == {"2024-01-02"}
+
+
 def test_http_reflects_live_streaming_sink(spark, tmp_path):
     """The provider contract end to end against the REAL streaming sink
     (http_api.py:12-15 claim): start the dau pipeline in availableNow

@@ -661,6 +661,81 @@ def test_restart_from_checkpoint_no_duplicates(spark, tmp_path):
     assert sorted(os.listdir(out)) == ["_MANIFEST", "_MANIFEST.v0", "gen=0"]
 
 
+def _store_instances(q) -> set[int]:
+    return {
+        op.numStateStoreInstances
+        for p in q.recentProgress
+        for op in p.stateOperators
+    }
+
+
+def test_fresh_stream_has_one_state_store_per_shuffle_partition(spark, dau_run):
+    """A fresh checkpoint sizes the dedup state to the session's
+    ``spark.sql.shuffle.partitions``: one store per partition."""
+    q, _ = dau_run
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _store_instances(q) == {partitions}
+
+
+def test_checkpoint_keeps_its_partition_count_across_restart(spark, tmp_path):
+    """The first start pins the partition count in the checkpoint's
+    offset log: a restart under a smaller session value keeps the
+    original 32 state stores, and the dedup state they hold."""
+    in_dir = tmp_path / "in"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    dim_user, dim_province = fx.dim_frames(spark)
+    os.makedirs(in_dir)
+    (in_dir / "batch-000.json").write_text(
+        fx.log_row("m1", fx.D1_10, uid="1", ar="11", page_id="home") + "\n"
+        + fx.log_row("m2", fx.D1_12, uid="2", ar="12", page_id="home") + "\n"
+    )
+
+    key = "spark.sql.shuffle.partitions"
+
+    def run_once(partitions: str):
+        spark.conf.set(key, partitions)
+        writer = dau_pipeline(
+            text_stream(spark, str(in_dir)), dim_user, dim_province, out, ckpt,
+            as_of=as_of(),
+        )
+        return run_to_completion(writer)
+
+    before = spark.conf.get(key)
+    try:
+        assert _store_instances(run_once("32")) == {32}
+        (in_dir / "batch-001.json").write_text(
+            fx.log_row("m1", fx.D1_10 + 5000, uid="1", ar="11", page_id="home") + "\n"
+            + fx.log_row("m7", fx.D1_12, uid="4", ar="11", page_id="home") + "\n"
+        )
+        assert _store_instances(run_once("2")) == {32}
+    finally:
+        spark.conf.set(key, before)
+
+    keys = [(r["mid"], str(r["dt"])) for r in read_sink(spark, out).collect()]
+    assert len(keys) == len(set(keys))
+    assert set(keys) == {
+        ("m1", "2024-01-01"), ("m2", "2024-01-01"), ("m7", "2024-01-01"),
+    }
+
+
+def test_get_spark_sizes_shuffle_partitions_to_task_slots(spark):
+    """No ``shuffle_partitions``: one partition per task slot. An explicit
+    argument or an ``extra_conf`` entry overrides it. ``get_spark``
+    returns the running session, so the test restores its value."""
+    from sparkstreaming_realtime_project_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        s = get_spark(app_name="tests")
+        assert s.conf.get(key) == str(s.sparkContext.defaultParallelism)
+        assert get_spark(app_name="tests", shuffle_partitions=3).conf.get(key) == "3"
+        s = get_spark(app_name="tests", extra_conf={key: "5"})
+        assert s.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_quota_per_key_caps_across_batches(spark, tmp_path):
     """Per-source ingest quota: at most N rows admitted per key with the
     counter persisting ACROSS micro-batches — batch 2 rows of an
