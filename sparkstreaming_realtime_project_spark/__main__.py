@@ -174,8 +174,8 @@ def main(argv: list[str] | None = None) -> None:
     # Spark jobs (PublisherApplication.java); same topology here — a
     # sidecar serving the sink tables the pipelines write
     p = sub.add_parser("publisher", help="REST façade over the sink tables")
-    p.add_argument("--dau-table", required=True, help="dau_info parquet dir")
-    p.add_argument("--wide-table", required=True, help="order_wide parquet dir")
+    p.add_argument("--dau-table", required=True, help="dau sink dir")
+    p.add_argument("--wide-table", required=True, help="order-wide sink dir")
     p.add_argument("--host", default="127.0.0.1")
     p.add_argument("--port", type=int, default=8070)
 
@@ -268,13 +268,12 @@ def main(argv: list[str] | None = None) -> None:
         raise SystemExit(0)
 
     if args.app == "publisher":
-        from .http_api import publisher_server
+        from .http_api import publisher_server, sink_providers
 
         # providers re-read per request: each query sees the pipelines'
         # latest committed files, like the reference hitting live ES
         server = publisher_server(
-            lambda: spark.read.parquet(args.dau_table),
-            lambda: spark.read.parquet(args.wide_table),
+            *sink_providers(spark, args.dau_table, args.wide_table),
             host=args.host,
             port=args.port,
         )

@@ -49,6 +49,7 @@ from typing import Callable
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .plans.publisher import (
     dau_realtime_json,
@@ -56,12 +57,35 @@ from .plans.publisher import (
     detail_by_item_keyset_json,
     stats_by_item_json,
 )
+from .streaming.sinks import read_sink
 
 Provider = Callable[[], DataFrame]
 
 
 def _as_provider(x: DataFrame | Provider) -> Provider:
     return x if callable(x) else (lambda: x)
+
+
+def sink_providers(spark, dau_dir: str, wide_dir: str) -> tuple[Provider, Provider]:
+    """Providers over the dau and order-wide sink directories the
+    pipelines write. Each call reads the sink's committed state through
+    ``read_sink``, so a compacted sink (``gen=N`` plus later ``batch=N``
+    dirs) serves like an uncompacted one, and ``compact_sink`` can run
+    while the server does (a request still reading files its sweep
+    removes gets a 500; the next request reads the new generation). The
+    order-wide sink is partitioned by ``create_date`` (read back as
+    DATE); the wide provider adds it as the string ``dt`` the publisher
+    plans filter on."""
+
+    def dau() -> DataFrame:
+        return read_sink(spark, dau_dir)
+
+    def wide() -> DataFrame:
+        return read_sink(spark, wide_dir).withColumn(
+            "dt", F.col("create_date").cast("string")
+        )
+
+    return dau, wide
 
 
 def _json_default(o):

@@ -44,6 +44,10 @@ def dau_pipeline(
     covers late events of the previous day, SURVEY §7) -> broadcast dim
     joins (J1/J2) -> dt/hr derivation (F2) -> idempotent partitioned sink
     keyed by (mid, dt) (K3/K4).
+
+    The dims are fixed when the pipeline is built: every trigger joins
+    the same snapshot, cached once per query (``operators/enrich.py``).
+    Restart over a fresh dim read to join new dim rows.
     """
     parsed = parse_log(raw_stream)
     # err IS NULL: DwdDauApp consumes DWD_PAGE_LOG_TOPIC, which the split
@@ -221,7 +225,9 @@ def order_wide_pipeline(
     When dims are supplied, the info side is enriched BEFORE the
     stream-stream join — the reference's per-record Redis dim GETs
     (DwdOrderApp.scala:112-146, J1/J2) as stream-static broadcast joins;
-    province_iso_code is populated (reference bug §2.9 fixed).
+    province_iso_code is populated (reference bug §2.9 fixed). The dims
+    are fixed when the pipeline is built and cached once per query
+    (``operators/enrich.py``).
 
     ``join_type="left_outer"`` upgrades the join to detail-preserving: a
     detail whose info never arrives within the grace window is emitted

@@ -5,6 +5,8 @@ missing date partition)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from sparkstreaming_realtime_project_spark.plans.publisher import (
@@ -210,6 +212,61 @@ def test_http_serves_date_columns_as_iso_strings(dau_table, wide_table):
     assert status == 200
     assert out["total"] == 3
     assert {d["create_date"] for d in out["detail"]} == {"2024-01-02"}
+
+
+def test_sink_providers_serve_a_compacted_dau_sink(spark, dau_table, tmp_path):
+    """A dau sink compacted into ``gen=0`` with a later ``batch=2`` beside
+    it (two partition layouts that one plain parquet read of the
+    directory rejects) answers /dauRealtime with all three batches' rows."""
+    from sparkstreaming_realtime_project_spark.http_api import sink_providers
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        compact_sink,
+        idempotent_partitioned_writer,
+    )
+
+    out = str(tmp_path / "dau")
+    write = idempotent_partitioned_writer(out, ["mid", "dt"], "dt")
+    rows = dau_table.collect()
+    for batch_id, batch in enumerate([rows[:2], rows[2:4]]):
+        write(spark.createDataFrame(batch, dau_table.schema), batch_id)
+    compact_sink(spark, out, ["mid", "dt"])
+    write(spark.createDataFrame(rows[4:], dau_table.schema), 2)
+    assert {"gen=0", "batch=2"} <= set(os.listdir(out))
+
+    dau, wide = sink_providers(spark, out, str(tmp_path / "wide"))
+    status, body = _serve_once(dau, wide, "/dauRealtime?td=2024-01-02")
+    assert status == 200
+    assert body == {
+        "dauTotal": 3,
+        "dauTd": {"01": 2, "09": 1},  # batches 0 and 1, from gen=0
+        "dauYd": {"10": 1, "23": 1},  # m4 at 23 is batch=2's only row
+    }
+
+
+def test_sink_providers_serve_stats_by_item_from_order_wide_sink(
+    spark, wide_table, tmp_path
+):
+    """The order-wide sink is partitioned by ``create_date``; the wide
+    provider exposes it as the string ``dt`` the publisher plans filter
+    on, so /statsByItem resolves."""
+    from urllib.parse import quote
+
+    from sparkstreaming_realtime_project_spark.http_api import sink_providers
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        idempotent_partitioned_writer,
+    )
+
+    out = str(tmp_path / "wide")
+    idempotent_partitioned_writer(out, ["detail_id"], "create_date")(
+        wide_table.withColumnRenamed("dt", "create_date"), 0
+    )
+    dau, wide = sink_providers(spark, str(tmp_path / "dau"), out)
+    item = quote("小米 手机")
+    status, body = _serve_once(
+        dau, wide, f"/statsByItem?itemName={item}&date=2024-01-02&t=gender"
+    )
+    assert status == 200
+    assert body == [{"name": "女", "value": 100.0}, {"name": "男", "value": 50.0}]
 
 
 def test_http_reflects_live_streaming_sink(spark, tmp_path):

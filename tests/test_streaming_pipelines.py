@@ -338,6 +338,148 @@ def test_order_wide_assembly(order_sink):
     assert rows[9001]["province_iso_code"] == "CN-11"  # ref bug §2.9 fixed
 
 
+# --- stream-static dim joins: build side once per query -------------------
+
+
+def _counting_dims(spark):
+    """The fixture dims with ``dim_user.gender`` wrapped in a Python UDF
+    that counts its calls, so a test can see how often the dim source
+    is evaluated."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_gender(g):
+        acc.add(1)
+        return g
+
+    dim_user, dim_province = fx.dim_frames(spark)
+    gender = F.udf(count_gender, "string")
+    return acc, dim_user.withColumn("gender", gender("gender")), dim_province
+
+
+def test_enrich_caches_the_dim_side_until_released(spark):
+    """enrich_* persist the dim projection; a freshly built
+    ``user_side``/``province_side`` finds the cache entry by plan and
+    releases it."""
+    from pyspark import StorageLevel
+
+    from sparkstreaming_realtime_project_spark.operators.enrich import (
+        enrich_province,
+        enrich_user,
+        province_side,
+        user_side,
+    )
+
+    _, dim_user, dim_province = _counting_dims(spark)  # plans no other test caches
+    facts = spark.createDataFrame([(1, 11)], "user_id long, province_id long")
+    enrich_province(enrich_user(facts, dim_user), dim_province)
+    for side in (user_side(dim_user), province_side(dim_province)):
+        assert side.storageLevel != StorageLevel.NONE
+        side.unpersist()
+    assert user_side(dim_user).storageLevel == StorageLevel.NONE
+    assert province_side(dim_province).storageLevel == StorageLevel.NONE
+
+
+def test_dau_dim_source_evaluated_once_per_query(spark, tmp_path):
+    """The user dim is evaluated once per query, not once per trigger:
+    the dau fixture drains in several triggers, but the gender UDF runs
+    once per dim row."""
+    acc, dim_user, dim_province = _counting_dims(spark)
+    fx.write_log_fixture(str(tmp_path / "in"))
+    writer = dau_pipeline(
+        text_stream(spark, str(tmp_path / "in"), max_files_per_trigger=1),
+        dim_user,
+        dim_province,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        as_of=as_of(),
+    )
+    q = run_to_completion(writer)
+    assert len(q.recentProgress) >= 2
+    assert acc.value == len(fx.DIM_USERS)
+    sink = read_sink(spark, str(tmp_path / "out"))
+    genders = {r["mid"]: r["user_gender"] for r in sink.collect()}
+    assert genders == {"m1": "F", "m2": "M", "m5": "M"}
+
+
+def test_order_wide_dim_source_evaluated_once_per_query(spark, tmp_path):
+    """Same for the order-wide app's info-side enrichment."""
+    acc, dim_user, dim_province = _counting_dims(spark)
+    info, detail = fx.write_order_fixture(
+        str(tmp_path / "info"), str(tmp_path / "detail")
+    )
+    writer = order_wide_pipeline(
+        file_stream(spark, info, ORDER_INFO_SCHEMA, max_files_per_trigger=1),
+        file_stream(spark, detail, ORDER_DETAIL_SCHEMA, max_files_per_trigger=1),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        dim_user=dim_user,
+        dim_province=dim_province,
+        as_of=as_of(),
+    )
+    q = run_to_completion(writer, timeout=180)
+    assert len(q.recentProgress) >= 2
+    assert acc.value == len(fx.DIM_USERS)
+    sink = read_sink(spark, str(tmp_path / "out"))
+    assert {r["user_gender"] for r in sink.collect()} == {"F"}
+    assert sink.count() == 3
+
+
+def test_dau_dims_are_a_snapshot_and_survive_clear_cache(spark, tmp_path):
+    """Pins the stream-static join's dim semantics on a running query:
+
+    - a dim ``batch=`` dir landed after ``start()`` is never joined (the
+      parquet listing is fixed when the dim DataFrame is built);
+    - after ``spark.catalog.clearCache()`` later triggers are still
+      enriched (the cached dim keeps its lineage and is recomputed)."""
+    from sparkstreaming_realtime_project_spark.schemas import DIM_USER_INFO_SCHEMA
+
+    dim_root = str(tmp_path / "dim_user")
+    spark.createDataFrame(fx.DIM_USERS, DIM_USER_INFO_SCHEMA).write.parquet(
+        os.path.join(dim_root, "batch=0")
+    )
+    _, dim_province = fx.dim_frames(spark)
+    in_dir, out = tmp_path / "in", str(tmp_path / "out")
+    os.makedirs(in_dir)
+
+    def land(name, *rows):
+        (in_dir / name).write_text("\n".join(rows) + "\n")
+
+    def genders():
+        return {r["mid"]: r["user_gender"] for r in read_sink(spark, out).collect()}
+
+    land("b0.json", fx.log_row("m1", fx.D1_10, uid="1", ar="11", page_id="home"))
+    q = dau_pipeline(
+        text_stream(spark, str(in_dir)),
+        spark.read.parquet(dim_root),
+        dim_province,
+        out,
+        str(tmp_path / "ckpt"),
+        as_of=as_of(),
+    ).start()
+    try:
+        q.processAllAvailable()
+        assert genders() == {"m1": "F"}
+
+        new_user = spark.createDataFrame([(7, "F", "2000-01-01")], DIM_USER_INFO_SCHEMA)
+        new_user.write.parquet(os.path.join(dim_root, "batch=1"))
+        land("b1.json", fx.log_row("m7", fx.D1_10, uid="7", ar="11", page_id="home"))
+        q.processAllAvailable()
+        assert genders()["m7"] is None  # uid 7 exists only in batch=1
+
+        spark.catalog.clearCache()
+        land(
+            "b2.json",
+            fx.log_row("m2", fx.D2_01, uid="2", ar="12", page_id="home"),
+            fx.log_row("m8", fx.D2_01, uid="7", ar="12", page_id="home"),
+        )
+        q.processAllAvailable()
+        got = genders()
+        assert got["m2"] == "M"  # recomputed from the dim source
+        assert got["m8"] is None  # still the listing taken at build time
+    finally:
+        q.stop()
+
+
 def test_cdc_dynamic_config_reload(spark, tmp_path):
     """S7/O6: FACT/DIM table sets passed as a callable are re-resolved
     every micro-batch (the reference re-reads Redis SMEMBERS + re-broadcasts
