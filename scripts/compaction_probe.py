@@ -30,9 +30,6 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
-from sparkstreaming_realtime_project_spark.operators.dedup import (
-    suffix_anchors,
-)
 from sparkstreaming_realtime_project_spark.session import get_spark
 from sparkstreaming_realtime_project_spark.sources.batch import load_table
 from sparkstreaming_realtime_project_spark.streaming import (
@@ -40,8 +37,7 @@ from sparkstreaming_realtime_project_spark.streaming import (
 )
 from sparkstreaming_realtime_project_spark.streaming.incremental import (
     compact_suffix_store,
-    read_anchor_store_slices,
-    suffix_batch_against_store,
+    suffix_ingest_batch,
 )
 from scripts.scale_probe import scaled_documents
 
@@ -70,25 +66,7 @@ def main() -> None:
             batch = copies.filter(
                 (F.col("doc_id") >= b * n) & (F.col("doc_id") < (b + 1) * n)
             )
-            new_anchors = suffix_anchors(batch, "text", "doc_id", 8).persist()
-            new_gramdf = new_anchors.groupBy("g").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            slices, gramdf = read_anchor_store_slices(
-                spark, store, new_anchors, new_gramdf
-            )
-            suffix_batch_against_store(
-                new_anchors, slices, gramdf
-            ).write.mode("overwrite").parquet(
-                os.path.join(root, "dec", f"batch={b}")
-            )
-            new_anchors.write.mode("overwrite").parquet(
-                os.path.join(store, "anchors", f"batch={b}")
-            )
-            new_gramdf.write.mode("overwrite").parquet(
-                os.path.join(store, "gramdf", f"batch={b}")
-            )
-            new_anchors.unpersist()
+            suffix_ingest_batch(batch, b, store, os.path.join(root, "dec"))
             if (b + 1) % every == 0:
                 prev_man = inc.read_compaction_manifest(store)
                 prev_names = {

@@ -123,15 +123,14 @@ def ingest_suffix(
     through the compacted table + tail — the production at-rest layout
     under sustained ingest. ``compact_fanout=k`` makes those folds
     leveled (size-tiered): later batches then join one slice per live
-    generation (<= log_k(store)) — the read-amplification case."""
-    from sparkstreaming_realtime_project_spark.operators.dedup import (
-        scrub_coverage,
-        suffix_anchors,
-    )
+    generation (<= log_k(store)) — the read-amplification case.
+
+    Each batch runs the stream's own body (suffix_ingest_batch);
+    ``wall_s`` covers it and any compaction after it, and n_spans /
+    n_clean are counted from the written dirs outside that window."""
     from sparkstreaming_realtime_project_spark.streaming.incremental import (
         compact_suffix_store,
-        read_anchor_store_slices,
-        suffix_batch_against_store,
+        suffix_ingest_batch,
     )
 
     root = tempfile.mkdtemp(prefix="spark_suffix_ingest_probe_")
@@ -140,54 +139,27 @@ def ingest_suffix(
     try:
         for b, batch in enumerate(batches):
             t0 = time.perf_counter()
-            new_anchors = suffix_anchors(batch, "text", "doc_id", 8).persist()
-            new_gramdf = new_anchors.groupBy("g").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            anchor_slices, store_gramdf = read_anchor_store_slices(
-                spark, store, new_anchors, new_gramdf
-            )
-            spans = suffix_batch_against_store(
-                new_anchors, anchor_slices, store_gramdf,
-                k=8, min_len=16, max_df=64,
-            ).persist()
-            n_spans = spans.count()
-            spans.write.mode("overwrite").parquet(
-                os.path.join(root, "decisions", f"batch={b}")
-            )
-            n_clean = None
-            if scrub:
-                removable = spans.select(
-                    F.col("doc_b").alias("doc_id"), "b_start", "b_end"
-                )
-                clean = scrub_coverage(
-                    batch, "text", "doc_id", removable
-                ).persist()
-                n_clean = clean.count()
-                clean.write.mode("overwrite").parquet(
-                    os.path.join(root, "clean", f"batch={b}")
-                )
-                clean.unpersist()
-            new_anchors.write.mode("overwrite").parquet(
-                os.path.join(store, "anchors", f"batch={b}")
-            )
-            new_gramdf.write.mode("overwrite").parquet(
-                os.path.join(store, "gramdf", f"batch={b}")
+            suffix_ingest_batch(
+                batch, b, store, os.path.join(root, "decisions"),
+                os.path.join(root, "clean") if scrub else None,
             )
             if compact_every and (b + 1) % compact_every == 0:
                 compact_suffix_store(spark, store, buckets=8,
                                      fanout=compact_fanout)
-            spans.unpersist()
-            new_anchors.unpersist()
+            wall = time.perf_counter() - t0
             spark.catalog.clearCache()
             row = {
                 "corpus": label,
                 "batch": b,
-                "n_spans": n_spans,
-                "wall_s": round(time.perf_counter() - t0, 2),
+                "n_spans": spark.read.parquet(
+                    os.path.join(root, "decisions", f"batch={b}")
+                ).count(),
+                "wall_s": round(wall, 2),
             }
             if scrub:
-                row["n_clean"] = n_clean
+                row["n_clean"] = spark.read.parquet(
+                    os.path.join(root, "clean", f"batch={b}")
+                ).count()
             rows.append(row)
             print(json.dumps(rows[-1]))
     finally:

@@ -58,6 +58,15 @@ def _plain_ident(name: str) -> bool:
     return re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name) is not None
 
 
+def _plain_literal(text: str) -> bool:
+    """True when ``text`` can be spliced into a single-quoted SQL string
+    literal as-is: no quote and no backslash, so the parsed bytes do
+    not depend on ``spark.sql.parser.escapedStringLiterals``. Anything
+    else takes the caller's Column-API branch (``F.lit``), where no
+    parser is involved."""
+    return "'" not in text and "\\" not in text
+
+
 def tokens_expr(text_col: str | Column) -> Column:
     """Lowercased whitespace tokens with empties dropped.
 
@@ -721,13 +730,12 @@ def token_md5s(tok_col: str | Column, seed: str = "") -> Column:
     into a column BEFORE computing simhash bits: each of the ``bits``
     aggregates reads one hex digit, so hashing must happen once per
     token, not once per (token, bit) — a 16-64x md5 saving."""
-    if isinstance(tok_col, str) and _plain_ident(tok_col):
-        # one parsed expression (r13, see tokens_expr); the seed is
-        # escaped for the SQL string literal so a quote/backslash in a
-        # caller-supplied seed can't break the parse or change the
-        # hashed bytes (ADVICE r13)
-        s = seed.replace("\\", "\\\\").replace("'", "\\'")
-        inner = f"md5(concat('{s}', tok))" if seed else "md5(tok)"
+    if (
+        isinstance(tok_col, str) and _plain_ident(tok_col)
+        and _plain_literal(seed)
+    ):
+        # one parsed expression (r13, see tokens_expr)
+        inner = f"md5(concat('{seed}', tok))" if seed else "md5(tok)"
         return F.expr(f"transform({tok_col}, tok -> {inner})")
     t = F.col(tok_col) if isinstance(tok_col, str) else tok_col
     if seed:
@@ -1723,43 +1731,45 @@ def suffix_runs_to_spans(
     # The empty spans array is typed by slicing a 1-element array of
     # the real accumulator struct to length 0 — the fold then preserves
     # the caller's pa/pb integer types exactly (a literal CAST(array()
-    # AS ...) would hardcode them).
+    # AS ...) would hardcode them). The fold's own names carry a __
+    # prefix so no ``pair_cols`` entry can collide with them.
     zero = (
-        "slice(array(named_struct('s', ps[0].pa, 'e', ps[0].pa, "
-        "'bmin', ps[0].pb, 'bmax', ps[0].pb)), 1, 0)"
+        "slice(array(named_struct('__s', __ps[0].pa, '__e', __ps[0].pa, "
+        "'__bmin', __ps[0].pb, '__bmax', __ps[0].pb)), 1, 0)"
     )
     acc0 = (
-        f"named_struct('spans', {zero}, 's', ps[0].pa, 'e', ps[0].pa, "
-        "'bmin', ps[0].pb, 'bmax', ps[0].pb)"
+        f"named_struct('spans', {zero}, '__s', __ps[0].pa, "
+        "'__e', __ps[0].pa, '__bmin', __ps[0].pb, '__bmax', __ps[0].pb)"
     )
     step = (
-        f"(acc, x) -> IF(x.pa > acc.e + {k}, "
+        f"(acc, x) -> IF(x.pa > acc.__e + {k}, "
         "named_struct("
-        "'spans', acc.spans || array(named_struct('s', acc.s, 'e', acc.e, "
-        "'bmin', acc.bmin, 'bmax', acc.bmax)), "
-        "'s', x.pa, 'e', x.pa, 'bmin', x.pb, 'bmax', x.pb), "
-        "named_struct('spans', acc.spans, 's', acc.s, 'e', x.pa, "
-        "'bmin', least(acc.bmin, x.pb), 'bmax', greatest(acc.bmax, x.pb)))"
+        "'spans', acc.spans || array(named_struct('__s', acc.__s, "
+        "'__e', acc.__e, '__bmin', acc.__bmin, '__bmax', acc.__bmax)), "
+        "'__s', x.pa, '__e', x.pa, '__bmin', x.pb, '__bmax', x.pb), "
+        "named_struct('spans', acc.spans, '__s', acc.__s, '__e', x.pa, "
+        "'__bmin', least(acc.__bmin, x.pb), "
+        "'__bmax', greatest(acc.__bmax, x.pb)))"
     )
     fin = (
-        "acc -> acc.spans || array(named_struct('s', acc.s, 'e', acc.e, "
-        "'bmin', acc.bmin, 'bmax', acc.bmax))"
+        "acc -> acc.spans || array(named_struct('__s', acc.__s, "
+        "'__e', acc.__e, '__bmin', acc.__bmin, '__bmax', acc.__bmax))"
     )
     return (
         matches.groupBy(*pair_cols, "diag")
-        .agg(F.expr("sort_array(collect_list(struct(pa, pb)))").alias("ps"))
+        .agg(F.expr("sort_array(collect_list(struct(pa, pb)))").alias("__ps"))
         .selectExpr(
             *pair_cols,
-            f"inline(aggregate(slice(ps, 2, size(ps) - 1), {acc0}, {step},"
-            f" {fin}))",
+            f"inline(aggregate(slice(__ps, 2, size(__ps) - 1), {acc0}, "
+            f"{step}, {fin}))",
         )
         .selectExpr(
             *pair_cols,
-            "s AS a_start",
-            f"e + {k - 1} AS a_end",
-            "bmin AS b_start",
-            f"bmax + {k - 1} AS b_end",
-            f"e - s + {k} AS span_len",
+            "__s AS a_start",
+            f"__e + {k - 1} AS a_end",
+            "__bmin AS b_start",
+            f"__bmax + {k - 1} AS b_end",
+            f"__e - __s + {k} AS span_len",
         )
         .filter(f"span_len >= {min_len}")
     )

@@ -41,14 +41,17 @@ def cms_sketch(
     column name (r14, same construction discipline as band_keys): this
     body runs per MICRO-BATCH in streaming_cms_counts, and the d
     struct/hash Column chains were ~25 py4j round-trips per plan build.
-    The Column branch remains for exotic names."""
-    from ..operators.dedup import _plain_ident
+    The Column branch remains for exotic names and for salts holding a
+    quote or backslash (see _plain_literal)."""
+    from ..operators.dedup import _plain_ident, _plain_literal
 
-    if isinstance(key_col, str) and _plain_ident(key_col) and "'" not in salt:
+    if (
+        isinstance(key_col, str) and _plain_ident(key_col)
+        and _plain_literal(salt)
+    ):
         def bucket_sql(j: int) -> str:
-            s = salt.replace("\\", "\\\\")
             return (
-                f"pmod(CAST(conv(substring(md5(concat('{s}{j}:', "
+                f"pmod(CAST(conv(substring(md5(concat('{salt}{j}:', "
                 f"CAST({key_col} AS STRING))), 1, 8), 16, 10) AS BIGINT), {w})"
             )
 

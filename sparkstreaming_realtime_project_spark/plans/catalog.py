@@ -14669,11 +14669,9 @@ def _suffix_stream_store(
     spark, sf_dir: str, compact: bool = False, fanout: int | None = None,
 ) -> str:
     """3-batch sequential suffix-span ingest over documents, sharded by
-    doc_id % 3 — the batch replay of streaming_suffix_scrub (identical
-    per-batch body: anchor-gram the batch, read the anchor + gramdf
-    store AS SLICES, suffix_batch_against_store, write decisions + the
-    batch's SCRUBBED text + this batch's anchors/gramdf under
-    batch={b}). Returns the run root containing decisions/ and clean/.
+    doc_id % 3 — the batch replay of streaming_suffix_scrub: each shard
+    runs the stream's own per-batch body (suffix_ingest_batch) as batch
+    b. Returns the run root containing decisions/ and clean/.
     applicationId-keyed memo, foreign applications evicted on miss with
     their run roots rmtree'd (the eviction would otherwise leak temp
     dirs until atexit in a session-restarting process).
@@ -14686,11 +14684,9 @@ def _suffix_stream_store(
     one small generation; the equal-size tiers force a merge, so batch
     2 joins a merged generation) — the x_suffix_stream_leveled proof
     that the O(tail) mode is decision-identical too."""
-    from ..operators.dedup import scrub_coverage, suffix_anchors
     from ..streaming.incremental import (
         compact_suffix_store,
-        read_anchor_store_slices,
-        suffix_batch_against_store,
+        suffix_ingest_batch,
     )
 
     app_id = spark.sparkContext.applicationId
@@ -14707,38 +14703,13 @@ def _suffix_stream_store(
         root = tempfile.mkdtemp(prefix="spark_suffix_stream_")
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         store = os.path.join(root, "store")
-        decisions_dir = os.path.join(root, "decisions")
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         for b in range(_SUFFIX_STREAM_BATCHES):
-            batch = docs.filter(F.col("doc_id") % _SUFFIX_STREAM_BATCHES == b)
-            new_anchors = suffix_anchors(batch, "text", "doc_id", 8).persist()
-            new_gramdf = new_anchors.groupBy("g").agg(
-                F.count(F.lit(1)).alias("n")
+            suffix_ingest_batch(
+                docs.filter(F.col("doc_id") % _SUFFIX_STREAM_BATCHES == b),
+                b, store, os.path.join(root, "decisions"),
+                os.path.join(root, "clean"),
             )
-            anchor_slices, store_gramdf = read_anchor_store_slices(
-                spark, store, new_anchors, new_gramdf
-            )
-            spans = suffix_batch_against_store(
-                new_anchors, anchor_slices, store_gramdf,
-                k=8, min_len=16, max_df=64,
-            ).persist()
-            spans.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch={b}")
-            )
-            removable = spans.select(
-                F.col("doc_b").alias("doc_id"), "b_start", "b_end"
-            )
-            scrub_coverage(batch, "text", "doc_id", removable).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "clean", f"batch={b}"))
-            new_anchors.write.mode("overwrite").parquet(
-                os.path.join(store, "anchors", f"batch={b}")
-            )
-            new_gramdf.write.mode("overwrite").parquet(
-                os.path.join(store, "gramdf", f"batch={b}")
-            )
-            spans.unpersist()
-            new_anchors.unpersist()
             if compact:
                 compact_suffix_store(spark, store, buckets=8, fanout=fanout)
         _SUFFIX_STREAM_PATHS[key] = root

@@ -42,6 +42,7 @@ decisions table recovers exact clusters if needed.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,11 +87,14 @@ def _read_or_empty(
     batch excludes its OWN batch id, which for a committed batch id is
     a no-op because foreachBatch never re-runs a committed id against
     the same checkpoint. ``min_batch`` prunes dirs a compaction has
-    already folded (read instead via the compacted table)."""
+    already folded (read instead via the compacted table). With no
+    committed dir the read is ``like.limit(0)``: the optimizer folds
+    it to an empty LocalRelation, so joins against it are pruned at
+    plan time and no job runs to read nothing."""
     path = os.path.join(root, sub)
     ids = _batch_ids(root, sub, min_batch)
     if not ids:
-        return spark.createDataFrame([], like.schema)
+        return like.limit(0)
     df = spark.read.option("basePath", path).parquet(
         *[os.path.join(path, f"batch={i}") for i in ids]
     )
@@ -166,7 +170,7 @@ def read_signature_store(
         bucketed=False,
     )
     if not band_slices:
-        bands = spark.createDataFrame([], like_bands.schema)
+        bands = like_bands.limit(0)
     else:
         bands = band_slices[0]
         for s in band_slices[1:]:
@@ -241,7 +245,7 @@ def read_signature_store_slices(
                            exclude_batch, min_batch)
         )
     if not sig_slices:
-        sigs = spark.createDataFrame([], like_sigs.schema)
+        sigs = like_sigs.limit(0)
     else:
         sigs = sig_slices[0]
         for s in sig_slices[1:]:
@@ -440,10 +444,12 @@ from ..operators.sketches import hll_finalize, hll_registers  # noqa: E402
 # reject documents), so the store is simply the corpus-so-far.
 #
 # 100 TB notes: the per-batch cost is O(new docs' anchors + the store
-# slices sharing a gram with the new batch) — the store side is pruned
-# by an equi-join on the new batch's gram set BEFORE anything wide, and
-# at rest anchors/ should be written bucketed by g so that join
-# co-locates without shuffling the store. The df-cap is therefore
+# slices sharing a gram with the new batch) — each store slice is
+# pruned by its gram equi-join against the batch's capped anchors (one
+# cached frame per batch, so the cap's aggregates run once) BEFORE
+# anything wide, and at rest anchors/ should be written bucketed by g
+# so that join co-locates without shuffling the store. The df-cap is
+# evaluated on the prefix corpus (store + this batch), so it is
 # PREFIX-df: a gram under the cap at batch 3 may exceed it by batch 30,
 # so early batches can report spans on grams a full-corpus batch run
 # would have capped away; that asymmetry is inherent to sequential
@@ -474,7 +480,7 @@ def read_anchor_store(
         bucketed=False,
     )
     if not anchor_slices:
-        anchors = spark.createDataFrame([], like_anchors.schema)
+        anchors = like_anchors.limit(0)
     else:
         anchors = anchor_slices[0]
         for s in anchor_slices[1:]:
@@ -997,12 +1003,92 @@ def read_anchor_store_slices(
                            exclude_batch, min_batch)
         )
     if not gram_slices:
-        gramdf = spark.createDataFrame([], like_gramdf.schema)
+        gramdf = like_gramdf.limit(0)
     else:
         gramdf = gram_slices[0]
         for s in gram_slices[1:]:
             gramdf = gramdf.unionByName(s)
     return anchor_slices, gramdf
+
+
+def capped_batch_anchors(
+    new_anchors: DataFrame,
+    store_gramdf: DataFrame,
+    max_df: int | None = 64,
+) -> DataFrame:
+    """The batch's anchors (g, doc_id, pos) whose gram passes the
+    df-cap, the batch operator's rule evaluated on the PREFIX corpus:
+    total gram occurrences across store + this batch <= ``max_df``
+    (None: no cap, the anchors as given). Store-side df comes from
+    summing the gramdf sketch rows for grams PRESENT in the new batch
+    (a semi-join-pruned aggregate, never an O(corpus) recount).
+
+    Every later branch of the per-batch plan (each store slice and the
+    in-batch self-join) reads this frame, so a caller that persists it
+    plans and runs the cap's aggregates once per batch
+    (suffix_ingest_batch does)."""
+    if max_df is None:
+        return new_anchors
+    new_g = new_anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n_new"))
+    store_g = (
+        store_gramdf.join(new_g.select("g"), "g")
+        .groupBy("g")
+        .agg(F.sum("n").alias("n_store"))
+    )
+    keep = (
+        new_g.join(store_g, "g", "left")
+        .filter(
+            F.col("n_new") + F.coalesce(F.col("n_store"), F.lit(0)) <= max_df
+        )
+        .select("g")
+    )
+    return new_anchors.join(keep, "g")
+
+
+def capped_batch_spans(
+    capped: DataFrame,
+    store_anchors: DataFrame | list[DataFrame],
+    k: int = 8,
+    min_len: int = 16,
+) -> DataFrame:
+    """Spans of the capped batch anchors (capped_batch_anchors) against
+    the store and against their own batch siblings: one row per maximal
+    shared span touching a NEW doc — (doc_a, doc_b, a_start, a_end,
+    b_start, b_end, span_len) with doc_a the incumbent (already
+    ingested, or the smaller-id batch sibling) and doc_b the new doc.
+    Every candidate comes from a gram equi-join, never a cartesian; the
+    inner join on the capped batch side is what drops capped grams from
+    the store side too.
+
+    ``store_anchors`` may be a list of slices (the
+    read_anchor_store_slices contract: compacted bucketed tables +
+    post-horizon tail, any absent). Each slice joins the batch
+    separately and the match streams union BEFORE run-merging — exactly
+    equivalent to the flat-union join (a given (store doc, new doc)
+    pair's anchors live in exactly one slice), but a bucketed slice
+    keeps its co-location: its side of the gram join has NO Exchange
+    (plan contract tests/test_incremental_dedup.py)."""
+    slices = (
+        store_anchors if isinstance(store_anchors, list) else [store_anchors]
+    )
+
+    def against(a: DataFrame, doc_cmp: str) -> DataFrame:
+        return a.alias("a").join(
+            capped.alias("b"),
+            F.expr(f"a.g = b.g AND a.doc_id {doc_cmp} b.doc_id"),
+        ).selectExpr(
+            "a.doc_id AS doc_a", "b.doc_id AS doc_b", "a.pos AS pa",
+            "b.pos AS pb", "a.pos - b.pos AS diag",
+        )
+
+    # store side: doc-id inequality is defense-in-depth against a doc
+    # appearing on both sides (phantom store dir, upstream re-send)
+    # self-matching into a full-length span
+    matches = [against(sl, "!=") for sl in slices] + [against(capped, "<")]
+    return suffix_runs_to_spans(
+        reduce(DataFrame.unionByName, matches), k, min_len,
+        ["doc_a", "doc_b"],
+    )
 
 
 def suffix_batch_against_store(
@@ -1013,74 +1099,81 @@ def suffix_batch_against_store(
     min_len: int = 16,
     max_df: int | None = 64,
 ) -> DataFrame:
-    """The per-batch span decision, as a pure plan (the unit the plan
-    audit inspects): one row per maximal shared span touching a NEW doc
-    — (doc_a, doc_b, a_start, a_end, b_start, b_end, span_len) with
-    doc_a the incumbent (already-ingested, or the smaller-id batch
-    sibling) and doc_b the new doc.
-
-    The df-cap is the batch operator's rule evaluated on the PREFIX
-    corpus: total gram occurrences across store + this batch <=
-    ``max_df``. Store-side df comes from summing the gramdf sketch
-    rows for grams PRESENT in the new batch (a semi-join-pruned
-    aggregate, never an O(corpus) recount); the anchor join is then
-    gram-keyed on both sides — every candidate comes from an anchor
-    hash collision, never a cartesian.
-
-    ``store_anchors`` may be a list of slices (the
-    read_anchor_store_slices contract: compacted bucketed table +
-    post-horizon tail, either absent). Each slice joins the new batch
-    separately and the match streams union BEFORE run-merging — exactly
-    equivalent to the flat-union join (a given (store doc, new doc)
-    pair's anchors live in exactly one slice), but the bucketed slice
-    keeps its co-location: its side of the gram join has NO Exchange
-    (plan contract tests/test_incremental_dedup.py)."""
-    new_g = new_anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n_new"))
-    if max_df is not None:
-        store_g = (
-            store_gramdf.join(new_g.select("g"), "g")
-            .groupBy("g")
-            .agg(F.sum("n").alias("n_store"))
-        )
-        keep = (
-            new_g.join(store_g, "g", "left")
-            .filter(
-                F.col("n_new") + F.coalesce(F.col("n_store"), F.lit(0))
-                <= max_df
-            )
-            .select("g")
-        )
-    else:
-        keep = new_g.select("g")
-    slices = (
-        store_anchors if isinstance(store_anchors, list) else [store_anchors]
+    """The per-batch span decision as one pure plan:
+    capped_batch_spans over capped_batch_anchors. Nothing in it is
+    cached, so every branch re-plans the cap; the ingest body
+    (suffix_ingest_batch) persists the capped frame between the two
+    steps instead."""
+    return capped_batch_spans(
+        capped_batch_anchors(new_anchors, store_gramdf, max_df),
+        store_anchors, k, min_len,
     )
-    new_a = new_anchors.join(keep, "g")
-    sides = [
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.pos").alias("pa"),
-        F.col("b.pos").alias("pb"),
-        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
-    ]
-    # doc-id inequality: defense-in-depth against a doc appearing on
-    # both sides (phantom store dir, upstream re-send) self-matching
-    # into a full-length span
-    matches = None
-    for sl in slices:
-        cross = sl.join(keep, "g").alias("a").join(
-            new_a.alias("b"),
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        ).select(*sides)
-        matches = cross if matches is None else matches.unionByName(cross)
-    inb = new_a.alias("a").join(
-        new_a.alias("b"),
-        (F.col("a.g") == F.col("b.g"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(*sides)
-    matches = inb if matches is None else matches.unionByName(inb)
-    return suffix_runs_to_spans(matches, k, min_len, ["doc_a", "doc_b"])
+
+
+def suffix_ingest_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    store_dir: str,
+    decisions_dir: str,
+    clean_dir: str | None = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 8,
+    min_len: int = 16,
+    max_df: int | None = 64,
+) -> None:
+    """One micro-batch of suffix-span ingest: the foreachBatch body of
+    streaming_suffix_dedup (``clean_dir`` None) and
+    streaming_suffix_scrub, also run directly by the catalog's
+    sequential-ingest replay, the ingest/compaction probes and tests.
+
+    Writes, each under ``batch={batch_id}`` (overwritten on replay):
+    the spans to ``decisions_dir``; with ``clean_dir``, the batch's
+    scrubbed text (scrub_coverage of the b-side intervals: the newcomer
+    loses); then the batch's ORIGINAL (uncapped) anchors and gram df to
+    the store, so a later copy still matches the full incumbent text.
+    The store read excludes ``batch_id`` (the phantom-dir replay guard
+    of _read_or_empty).
+
+    The batch owns at most two caches, both released before return:
+    the capped batch anchors, which the df-cap aggregates fill once and
+    every store slice and the sibling self-join read; and, with
+    ``clean_dir``, the spans, which feed both the decisions and the
+    scrub. The store writes re-derive the anchors from ``batch_df``
+    (one narrow tokenize pass) rather than cache a third frame."""
+    from ..operators.dedup import scrub_coverage
+
+    new_anchors = suffix_anchors(batch_df, text_col, id_col, k)
+    new_gramdf = new_anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    anchor_slices, store_gramdf = read_anchor_store_slices(
+        batch_df.sparkSession, store_dir, new_anchors, new_gramdf,
+        exclude_batch=batch_id,
+    )
+    capped = capped_batch_anchors(new_anchors, store_gramdf, max_df).persist()
+    spans = capped_batch_spans(capped, anchor_slices, k, min_len)
+    if clean_dir is not None:
+        spans = spans.persist()
+    part = f"batch={batch_id}"
+    try:
+        spans.write.mode("overwrite").parquet(
+            os.path.join(decisions_dir, part)
+        )
+        if clean_dir is not None:
+            removable = spans.select(
+                F.col("doc_b").alias("doc_id"), "b_start", "b_end"
+            )
+            scrub_coverage(batch_df, text_col, id_col, removable).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(clean_dir, part))
+        new_anchors.write.mode("overwrite").parquet(
+            os.path.join(store_dir, "anchors", part)
+        )
+        new_gramdf.write.mode("overwrite").parquet(
+            os.path.join(store_dir, "gramdf", part)
+        )
+    finally:
+        spans.unpersist()
+        capped.unpersist()
 
 
 def streaming_suffix_dedup(
@@ -1095,12 +1188,13 @@ def streaming_suffix_dedup(
     max_df: int | None = 64,
 ):
     """Build the streaming query: doc stream -> per-batch shared-span
-    report vs the corpus-so-far, anchors appended to the store.
+    report vs the corpus-so-far, anchors appended to the store. Each
+    trigger runs suffix_ingest_batch without a clean output.
 
     Decisions output rows per batch dir: (doc_a, doc_b, a_start, a_end,
     b_start, b_end, span_len) — the suffix_span_pairs contract with
-    doc_b always the newly ingested doc. Downstream scrub-on-ingest is
-    the suffix_scrub coverage step applied to each batch's decisions.
+    doc_b always the newly ingested doc. Scrub-on-ingest is
+    streaming_suffix_scrub.
 
     One checkpoint per store, enforced (_guard_store_checkpoint): the
     first batch stamps the query id; a restart against a FRESH
@@ -1110,29 +1204,11 @@ def streaming_suffix_dedup(
     into the bucketed at-rest layout — decisions are unchanged."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         _guard_store_checkpoint(store_dir, checkpoint)
-        new_anchors = suffix_anchors(batch_df, text_col, id_col, k).persist()
-        new_gramdf = new_anchors.groupBy("g").agg(
-            F.count(F.lit(1)).alias("n")
+        suffix_ingest_batch(
+            batch_df, batch_id, store_dir, decisions_dir, None,
+            text_col, id_col, k, min_len, max_df,
         )
-        anchor_slices, store_gramdf = read_anchor_store_slices(
-            spark, store_dir, new_anchors, new_gramdf,
-            exclude_batch=batch_id,
-        )
-        spans = suffix_batch_against_store(
-            new_anchors, anchor_slices, store_gramdf, k, min_len, max_df
-        )
-        spans.write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"batch={batch_id}")
-        )
-        new_anchors.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "anchors", f"batch={batch_id}")
-        )
-        new_gramdf.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "gramdf", f"batch={batch_id}")
-        )
-        new_anchors.unpersist()
 
     return (
         doc_stream.writeStream.foreachBatch(write)
@@ -1154,14 +1230,15 @@ def streaming_suffix_scrub(
     max_df: int | None = 64,
 ):
     """Scrub-on-ingest: streaming_suffix_dedup PLUS the suffix_scrub
-    apply step per micro-batch — each incoming doc is written to
-    ``clean_dir/batch={id}`` with every token span it shares with the
-    corpus-so-far (or with a smaller-id batch sibling) REMOVED, the
-    newcomer-loses policy: the incumbent's copy survives, exactly the
-    batch suffix_scrub ownership rule evaluated in arrival order. The
-    anchor store accumulates the ORIGINAL (pre-scrub) anchors, so a
-    later third copy still matches the full incumbent text rather than
-    the already-scrubbed second copy's remnants.
+    apply step per micro-batch (suffix_ingest_batch with ``clean_dir``)
+    — each incoming doc is written to ``clean_dir/batch={id}`` with
+    every token span it shares with the corpus-so-far (or with a
+    smaller-id batch sibling) REMOVED, the newcomer-loses policy: the
+    incumbent's copy survives, exactly the batch suffix_scrub ownership
+    rule evaluated in arrival order. The anchor store accumulates the
+    ORIGINAL (pre-scrub) anchors, so a later third copy still matches
+    the full incumbent text rather than the already-scrubbed second
+    copy's remnants.
 
     Output contract per batch dir: decisions = the suffix_span_pairs
     row shape; clean = (doc_id, clean_text, n_tokens, n_removed), one
@@ -1169,39 +1246,13 @@ def streaming_suffix_scrub(
     n_removed = 0). Cost: the scrub adds only the output-sized
     position explode and one doc_id-keyed list join on top of the
     detection plan — the batch text never shuffles."""
-    from ..operators.dedup import scrub_coverage
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         _guard_store_checkpoint(store_dir, checkpoint)
-        new_anchors = suffix_anchors(batch_df, text_col, id_col, k).persist()
-        new_gramdf = new_anchors.groupBy("g").agg(
-            F.count(F.lit(1)).alias("n")
+        suffix_ingest_batch(
+            batch_df, batch_id, store_dir, decisions_dir, clean_dir,
+            text_col, id_col, k, min_len, max_df,
         )
-        anchor_slices, store_gramdf = read_anchor_store_slices(
-            spark, store_dir, new_anchors, new_gramdf,
-            exclude_batch=batch_id,
-        )
-        spans = suffix_batch_against_store(
-            new_anchors, anchor_slices, store_gramdf, k, min_len, max_df
-        ).persist()
-        spans.write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"batch={batch_id}")
-        )
-        removable = spans.select(
-            F.col("doc_b").alias("doc_id"), "b_start", "b_end"
-        )
-        scrub_coverage(batch_df, text_col, id_col, removable).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(clean_dir, f"batch={batch_id}"))
-        new_anchors.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "anchors", f"batch={batch_id}")
-        )
-        new_gramdf.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "gramdf", f"batch={batch_id}")
-        )
-        spans.unpersist()
-        new_anchors.unpersist()
 
     return (
         doc_stream.writeStream.foreachBatch(write)

@@ -67,15 +67,22 @@ def scd2_intervals(changes: DataFrame) -> DataFrame:
     )
 
 
-# empty-history placeholder schema for the pre-first-commit window; the
-# string key/value default is a documented fallback — pass key_type /
+# empty-history placeholder for the pre-first-commit window; the string
+# key/value default is a documented fallback — pass key_type /
 # value_type to read_scd2 for a store keyed by another type so the empty
 # frame's schema matches the post-commit one (downstream joins/unions
-# written against the real type never see a schema flip)
-def _history_schema(key_type: str = "string", value_type: str = "string") -> str:
-    return (
-        f"key {key_type}, value {value_type}, valid_from_us long, "
-        "valid_to_us long, ord long, is_current int"
+# written against the real type never see a schema flip). SELECT ...
+# WHERE false folds to an empty LocalRelation, so no job runs to read
+# it (an empty createDataFrame is a Python-backed RDD scan).
+def _empty_history(
+    spark, key_type: str = "string", value_type: str = "string"
+) -> DataFrame:
+    return spark.sql(
+        f"SELECT CAST(NULL AS {key_type}) AS key, "
+        f"CAST(NULL AS {value_type}) AS value, "
+        "CAST(NULL AS BIGINT) AS valid_from_us, "
+        "CAST(NULL AS BIGINT) AS valid_to_us, CAST(NULL AS BIGINT) AS ord, "
+        "CAST(NULL AS INT) AS is_current WHERE false"
     )
 
 
@@ -107,7 +114,7 @@ def read_scd2(
     keyed by non-string types (default keeps the string fallback)."""
     committed = _committed_dirs(store_dir)
     if not committed:
-        return spark.createDataFrame([], _history_schema(key_type, value_type))
+        return _empty_history(spark, key_type, value_type)
     df = spark.read.option("basePath", store_dir).parquet(*committed)
     latest = df.groupBy("key").agg(F.max("batch").alias("batch"))
     return df.join(latest, ["key", "batch"]).drop("batch")

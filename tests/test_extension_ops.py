@@ -593,6 +593,68 @@ def test_cms_estimate_unseen_key_is_zero(spark):
     assert "never-seen" in got and got["never-seen"] == 0
 
 
+def test_sql_literal_seeds_hash_the_same_bytes_on_both_branches(spark):
+    """token_md5s and cms_sketch splice a plain seed/salt into parsed
+    SQL; a seed holding a backslash or a quote takes the Column branch.
+    Either way the hashed bytes are exactly the caller's, whether or not
+    the parser unescapes backslashes (escapedStringLiterals)."""
+    import hashlib
+
+    from sparkstreaming_realtime_project_spark.operators import sketches as sk
+
+    def md5(text: str) -> str:
+        return hashlib.md5(text.encode()).hexdigest()
+
+    df = spark.createDataFrame(
+        [(["x", "y"], "k1")], "toks array<string>, k string"
+    )
+    exotic = df.withColumnRenamed("k", "k-1")
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf)
+    try:
+        for raw in ("false", "true"):
+            spark.conf.set(conf, raw)
+            for seed in ("s1", "a\\b", "it's"):
+                want = [md5(seed + t) for t in ("x", "y")]
+                for col in ("toks", F.col("toks")):
+                    got = df.select(dd.token_md5s(col, seed).alias("h"))
+                    assert got.first()["h"] == want, (raw, seed, col)
+                cells = {
+                    (j, int(md5(f"{seed}{j}:k1")[:8], 16) % 64, 1)
+                    for j in range(4)
+                }
+                for frame, key in ((df, "k"), (exotic, "k-1")):
+                    got = sk.cms_sketch(frame, key, d=4, w=64, salt=seed)
+                    assert {tuple(r) for r in got.collect()} == cells, (
+                        raw, seed, key,
+                    )
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_suffix_runs_to_spans_pair_cols_named_like_fold_fields(spark):
+    """Pair columns named s/e or bmin/bmax (the fold's old field names)
+    give the same spans as any other names."""
+    rows = [(1, 2, pa, pa + 10, -10) for pa in (1, 2, 3, 4, 5, 20, 21)]
+    matches = spark.createDataFrame(
+        rows, "doc_a long, doc_b long, pa int, pb int, diag int"
+    )
+    want = sorted(
+        tuple(r)
+        for r in dd.suffix_runs_to_spans(
+            matches, 3, 4, ["doc_a", "doc_b"]
+        ).collect()
+    )
+    assert want == [(1, 2, 1, 7, 11, 17, 7), (1, 2, 20, 23, 30, 33, 4)]
+    for a, b in (("s", "e"), ("bmin", "bmax")):
+        renamed = matches.withColumnRenamed("doc_a", a).withColumnRenamed(
+            "doc_b", b
+        )
+        got = dd.suffix_runs_to_spans(renamed, 3, 4, [a, b])
+        assert got.columns[:2] == [a, b]
+        assert sorted(tuple(r) for r in got.collect()) == want
+
+
 def test_quantile_hist_ignores_nulls(spark):
     """NULL values must not inflate N or form a phantom bin."""
     from sparkstreaming_realtime_project_spark.operators import sketches as sk

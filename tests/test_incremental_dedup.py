@@ -1187,6 +1187,138 @@ def test_streaming_suffix_plan_is_gram_equi_join(spark):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
 
 
+def _plan_node_names(plan) -> list[str]:
+    """Node names of a logical plan tree, NOT descending into a cached
+    relation's own plan (InMemoryRelation is a leaf there)."""
+    names = [plan.nodeName()]
+    kids = plan.children()
+    for i in range(kids.size()):
+        names += _plan_node_names(kids.apply(i))
+    return names
+
+
+def test_suffix_spans_aggregate_only_in_the_capped_frame(spark, tmp_path):
+    """On a one-slice store, the per-batch spans plan reads the capped
+    batch anchors from the one cached frame in BOTH branches (store
+    slice and sibling self-join); the only aggregate outside it is the
+    run merge. The uncached composition re-plans the cap's aggregates
+    in every branch."""
+    from sparkstreaming_realtime_project_spark.streaming.incremental import (
+        capped_batch_anchors,
+        capped_batch_spans,
+        read_anchor_store_slices,
+        suffix_batch_against_store,
+    )
+
+    block = [f"a{i}" for i in range(30)]
+    _suffix_batch_body(
+        spark, str(tmp_path / "store"), str(tmp_path / "dec"),
+        spark.createDataFrame([(1, " ".join(block))], DOC_SCHEMA), 0,
+    )
+    batch = spark.createDataFrame(
+        [(2, " ".join(["c0"] + block[5:25])), (3, " ".join(block[2:22]))],
+        DOC_SCHEMA,
+    )
+    anchors = dd.suffix_anchors(batch, "text", "doc_id", 8)
+    gramdf = anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    slices, store_gramdf = read_anchor_store_slices(
+        spark, str(tmp_path / "store"), anchors, gramdf
+    )
+    assert len(slices) == 1
+    want = suffix_batch_against_store(anchors, slices, store_gramdf)
+    uncached = _plan_node_names(want._jdf.queryExecution().optimizedPlan())
+    assert uncached.count("Aggregate") > 1
+    want = {tuple(r) for r in want.collect()}
+    capped = capped_batch_anchors(anchors, store_gramdf).persist()
+    try:
+        spans = capped_batch_spans(capped, slices)
+        names = _plan_node_names(spans._jdf.queryExecution().optimizedPlan())
+        # the slice join's batch side + both sides of the self-join
+        assert names.count("InMemoryRelation") == 3
+        assert names.count("Aggregate") == 1  # the run merge only
+        assert {tuple(r) for r in spans.collect()} == want and want
+    finally:
+        capped.unpersist()
+
+
+def test_suffix_ingest_fresh_store_runs_no_python_rdd(spark, tmp_path):
+    """Batch 0 on a fresh store: the empty store reads fold to empty
+    local relations, so none of the body's executed plans scans a
+    Python-backed RDD (the old empty-frame read launched PythonRDD
+    stages to read nothing)."""
+    from sparkstreaming_realtime_project_spark.streaming.incremental import (
+        suffix_ingest_batch,
+    )
+
+    block = " ".join(f"a{i}" for i in range(30))
+    spark.createDataFrame(
+        [(1, block), (2, "c0 " + block)], DOC_SCHEMA
+    ).write.parquet(str(tmp_path / "in"))
+    batch = spark.read.parquet(str(tmp_path / "in"))
+    status = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def latest(n):  # the n newest SQL executions, oldest first
+        bus.waitUntilEmpty()
+        lst = status.executionsList(max(0, status.executionsCount() - n), n)
+        return [lst.apply(i) for i in range(lst.size())]
+
+    last = latest(1)[0].executionId()
+    suffix_ingest_batch(
+        batch, 0, str(tmp_path / "store"), str(tmp_path / "dec"),
+        str(tmp_path / "clean"),
+    )
+    plans = [
+        e.physicalPlanDescription() for e in latest(16)
+        if e.executionId() > last
+    ]
+    assert len(plans) == 4  # decisions, clean, anchors, gramdf writes
+    for plan in plans:
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    dec = spark.read.parquet(str(tmp_path / "dec" / "batch=0")).collect()
+    assert [(r.doc_a, r.doc_b, r.span_len) for r in dec] == [(1, 2, 30)]
+
+
+def test_empty_store_reads_fold_to_empty_local_relation(spark, tmp_path):
+    """Every empty store read (suffix anchor/gramdf, MinHash sigs/bands,
+    SCD2 history) optimizes to an empty LocalRelation: joins against it
+    are pruned at plan time, and no job runs to read it."""
+    from sparkstreaming_realtime_project_spark.streaming.incremental import (
+        read_anchor_store,
+        read_anchor_store_slices,
+        read_signature_store,
+        read_signature_store_slices,
+    )
+    from sparkstreaming_realtime_project_spark.streaming.scd2 import read_scd2
+
+    store = str(tmp_path / "store")
+    docs = spark.createDataFrame([(1, TEXT_A)], DOC_SCHEMA)
+    anchors = dd.suffix_anchors(docs, "text", "doc_id", 8)
+    gramdf = anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    shingled = dd.with_shingles(docs, "text", "doc_id", 3)
+    sigs = shingled.select("id", "shingles")
+    bands = dd.band_keys(dd.minhash_signature(shingled, 16), 16, 4)
+    anchor_slices, slice_gramdf = read_anchor_store_slices(
+        spark, store, anchors, gramdf
+    )
+    slice_sigs, band_slices = read_signature_store_slices(
+        spark, store, sigs, bands
+    )
+    assert anchor_slices == [] and band_slices == []
+    frames = [
+        *read_anchor_store(spark, store, anchors, gramdf), slice_gramdf,
+        *read_signature_store(spark, store, sigs, bands), slice_sigs,
+        read_scd2(spark, str(tmp_path / "scd2"), key_type="bigint"),
+    ]
+    for f in frames:
+        plan = f._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>"), plan
+    assert frames[-1].schema.simpleString() == (
+        "struct<key:bigint,value:string,valid_from_us:bigint,"
+        "valid_to_us:bigint,ord:bigint,is_current:int>"
+    )
+
+
 def test_suffix_stream_catalog_consistent(spark):
     """Structural invariants of the driver-exposed 3-batch replay on
     real testdata: doc_b always belongs to the row's batch; doc_a is
@@ -1314,13 +1446,8 @@ def test_streaming_suffix_crash_restart_from_checkpoint(spark, tmp_path):
     duplicate every future span)."""
     import os as _os
 
-    from sparkstreaming_realtime_project_spark.operators.dedup import (
-        suffix_anchors,
-    )
     from sparkstreaming_realtime_project_spark.streaming.incremental import (
-        read_anchor_store,
         streaming_suffix_dedup,
-        suffix_batch_against_store,
     )
 
     text1 = " ".join(f"g{i}" for i in range(25))
@@ -1344,20 +1471,10 @@ def test_streaming_suffix_crash_restart_from_checkpoint(spark, tmp_path):
 
     # "crash": batch B's three dirs were written (same per-batch body)
     # but the checkpoint never committed batch_id=1
-    batch_b = spark.createDataFrame([(2, text2)], DOC_SCHEMA)
-    new_anchors = suffix_anchors(batch_b, "text", "doc_id", 8).persist()
-    new_gramdf = new_anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-    sa, sg = read_anchor_store(spark, store, new_anchors, new_gramdf)
-    suffix_batch_against_store(new_anchors, sa, sg).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(decisions, "batch=1"))
-    new_anchors.write.mode("overwrite").parquet(
-        _os.path.join(store, "anchors", "batch=1")
+    _suffix_batch_body(
+        spark, store, decisions,
+        spark.createDataFrame([(2, text2)], DOC_SCHEMA), 1,
     )
-    new_gramdf.write.mode("overwrite").parquet(
-        _os.path.join(store, "gramdf", "batch=1")
-    )
-    new_anchors.unpersist()
 
     # restart from the SAME checkpoint with batch B's input now visible
     fx._write_batches(in_dir, [[_doc(1, text1)], [_doc(2, text2)]])
@@ -1585,30 +1702,12 @@ def test_suffix_anchor_store_bucketed_join_no_store_shuffle(spark, tmp_path):
 
 
 def _suffix_batch_body(spark, store, decisions, batch_df, batch_id):
-    """The streaming_suffix_dedup per-batch body, run directly (the
-    same plumbing the catalog's sequential-ingest builder uses)."""
+    """The streaming_suffix_dedup per-batch body, run directly."""
     from sparkstreaming_realtime_project_spark.streaming.incremental import (
-        read_anchor_store_slices,
-        suffix_batch_against_store,
+        suffix_ingest_batch,
     )
 
-    new_anchors = dd.suffix_anchors(batch_df, "text", "doc_id", 8).persist()
-    new_gramdf = new_anchors.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-    slices, store_gramdf = read_anchor_store_slices(
-        spark, store, new_anchors, new_gramdf
-    )
-    suffix_batch_against_store(
-        new_anchors, slices, store_gramdf
-    ).write.mode("overwrite").parquet(
-        os.path.join(decisions, f"batch={batch_id}")
-    )
-    new_anchors.write.mode("overwrite").parquet(
-        os.path.join(store, "anchors", f"batch={batch_id}")
-    )
-    new_gramdf.write.mode("overwrite").parquet(
-        os.path.join(store, "gramdf", f"batch={batch_id}")
-    )
-    new_anchors.unpersist()
+    suffix_ingest_batch(batch_df, batch_id, store, decisions)
 
 
 def _span_set(spark, decisions):
