@@ -270,8 +270,9 @@ def main(argv: list[str] | None = None) -> None:
     if args.app == "publisher":
         from .http_api import publisher_server, sink_providers
 
-        # providers re-read per request: each query sees the pipelines'
-        # latest committed files, like the reference hitting live ES
+        # providers read per request: each query sees the pipelines'
+        # latest committed files, like the reference hitting live ES;
+        # read_sink re-lists a sink only when a commit changed it
         server = publisher_server(
             *sink_providers(spark, args.dau_table, args.wide_table),
             host=args.host,

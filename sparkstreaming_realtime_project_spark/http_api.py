@@ -13,6 +13,9 @@ tables are supplied as PROVIDERS (zero-arg callables returning the
 current DataFrame) so every request sees the sink's latest committed
 state — the analog of the reference querying live daily ES indices, with
 Spark's parquet snapshot isolation instead of ES refresh semantics.
+Over a sink dir (:func:`sink_providers`) a request costs a directory
+fingerprint when nothing was committed since the last one: ``read_sink``
+returns the DataFrame it already built for that snapshot.
 
 Design notes:
 - stdlib ``http.server`` only — no web framework in the sandbox, and the
@@ -68,14 +71,16 @@ def _as_provider(x: DataFrame | Provider) -> Provider:
 
 def sink_providers(spark, dau_dir: str, wide_dir: str) -> tuple[Provider, Provider]:
     """Providers over the dau and order-wide sink directories the
-    pipelines write. Each call reads the sink's committed state through
-    ``read_sink``, so a compacted sink (``gen=N`` plus later ``batch=N``
-    dirs) serves like an uncompacted one, and ``compact_sink`` can run
-    while the server does (a request still reading files its sweep
-    removes gets a 500; the next request reads the new generation). The
-    order-wide sink is partitioned by ``create_date`` (read back as
-    DATE); the wide provider adds it as the string ``dt`` the publisher
-    plans filter on."""
+    pipelines write. Each call reads the sink's latest committed state
+    through ``read_sink``, which re-lists the files only when a commit
+    changed them since the previous call (otherwise it returns the
+    DataFrame already built for that snapshot). A compacted sink
+    (``gen=N`` plus later ``batch=N`` dirs) serves like an uncompacted
+    one, and ``compact_sink`` can run while the server does (a request
+    still reading files its sweep removes gets a 500; the next request
+    reads the new generation). The order-wide sink is partitioned by
+    ``create_date`` (read back as DATE); the wide provider adds it as
+    the string ``dt`` the publisher plans filter on."""
 
     def dau() -> DataFrame:
         return read_sink(spark, dau_dir)

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .sqltext import plain_ident, plain_literal
+
 _HEX = "0123456789abcdef"
 
 
@@ -44,27 +46,6 @@ def _parse_bytes(raw: str, default: int) -> int:
         return int(s) * mult
     except ValueError:
         return default
-
-
-def _plain_ident(name: str) -> bool:
-    """True when ``name`` can be spliced into a parsed SQL string as-is.
-    Anything else (quotes, dots, spaces, leading digits) falls back to
-    the Column-API branch of the caller — the parsed fast paths are a
-    construction-time optimization, never a semantics change (ADVICE
-    r13: an interpolated name needing backticks would otherwise break
-    the parse or silently change the expression)."""
-    import re
-
-    return re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name) is not None
-
-
-def _plain_literal(text: str) -> bool:
-    """True when ``text`` can be spliced into a single-quoted SQL string
-    literal as-is: no quote and no backslash, so the parsed bytes do
-    not depend on ``spark.sql.parser.escapedStringLiterals``. Anything
-    else takes the caller's Column-API branch (``F.lit``), where no
-    parser is involved."""
-    return "'" not in text and "\\" not in text
 
 
 def tokens_expr(text_col: str | Column) -> Column:
@@ -84,7 +65,7 @@ def tokens_expr(text_col: str | Column) -> Column:
     the Hive-compat spark.sql.parser.escapedStringLiterals flag
     (ADVICE r13) — the parsed branch now matches the Column branch
     under every parser config."""
-    if isinstance(text_col, str) and _plain_ident(text_col):
+    if isinstance(text_col, str) and plain_ident(text_col):
         return F.expr(f"filter(split(lower({text_col}), r'\\s+'), t -> t != '')")
     if isinstance(text_col, str):
         text_col = F.col(text_col)
@@ -219,7 +200,7 @@ def shingles_from_tokens(tok_col: str | Column, n: int = 3) -> Column:
     Built as one parsed SQL string for a column NAME (r13, see
     tokens_expr): the transform lambda alone was a dozen py4j calls per
     plan build."""
-    if isinstance(tok_col, str) and _plain_ident(tok_col):
+    if isinstance(tok_col, str) and plain_ident(tok_col):
         return F.expr(
             f"CASE WHEN size({tok_col}) >= {n} THEN "
             f"array_distinct(transform(sequence(1, size({tok_col}) - {n - 1}), "
@@ -642,11 +623,19 @@ def lsh_candidate_pairs(
     # the window shares its one hash(band, key) exchange with the
     # self-join below (bench 2.64 -> 1.68 s at sf0.1 together with the
     # lazy signature persist, candidates identical).
-    banded = _capped_by_count(
-        band_keys(signatures, k, bands, hash_fn=hash_fn),
-        ["band", "key"],
-        max_bucket,
+    return _band_candidates(
+        _capped_by_count(
+            band_keys(signatures, k, bands, hash_fn=hash_fn),
+            ["band", "key"],
+            max_bucket,
+        )
     )
+
+
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """Candidate pairs ``(doc_a, doc_b)``, doc_a < doc_b, of a capped
+    ``(id, band, key)`` table: docs sharing any band key, from one
+    self-join on (band, key)."""
     a, b2 = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -707,17 +696,9 @@ def minhash_dedup_pairs(
         band_keys(sig, k, bands, hash_fn=hash_fn), ["band", "key"], max_bucket
     ).persist()
     banded.count()
-    a, b2 = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b2,
-            F.expr("a.band = b.band AND a.key = b.key AND a.id < b.id"),
-        )
-        .selectExpr("a.id AS doc_a", "b.id AS doc_b")
-        .distinct()
-    )
     pairs = jaccard_pairs(
-        sig.select("id", "shingles"), threshold, candidates=cands
+        sig.select("id", "shingles"), threshold,
+        candidates=_band_candidates(banded),
     ).persist()
     pairs.count()
     banded.unpersist()
@@ -731,8 +712,8 @@ def token_md5s(tok_col: str | Column, seed: str = "") -> Column:
     aggregates reads one hex digit, so hashing must happen once per
     token, not once per (token, bit) — a 16-64x md5 saving."""
     if (
-        isinstance(tok_col, str) and _plain_ident(tok_col)
-        and _plain_literal(seed)
+        isinstance(tok_col, str) and plain_ident(tok_col)
+        and plain_literal(seed)
     ):
         # one parsed expression (r13, see tokens_expr)
         inner = f"md5(concat('{seed}', tok))" if seed else "md5(tok)"
@@ -757,7 +738,7 @@ def simhash_from_hashes(hash_cols: list[str | Column], bits: int = 16) -> Column
     carry ~log2(N) bits."""
     if bits > 32 * len(hash_cols):
         raise ValueError("need one hash array per 32 bits")
-    if all(isinstance(c, str) and _plain_ident(c) for c in hash_cols):
+    if all(isinstance(c, str) and plain_ident(c) for c in hash_cols):
         # one parsed expression for the whole signature (r13, see
         # tokens_expr): the per-bit aggregate lambdas were ~10 py4j
         # round-trips each, x 16-64 bits per plan build

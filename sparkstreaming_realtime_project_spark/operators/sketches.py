@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sqltext import plain_ident, plain_literal
+
 __all__ = ["cms_bucket", "cms_sketch", "cms_estimate", "cms_self_join_size", "mg_topk"]
 
 
@@ -42,12 +44,10 @@ def cms_sketch(
     body runs per MICRO-BATCH in streaming_cms_counts, and the d
     struct/hash Column chains were ~25 py4j round-trips per plan build.
     The Column branch remains for exotic names and for salts holding a
-    quote or backslash (see _plain_literal)."""
-    from ..operators.dedup import _plain_ident, _plain_literal
-
+    quote or backslash (see plain_literal)."""
     if (
-        isinstance(key_col, str) and _plain_ident(key_col)
-        and _plain_literal(salt)
+        isinstance(key_col, str) and plain_ident(key_col)
+        and plain_literal(salt)
     ):
         def bucket_sql(j: int) -> str:
             return (

@@ -31,13 +31,15 @@ from .serving import (
 
 def dau_realtime_json(dau: DataFrame, td: str, key: str = "mid") -> dict:
     """GET /dauRealtime?td= (PublisherController.java:26-33):
-    {"dauTotal": N, "dauTd": {"HH": ct, ...}, "dauYd": {...}}."""
-    plans = dau_realtime(dau, td, key)
-    total_rows = plans["dauTotal"].collect()
+    {"dauTotal": N, "dauTd": {"HH": ct, ...}, "dauYd": {...}} from one
+    collect of the (is_td, hr, ct) aggregate; dauTotal is the sum of
+    td's hourly counts."""
+    rows = dau_realtime(dau, td, key).collect()
+    dau_td = {r["hr"]: r["ct"] for r in rows if r["is_td"]}
     return {
-        "dauTotal": total_rows[0]["dau_total"] if total_rows else 0,
-        "dauTd": {r["hr"]: r["ct"] for r in plans["dauTd"].collect()},
-        "dauYd": {r["hr"]: r["ct"] for r in plans["dauYd"].collect()},
+        "dauTotal": sum(dau_td.values()),
+        "dauTd": dau_td,
+        "dauYd": {r["hr"]: r["ct"] for r in rows if not r["is_td"]},
     }
 
 

@@ -20,26 +20,27 @@ from pyspark.sql import functions as F
 from ..functions.text import highlight, text_match
 
 
-def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> dict[str, DataFrame]:
-    """A1+A2+A3 (PublisherMapperImpl.java:51-125): total deduped actives for
-    date *td*, hourly histogram for td, and the same histogram for td-1.
+def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> DataFrame:
+    """A1+A2+A3 (PublisherMapperImpl.java:51-125): the hourly histograms
+    of deduped actives for date *td* and for td-1, as ONE aggregate
+    ``(is_td, hr, ct)`` — ``is_td`` is true for td's hours, false for
+    td-1's. The A1 total is the sum of td's hourly counts: the hour
+    groups partition td's rows (a null ``hr`` is its own group), so it
+    equals ``count(key)`` over td without a second action.
 
-    ``dau`` is the deduped dau_info table keyed (dt, mid): A1 is a plain
-    count; A2/A3 one groupBy over at most 48 (dt, hr) groups — map-side
-    partials make the shuffle negligible at any scale.
+    ``dau`` is the deduped dau_info table keyed (dt, mid): one groupBy
+    over at most 48 (day, hr) groups — map-side partials make the
+    shuffle negligible at any scale. The day test stays inside the plan:
+    a sink partitioned by ``dt`` reads it back as DATE, which Spark
+    compares with the string *td* by casting, and a driver-side string
+    compare would not.
     """
     yd = F.date_format(F.date_sub(F.to_date(F.lit(td)), 1), "yyyy-MM-dd")
-    both = (
+    return (
         dau.filter(F.col("dt").isin([td]) | (F.col("dt") == yd))
-        .groupBy("dt", "hr")
+        .groupBy((F.col("dt") == td).alias("is_td"), "hr")
         .agg(F.count(key).alias("ct"))
     )
-    total = dau.filter(F.col("dt") == td).agg(F.count(key).alias("dau_total"))
-    return {
-        "dauTotal": total,
-        "dauTd": both.filter(F.col("dt") == td).select("hr", "ct"),
-        "dauYd": both.filter(F.col("dt") == yd).select("hr", "ct"),
-    }
 
 
 def stats_by_item(

@@ -230,3 +230,21 @@ def dim_frames(spark):
         spark.createDataFrame(DIM_USERS, DIM_USER_INFO_SCHEMA),
         spark.createDataFrame(DIM_PROVINCES, DIM_BASE_PROVINCE_SCHEMA),
     )
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh status-tracker job group and return
+    (its result, the number of Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -243,6 +243,40 @@ def test_sink_providers_serve_a_compacted_dau_sink(spark, dau_table, tmp_path):
     }
 
 
+def test_dau_realtime_is_one_action_on_a_date_typed_sink(spark, dau_table, tmp_path):
+    """/dauRealtime over a sink whose ``dt`` partition reads back as DATE
+    runs at most 2 Spark jobs per call (one aggregate: its shuffle stage
+    and its result) and answers exactly the three-query contract,
+    including a day with no partition."""
+    from pyspark.sql.types import DateType
+
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        idempotent_partitioned_writer,
+        read_sink,
+    )
+
+    from . import streaming_fixtures as fx
+
+    out = str(tmp_path / "dau")
+    write = idempotent_partitioned_writer(out, ["mid", "dt"], "dt")
+    rows = dau_table.collect()
+    write(spark.createDataFrame(rows[:3], dau_table.schema), 0)
+    write(spark.createDataFrame(rows[3:], dau_table.schema), 1)
+    sink = read_sink(spark, out)
+    assert isinstance(sink.schema["dt"].dataType, DateType)
+    for td, want in [
+        ("2024-01-02", {
+            "dauTotal": 3, "dauTd": {"01": 2, "09": 1},
+            "dauYd": {"10": 1, "23": 1},
+        }),
+        ("2024-01-01", {"dauTotal": 2, "dauTd": {"10": 1, "23": 1}, "dauYd": {}}),
+        ("2030-12-31", {"dauTotal": 0, "dauTd": {}, "dauYd": {}}),
+    ]:
+        got, jobs = fx.count_jobs(spark, lambda: dau_realtime_json(sink, td))
+        assert got == want, td
+        assert jobs <= 2, (td, jobs)
+
+
 def test_sink_providers_serve_stats_by_item_from_order_wide_sink(
     spark, wide_table, tmp_path
 ):

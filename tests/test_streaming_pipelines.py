@@ -1469,6 +1469,183 @@ def test_compact_time_travel_and_vacuum(spark, tmp_path):
     }
 
 
+_SNAP_SCHEMA = "k string, v string, p int"
+
+
+def _snap_rows(df):
+    return {(r["k"], r["v"], r["p"]) for r in df.select("k", "v", "p").collect()}
+
+
+def test_read_sink_reuses_an_unchanged_snapshot(spark, tmp_path):
+    """Two reads of an unchanged sink return the same DataFrame, and the
+    second launches no Spark job (no listing, no schema inference)."""
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        idempotent_partitioned_writer,
+    )
+
+    out = str(tmp_path / "sink")
+    write = idempotent_partitioned_writer(out, ["k"], "p")
+    for b in range(2):
+        write(spark.createDataFrame([(f"k{b}", "v", b)], _SNAP_SCHEMA), b)
+    first, jobs_first = fx.count_jobs(spark, lambda: read_sink(spark, out))
+    second, jobs_second = fx.count_jobs(spark, lambda: read_sink(spark, out))
+    assert jobs_first > 0  # the counter sees the inference job
+    assert second is first
+    assert jobs_second == 0
+    assert _snap_rows(second) == {("k0", "v", 0), ("k1", "v", 1)}
+
+
+@pytest.mark.parametrize("compacted", [False, True])
+def test_read_sink_snapshot_follows_every_commit(spark, tmp_path, compacted):
+    """After each kind of commit — a new batch dir, a replay of an
+    existing batch id, compact_sink and merge_into — the next read_sink
+    serves a new DataFrame whose rows equal a fresh read's, in both the
+    uncompacted and the compacted layout."""
+    from sparkstreaming_realtime_project_spark.streaming import sinks
+
+    out = str(tmp_path / "sink")
+    write = sinks.idempotent_partitioned_writer(out, ["k"], "p")
+
+    def land(batch_id, rows):
+        write(spark.createDataFrame(rows, _SNAP_SCHEMA), batch_id)
+
+    land(0, [("k1", "v1", 1), ("k2", "v1", 2)])
+    if compacted:
+        sinks.compact_sink(spark, out, ["k"], partition_col="p")
+        assert "_MANIFEST" in os.listdir(out)
+    commits = [
+        ("new batch", lambda: land(1, [("k3", "v1", 1)])),
+        ("replay", lambda: land(1, [("k3", "v2", 1), ("k4", "v1", 2)])),
+        ("compact", lambda: sinks.compact_sink(spark, out, ["k"], partition_col="p")),
+        ("merge", lambda: sinks.merge_into(
+            spark, out,
+            spark.createDataFrame(
+                [("k1", "v9", 1, False), ("k2", None, 2, True)],
+                _SNAP_SCHEMA + ", del boolean",
+            ),
+            ["k"], delete_col="del", partition_col="p",
+        )),
+    ]
+    before = read_sink(spark, out)
+    for name, commit in commits:
+        assert read_sink(spark, out) is before, name  # warm, unchanged
+        commit()
+        after = read_sink(spark, out)
+        assert after is not before, name
+        assert _snap_rows(after) == _snap_rows(
+            sinks._read_committed(spark, out)
+        ), name
+        before = after
+    assert _snap_rows(before) == {
+        ("k1", "v9", 1), ("k3", "v2", 1), ("k4", "v1", 2),
+    }
+    assert sinks._SNAPSHOTS[os.path.abspath(out)][2] is before
+
+
+def test_read_sink_snapshot_under_concurrent_readers(spark, tmp_path):
+    """More reader threads than cores call read_sink while batches land
+    (the threaded publisher's access pattern). Racing rebuilds may
+    replace each other's entry, but the read after the last commit
+    serves the final state."""
+    import sys
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import CapturedException
+
+    from sparkstreaming_realtime_project_spark.streaming import sinks
+
+    out = str(tmp_path / "sink")
+    write = sinks.idempotent_partitioned_writer(out, ["k"], "p")
+    write(spark.createDataFrame([("k0", "v", 0)], _SNAP_SCHEMA), 0)
+    done = threading.Event()
+    errors = []
+
+    def reader():
+        try:
+            while not done.is_set():
+                sinks.read_sink(spark, out)
+        except Exception as e:  # noqa: BLE001 (reported below)
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader) for _ in range(2 * os.cpu_count())]
+    try:
+        for t in threads:
+            t.start()
+        for b in range(1, 4):
+            write(spark.createDataFrame([(f"k{b}", "v", b)], _SNAP_SCHEMA), b)
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    # a read racing an in-place write may see it half done and fail in
+    # Spark (as an uncached read can); a Python-side error would point
+    # at the snapshot map
+    assert all(
+        isinstance(e, (CapturedException, Py4JJavaError)) for e in errors
+    ), errors
+    assert _snap_rows(read_sink(spark, out)) == {
+        (f"k{b}", "v", b) for b in range(4)
+    }
+
+
+def test_read_sink_new_context_builds_a_new_snapshot(tmp_path):
+    """A snapshot kept under one SparkContext is never returned under
+    the next one (a separate process, so the suite's session lives on)."""
+    import subprocess
+    import sys
+    import textwrap
+
+    script = textwrap.dedent(
+        """
+        import sys
+        from pyspark.sql import SparkSession
+        from sparkstreaming_realtime_project_spark.streaming import sinks
+
+        def session():
+            return (
+                SparkSession.builder.master("local[1]")
+                .config("spark.ui.enabled", "false")
+                .config("spark.driver.memory", "512m")
+                .getOrCreate()
+            )
+
+        out = sys.argv[1]
+        s1 = session()
+        sinks.idempotent_partitioned_writer(out, ["k"], "p")(
+            s1.createDataFrame([("k1", "v1", 1)], "k string, v string, p int"), 0
+        )
+        first = sinks.read_sink(s1, out)
+        assert sinks.read_sink(s1, out) is first
+        s1.stop()
+        s2 = session()
+        second = sinks.read_sink(s2, out)
+        assert second is not first
+        assert sinks.read_sink(s2, out) is second
+        assert len(sinks._SNAPSHOTS) == 1
+        assert [tuple(r) for r in second.collect()] == [("k1", "v1", 1)]
+        s2.stop()
+        print("ok")
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (root, os.environ.get("PYTHONPATH")) if p
+        ),
+    }
+    res = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "sink")],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0 and res.stdout.strip().endswith("ok"), res.stderr[-3000:]
+
+
 def test_crawl_frontier_dedup_on_canonical_url(spark, tmp_path):
     """Crawl-frontier semantics from existing pieces: canonicalize the
     URL (operators/urls.py) and first-seen-dedup on the canonical key
