@@ -139,7 +139,7 @@ def main(argv: list[str] | None = None) -> None:
         "compact-store",
         help="fold a streaming STORE's batch dirs (anchor/signature "
         "stores into their bucketed at-rest tables; sketch stores into "
-        "one merged dir). Run with the stream stopped, or only past "
+        "one committed generation). Run with the stream stopped, or only past "
         "the checkpoint's commit horizon.",
     )
     p.add_argument("--dir", required=True, help="store directory")
@@ -224,7 +224,7 @@ def main(argv: list[str] | None = None) -> None:
         if args.fanout is not None and args.kind not in ("suffix", "minhash"):
             sys.exit(
                 f"--fanout is only supported for --kind suffix/minhash; "
-                f"the {args.kind} store folds into one merged dir (its "
+                f"the {args.kind} store folds into one merged generation (its "
                 f"merge is a cheap cell-wise/per-key reduction, not a "
                 f"store re-write — there is no leveled mode to select)"
             )

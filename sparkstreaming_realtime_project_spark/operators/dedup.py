@@ -382,7 +382,7 @@ def jaccard_pairs(
         # NOTE: built UNPERSISTED here, so the self-join computes the
         # prefix twice when the input sits on a cache (AQE exchange
         # reuse does not cross InMemoryRelation subtrees — see
-        # scripts/reuse_probe.py); ngram_jaccard_dedup_pairs persists
+        # OPTIMIZATION_r14.md); ngram_jaccard_dedup_pairs persists
         # the prefix between the two sides instead of calling this
         # branch.
         prefix = _ppjoin_prefix(shingled, threshold, max_df)
@@ -451,7 +451,7 @@ def ngram_jaccard_dedup_pairs(
 
     The capped path persists the PPJOIN PREFIX table once (r14): AQE
     exchange reuse does not cross InMemoryRelation subtrees (measured,
-    scripts/reuse_probe.py), so building the prefix lazily over the
+    OPTIMIZATION_r14.md), so building the prefix lazily over the
     shingle cache executed the whole explode -> df -> rank chain TWICE
     — once per self-join side, one of them as a 40 MiB broadcast hash
     build of the exploded table (the r13 plan). With the prefix cached,
@@ -459,7 +459,7 @@ def ngram_jaccard_dedup_pairs(
     (the r13 standalone with_shingles count job is gone — there is no
     second cold subtree left to race it), and the self-join reads the
     small capped prefix twice for free. Measured at sf0.1: 1.95 ->
-    1.49 s, pairs identical (scripts/opt_experiments.py ngram14)."""
+    1.49 s, pairs identical (OPTIMIZATION_r14.md, ngram14)."""
     if max_df is None:
         # uncapped exact path: no prefix table exists; the count-based
         # intersection consumes the shingle table on both join sides,
@@ -684,14 +684,14 @@ def minhash_dedup_pairs(
     # before sig.unpersist(), so the unpersist never races the cache.
     sig = minhash_signature(shingled, k, hash_fn=hash_fn).persist()
     # persist the capped band table once (r14): AQE exchange reuse does
-    # not cross InMemoryRelation subtrees (scripts/reuse_probe.py), so
+    # not cross InMemoryRelation subtrees (OPTIMIZATION_r14.md), so
     # the band self-join over the sig cache executed the explode ->
     # exchange(band,key) -> count-window chain TWICE, one side as a
     # 9 MiB broadcast hash build. The banded.count() fill job is one
     # subtree, so it fills the sig cache en route (no race), and the
     # self-join then reads the small capped band table twice for free.
     # Measured at sf0.1: 1.55 -> 1.43 s, pairs identical
-    # (scripts/opt_experiments.py minhash14).
+    # (OPTIMIZATION_r14.md, minhash14).
     banded = _capped_by_count(
         band_keys(sig, k, bands, hash_fn=hash_fn), ["band", "key"], max_bucket
     ).persist()

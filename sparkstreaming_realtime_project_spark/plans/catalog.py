@@ -8017,6 +8017,7 @@ from ..operators import linkage as _lk
 from ..operators import ordered as _ord
 from ..operators.validate import l_diversity_report as _ldiv
 from ..streaming import incremental as _inc
+from ..streaming.sinks import write_batch
 
 
 @_register(
@@ -8959,9 +8960,7 @@ def _hll_stream_store(spark, sf_dir: str) -> str:
                 ev.filter(F.col("event_id") % _HLL_STREAM_BATCHES == b),
                 "user_id",
             )
-            regs.write.mode("overwrite").parquet(
-                os.path.join(path, f"batch={b}")
-            )
+            write_batch(regs, path, b)
         _HLL_STREAM_PATHS[key] = path
     return _HLL_STREAM_PATHS[key]
 
@@ -9067,13 +9066,14 @@ def _cms_stream_store(spark, sf_dir: str) -> str:
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         ev = _t(spark, sf_dir, "events")
         for b in range(_CMS_STREAM_BATCHES):
-            _sk.cms_sketch(
-                ev.filter(F.col("event_id") % _CMS_STREAM_BATCHES == b),
-                "user_id",
-                d=_CMS_D,
-                w=_CMS_W,
-            ).write.mode("overwrite").parquet(
-                os.path.join(path, f"batch={b}")
+            write_batch(
+                _sk.cms_sketch(
+                    ev.filter(F.col("event_id") % _CMS_STREAM_BATCHES == b),
+                    "user_id",
+                    d=_CMS_D,
+                    w=_CMS_W,
+                ),
+                path, b,
             )
         _CMS_STREAM_PATHS[key] = path
     return _CMS_STREAM_PATHS[key]
@@ -9351,9 +9351,7 @@ def _ivf_stream_store(spark, sf_dir: str, cents) -> str:
                 ),
                 _cents_col(spark, cents),
             ).select("id", "v", _cell_expr(F.col("v")).alias("cell"))
-            assigned.write.mode("overwrite").partitionBy("cell").parquet(
-                os.path.join(path, f"batch={b}")
-            )
+            write_batch(assigned, path, b, partition_by="cell")
         _IVF_STREAM_PATHS[key] = path
     return _IVF_STREAM_PATHS[key]
 
@@ -10559,18 +10557,12 @@ def _minhash_stream_store(
                 new_sigs, new_bands, store_sigs, store_bands,
                 threshold=0.8, max_bucket=_MAX_BUCKET,
             ).persist()
-            decisions.write.mode("overwrite").parquet(
-                os.path.join(decisions_dir, f"batch={b}")
-            )
+            write_batch(decisions, decisions_dir, b)
             accepted = decisions.filter(F.col("dup_of").isNull()).select(
                 F.col("doc_id").alias("id")
             )
-            new_sigs.join(accepted, "id").write.mode("overwrite").parquet(
-                os.path.join(store, "sigs", f"batch={b}")
-            )
-            new_bands.join(accepted, "id").write.mode("overwrite").parquet(
-                os.path.join(store, "bands", f"batch={b}")
-            )
+            for sub, new in (("sigs", new_sigs), ("bands", new_bands)):
+                write_batch(new.join(accepted, "id"), os.path.join(store, sub), b)
             decisions.unpersist()
             if compact:
                 compact_minhash_store(spark, store, buckets=8,

@@ -53,54 +53,43 @@ from ..operators.dedup import (
     minhash_signature,
     with_shingles,
 )
+from .sinks import (
+    atomic_write,
+    batch_ids,
+    fold_generation,
+    read_batches,
+    read_sink,
+    sweep_batches,
+    write_batch,
+)
 
 
-def _batch_ids(root: str, sub: str, min_batch: int | None = None) -> list[int]:
-    """Sorted committed batch ids under root/sub/batch=*, optionally
-    only those STRICTLY AFTER ``min_batch`` (the compaction horizon —
-    folded dirs are pruned here, before any reader is built, so a
-    lagging cleanup never re-reads them)."""
-    import glob
+def _tail(
+    spark, store_dir: str, sub: str, after: int | None = None,
+    exclude: int | None = None,
+) -> list[DataFrame]:
+    """The sub-store's batch dirs strictly after the compaction horizon
+    ``after``, unioned into ONE slice (``batch`` dropped) — or no slice
+    when there are none, so an empty store adds nothing to the plan.
 
-    ids = []
-    for p in glob.glob(os.path.join(root, sub, "batch=*")):
-        try:
-            i = int(p.rsplit("=", 1)[1])
-        except ValueError:
-            continue
-        if min_batch is None or i > min_batch:
-            ids.append(i)
-    return sorted(ids)
+    ``exclude`` is the crash-recovery guard: a crash BETWEEN a batch's
+    store write and its checkpoint commit leaves a PHANTOM batch dir on
+    disk; when the engine replays that input as the same batch id, the
+    store read must not see the phantom (the batch's own docs would
+    join against themselves, and sketch-counted df would double) — the
+    replaying batch excludes its OWN batch id, which for a committed
+    batch id is a no-op because foreachBatch never re-runs a committed
+    id against the same checkpoint."""
+    root = os.path.join(store_dir, sub)
+    ids = [b for b in batch_ids(root, after) if b != exclude]
+    return [read_batches(spark, root, ids).drop("batch")] if ids else []
 
 
-def _read_or_empty(
-    spark, root: str, sub: str, like: DataFrame,
-    exclude_batch: int | None = None,
-    min_batch: int | None = None,
-) -> DataFrame:
-    """Union of the store's committed batch= subdirs. ``exclude_batch``
-    is the crash-recovery guard: a crash BETWEEN a batch's store write
-    and its checkpoint commit leaves a PHANTOM batch dir on disk; when
-    the engine replays that input as the same batch id, the store read
-    must not see the phantom (the batch's own docs would join against
-    themselves, and sketch-counted df would double) — the replaying
-    batch excludes its OWN batch id, which for a committed batch id is
-    a no-op because foreachBatch never re-runs a committed id against
-    the same checkpoint. ``min_batch`` prunes dirs a compaction has
-    already folded (read instead via the compacted table). With no
-    committed dir the read is ``like.limit(0)``: the optimizer folds
-    it to an empty LocalRelation, so joins against it are pruned at
-    plan time and no job runs to read nothing."""
-    path = os.path.join(root, sub)
-    ids = _batch_ids(root, sub, min_batch)
-    if not ids:
-        return like.limit(0)
-    df = spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, f"batch={i}") for i in ids]
-    )
-    if exclude_batch is not None:
-        df = df.filter(F.col("batch") != exclude_batch)
-    return df.drop("batch")
+def _union(slices: list[DataFrame], like: DataFrame) -> DataFrame:
+    """Flat union of store slices; with none, ``like.limit(0)``: the
+    optimizer folds it to an empty LocalRelation, so joins against it
+    are pruned at plan time and no job runs to read nothing."""
+    return reduce(DataFrame.unionByName, slices) if slices else like.limit(0)
 
 
 def _checkpoint_query_id(checkpoint: str) -> str | None:
@@ -145,10 +134,7 @@ def _guard_store_checkpoint(store_dir: str, checkpoint: str) -> None:
                 "new store directory."
             )
         return
-    tmp = stamp + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(qid)
-    os.replace(tmp, stamp)
+    atomic_write(stamp, qid)
 
 
 def read_signature_store(
@@ -157,7 +143,7 @@ def read_signature_store(
 ) -> tuple[DataFrame, DataFrame]:
     """(sigs, bands) of every accepted doc so far; empty frames with the
     incoming batch's schemas before the first committed batch.
-    ``exclude_batch``: see _read_or_empty (phantom-dir replay guard).
+    ``exclude_batch``: see _tail (phantom-dir replay guard).
 
     Flat-union convenience wrapper over read_signature_store_slices —
     use the slices form in per-batch joins so a compacted bucketed
@@ -169,13 +155,7 @@ def read_signature_store(
         spark, store_dir, like_sigs, like_bands, exclude_batch,
         bucketed=False,
     )
-    if not band_slices:
-        bands = like_bands.limit(0)
-    else:
-        bands = band_slices[0]
-        for s in band_slices[1:]:
-            bands = bands.unionByName(s)
-    return sigs, bands
+    return sigs, _union(band_slices, like_bands)
 
 
 def read_signature_store_slices(
@@ -209,7 +189,7 @@ def read_signature_store_slices(
         )
     sig_slices: list[DataFrame] = []
     band_slices: list[DataFrame] = []
-    sig_tail = bool(_batch_ids(store_dir, "sigs", min_batch))
+    sig_tail = _tail(spark, store_dir, "sigs", min_batch, exclude_batch)
     if manifest is not None:
         gens = _manifest_generations(manifest)
         live = {g["tables"]["bands"]["name"] for g in gens}
@@ -234,23 +214,8 @@ def read_signature_store_slices(
                                 live)
                 if bucketed else _gen_df(spark, g["tables"]["bands"])
             )
-    if sig_tail:
-        sig_slices.append(
-            _read_or_empty(spark, store_dir, "sigs", like_sigs,
-                           exclude_batch, min_batch)
-        )
-    if _batch_ids(store_dir, "bands", min_batch):
-        band_slices.append(
-            _read_or_empty(spark, store_dir, "bands", like_bands,
-                           exclude_batch, min_batch)
-        )
-    if not sig_slices:
-        sigs = like_sigs.limit(0)
-    else:
-        sigs = sig_slices[0]
-        for s in sig_slices[1:]:
-            sigs = sigs.unionByName(s)
-    return sigs, band_slices
+    band_slices += _tail(spark, store_dir, "bands", min_batch, exclude_batch)
+    return _union(sig_slices + sig_tail, like_sigs), band_slices
 
 
 def dedup_batch_against_store(
@@ -386,18 +351,15 @@ def streaming_minhash_dedup(
         decisions = dedup_batch_against_store(
             new_sigs, new_bands, store_sigs, band_slices, threshold, max_bucket
         ).persist()
-        decisions.write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"batch={batch_id}")
-        )
+        write_batch(decisions, decisions_dir, batch_id)
         accepted = decisions.filter(F.col("dup_of").isNull()).select(
             F.col("doc_id").alias("id")
         )
-        new_sigs.join(accepted, "id").write.mode("overwrite").parquet(
-            os.path.join(store_dir, "sigs", f"batch={batch_id}")
-        )
-        new_bands.join(accepted, "id").write.mode("overwrite").parquet(
-            os.path.join(store_dir, "bands", f"batch={batch_id}")
-        )
+        for sub, new in (("sigs", new_sigs), ("bands", new_bands)):
+            write_batch(
+                new.join(accepted, "id"), os.path.join(store_dir, sub),
+                batch_id,
+            )
         decisions.unpersist()
         new_bands.unpersist()
         shingled.unpersist()
@@ -466,7 +428,7 @@ def read_anchor_store(
 ) -> tuple[DataFrame, DataFrame]:
     """(anchors, gramdf) of every doc ingested so far; empty frames with
     the incoming batch's schemas before the first committed batch.
-    ``exclude_batch``: see _read_or_empty (phantom-dir replay guard —
+    ``exclude_batch``: see _tail (phantom-dir replay guard —
     without it a replayed batch's docs would span-match THEMSELVES and
     the sketch-summed df would count the batch twice).
 
@@ -479,13 +441,7 @@ def read_anchor_store(
         spark, store_dir, like_anchors, like_gramdf, exclude_batch,
         bucketed=False,
     )
-    if not anchor_slices:
-        anchors = like_anchors.limit(0)
-    else:
-        anchors = anchor_slices[0]
-        for s in anchor_slices[1:]:
-            anchors = anchors.unionByName(s)
-    return anchors, gramdf
+    return _union(anchor_slices, like_anchors), gramdf
 
 
 # --------------------------------------------------------------------------
@@ -505,15 +461,17 @@ def read_anchor_store(
 # exact same match set (a given (store doc, new doc) pair's anchors
 # live in exactly one slice).
 #
-# Crash discipline (same as compact_moment_store): write the new
-# bucketed generation to its own through=N path, THEN atomically
-# os.replace the manifest, THEN delete folded dirs + the previous
-# generation. A crash before the manifest flip leaves the old state
-# authoritative; a crash after it leaves stale dirs that the next
-# compaction (or any read — _batch_ids prunes at the horizon) ignores.
-# MUST run while the stream is stopped or only over batches the
-# checkpoint has committed: replaying a compacted-away batch id is a
-# contract violation and the read path fails fast on it.
+# Crash discipline (the sinks.py protocol; this store's manifest is
+# _compaction.json, which records bucketed generations): write the new
+# generation to its own path, THEN commit the manifest (sinks.
+# atomic_write: tmp, fsync, os.replace), THEN sweep folded batch dirs
+# (sinks.sweep_batches) and dead generations. A crash before the commit
+# leaves the old state authoritative; a crash after it leaves stale
+# dirs that every read ignores (batch_ids prunes at the horizon) and
+# the next compaction sweeps. MUST run while the stream is stopped or
+# only over batches the checkpoint has committed: replaying a
+# compacted-away batch id is a contract violation and the read path
+# fails fast on it.
 # --------------------------------------------------------------------------
 
 
@@ -601,20 +559,6 @@ def _bucketed_slice(
             f"{buckets} BUCKETS LOCATION '{path}'"
         )
     return spark.table(name)
-
-
-def _tail_df(spark, store_dir: str, sub: str, min_batch: int) -> DataFrame:
-    """Union of the committed batch= dirs strictly after ``min_batch``
-    (the un-compacted tail), batch column dropped."""
-    sub_path = os.path.join(store_dir, sub)
-    return (
-        spark.read.option("basePath", sub_path)
-        .parquet(*[
-            os.path.join(sub_path, f"batch={i}")
-            for i in _batch_ids(store_dir, sub, min_batch)
-        ])
-        .drop("batch")
-    )
 
 
 def _write_generation(
@@ -733,7 +677,7 @@ def _compact_store(
     manifest = read_compaction_manifest(store_dir)
     prev_through = manifest["through_batch"] if manifest else -1
     prev_gens = _manifest_generations(manifest) if manifest else []
-    new_ids = _batch_ids(store_dir, subs[0][0], prev_through)
+    new_ids = batch_ids(os.path.join(store_dir, subs[0][0]), prev_through)
     digest = hashlib.md5(
         os.path.abspath(store_dir).encode()
     ).hexdigest()[:12]
@@ -755,11 +699,8 @@ def _compact_store(
             parts = [
                 _gen_df(spark, g["tables"][sub]) for g in prev_gens
             ]
-            if new_ids:
-                parts.append(_tail_df(spark, store_dir, sub, prev_through))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
+            parts += _tail(spark, store_dir, sub, prev_through)
+            df = reduce(DataFrame.unionByName, parts)
             if fold is not None:
                 df = fold(df)
             name = f"{prefix}_store_{digest}_{sub}_b{through}"
@@ -797,7 +738,7 @@ def _compact_store(
         rows_written = 0
         if new_ids:
             sources = {
-                sub: _tail_df(spark, store_dir, sub, prev_through)
+                sub: _tail(spark, store_dir, sub, prev_through)[0]
                 for sub, _c, _f in subs
             }
             gens.append(_write_generation(
@@ -820,13 +761,12 @@ def _compact_store(
             if not violating:
                 break
             group = by_tier[violating[0]]
-            sources = {}
-            for sub, _cols, _fold in subs:
-                df = None
-                for g in group:
-                    part = _gen_df(spark, g["tables"][sub])
-                    df = part if df is None else df.unionByName(part)
-                sources[sub] = df
+            sources = {
+                sub: reduce(DataFrame.unionByName, [
+                    _gen_df(spark, g["tables"][sub]) for g in group
+                ])
+                for sub, _cols, _fold in subs
+            }
             merged = _write_generation(
                 spark, store_dir, prefix, digest, subs, sources,
                 next_gen, max(g["through"] for g in group), buckets,
@@ -853,10 +793,7 @@ def _compact_store(
             "generations": sorted(gens, key=lambda g: g["gen"]),
         }
 
-    tmp = _manifest_path(store_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(new_manifest, f)
-    os.replace(tmp, _manifest_path(store_dir))
+    atomic_write(_manifest_path(store_dir), json.dumps(new_manifest))
     for g in dead_gens:
         for sub, _cols, _fold in subs:
             spark.sql(
@@ -924,21 +861,13 @@ def _sweep_folded(store_dir: str, manifest: dict) -> None:
     import glob
     import shutil
 
-    through = manifest["through_batch"]
     gens = _manifest_generations(manifest)
     referenced = {
         os.path.abspath(e["path"])
         for g in gens for e in g["tables"].values()
     }
     for sub in gens[0]["tables"]:
-        sub_path = os.path.join(store_dir, sub)
-        for p in glob.glob(os.path.join(sub_path, "batch=*")):
-            try:
-                i = int(p.rsplit("=", 1)[1])
-            except ValueError:
-                continue
-            if i <= through:
-                shutil.rmtree(p, ignore_errors=True)
+        sweep_batches(os.path.join(store_dir, sub), manifest["through_batch"])
         for p in glob.glob(os.path.join(store_dir, f"{sub}_compact", "*")):
             if os.path.abspath(p) not in referenced:
                 shutil.rmtree(p, ignore_errors=True)
@@ -992,23 +921,11 @@ def read_anchor_store_slices(
                 if bucketed else _gen_df(spark, g["tables"]["anchors"])
             )
             gram_slices.append(_gen_df(spark, g["tables"]["gramdf"]))
-    if _batch_ids(store_dir, "anchors", min_batch):
-        anchor_slices.append(
-            _read_or_empty(spark, store_dir, "anchors", like_anchors,
-                           exclude_batch, min_batch)
-        )
-    if _batch_ids(store_dir, "gramdf", min_batch):
-        gram_slices.append(
-            _read_or_empty(spark, store_dir, "gramdf", like_gramdf,
-                           exclude_batch, min_batch)
-        )
-    if not gram_slices:
-        gramdf = like_gramdf.limit(0)
-    else:
-        gramdf = gram_slices[0]
-        for s in gram_slices[1:]:
-            gramdf = gramdf.unionByName(s)
-    return anchor_slices, gramdf
+    anchor_slices += _tail(
+        spark, store_dir, "anchors", min_batch, exclude_batch
+    )
+    gram_slices += _tail(spark, store_dir, "gramdf", min_batch, exclude_batch)
+    return anchor_slices, _union(gram_slices, like_gramdf)
 
 
 def capped_batch_anchors(
@@ -1133,7 +1050,7 @@ def suffix_ingest_batch(
     loses); then the batch's ORIGINAL (uncapped) anchors and gram df to
     the store, so a later copy still matches the full incumbent text.
     The store read excludes ``batch_id`` (the phantom-dir replay guard
-    of _read_or_empty).
+    of _tail).
 
     The batch owns at most two caches, both released before return:
     the capped batch anchors, which the df-cap aggregates fill once and
@@ -1153,24 +1070,18 @@ def suffix_ingest_batch(
     spans = capped_batch_spans(capped, anchor_slices, k, min_len)
     if clean_dir is not None:
         spans = spans.persist()
-    part = f"batch={batch_id}"
     try:
-        spans.write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, part)
-        )
+        write_batch(spans, decisions_dir, batch_id)
         if clean_dir is not None:
             removable = spans.select(
                 F.col("doc_b").alias("doc_id"), "b_start", "b_end"
             )
-            scrub_coverage(batch_df, text_col, id_col, removable).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(clean_dir, part))
-        new_anchors.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "anchors", part)
-        )
-        new_gramdf.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "gramdf", part)
-        )
+            write_batch(
+                scrub_coverage(batch_df, text_col, id_col, removable),
+                clean_dir, batch_id,
+            )
+        write_batch(new_anchors, os.path.join(store_dir, "anchors"), batch_id)
+        write_batch(new_gramdf, os.path.join(store_dir, "gramdf"), batch_id)
     finally:
         spans.unpersist()
         capped.unpersist()
@@ -1274,9 +1185,8 @@ def streaming_hll_distinct(
     group_cols = group_cols or []
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(batch_df, key_col, group_cols)
-        regs.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch={batch_id}")
+        write_batch(
+            hll_registers(batch_df, key_col, group_cols), store_dir, batch_id
         )
 
     return (
@@ -1289,13 +1199,12 @@ def streaming_hll_distinct(
 def read_hll_estimate(
     spark, store_dir: str, group_cols: list[str] | None = None
 ) -> DataFrame:
-    """Per-group distinct estimate over everything committed so far:
-    union all batch register tables, cell-wise max, finalize."""
+    """Per-group distinct estimate over everything committed so far
+    (``read_sink``: the compacted generation plus newer batch register
+    tables): cell-wise max, finalize."""
     group_cols = group_cols or []
     regs = (
-        spark.read.option("basePath", store_dir)
-        .parquet(os.path.join(store_dir, "batch=*"))
-        .drop("batch")
+        read_sink(spark, store_dir)
         .groupBy(*group_cols, "reg")
         .agg(F.max("mx").alias("mx"))
     )
@@ -1340,8 +1249,8 @@ def streaming_ivf_ingest(
     partition key means a probe prunes to n_probe cell directories per
     committed batch instead of scanning the corpus; at 100 TB the same
     layout on object storage keeps probe I/O independent of store size,
-    and periodic compaction of batch dirs runs as a batch job without
-    pausing ingest."""
+    and compact_ivf_store folds the batch dirs into one committed
+    generation with the same cell layout."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1351,9 +1260,7 @@ def streaming_ivf_ingest(
             ),
             _cents_col(spark, centroids),
         ).select("id", "v", _cell_expr(F.col("v")).alias("cell"))
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(store_dir, f"batch={batch_id}")
-        )
+        write_batch(assigned, store_dir, batch_id, partition_by="cell")
 
     return (
         vec_stream.writeStream.foreachBatch(write)
@@ -1377,8 +1284,7 @@ def query_ivf_store(
     sim) — cell assignment used the same model at ingest time, so the
     result is identical to running ivf_topk over the store's vectors."""
     store = (
-        spark.read.option("basePath", store_dir)
-        .parquet(os.path.join(store_dir, "batch=*"))
+        read_sink(spark, store_dir)
         .select(
             F.col("id").alias("neighbor_id"),
             F.col("v").alias("cv"),
@@ -1449,9 +1355,7 @@ def streaming_cms_counts(
     """Maintain a streaming count-min sketch of key occurrences."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        cms_sketch(batch_df, key_col, d=d, w=w).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(store_dir, f"batch={batch_id}"))
+        write_batch(cms_sketch(batch_df, key_col, d=d, w=w), store_dir, batch_id)
 
     return (
         stream.writeStream.foreachBatch(write)
@@ -1466,9 +1370,7 @@ def read_cms_estimate(
     """Point-estimate keys against everything committed so far: cell-wise
     SUM across batch sketches, then the standard min-over-d probe."""
     merged = (
-        spark.read.option("basePath", store_dir)
-        .parquet(os.path.join(store_dir, "batch=*"))
-        .drop("batch")
+        read_sink(spark, store_dir)
         .groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -1500,8 +1402,9 @@ def streaming_agg_store(
     JUST that batch (never a rescan of history); the store grows one
     small partial table per trigger. Merging partials is associative +
     commutative, so reads need no ordering and a periodic compaction
-    (re-aggregating batch dirs into one) is safe at any time — the same
-    contract as the HLL register store above."""
+    (compact_agg_store: re-aggregating batch dirs into one committed
+    generation) changes no answer — the same contract as the HLL
+    register store above."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         agg_write_batch(batch_df, batch_id, store_dir, key_cols, value_col)
@@ -1529,9 +1432,7 @@ def agg_write_batch(
         F.min(value_col).alias("mn"),
         F.max(value_col).alias("mx"),
     )
-    part.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch={batch_id}")
-    )
+    write_batch(part, store_dir, batch_id)
 
 
 def read_agg_totals(spark, store_dir: str, key_cols: list[str]) -> DataFrame:
@@ -1540,11 +1441,9 @@ def read_agg_totals(spark, store_dir: str, key_cols: list[str]) -> DataFrame:
     sum is partition-order-free — min of min, max of max; avg derived).
     Equal by construction to a full groupBy over all input ever seen —
     the parity a test asserts against a batch recompute."""
-    parts = spark.read.option("basePath", store_dir).parquet(
-        os.path.join(store_dir, "batch=*")
-    )
     return (
-        parts.groupBy(*key_cols)
+        read_sink(spark, store_dir)
+        .groupBy(*key_cols)
         .agg(
             F.sum("cnt").alias("cnt"),
             F.sum("sm").alias("sm"),
@@ -1669,8 +1568,6 @@ def streaming_drift_guard(
     ``validate.drift_report(reference UNION batch)`` exactly — same
     binning expressions (validate.bin_entries), same decimal-accumulated
     fold (validate.psi_from_counts)."""
-    import os
-
     from ..operators.validate import bin_entries, psi_from_counts
 
     entries = bin_entries(numeric, categorical)
@@ -1687,9 +1584,7 @@ def streaming_drift_guard(
         report = drift_batch_report(
             spark, ref_counts, entries, batch_df, batch_id, eps, psi_threshold
         )
-        report.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"batch={batch_id}")
-        )
+        write_batch(report, out_root, batch_id)
 
     return (
         stream.writeStream.foreachBatch(write)
@@ -1768,7 +1663,7 @@ def streaming_moment_store(
     sufficient statistic and dropped — state is O(batches) single-row
     dirs (each batch's partials merge executor-side to exactly one row
     before the write), and `compact_moment_store` sums the dirs into
-    one whenever the dir count itself gets annoying."""
+    one generation whenever the dir count itself gets annoying."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.similarity import (
@@ -1780,9 +1675,7 @@ def streaming_moment_store(
         src = batch_df.select(as_double_vec(vec_col).alias("v"))
         # the SAME partials+merge definition pca_model uses — batch-twin
         # equality with the one-pass trainer is definitional
-        reduced_moments(src).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
+        write_batch(reduced_moments(src), store_root, batch_id)
 
     return (
         stream.writeStream.foreachBatch(write)
@@ -1792,30 +1685,23 @@ def streaming_moment_store(
 
 
 def moments_from_store(spark, store_root: str):
-    """Reduce the moment store to (n, s, ss) — feed
-    ``similarity.pca_from_moments`` for a current PCA model, or divide
-    out for the covariance. The store rows merge on the EXECUTORS
-    (per-partition sums, then one model-sized row to a single task), so
-    the driver collects ≤ 1 row no matter how many batch dirs have
-    accumulated — at 10⁵⁺ micro-batches the old collect-every-row read
-    was gigabytes of partials on the driver."""
-    import glob
-
+    """Reduce the moment store's committed state (``read_sink``) to
+    (n, s, ss) — feed ``similarity.pca_from_moments`` for a current PCA
+    model, or divide out for the covariance. The store rows merge on
+    the EXECUTORS (per-partition sums, then one model-sized row to a
+    single task), so the driver collects ≤ 1 row no matter how many
+    batch dirs have accumulated — at 10⁵⁺ micro-batches the old
+    collect-every-row read was gigabytes of partials on the driver."""
     from ..operators.similarity import (
         MOMENT_SCHEMA,
         moment_reduce_fn,
         sum_moment_rows,
     )
 
-    # check BEFORE spark.read: a zero-match glob raises AnalysisException
-    # inside the reader, masking the friendly error
-    if not glob.glob(os.path.join(store_root, "batch=*")):
-        raise ValueError("moment store is empty")
-    store = spark.read.schema(MOMENT_SCHEMA).parquet(
-        os.path.join(store_root, "batch=*")
-    )
     rows = (
-        store.mapInPandas(moment_reduce_fn(), MOMENT_SCHEMA)
+        read_sink(spark, store_root)
+        .select("n", "s", "ss")
+        .mapInPandas(moment_reduce_fn(), MOMENT_SCHEMA)
         .repartition(1)
         .mapInPandas(moment_reduce_fn(), MOMENT_SCHEMA)
         .collect()
@@ -1825,103 +1711,59 @@ def moments_from_store(spark, store_root: str):
     return sum_moment_rows(rows)
 
 
+def _compact_sketch_store(
+    spark, store_root: str, fold, partition_by: str | None = None,
+) -> str:
+    """Compaction for the mergeable sketch stores on the one batch-store
+    protocol (sinks.fold_generation): ``fold`` is the store's OWN
+    read-side merge over the committed state — max for HLL registers,
+    sum for CMS cells, agg partials and moments, counter-add +
+    re-truncate for MG, union for IVF — and its result is committed as
+    the next ``gen=`` dir by one atomic manifest rename, then the folded
+    batch dirs are swept. Because each merge is associative and
+    commutative, every read-path result is IDENTICAL before and after.
+
+    A crash before the rename leaves the previous state readable; a
+    crash in the sweep leaves dirs every reader ignores and the next
+    compaction removes. A batch id at or below the manifest's
+    ``through_batch`` is ignored by the readers, so a replay of a
+    folded batch does not double-count: the folded copy already counts
+    it once. Still compact while the stream is stopped or only over
+    batches the checkpoint has committed — a replay whose input differs
+    from the folded attempt is dropped. Returns the live generation
+    dir; a re-run with no new batch dir only re-sweeps."""
+    gen_dir = fold_generation(spark, store_root, fold, partition_by)
+    if gen_dir is None:
+        raise ValueError(f"store {store_root} is empty — nothing to compact")
+    return gen_dir
+
+
 def compact_moment_store(spark, store_root: str) -> str:
-    """Sum every ``batch=*`` dir into the HIGHEST-id dir and drop the
-    rest — the compaction the store's design admits by construction
-    (moments are additive, so summing rows is itself just a moment add;
-    `moments_from_store` returns bit-for-bit-summable state before and
-    after modulo ulp-scale double reorder, which the model's 1e-6
-    rounding absorbs).
-
-    MUST run while the stream is stopped (or past batches the
-    checkpoint has committed): a replay of a compacted-away batch would
-    overwrite its dir and double-count its contribution. Local-fs
-    maintenance op (os.rename commit); a cluster deployment swaps the
-    rename for the object-store/HDFS equivalent."""
-    import glob
-    import shutil
-
+    """Sum the moment store into one row (moments are additive, so
+    summing rows is itself just a moment add; `moments_from_store`
+    returns the same state before and after modulo ulp-scale double
+    reorder, which the model's 1e-6 rounding absorbs). See
+    _compact_sketch_store for the commit and crash contract."""
     from ..operators.similarity import MOMENT_SCHEMA, moment_reduce_fn
 
-    dirs = sorted(
-        glob.glob(os.path.join(store_root, "batch=*")),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
+    return _compact_sketch_store(
+        spark, store_root,
+        lambda df: df.select("n", "s", "ss").repartition(1).mapInPandas(
+            moment_reduce_fn(), MOMENT_SCHEMA
+        ),
     )
-    if not dirs:
-        raise ValueError("moment store is empty")
-    if len(dirs) == 1:
-        return dirs[-1]
-    reduced = (
-        spark.read.schema(MOMENT_SCHEMA)
-        .parquet(os.path.join(store_root, "batch=*"))
-        .repartition(1)
-        .mapInPandas(moment_reduce_fn(), MOMENT_SCHEMA)
-    )
-    tmp = os.path.join(store_root, "__compact_tmp")
-    reduced.write.mode("overwrite").parquet(tmp)
-    for d in dirs:
-        shutil.rmtree(d)
-    os.rename(tmp, dirs[-1])
-    return dirs[-1]
-
-
-def _fold_batch_dirs(
-    spark, store_root: str, fold, partition_by: list[str] | None = None,
-) -> str:
-    """Shared fold-into-highest-dir compaction for the mergeable sketch
-    stores (compact_moment_store's discipline, factored): apply the
-    store's OWN read-side merge expression ``fold`` to the union of
-    every ``batch=*`` dir and replace them all with one dir holding the
-    folded state. Because each store's merge is associative and
-    commutative (max for HLL registers, sum for CMS cells and agg
-    partials, counter-add + re-truncate for MG), every read-path result
-    is IDENTICAL before and after — the parity the compaction tests
-    assert frame-for-frame.
-
-    Same operating contract as compact_moment_store: run while the
-    stream is stopped or only over checkpoint-committed batches (a
-    replay of a folded-away batch id would overwrite the folded dir and
-    double-count); local-fs commit via os.rename — a crash between the
-    rmtree sweep and the rename leaves the folded state in
-    ``__compact_tmp`` for manual recovery (cluster deployments swap in
-    the object-store/HDFS atomic-promote equivalent)."""
-    import glob
-    import shutil
-
-    dirs = sorted(
-        glob.glob(os.path.join(store_root, "batch=*")),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
-    )
-    if not dirs:
-        raise ValueError("store is empty — nothing to compact")
-    if len(dirs) == 1:
-        return dirs[-1]
-    merged = fold(
-        spark.read.option("basePath", store_root)
-        .parquet(os.path.join(store_root, "batch=*"))
-        .drop("batch")
-    )
-    tmp = os.path.join(store_root, "__compact_tmp")
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    for d in dirs:
-        shutil.rmtree(d)
-    os.rename(tmp, dirs[-1])
-    return dirs[-1]
 
 
 def compact_ivf_store(spark, store_root: str) -> str:
-    """Fold the streaming IVF index's batch dirs into one, keeping the
-    cell partition layout (the fold is a pure union of vectors — no
-    merge semantics — so query_ivf_store results are identical by
-    construction). Turns B x n_cells probe directories into n_cells,
-    the 'periodic compaction of batch dirs' the ingest docstring
-    promises; same checkpoint-horizon/crash contract as every other
-    store compaction here."""
-    return _fold_batch_dirs(
-        spark, store_root, lambda df: df, partition_by=["cell"]
+    """Fold the streaming IVF index's batch dirs into one generation,
+    keeping the cell partition layout (the fold is a pure union of
+    vectors — no merge semantics — so query_ivf_store results are
+    identical by construction). Turns B x n_cells probe directories into
+    n_cells, the 'periodic compaction of batch dirs' the ingest
+    docstring promises; see _compact_sketch_store for the commit and
+    crash contract."""
+    return _compact_sketch_store(
+        spark, store_root, lambda df: df.drop("batch"), partition_by="cell"
     )
 
 
@@ -1932,7 +1774,7 @@ def compact_hll_store(
     batch's registers — exactly read_hll_estimate's merge, so the
     estimate is bit-identical before/after."""
     group_cols = group_cols or []
-    return _fold_batch_dirs(
+    return _compact_sketch_store(
         spark, store_root,
         lambda df: df.groupBy(*group_cols, "reg")
         .agg(F.max("mx").alias("mx"))
@@ -1943,7 +1785,7 @@ def compact_hll_store(
 def compact_cms_store(spark, store_root: str) -> str:
     """Fold the count-min store: cell-wise sum — read_cms_estimate's
     merge; point estimates are bit-identical before/after."""
-    return _fold_batch_dirs(
+    return _compact_sketch_store(
         spark, store_root,
         lambda df: df.groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
@@ -1970,7 +1812,7 @@ def compact_agg_store(
             F.max("mx").alias("mx"),
         )
 
-    return _fold_batch_dirs(spark, store_root, fold)
+    return _compact_sketch_store(spark, store_root, fold)
 
 
 def compact_mg_store(spark, store_root: str, m: int = 64) -> str:
@@ -2013,7 +1855,7 @@ def compact_mg_store(spark, store_root: str, m: int = 64) -> str:
         )
         return kept.unionByName(eps).coalesce(1)
 
-    return _fold_batch_dirs(spark, store_root, fold)
+    return _compact_sketch_store(spark, store_root, fold)
 
 
 # --------------------------------------------------------------------------
@@ -2087,9 +1929,7 @@ def mg_write_batch(
         F.col("cnt"),
         F.lit("e").alias("kind"),
     )
-    kept.unionByName(eps).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch={batch_id}")
-    )
+    write_batch(kept.unionByName(eps), store_dir, batch_id)
 
 
 def read_mg_topk(spark, store_dir: str, k: int, m: int = 64) -> DataFrame:
@@ -2106,12 +1946,11 @@ def read_mg_topk(spark, store_dir: str, k: int, m: int = 64) -> DataFrame:
     (rank, key, est, upper_bound); the read is summary-sized
     (batches x (m+1) rows), never key-domain-sized. The per-batch
     window in the writer is over an already-folded count frame; the
-    merge here is one summary-sized aggregate + window."""
+    merge here is one summary-sized aggregate + window. Lazy: nothing
+    runs and nothing is cached until the caller acts on the result."""
     from pyspark.sql.window import Window
 
-    raw = spark.read.option("basePath", store_dir).parquet(
-        os.path.join(store_dir, "batch=*")
-    )
+    raw = read_sink(spark, store_dir)
     merged = (
         raw.filter(F.col("kind") == "k")
         .groupBy("key")
@@ -2121,9 +1960,7 @@ def read_mg_topk(spark, store_dir: str, k: int, m: int = 64) -> DataFrame:
     ranked = (
         merged.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= m + 1)  # WindowGroupLimit partial top-k
-        .persist()
     )
-    ranked.count()
     kept = ranked.filter(F.col("rn") <= m)
     tcut = ranked.filter(F.col("rn") == m + 1).agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("__t")
@@ -2132,7 +1969,7 @@ def read_mg_topk(spark, store_dir: str, k: int, m: int = 64) -> DataFrame:
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("__etot")
     )
     wk = Window.orderBy(F.col("cnt").desc(), F.col("key"))
-    out = (
+    return (
         kept.crossJoin(F.broadcast(etot))
         .crossJoin(F.broadcast(tcut))
         .select(
@@ -2145,8 +1982,4 @@ def read_mg_topk(spark, store_dir: str, k: int, m: int = 64) -> DataFrame:
         )
         .filter(F.col("rank") <= k)
         .select("rank", "key", "est", "upper_bound")
-        .persist()
     )
-    out.count()
-    ranked.unpersist()
-    return out

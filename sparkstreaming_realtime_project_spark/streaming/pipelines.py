@@ -25,7 +25,7 @@ from ..operators.cdc import decode_op, parse_cdc, route_dims, route_facts
 from ..schemas import CDC_ENVELOPE_SCHEMA
 from ..operators.enrich import enrich_province, enrich_user
 from ..operators.log_split import parse_log, split_all
-from .sinks import idempotent_partitioned_writer, split_writer
+from .sinks import idempotent_partitioned_writer, split_writer, write_batch
 
 
 def dau_pipeline(
@@ -153,20 +153,22 @@ def cdc_route_pipeline(
             F.col("table").isNull() & F.col("type").isNull(),
             F.lit("malformed_json"),
         ).otherwise(F.lit("unroutable_envelope"))
-        parsed_raw.filter(
-            F.col("table").isNull() | F.col("type").isNull()
-        ).select(F.col("_raw").alias("raw_value"), reason.alias("reason")).write.mode(
-            "overwrite"
-        ).parquet(f"{out_root}/corrupt/batch={batch_id}")
+        write_batch(
+            parsed_raw.filter(
+                F.col("table").isNull() | F.col("type").isNull()
+            ).select(F.col("_raw").alias("raw_value"), reason.alias("reason")),
+            f"{out_root}/corrupt", batch_id,
+        )
         decoded = decode_op(parse_cdc(batch_df)).persist()
         try:
             # Single pass per side: partitionBy writes every topic/table
             # directory in ONE job — no driver round-trip, no dependence on
             # topic cardinality (replaces a collect()+filter-per-topic loop
             # that rescanned the batch N times).
-            route_facts(decoded, facts_now).write.mode("overwrite").partitionBy(
-                "topic"
-            ).parquet(f"{out_root}/facts/batch={batch_id}")
+            write_batch(
+                route_facts(decoded, facts_now), f"{out_root}/facts", batch_id,
+                partition_by="topic",
+            )
             # Dim upsert is last-write-wins by ts (Redis SET semantics,
             # OdsBaseDbApp.scala:144-163) — deterministic winner, not
             # dropDuplicates' arbitrary row. Equal-ts ties break on op
@@ -187,8 +189,8 @@ def cdc_route_pipeline(
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
             )
-            latest.write.mode("overwrite").partitionBy("table").parquet(
-                f"{out_root}/dims/batch={batch_id}"
+            write_batch(
+                latest, f"{out_root}/dims", batch_id, partition_by="table"
             )
         finally:
             decoded.unpersist()

@@ -28,7 +28,7 @@ run. Bound lateness with a watermark upstream if exact late-data
 semantics matter; in-order CDC (the Maxwell topology here) is exact.
 
 At 100 TB: per-batch ROW work is affected-key-sized (the semi-join on
-changed keys precedes every aggregate), but the store's batch=* dirs
+changed keys precedes every aggregate), but the store's batch dirs
 accumulate and each batch lists/scans them at the file level —
 periodically compact superseded dirs (the compact_sink winner-rewrite
 idiom over (key, valid_from_us)) or keep the store in a table format
@@ -43,6 +43,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .sinks import batch_dir, batch_ids, read_batches, write_batch
 
 
 def scd2_intervals(changes: DataFrame) -> DataFrame:
@@ -86,16 +88,13 @@ def _empty_history(
     )
 
 
-def _committed_dirs(store_dir: str) -> list[str]:
-    """batch=* dirs carrying _SUCCESS — the only dirs anyone may read
-    (a crashed in-flight write has no _SUCCESS and stays invisible)."""
-    if not os.path.isdir(store_dir):
-        return []
+def _committed(store_dir: str) -> list[int]:
+    """Ids of the batch dirs carrying _SUCCESS — the only dirs anyone
+    may read here (a crashed in-flight write has no _SUCCESS and stays
+    invisible; a rule of this store, not of the shared batch listing)."""
     return [
-        os.path.join(store_dir, d)
-        for d in sorted(os.listdir(store_dir))
-        if d.startswith("batch=")
-        and os.path.exists(os.path.join(store_dir, d, "_SUCCESS"))
+        b for b in batch_ids(store_dir)
+        if os.path.exists(os.path.join(batch_dir(store_dir, b), "_SUCCESS"))
     ]
 
 
@@ -112,10 +111,10 @@ def read_scd2(
     error: readers started ahead of the sink just see no rows yet.
     ``key_type``/``value_type`` fix the empty frame's schema for stores
     keyed by non-string types (default keeps the string fallback)."""
-    committed = _committed_dirs(store_dir)
+    committed = _committed(store_dir)
     if not committed:
         return _empty_history(spark, key_type, value_type)
-    df = spark.read.option("basePath", store_dir).parquet(*committed)
+    df = read_batches(spark, store_dir, committed)
     latest = df.groupBy("key").agg(F.max("batch").alias("batch"))
     return df.join(latest, ["key", "batch"]).drop("batch")
 
@@ -142,21 +141,16 @@ def scd2_apply_batch(
         new.unpersist()
         return
     affected = new.select("key").distinct()
-    committed = _committed_dirs(store_dir)
-    if committed:
-        # committed dirs only (a crashed first batch leaves a dir with
-        # no readable files — schema inference would fail) and strictly
-        # earlier batches only: a replayed batch must not read its own
-        # crashed attempt's partial output, nor overwrite a path its
-        # plan still reads. Affected-key semi-join FIRST so the
-        # max-batch aggregate runs on changed keys' rows, not the whole
-        # store.
-        hist = (
-            spark.read.option("basePath", store_dir)
-            .parquet(*committed)
-            .filter(F.col("batch") < batch_id)
-            .join(affected, "key")
-        )
+    # committed dirs only (a crashed first batch leaves a dir with no
+    # readable files — schema inference would fail) and strictly earlier
+    # batches only: a replayed batch must not read its own crashed
+    # attempt's partial output, nor overwrite a path its plan still
+    # reads.
+    earlier = [b for b in _committed(store_dir) if b < batch_id]
+    if earlier:
+        # affected-key semi-join FIRST so the max-batch aggregate runs
+        # on changed keys' rows, not the whole store
+        hist = read_batches(spark, store_dir, earlier).join(affected, "key")
         latest = hist.groupBy("key").agg(F.max("batch").alias("batch"))
         prior = (
             hist.join(latest, ["key", "batch"])
@@ -165,10 +159,7 @@ def scd2_apply_batch(
         merged = prior.unionByName(new)
     else:
         merged = new
-    out = scd2_intervals(merged)
-    out.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch={batch_id}")
-    )
+    write_batch(scd2_intervals(merged), store_dir, batch_id)
     new.unpersist()
 
 

@@ -1,4 +1,5 @@
-"""Streaming sinks (SURVEY §2.2 K1-K7).
+"""Streaming sinks and the one batch-store commit protocol (SURVEY §2.2
+K1-K7).
 
 The reference's delivery contract is at-least-once + idempotent sink
 (ES doc-id upsert absorbs replays; offsets committed after write,
@@ -6,6 +7,32 @@ MyOffsetsUtils.scala:10-21). Structured Streaming upgrades this to
 exactly-once per sink: the checkpoint records the batch id atomically
 with offsets, and the foreachBatch writer here is idempotent on batch id
 (replayed batches overwrite their own output, never duplicate).
+
+One batch-store protocol, implemented only here. Every batch store in
+the package — the dashboard sinks, the sketch stores (HLL, CMS, agg, MG,
+IVF, moments), the suffix/MinHash dedup stores and the SCD2 history —
+uses these helpers:
+
+- a micro-batch lands in its own ``batch=<id>`` dir (:func:`write_batch`,
+  overwritten in place on replay); :func:`batch_ids` lists them,
+  optionally only those after a compaction horizon; :func:`read_batches`
+  unions them;
+- compaction of a sink or sketch store folds the committed state into a
+  ``gen=<G+1>`` dir and commits it with ONE atomic rename of
+  ``_MANIFEST`` = ``{"gen", "through_batch"}`` (:func:`commit_generation`,
+  the only writer of ``gen=`` dirs and manifests). That rename is THE
+  commit point: before it a reader resolves the old generation plus its
+  batches, after it the new one. Batch ids at or below
+  ``through_batch`` are ignored by every reader (:func:`read_sink`), so
+  a replayed folded batch cannot double-count;
+- the sweep (:func:`sweep_batches`) deletes what the manifest already
+  excludes — pure garbage collection, safe to skip or repeat.
+
+Small metadata files are committed by :func:`atomic_write` (tmp file,
+fsync, ``os.replace``): the manifests, the checkpoint stamp, and the
+suffix/MinHash stores' ``_compaction.json`` — those stores record
+bucketed (and leveled) generations there instead of in ``_MANIFEST``,
+over the same batch helpers.
 
 Local sinks are parquet directories; on a cluster the same writers point
 at object storage + a table format with real MERGE (Delta/Iceberg). The
@@ -16,11 +43,82 @@ idempotent writes.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def batch_dir(root: str, batch_id: int) -> str:
+    return os.path.join(root, f"batch={batch_id}")
+
+
+def batch_ids(root: str, after: int | None = None) -> list[int]:
+    """Sorted ids of the ``batch=<int>`` dirs under ``root`` (none for a
+    missing root), only those STRICTLY after ``after`` when given (a
+    compaction horizon: folded dirs are pruned before any reader is
+    built, so a lagging sweep never re-reads them)."""
+    if not os.path.isdir(root):
+        return []
+    ids = sorted(
+        int(d[6:]) for d in os.listdir(root)
+        if d.startswith("batch=") and d[6:].isdigit()
+    )
+    return ids if after is None else [b for b in ids if b > after]
+
+
+def _write_parquet(df: DataFrame, path: str, partition_by: str | None) -> None:
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+
+
+def write_batch(
+    df: DataFrame, root: str, batch_id: int, partition_by: str | None = None,
+) -> None:
+    """Write one micro-batch to ``root/batch=<id>`` (``/<part>=V/`` below
+    it when ``partition_by`` is given). ``mode("overwrite")`` makes a
+    replay of the same id rewrite its own dir — in place, not an atomic
+    rename (see :func:`idempotent_partitioned_writer`)."""
+    _write_parquet(df, batch_dir(root, batch_id), partition_by)
+
+
+def read_batches(spark, root: str, ids: list[int]) -> DataFrame:
+    """Union of ``root``'s ``batch=<id>`` dirs for ``ids``, their
+    ``batch`` partition column included (callers drop it or order by
+    it). Raises ValueError when ``ids`` is empty — a caller with a
+    schema to fall back on returns ``like.limit(0)`` instead, which
+    the optimizer folds to an empty LocalRelation."""
+    if not ids:
+        raise ValueError(f"{root}: no committed batch or generation")
+    return spark.read.option("basePath", root).parquet(
+        *[batch_dir(root, b) for b in ids]
+    )
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Commit a small metadata file: write a tmp file beside it, fsync,
+    then ``os.replace`` onto the live name — POSIX rename within a
+    directory is atomic, so a reader sees the old content or the new,
+    never a torn file."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
+def sweep_batches(root: str, through: int) -> None:
+    """Delete ``root``'s batch dirs with id <= ``through`` (already folded
+    into a committed generation)."""
+    for b in batch_ids(root):
+        if b <= through:
+            shutil.rmtree(batch_dir(root, b), ignore_errors=True)
 
 
 def idempotent_partitioned_writer(
@@ -58,11 +156,7 @@ def idempotent_partitioned_writer(
             )
         else:
             deduped = batch_df.dropDuplicates(key_cols)
-        target = os.path.join(out_dir, f"batch={batch_id}")
-        writer = deduped.write.mode("overwrite")
-        if partition_col is not None:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(target)
+        write_batch(deduped, out_dir, batch_id, partition_col)
 
     return write
 
@@ -74,8 +168,6 @@ def _read_manifest(out_dir: str) -> dict | None:
     """The committed table state, or None for a never-compacted sink.
     One small JSON file: {"gen": N, "through_batch": M} — generation
     dir ``gen=N`` holds the compacted rows of every batch id <= M."""
-    import json
-
     path = os.path.join(out_dir, _MANIFEST)
     if not os.path.exists(path):
         return None
@@ -84,31 +176,19 @@ def _read_manifest(out_dir: str) -> dict | None:
 
 
 def _commit_manifest(out_dir: str, manifest: dict) -> None:
-    """The ONE atomic step of the compaction protocol: write the new
-    manifest beside the old one, fsync, then ``os.replace`` onto the
-    live name — POSIX rename-within-a-directory is atomic, so a reader
-    resolves either the old generation or the new one, never a torn
-    mix. (On a cluster this is the table format's commit — Delta's
-    _delta_log entry, Iceberg's metadata swap; reference contract:
-    per-doc atomic upsert, MyEsUtils.scala:69-79.)"""
-    import json
-
-    tmp = os.path.join(out_dir, f"{_MANIFEST}.tmp.{os.getpid()}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(out_dir, _MANIFEST))
+    """The ONE atomic step of the protocol: :func:`atomic_write` of the
+    live manifest, so a reader resolves either the old generation or
+    the new one, never a torn mix. (On a cluster this is the table
+    format's commit — Delta's _delta_log entry, Iceberg's metadata
+    swap; reference contract: per-doc atomic upsert,
+    MyEsUtils.scala:69-79.)"""
+    text = json.dumps(manifest)
+    atomic_write(os.path.join(out_dir, _MANIFEST), text)
     # immutable per-generation copy AFTER the live commit (additive
     # metadata for time travel; written after so a crash can never
     # leave a version file naming an uncommitted generation — a lost
     # copy for the LIVE generation falls back to the live manifest)
-    ver = os.path.join(out_dir, f"{_MANIFEST}.v{manifest['gen']}")
-    with open(ver + ".tmp", "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(ver + ".tmp", ver)
+    atomic_write(os.path.join(out_dir, f"{_MANIFEST}.v{manifest['gen']}"), text)
 
 
 def _committed_generations(out_dir: str) -> list[int]:
@@ -125,18 +205,8 @@ def _committed_generations(out_dir: str) -> list[int]:
     return sorted(gens)
 
 
-def _batch_ids(out_dir: str) -> list[int]:
-    if not os.path.isdir(out_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(out_dir)
-        if d.startswith("batch=")
-    )
-
-
 # Committed-snapshot reuse for read_sink: absolute sink dir ->
-# (applicationId, fingerprint, DataFrame). Building the DataFrame globs
+# (applicationId, fingerprint, DataFrame). Building the DataFrame lists
 # the batch dirs and runs a parquet schema-inference job (~0.1 s
 # locally); a sink's contents change only when a write or a commit
 # lands, so an unchanged fingerprint serves the DataFrame already built.
@@ -179,13 +249,17 @@ def read_sink(spark, out_dir: str, at_gen: int | None = None) -> DataFrame:
     batch dir NEWER than the generation's high-water batch. Uncommitted
     generation dirs, superseded generations and already-compacted batch
     dirs awaiting cleanup are all invisible — the manifest alone
-    decides what is part of the table.
+    decides what is part of the table, so a replayed batch id at or
+    below ``through_batch`` cannot double-count. Every batch store reads
+    through here: the dashboard sinks and the sketch stores (their
+    readers merge the rows). A dir with nothing committed raises
+    ValueError.
 
     Snapshot reuse: the DataFrame built for a sink dir is kept with a
     fingerprint of its committed file set (see
     :func:`_snapshot_fingerprint`). A later call whose fingerprint is
     equal, in the same Spark application, returns that SAME DataFrame —
-    no glob, no file listing, no schema-inference job. Anything that
+    no file listing, no schema-inference job. Anything that
     changes the file set invalidates it: a new ``batch=N`` dir, the
     completion of an in-place write or replay of one (see
     :func:`idempotent_partitioned_writer`), ``compact_sink`` and
@@ -230,40 +304,36 @@ def read_sink(spark, out_dir: str, at_gen: int | None = None) -> DataFrame:
 def _read_committed(spark, out_dir: str) -> DataFrame:
     """Build the DataFrame over the sink's committed state (read_sink
     without snapshot reuse)."""
-    man = _read_manifest(out_dir)
-    if man is None:
-        return spark.read.option("basePath", out_dir).parquet(
-            os.path.join(out_dir, "batch=*")
-        ).drop("batch")
-    gen = spark.read.parquet(os.path.join(out_dir, f"gen={man['gen']}"))
-    live = [b for b in _batch_ids(out_dir) if b > man["through_batch"]]
-    if not live:
-        return gen
-    batches = (
-        spark.read.option("basePath", out_dir)
-        .parquet(*[os.path.join(out_dir, f"batch={b}") for b in live])
-        .drop("batch")
+    return _committed_state(spark, out_dir, _read_manifest(out_dir)).drop(
+        "batch"
     )
-    # allowMissingColumns: a batch landed after a schema ADDED a column
-    # must still read alongside an older generation (and vice versa) —
-    # the missing side null-fills, the standard additive-evolution
-    # contract of a parquet table
-    return gen.unionByName(batches, allowMissingColumns=True)
+
+
+def _committed_state(spark, out_dir: str, man: dict | None) -> DataFrame:
+    """The live generation (its rows tagged ``batch`` = -1) plus every
+    batch dir above its ``through_batch`` (tagged with their own id) —
+    what a reader sees, with the arrival order a compaction needs.
+    allowMissingColumns: a batch landed after a schema ADDED a column
+    must still read alongside an older generation (and vice versa) —
+    the missing side null-fills, the standard additive-evolution
+    contract of a parquet table."""
+    live = batch_ids(out_dir, None if man is None else man["through_batch"])
+    if man is None:
+        return read_batches(spark, out_dir, live)
+    gen = spark.read.parquet(os.path.join(out_dir, f"gen={man['gen']}"))
+    if not live:
+        return gen.withColumn("batch", F.lit(-1))
+    return gen.withColumn("batch", F.lit(-1)).unionByName(
+        read_batches(spark, out_dir, live), allowMissingColumns=True
+    )
 
 
 def _sweep_sink(out_dir: str, live: dict, retain_generations: int) -> None:
     """Reclaim anything the committed manifest already excludes:
     compacted batch dirs, uncommitted generations, and committed
     generations older than the retention window (vacuum). Pure garbage
-    collection — crash-safe to skip or repeat. Shared by compaction and
-    MERGE (both commit a new generation the same way)."""
-    import shutil
-
-    for b in _batch_ids(out_dir):
-        if b <= live["through_batch"]:
-            shutil.rmtree(
-                os.path.join(out_dir, f"batch={b}"), ignore_errors=True
-            )
+    collection — crash-safe to skip or repeat."""
+    sweep_batches(out_dir, live["through_batch"])
     committed = _committed_generations(out_dir)
     keep = set(committed[-max(retain_generations, 1):])
     keep.add(live["gen"])
@@ -276,6 +346,70 @@ def _sweep_sink(out_dir: str, live: dict, retain_generations: int) -> None:
             and int(d[len(_MANIFEST) + 2:]) not in keep
         ):
             os.remove(os.path.join(out_dir, d))
+
+
+def commit_generation(
+    out_dir: str,
+    df: DataFrame,
+    through_batch: int,
+    partition_by: str | None = None,
+    retain_generations: int = 1,
+) -> str:
+    """THE generation commit — the only writer of ``gen=`` dirs and
+    manifests, used by compact_sink, merge_into and every sketch-store
+    compaction:
+
+    1. write ``df`` into a NEW ``gen=<G+1>`` dir (a crash here leaves an
+       uncommitted dir no reader resolves — a later run overwrites it);
+    2. commit ``{"gen": G+1, "through_batch"}`` by one atomic manifest
+       rename (:func:`_commit_manifest`) — before it readers see the old
+       state, after it the new, never a torn table;
+    3. sweep what the new manifest excludes (:func:`_sweep_sink`) — a
+       crash here leaves garbage every reader already ignores, swept by
+       the next commit.
+
+    ``retain_generations``: how many committed snapshots stay readable
+    for time travel (``read_sink(at_gen=...)``). Returns the new
+    generation dir."""
+    man = _read_manifest(out_dir)
+    gen = 0 if man is None else man["gen"] + 1
+    gen_dir = os.path.join(out_dir, f"gen={gen}")
+    _write_parquet(df, gen_dir, partition_by)
+    committed = {"gen": gen, "through_batch": through_batch}
+    _commit_manifest(out_dir, committed)
+    # -- committed; everything below is reclaim, crash-safe to skip --
+    _sweep_sink(out_dir, committed, retain_generations)
+    return gen_dir
+
+
+def fold_generation(
+    spark,
+    out_dir: str,
+    fold,
+    partition_by: str | None = None,
+    retain_generations: int = 1,
+) -> str | None:
+    """Compaction on the protocol: ``fold`` maps the committed state
+    (live generation rows with ``batch`` = -1, then every newer batch
+    dir's rows with their id in ``batch``) to the next generation's
+    rows, which :func:`commit_generation` commits through the newest
+    batch id. Batches landing during the fold (ids above that
+    high-water mark) stay visible before and after the commit.
+
+    With no batch dir above the horizon this only re-sweeps (recovering
+    from a crash between an earlier commit and its sweep) and returns
+    the live generation dir; None for a store with nothing committed."""
+    man = _read_manifest(out_dir)
+    live = batch_ids(out_dir, None if man is None else man["through_batch"])
+    if not live:
+        if man is None:
+            return None
+        _sweep_sink(out_dir, man, retain_generations)
+        return os.path.join(out_dir, f"gen={man['gen']}")
+    return commit_generation(
+        out_dir, fold(_committed_state(spark, out_dir, man)), max(live),
+        partition_by, retain_generations,
+    )
 
 
 def merge_into(
@@ -303,7 +437,7 @@ def merge_into(
     UNIQUE on ``key_cols`` — duplicate keys make "the" matched update
     ambiguous, so the merge fails loudly instead of picking one.
 
-    Protocol (same commit discipline as :func:`compact_sink`): the
+    Protocol (:func:`commit_generation`, like :func:`compact_sink`): the
     merged table is written to a NEW ``gen=<g+1>`` dir folding in any
     live batch dirs (their high-water batch id moves into the
     manifest), then ONE atomic manifest rename commits — readers see
@@ -328,7 +462,8 @@ def merge_into(
     one.
     """
     data_cols_src = [c for c in source.columns if c != delete_col]
-    if _read_manifest(out_dir) is None and not _batch_ids(out_dir):
+    man = _read_manifest(out_dir)
+    if man is None and not batch_ids(out_dir):
         keep = (
             source.filter(
                 ~F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
@@ -350,12 +485,7 @@ def merge_into(
                 f"wrong answer)"
             )
         n_ins = keep.count()
-        os.makedirs(out_dir, exist_ok=True)
-        writer = keep.write.mode("overwrite")
-        if partition_col is not None:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(os.path.join(out_dir, "gen=0"))
-        _commit_manifest(out_dir, {"gen": 0, "through_batch": -1})
+        commit_generation(out_dir, keep, -1, partition_col)
         return {
             "gen": 0, "updated": 0, "deleted": 0,
             "inserted": n_ins, "kept": 0,
@@ -411,23 +541,16 @@ def merge_into(
             for c in val_cols
         ],
     )
-    man = _read_manifest(out_dir)
-    prev_gen = -1 if man is None else man["gen"]
     through = -1 if man is None else man["through_batch"]
-    all_batches = _batch_ids(out_dir)
-    high = max([b for b in all_batches if b > through], default=through)
-    new_gen = prev_gen + 1
-    gen_dir = os.path.join(out_dir, f"gen={new_gen}")
-    writer = merged.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(gen_dir)
-    j.unpersist()
-    committed = {"gen": new_gen, "through_batch": high}
-    _commit_manifest(out_dir, committed)
-    _sweep_sink(out_dir, committed, retain_generations)
+    high = max(batch_ids(out_dir, through), default=through)
+    try:
+        gen_dir = commit_generation(
+            out_dir, merged, high, partition_col, retain_generations
+        )
+    finally:
+        j.unpersist()
     return {
-        "gen": new_gen,
+        "gen": int(gen_dir.rsplit("=", 1)[1]),
         "updated": int(stats.updated),
         "deleted": int(stats.deleted),
         "inserted": int(stats.inserted),
@@ -516,73 +639,34 @@ def compact_sink(
 
     Cross-batch winner per key = greatest (order_col, batch) when
     order_col is given, else greatest batch (later batch wins — the ES
-    doc-id overwrite semantics, MyEsUtils.scala:69-79). Protocol:
+    doc-id overwrite semantics, MyEsUtils.scala:69-79). The previous
+    generation's rows lose ties to ANY batch row (they carry batch -1):
+    they were batch rows once, and re-compaction must not flip a winner
+    that a later batch already overwrote.
 
-    1. read current state (previous generation + batches above its
-       high-water mark, exactly what read_sink serves);
-    2. write winners into a NEW ``gen=<g+1>`` dir (crash here leaves an
-       uncommitted dir no reader resolves — a later run overwrites it);
-    3. atomically replace ``_MANIFEST`` (:func:`_commit_manifest`) —
-       THE commit point: before it readers see the old state, after it
-       the new, never a torn table;
-    4. best-effort cleanup of the superseded generation and compacted
-       batch dirs — a crash here leaves garbage the manifest already
-       excludes, swept by the next run.
-
-    Batches landing DURING compaction (ids above the captured
-    high-water mark) are untouched and stay visible before and after
-    the commit.
+    Protocol: :func:`fold_generation` over :func:`commit_generation` —
+    winners go to a new ``gen=<g+1>`` dir, ONE atomic manifest rename
+    commits them, then the sweep. Batches landing DURING compaction
+    (ids above the captured high-water mark) stay visible before and
+    after the commit; with nothing new it only re-sweeps.
 
     ``retain_generations``: how many committed snapshots stay readable
     for time travel (``read_sink(at_gen=...)``) — the VACUUM retention
     knob. Default 1 keeps only the live generation; older snapshots'
     dirs and versioned manifests are reclaimed by the sweep."""
-
-    def _sweep(live: dict) -> None:
-        _sweep_sink(out_dir, live, retain_generations)
-
-    man = _read_manifest(out_dir)
-    prev_gen = -1 if man is None else man["gen"]
-    through = -1 if man is None else man["through_batch"]
-    ids = [b for b in _batch_ids(out_dir) if b > through]
-    if not ids:
-        # empty sink, or already one clean committed generation — still
-        # sweep leftovers a crashed earlier cleanup may have stranded
-        if man is not None:
-            _sweep(man)
-        return
-    high = max(ids)
-    df = (
-        spark.read.option("basePath", out_dir)
-        .parquet(*[os.path.join(out_dir, f"batch={b}") for b in ids])
-    )
-    if man is not None:
-        # the previous generation's rows lose ties to ANY batch row:
-        # they were batch rows once, and re-compaction must not flip a
-        # winner that a later batch already overwrote
-        prev = spark.read.parquet(
-            os.path.join(out_dir, f"gen={prev_gen}")
-        ).withColumn("batch", F.lit(-1))
-        df = prev.unionByName(df, allowMissingColumns=True)
     order = [F.col("batch").desc()]
     if order_col is not None:
         order.insert(0, F.col(order_col).desc())
     w = Window.partitionBy(*key_cols).orderBy(*order)
-    winners = (
-        df.withColumn("__rn", F.row_number().over(w))
+    fold_generation(
+        spark,
+        out_dir,
+        lambda df: df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", "batch")
+        .drop("__rn", "batch"),
+        partition_col,
+        retain_generations,
     )
-    new_gen = prev_gen + 1
-    gen_dir = os.path.join(out_dir, f"gen={new_gen}")
-    writer = winners.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(gen_dir)
-    committed = {"gen": new_gen, "through_batch": high}
-    _commit_manifest(out_dir, committed)
-    # -- committed; everything below is reclaim, crash-safe to skip --
-    _sweep(committed)
 
 
 def split_writer(outputs: dict[str, "DataFrameFn"], out_root: str):
@@ -598,9 +682,7 @@ def split_writer(outputs: dict[str, "DataFrameFn"], out_root: str):
         batch_df.persist()
         try:
             for name, fn in outputs.items():
-                fn(batch_df).write.mode("overwrite").parquet(
-                    os.path.join(out_root, name, f"batch={batch_id}")
-                )
+                write_batch(fn(batch_df), os.path.join(out_root, name), batch_id)
         finally:
             batch_df.unpersist()
 
@@ -616,9 +698,8 @@ def current_dims(spark, out_root: str) -> DataFrame:
     id)" = max by (ts, batch) over all batches. One window over the dim
     store — at scale this is the compaction read a MERGE-capable table
     format does natively."""
-    dims = spark.read.option("basePath", os.path.join(out_root, "dims")).parquet(
-        os.path.join(out_root, "dims", "batch=*")
-    )
+    root = os.path.join(out_root, "dims")
+    dims = read_batches(spark, root, batch_ids(root))
     w = Window.partitionBy("table", "id").orderBy(
         F.col("ts").desc(), F.col("batch").desc()
     )

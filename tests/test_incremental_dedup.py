@@ -632,12 +632,10 @@ def test_streaming_moment_store_batch_twin(spark, tmp_path):
 
 
 def test_moment_store_compaction(spark, tmp_path):
-    """`compact_moment_store` collapses all batch dirs into one whose
-    summed moments equal the pre-compaction state (moment addition is
-    associative — compaction IS a moment add), and a compacted store
-    keeps serving `moments_from_store` unchanged."""
-    import glob
-
+    """`compact_moment_store` collapses all batch dirs into one committed
+    generation whose summed moments equal the pre-compaction state
+    (moment addition is associative — compaction IS a moment add), and
+    a compacted store keeps serving `moments_from_store` unchanged."""
     import numpy as np
 
     from sparkstreaming_realtime_project_spark.operators.similarity import (
@@ -658,14 +656,33 @@ def test_moment_store_compaction(spark, tmp_path):
         ).write.mode("overwrite").parquet(store + f"/batch={bid}")
     before = moments_from_store(spark, store)
     kept = compact_moment_store(spark, store)
-    assert kept.endswith("batch=4")
-    assert glob.glob(store + "/batch=*") == [kept]
+    _assert_manifest_layout(store, through=4, gen_dir=kept)
     after = moments_from_store(spark, store)
     assert after[0] == before[0] == 100
     assert np.allclose(after[1], before[1])
     assert np.allclose(after[2], before[2])
-    # idempotent on a single-dir store
+    # idempotent on a compacted store
     assert compact_moment_store(spark, store) == kept
+    _assert_manifest_layout(store, through=4, gen_dir=kept)
+
+
+def _assert_manifest_layout(store, through, gen_dir=None):
+    """A compacted batch store: a ``_MANIFEST`` through ``through``, no
+    batch dir at or below it, and exactly one live ``gen=`` dir (the
+    returned one, when given)."""
+    import json
+
+    with open(os.path.join(store, "_MANIFEST")) as fh:
+        man = json.load(fh)
+    assert man["through_batch"] == through
+    names = os.listdir(store)
+    assert not [
+        n for n in names
+        if n.startswith("batch=") and int(n[6:]) <= through
+    ], names
+    assert [n for n in names if n.startswith("gen=")] == [f"gen={man['gen']}"]
+    if gen_dir is not None:
+        assert gen_dir == os.path.join(store, f"gen={man['gen']}")
 
 
 def test_streaming_mg_topk_certificate_and_large_m_exactness(spark, tmp_path):
@@ -2206,14 +2223,12 @@ def test_suffix_stream_memo_evicts_and_rmtrees_dead_applications(
 
 
 def test_sketch_store_compaction_read_identical(spark, tmp_path):
-    """Fold-into-one-dir compaction for the four remaining mergeable
-    sketch stores (HLL / CMS / MG / exact-agg — the moment store's
-    compaction discipline generalized): every read-path result is
-    IDENTICAL frame-for-frame before and after, each store ends with
-    exactly one batch dir, and re-compacting a single-dir store is a
-    no-op."""
-    import glob
-
+    """Generation compaction for the four remaining mergeable sketch
+    stores (HLL / CMS / MG / exact-agg — the moment store's compaction
+    discipline generalized): every read-path result is IDENTICAL
+    frame-for-frame before and after, each store ends with one
+    committed generation and no folded batch dir, and re-compacting a
+    compacted store is a no-op."""
     from sparkstreaming_realtime_project_spark.operators.sketches import (
         cms_sketch,
         hll_registers,
@@ -2275,9 +2290,9 @@ def test_sketch_store_compaction_read_identical(spark, tmp_path):
     assert before == after
     # MG certificate is non-vacuous: truncation produced an eps bound
     assert any(r.upper_bound > r.est for r in before["mg"])
-    for n, store in stores.items():
-        assert len(glob.glob(os.path.join(store, "batch=*"))) == 1, n
-    # single-dir re-compaction is a no-op; reads unchanged
+    for store in stores.values():
+        _assert_manifest_layout(store, through=2)
+    # re-compaction with no new batch is a no-op; reads unchanged
     compact_hll_store(spark, stores["hll"])
     compact_mg_store(spark, stores["mg"], m=5)
     assert reads() == before
@@ -2315,8 +2330,6 @@ def test_ivf_store_compaction_read_identical(spark, tmp_path):
     n_cells while query_ivf_store returns the identical frame (the
     fold is a pure vector union under the same cell partition
     layout)."""
-    import glob
-
     from sparkstreaming_realtime_project_spark.streaming.incremental import (
         compact_ivf_store,
         query_ivf_store,
@@ -2349,14 +2362,13 @@ def test_ivf_store_compaction_read_identical(spark, tmp_path):
         )
 
     before = read()
-    compact_ivf_store(spark, store)
+    gen_dir = compact_ivf_store(spark, store)
     after = read()
     assert before == after and len(before) == 6
-    assert len(glob.glob(os.path.join(store, "batch=*"))) == 1
+    _assert_manifest_layout(store, through=2, gen_dir=gen_dir)
     # cell partition layout survived the fold
     assert sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(store, "batch=2", "cell=*"))
+        n for n in os.listdir(gen_dir) if n.startswith("cell=")
     ) == ["cell=0", "cell=1"]
 
 

@@ -1268,101 +1268,6 @@ def test_order_wide_launcher_left_outer_flag(spark, tmp_path):
     assert rows[0]["order_status"] is not None
 
 
-def test_first_seen_v2_matches_old_api(spark, tmp_path):
-    """The transformWithStateInPandas rewrite (stateful_v2) must produce
-    EXACTLY the old applyInPandasWithState operator's output on the same
-    multi-batch replay — deterministic min-event-time winners per
-    (mid, dt), later batches' duplicates dropped by restored state.
-    Skips where the TWS worker's protobuf dependency is absent (this
-    sandbox) — same opt-in gate as the Pillow decode tests."""
-    from sparkstreaming_realtime_project_spark.operators.log_split import parse_log
-    from sparkstreaming_realtime_project_spark.streaming.stateful_v2 import (
-        first_seen_per_key_v2,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "google.protobuf unavailable — transformWithState worker cannot "
-            "start (install the `tws` extra: pip install '.[tws]'); "
-            "test_tws_gate_is_truthful still proves the gate's decision"
-        )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-
-        in_dir = tmp_path / "in"
-        fx.write_log_fixture(str(in_dir))
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-        raw = text_stream(spark, str(in_dir), max_files_per_trigger=1)
-        page = (
-            parse_log(raw)
-            .filter(F.col("err").isNull() & F.col("page").isNotNull())
-            .select(
-                F.col("common.mid").alias("mid"),
-                F.col("page.last_page_id").alias("last_page_id"),
-                F.timestamp_millis(F.col("ts")).alias("event_ts"),
-            )
-            .filter(F.col("last_page_id").isNull())
-            .withColumn("dt", F.date_format("event_ts", "yyyy-MM-dd"))
-            .withWatermark("event_ts", "25 hours")
-        )
-        firsts = first_seen_per_key_v2(page, ["mid", "dt"], "event_ts")
-        q = (
-            firsts.writeStream.foreachBatch(
-                lambda b, i: b.write.mode("overwrite").parquet(f"{out}/batch={i}")
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-
-        got = {
-            (r["mid"], r["dt"], r["event_ts"].hour)
-            for r in read_sink(spark, out).collect()
-        }
-        # same golden set as test_first_seen_custom_stateful_operator
-        assert got == {
-            ("m1", "2024-01-01", 10),
-            ("m5", "2024-01-01", 12),
-            ("m2", "2024-01-02", 1),
-        }
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
-
-
-def test_tws_gate_is_truthful():
-    """The transformWithState availability gate must report the REAL
-    environment: tws_available() iff google.protobuf imports. This test
-    always RUNS (never skips), so every CI log carries an explicit
-    record of whether the v2 parity test above executed or was skipped
-    as a conscious environment fact — protobuf is an optional extra
-    (pyproject `tws`), not a silent hole."""
-    import importlib.util
-
-    from sparkstreaming_realtime_project_spark.streaming.stateful_v2 import (
-        tws_available,
-    )
-
-    try:
-        # find_spec imports the parent package, so a missing `google`
-        # namespace raises rather than returning None
-        have_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        have_protobuf = False
-    assert tws_available() == have_protobuf
-
-
 def test_compact_manifest_commit_is_atomic(spark, tmp_path, monkeypatch):
     """Crash-injection around the compaction commit point: a reader must
     never see a torn table — the OLD state before the single atomic
@@ -1810,11 +1715,10 @@ def test_compact_cli_subcommand(spark, tmp_path):
 
 def test_compact_store_cli_subcommand(spark, tmp_path):
     """Launcher smoke for `compact-store`: the agg sketch store folds
-    batch dirs into one with read_agg_totals unchanged, and the suffix
-    anchor store folds into its bucketed generation with a manifest —
-    the cron surface for the round-13 store-maintenance jobs."""
-    import glob
-
+    batch dirs into one committed generation with read_agg_totals
+    unchanged, and the suffix anchor store folds into its bucketed
+    generation with a manifest — the cron surface for the round-13
+    store-maintenance jobs."""
     from pyspark.sql import functions as F
 
     from sparkstreaming_realtime_project_spark.__main__ import main
@@ -1838,7 +1742,10 @@ def test_compact_store_cli_subcommand(spark, tmp_path):
               "--keys", "k"])
     assert exc.value.code == 0
     assert sorted(read_agg_totals(spark, agg, ["k"]).collect()) == before
-    assert len(glob.glob(os.path.join(agg, "batch=*"))) == 1
+    names = os.listdir(agg)
+    assert not [n for n in names if n.startswith("batch=")], names
+    assert [n for n in names if n.startswith("gen=")] == ["gen=0"]
+    assert "_MANIFEST" in names
 
     suffix = str(tmp_path / "suffix")
     docs = spark.createDataFrame(
@@ -2119,77 +2026,3 @@ def test_merge_into_bootstrap_rejects_ambiguous_source(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate source key"):
         merge_into(spark, out, src, ["k"], delete_col="is_del")
 
-
-def test_sessionize_v2_matches_old_api(spark, tmp_path):
-    """stateful_v2.sessionize_v2 must reproduce stateful.sessionize's
-    golden set on the same replay (in-batch gap close, cross-batch
-    merge, timer-driven close, open session never emitted) — the
-    migration-path proof beyond first-seen, now with explicit timers.
-    Skips where the TWS worker's protobuf dependency is absent (this
-    sandbox cannot pip install; the `tws` extra carries it);
-    test_tws_gate_is_truthful records the decision."""
-    from sparkstreaming_realtime_project_spark.streaming.stateful_v2 import (
-        sessionize_v2,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "google.protobuf unavailable — transformWithState worker cannot "
-            "start (install the `tws` extra: pip install '.[tws]')"
-        )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        base = fx.D1_10
-        mn = 60 * 1000
-        mk = lambda u, i, ts: json.dumps({"user": u, "event_id": i, "ts": ts})
-        in_dir = tmp_path / "in"
-        fx._write_batches(str(in_dir), [
-            [mk("A", 1, base), mk("A", 2, base + 10 * mn),
-             mk("A", 3, base + 120 * mn),
-             mk("B", 10, base)],
-            [mk("B", 11, base + 10 * mn), mk("C", 20, base + 600 * mn)],
-            [mk("C", 21, base + 601 * mn)],
-        ])
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        schema = "user string, event_id long, ts long"
-        events = (
-            text_stream(spark, str(in_dir), max_files_per_trigger=1)
-            .select(F.from_json("value", schema).alias("j"))
-            .select(
-                "j.user", "j.event_id",
-                F.timestamp_millis("j.ts").alias("event_ts"),
-            )
-            .withWatermark("event_ts", "3 hours")
-        )
-        sessions = sessionize_v2(events, ["user"], "event_ts", gap_minutes=30)
-        q = (
-            sessions.writeStream.foreachBatch(
-                lambda b, i: b.write.mode("overwrite").parquet(f"{out}/batch={i}")
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        got = {
-            (r["user"], r["start_ms"], r["end_ms"], r["n_events"])
-            for r in read_sink(spark, out).collect()
-        }
-        # the same golden set as test_sessionize_gap_sessions_across_batches
-        assert got == {
-            ("A", base, base + 10 * mn, 2),
-            ("A", base + 120 * mn, base + 120 * mn, 1),
-            ("B", base, base + 10 * mn, 2),
-        }
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
