@@ -23,6 +23,7 @@ reference's cadence (OdsBaseLogApp.scala:35).
 from __future__ import annotations
 
 import argparse
+import logging
 import sys
 
 from .schemas import ORDER_DETAIL_SCHEMA, ORDER_INFO_SCHEMA
@@ -272,14 +273,20 @@ def main(argv: list[str] | None = None) -> None:
 
         # providers read per request: each query sees the pipelines'
         # latest committed files, like the reference hitting live ES;
-        # read_sink re-lists a sink only when a commit changed it
+        # read_sink re-lists a sink only when a commit changed it, and
+        # the server keeps per-date slices of each snapshot in memory
         server = publisher_server(
             *sink_providers(spark, args.dau_table, args.wide_table),
             host=args.host,
             port=args.port,
         )
         print(f"publisher listening on {server.server_address}", flush=True)
-        server.serve_forever()
+        logging.basicConfig()  # stderr; the request log lines at INFO
+        logging.getLogger(publisher_server.__module__).setLevel(logging.INFO)
+        try:
+            server.serve_forever()
+        finally:
+            server.server_close()
         return
 
     if args.app == "dau":

@@ -13,9 +13,33 @@ tables are supplied as PROVIDERS (zero-arg callables returning the
 current DataFrame) so every request sees the sink's latest committed
 state — the analog of the reference querying live daily ES indices, with
 Spark's parquet snapshot isolation instead of ES refresh semantics.
-Over a sink dir (:func:`sink_providers`) a request costs a directory
-fingerprint when nothing was committed since the last one: ``read_sink``
-returns the DataFrame it already built for that snapshot.
+
+Serving cache: the server owns per-date SLICES of each provider's frame
+— the frame filtered on the route's day test, persisted
+``MEMORY_AND_DISK`` — the analog of the reference's daily ES index staying
+resident between refreshes. ``/statsByItem`` and both ``/detailByItem``
+modes read the ``date`` slice of the wide frame; ``/dauRealtime`` reads
+the ``td`` slice of the dau frame, which holds td and td-1 (the route
+derives td-1 inside the plan, so the slice does too).
+
+- A request first calls its provider. The slice it cut earlier is served
+  while the provider's frame ``sameSemantics`` the frame it was cut from
+  (over a sink dir, ``read_sink`` returns the same snapshot until a
+  commit, and every rebuilt snapshot is a new relation); otherwise the
+  old slice is unpersisted and a new one cut.
+- A new slice is persisted lazily: the request's own action fills it
+  (under AQE the fill is one extra job of that action), reading one
+  day's partition. A hit calls no ``persist()``.
+- Memory is bounded by the dates being served, not by the sink's
+  history; past the storage memory, Spark's LRU spills slices to disk.
+- A slice whose cut does not plan (say a malformed ``date`` against a
+  DATE column) is not kept: the route runs on the provider's frame and
+  answers exactly what it answers uncached.
+- One lock guards the slice map (requests run on their own threads), and
+  ``server_close()`` unpersists every slice the server holds.
+
+Logging: one INFO line per request on this module's logger (route,
+status, ms, slice hit/miss); the package installs no handler.
 
 Design notes:
 - stdlib ``http.server`` only — no web framework in the sandbox, and the
@@ -36,8 +60,8 @@ Design notes:
   frame, a provider that raises) is a 500 with a JSON error body, never
   a connection dropped without a status.
 
-Scale: the HTTP layer adds no data path — every collect it triggers is
-one of the publisher plans, which prune to a single dt partition first
+Scale: every collect the HTTP layer triggers is one of the publisher
+plans over a slice, and a slice's fill prunes to the day's partitions
 (plans/serving.py docstring). The server itself is a driver-side
 sidecar exactly like the reference's Spring app beside the Spark jobs.
 """
@@ -46,12 +70,17 @@ from __future__ import annotations
 
 import datetime
 import json
+import logging
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .plans.publisher import (
@@ -60,9 +89,12 @@ from .plans.publisher import (
     detail_by_item_keyset_json,
     stats_by_item_json,
 )
+from .plans.serving import dau_days, on_date
 from .streaming.sinks import read_sink
 
 Provider = Callable[[], DataFrame]
+
+_log = logging.getLogger(__name__)
 
 
 def _as_provider(x: DataFrame | Provider) -> Provider:
@@ -74,13 +106,17 @@ def sink_providers(spark, dau_dir: str, wide_dir: str) -> tuple[Provider, Provid
     pipelines write. Each call reads the sink's latest committed state
     through ``read_sink``, which re-lists the files only when a commit
     changed them since the previous call (otherwise it returns the
-    DataFrame already built for that snapshot). A compacted sink
-    (``gen=N`` plus later ``batch=N`` dirs) serves like an uncompacted
-    one, and ``compact_sink`` can run while the server does (a request
-    still reading files its sweep removes gets a 500; the next request
-    reads the new generation). The order-wide sink is partitioned by
-    ``create_date`` (read back as DATE); the wide provider adds it as
-    the string ``dt`` the publisher plans filter on."""
+    DataFrame already built for that snapshot, so the server's cached
+    slices of it stay valid). A commit — a new batch, a finished
+    rewrite of one, ``compact_sink`` — makes the next call return a new
+    snapshot, and the server drops and re-cuts the slices of the old
+    one on their next request. A compacted sink (``gen=N`` plus later
+    batch dirs) serves like an uncompacted one, and ``compact_sink`` can
+    run while the server does (a request still reading files its sweep
+    removes gets a 500; the next request reads the new generation). The
+    order-wide sink is partitioned by ``create_date`` (read back as
+    DATE); the wide provider adds it as the string ``dt`` the publisher
+    plans filter on."""
 
     def dau() -> DataFrame:
         return read_sink(spark, dau_dir)
@@ -99,18 +135,68 @@ def _json_default(o):
     raise TypeError(f"Object of type {type(o).__name__} is not JSON serializable")
 
 
-class _Handler(BaseHTTPRequestHandler):
-    # providers are injected per-server via the factory below
-    dau_provider: Provider
-    wide_provider: Provider
+class _Slices:
+    """Per-date slices of the provider frames, owned by one server:
+    (provider name, day) -> (frame cut from, persisted slice)."""
 
-    def log_message(self, *args) -> None:  # quiet: tests and sidecar use
-        pass
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._held: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+
+    def get(
+        self, name: str, frame: DataFrame, day: str, where: Callable[[str], Column]
+    ) -> tuple[DataFrame, bool]:
+        """(the slice ``frame.filter(where(day))``, whether it was cached)."""
+        key = (name, day)
+        with self._lock:
+            held = self._held.pop(key, None)
+            if held is not None:
+                if held[0] is frame or held[0].sameSemantics(frame):
+                    self._held[key] = held
+                    return held[1], True
+                held[1].unpersist(blocking=False)
+            try:
+                part = frame.filter(where(day)).persist(StorageLevel.MEMORY_AND_DISK)
+            except (PySparkException, Py4JError):  # the route's plan reports it
+                _log.debug("no slice %s", key, exc_info=True)
+                return frame, False
+            self._held[key] = (frame, part)
+            return part, False
+
+    def release(self) -> None:
+        with self._lock:
+            held, self._held = list(self._held.values()), {}
+        for _, part in held:
+            part.unpersist(blocking=False)
+
+
+class _PublisherServer(ThreadingHTTPServer):
+    def __init__(self, address, dau: Provider, wide: Provider) -> None:
+        super().__init__(address, _Handler)
+        self.dau, self.wide, self.slices = dau, wide, _Slices()
+
+    def server_close(self) -> None:
+        super().server_close()
+        self.slices.release()
+
+
+class _Handler(BaseHTTPRequestHandler):
+    server: _PublisherServer
+
+    def log_request(self, code="-", size="-") -> None:
+        pass  # _send logs each request once, with its timing
+
+    def log_message(self, format, *args) -> None:  # noqa: A002 (stdlib signature)
+        _log.warning(format, *args)  # the stdlib's own error lines
 
     def _send(self, code: int, payload) -> None:
         body = json.dumps(
             payload, ensure_ascii=False, default=_json_default
         ).encode("utf-8")
+        _log.info(
+            "%s %d %.1f ms slice=%s", self._route, code,
+            (time.perf_counter() - self._t0) * 1000, self._slice_state,
+        )
         self.send_response(code)
         self.send_header("Content-Type", "application/json; charset=utf-8")
         self.send_header("Content-Length", str(len(body)))
@@ -129,23 +215,32 @@ class _Handler(BaseHTTPRequestHandler):
             raise KeyError(name)
         return vals[0]
 
+    def _slice(self, name: str, frame: DataFrame, day: str, where) -> DataFrame:
+        part, hit = self.server.slices.get(name, frame, day, where)
+        self._slice_state = "hit" if hit else "miss"
+        return part
+
     def do_GET(self) -> None:  # noqa: N802 (stdlib handler contract)
+        self._t0, self._slice_state = time.perf_counter(), "-"
         url = urlparse(self.path)
+        self._route = url.path
         # blanks kept: an EMPTY afterTime/afterId still selects keyset
-        # mode below (required params still 400 on empty via _param)
+        # mode below (required params still 400 on empty via _param).
+        # Each route calls its provider and reads its params in the
+        # order it always has, and cuts the slice last, so a request
+        # with several faults reports the same one it did uncached.
         qs = parse_qs(url.query, keep_blank_values=True)
+        dau, wide = self.server.dau, self.server.wide
         try:
             if url.path == "/dauRealtime":
                 td = self._param(qs, "td")
-                self._send(200, dau_realtime_json(self.dau_provider(), td))
+                frame = self._slice("dau", dau(), td, dau_days)
+                self._send(200, dau_realtime_json(frame, td))
             elif url.path == "/statsByItem":
-                out = stats_by_item_json(
-                    self.wide_provider(),
-                    self._param(qs, "itemName"),
-                    self._param(qs, "date"),
-                    self._param(qs, "t"),
-                )
-                self._send(200, out)
+                frame = wide()
+                item, date, t = (self._param(qs, n) for n in ("itemName", "date", "t"))
+                frame = self._slice("wide", frame, date, on_date)
+                self._send(200, stats_by_item_json(frame, item, date, t))
             elif url.path == "/detailByItem":
                 # Presence of afterTime/afterId switches the route to
                 # keyset (`search_after`) pagination — deep pages filter
@@ -161,21 +256,28 @@ class _Handler(BaseHTTPRequestHandler):
                             "afterTime and afterId must be provided "
                             "together (or both left empty for page 1)"
                         )
+                    frame = wide()
+                    date, item = self._param(qs, "date"), self._param(qs, "itemName")
+                    page_size = int(self._param(qs, "pageSize", "20"))
                     out = detail_by_item_keyset_json(
-                        self.wide_provider(),
-                        self._param(qs, "date"),
-                        self._param(qs, "itemName"),
+                        self._slice("wide", frame, date, on_date),
+                        date,
+                        item,
                         after_time=after_time or None,
                         after_id=after_id or None,
-                        page_size=int(self._param(qs, "pageSize", "20")),
+                        page_size=page_size,
                     )
                 else:
+                    frame = wide()
+                    date, item = self._param(qs, "date"), self._param(qs, "itemName")
+                    page_no = int(self._param(qs, "pageNo", "1"))
+                    page_size = int(self._param(qs, "pageSize", "20"))
                     out = detail_by_item_json(
-                        self.wide_provider(),
-                        self._param(qs, "date"),
-                        self._param(qs, "itemName"),
-                        page_no=int(self._param(qs, "pageNo", "1")),
-                        page_size=int(self._param(qs, "pageSize", "20")),
+                        self._slice("wide", frame, date, on_date),
+                        date,
+                        item,
+                        page_no=page_no,
+                        page_size=page_size,
                     )
                 self._send(200, out)
             else:
@@ -197,16 +299,9 @@ def publisher_server(
     """Build (not start) the publisher HTTP server. ``port=0`` binds an
     ephemeral port (read it back from ``server.server_address[1]`` —
     what the tests do). Call ``serve_forever()`` or use
-    :func:`serve_in_background`."""
-    handler = type(
-        "PublisherHandler",
-        (_Handler,),
-        {
-            "dau_provider": staticmethod(_as_provider(dau)),
-            "wide_provider": staticmethod(_as_provider(wide)),
-        },
-    )
-    return ThreadingHTTPServer((host, port), handler)
+    :func:`serve_in_background`; ``server_close()`` releases the
+    server's cached slices."""
+    return _PublisherServer((host, port), _as_provider(dau), _as_provider(wide))
 
 
 def serve_in_background(server: ThreadingHTTPServer) -> threading.Thread:

@@ -8017,7 +8017,7 @@ from ..operators import linkage as _lk
 from ..operators import ordered as _ord
 from ..operators.validate import l_diversity_report as _ldiv
 from ..streaming import incremental as _inc
-from ..streaming.sinks import write_batch
+from ..streaming.sinks import batch_ids, read_batches, write_batch
 
 
 @_register(
@@ -8970,7 +8970,7 @@ def _hll_stream_store(spark, sf_dir: str) -> str:
     "streaming HyperLogLog distinct store, driver-exposed: three "
     "micro-batch register tables (the same hll_registers writer the "
     "streaming_hll_distinct foreachBatch sink runs, idempotent "
-    "batch=N dirs) merged by cell-wise max and finalized — "
+    "per-batch dirs) merged by cell-wise max and finalized — "
     "finalize(merge(shards)) == one-pass estimate EXACTLY (mergeable "
     "sketch algebra), so the oracle is the single-pass batch SQL "
     "unchanged; state is batches x 64 integer registers regardless of "
@@ -10640,9 +10640,7 @@ def _minhash_stream_oracle_sql() -> str:
 )
 def x_minhash_stream(spark, sf_dir):
     decisions_dir = _minhash_stream_store(spark, sf_dir)
-    d = spark.read.option("basePath", decisions_dir).parquet(
-        decisions_dir + "/batch=*"
-    )
+    d = read_batches(spark, decisions_dir, batch_ids(decisions_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_id",
@@ -10672,9 +10670,7 @@ def x_minhash_stream(spark, sf_dir):
 )
 def x_minhash_stream_compacted(spark, sf_dir):
     decisions_dir = _minhash_stream_store(spark, sf_dir, compact=True)
-    d = spark.read.option("basePath", decisions_dir).parquet(
-        decisions_dir + "/batch=*"
-    )
+    d = read_batches(spark, decisions_dir, batch_ids(decisions_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_id",
@@ -10700,9 +10696,7 @@ def x_minhash_stream_leveled(spark, sf_dir):
     decisions_dir = _minhash_stream_store(
         spark, sf_dir, compact=True, fanout=2
     )
-    d = spark.read.option("basePath", decisions_dir).parquet(
-        decisions_dir + "/batch=*"
-    )
+    d = read_batches(spark, decisions_dir, batch_ids(decisions_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_id",
@@ -13581,10 +13575,14 @@ def _merge_store(spark, sf_dir: str) -> str:
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         out = os.path.join(root, "table")
         cust = _t(spark, sf_dir, "customer")
-        cust.filter(F.col("c_custkey") % 10 != 3).select(
-            "c_custkey",
-            F.col("c_acctbal").cast("decimal(18,6)").alias("bal"),
-        ).write.parquet(os.path.join(out, "batch=0"))
+        write_batch(
+            cust.filter(F.col("c_custkey") % 10 != 3).select(
+                "c_custkey",
+                F.col("c_acctbal").cast("decimal(18,6)").alias("bal"),
+            ),
+            out,
+            0,
+        )
         src = cust.filter(F.col("c_custkey") % 7 == 0).select(
             "c_custkey",
             (F.col("c_acctbal").cast("decimal(18,6)") + 100).alias("bal"),
@@ -14776,9 +14774,7 @@ def x_suffix_stream(spark, sf_dir):
 
     decisions_dir = os.path.join(_suffix_stream_store(spark, sf_dir),
                                  "decisions")
-    d = spark.read.option("basePath", decisions_dir).parquet(
-        decisions_dir + "/batch=*"
-    )
+    d = read_batches(spark, decisions_dir, batch_ids(decisions_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_a", "doc_b", "a_start", "a_end", "b_start", "b_end",
@@ -14806,9 +14802,7 @@ def x_suffix_stream_leveled(spark, sf_dir):
         _suffix_stream_store(spark, sf_dir, compact=True, fanout=2),
         "decisions",
     )
-    d = spark.read.option("basePath", decisions_dir).parquet(
-        decisions_dir + "/batch=*"
-    )
+    d = read_batches(spark, decisions_dir, batch_ids(decisions_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_a", "doc_b", "a_start", "a_end", "b_start", "b_end",
@@ -14866,9 +14860,7 @@ def x_suffix_stream_scrub(spark, sf_dir):
     import os
 
     clean_dir = os.path.join(_suffix_stream_store(spark, sf_dir), "clean")
-    d = spark.read.option("basePath", clean_dir).parquet(
-        clean_dir + "/batch=*"
-    )
+    d = read_batches(spark, clean_dir, batch_ids(clean_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_id", "clean_text",
@@ -14903,9 +14895,7 @@ def x_suffix_stream_compacted(spark, sf_dir):
     decisions_dir = os.path.join(
         _suffix_stream_store(spark, sf_dir, compact=True), "decisions"
     )
-    d = spark.read.option("basePath", decisions_dir).parquet(
-        decisions_dir + "/batch=*"
-    )
+    d = read_batches(spark, decisions_dir, batch_ids(decisions_dir))
     return d.select(
         F.col("batch").cast("int").alias("batch_id"),
         "doc_a", "doc_b", "a_start", "a_end", "b_start", "b_end",

@@ -46,10 +46,13 @@ def dau_realtime_json(dau: DataFrame, td: str, key: str = "mid") -> dict:
 def stats_by_item_json(wide: DataFrame, item_name: str, date: str, t: str) -> list[dict]:
     """GET /statsByItem?itemName&date&t (PublisherController.java:36-42):
     [{"name": bucket, "value": sum}] — gender labels / age bands already
-    recoded inside the aggregation (A5/A6 one-pass)."""
+    recoded inside the aggregation (A5/A6 one-pass), ordered by name as
+    Spark's ascending sort orders them (null first, then code point
+    order, which is UTF-8 byte order)."""
+    rows = stats_by_item(wide, item_name, date, t).collect()
     return [
         {"name": r["name"], "value": r["value"]}
-        for r in stats_by_item(wide, item_name, date, t).collect()
+        for r in sorted(rows, key=lambda r: (r["name"] is not None, r["name"] or ""))
     ]
 
 

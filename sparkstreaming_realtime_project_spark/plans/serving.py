@@ -14,7 +14,7 @@ touches one partition, exactly like the reference's daily ES index
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import highlight, text_match
@@ -35,12 +35,26 @@ def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> DataFrame:
     compares with the string *td* by casting, and a driver-side string
     compare would not.
     """
-    yd = F.date_format(F.date_sub(F.to_date(F.lit(td)), 1), "yyyy-MM-dd")
     return (
-        dau.filter(F.col("dt").isin([td]) | (F.col("dt") == yd))
+        dau.filter(dau_days(td))
         .groupBy((F.col("dt") == td).alias("is_td"), "hr")
         .agg(F.count(key).alias("ct"))
     )
+
+
+def dau_days(td: str) -> Column:
+    """The rows :func:`dau_realtime` reads: ``dt`` is *td* or the day
+    before it, td-1 derived inside the plan (Spark's date cast accepts
+    more spellings of *td* than an ISO parse does)."""
+    yd = F.date_format(F.date_sub(F.to_date(F.lit(td)), 1), "yyyy-MM-dd")
+    return F.col("dt").isin([td]) | (F.col("dt") == yd)
+
+
+def on_date(date: str, date_col: str = "dt") -> Column:
+    """The day test of the item routes: ``date_col = date`` as Spark
+    compares it (a DATE column casts the string; a malformed one fails
+    the plan with this line as its origin)."""
+    return F.col(date_col) == date
 
 
 def stats_by_item(
@@ -59,9 +73,11 @@ def stats_by_item(
     java:49-86): AND-match on sku_name, group by gender or age band, sum
     amount. The reference re-buckets ages client-side (A5) and renames
     genders (A6); here both recodes are single ``when`` chains *inside*
-    the aggregation — one pass, no post-processing."""
+    the aggregation — one pass, no post-processing. The (at most three)
+    buckets come back unordered: a global sort would add a sampling job
+    and a second shuffle, so ``stats_by_item_json`` orders them."""
     matched = wide.filter(
-        (F.col(date_col) == date) & text_match(F.col(name_col), item_name)
+        on_date(date, date_col) & text_match(F.col(name_col), item_name)
     )
     if t == "gender":
         grp = (
@@ -80,7 +96,6 @@ def stats_by_item(
     return (
         matched.groupBy(grp.alias("name"))
         .agg(F.round(F.sum(amount_col), 2).alias("value"))
-        .orderBy("name")
     )
 
 
@@ -109,7 +124,7 @@ def detail_by_item(
     window limit).
     """
     matched = wide.filter(
-        (F.col(date_col) == date) & text_match(F.col(name_col), item_name)
+        on_date(date, date_col) & text_match(F.col(name_col), item_name)
     )
     total = matched.agg(F.count(F.lit(1)).alias("total"))
     ordered = matched.orderBy(
@@ -151,7 +166,7 @@ def detail_by_item_keyset(
     """
     ct, did = order_cols
     matched = wide.filter(
-        (F.col(date_col) == date) & text_match(F.col(name_col), item_name)
+        on_date(date, date_col) & text_match(F.col(name_col), item_name)
     )
     if after is not None:
         after_ct, after_id = after

@@ -43,9 +43,11 @@ idempotent writes.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,9 +95,13 @@ def read_batches(spark, root: str, ids: list[int]) -> DataFrame:
     it). Raises ValueError when ``ids`` is empty — a caller with a
     schema to fall back on returns ``like.limit(0)`` instead, which
     the optimizer folds to an empty LocalRelation."""
+    return _read_batch_dirs(spark.read, root, ids)
+
+
+def _read_batch_dirs(reader, root: str, ids: list[int]) -> DataFrame:
     if not ids:
         raise ValueError(f"{root}: no committed batch or generation")
-    return spark.read.option("basePath", root).parquet(
+    return reader.option("basePath", root).parquet(
         *[batch_dir(root, b) for b in ids]
     )
 
@@ -295,36 +301,53 @@ def read_sink(spark, out_dir: str, at_gen: int | None = None) -> DataFrame:
     hit = _SNAPSHOTS.get(key)
     if fp is not None and hit is not None and hit[:2] == (app, fp):
         return hit[2]
-    df = _read_committed(spark, out_dir)
+    df = _read_committed(spark, out_dir, fp)
     if fp is not None:
         _SNAPSHOTS[key] = (app, fp, df)
     return df
 
 
-def _read_committed(spark, out_dir: str) -> DataFrame:
+def _read_committed(spark, out_dir: str, fingerprint: tuple | None = None) -> DataFrame:
     """Build the DataFrame over the sink's committed state (read_sink
-    without snapshot reuse)."""
-    return _committed_state(spark, out_dir, _read_manifest(out_dir)).drop(
-        "batch"
-    )
+    without snapshot reuse), tagged with the fingerprint it was built
+    under (see :func:`_committed_state`)."""
+    tag = None if fingerprint is None else hashlib.sha1(repr(fingerprint).encode()).hexdigest()
+    return _committed_state(spark, out_dir, _read_manifest(out_dir), tag).drop("batch")
 
 
-def _committed_state(spark, out_dir: str, man: dict | None) -> DataFrame:
+def _committed_state(
+    spark, out_dir: str, man: dict | None, tag: str | None = None
+) -> DataFrame:
     """The live generation (its rows tagged ``batch`` = -1) plus every
     batch dir above its ``through_batch`` (tagged with their own id) —
     what a reader sees, with the arrival order a compaction needs.
     allowMissingColumns: a batch landed after a schema ADDED a column
     must still read alongside an older generation (and vice versa) —
     the missing side null-fills, the standard additive-evolution
-    contract of a parquet table."""
+    contract of a parquet table.
+
+    Every build reads under a ``sinkSnapshot`` read option: ``tag``
+    (read_sink passes a digest of the fingerprint it built under), else
+    a fresh id. Parquet ignores it, but it is part of the file relation,
+    so two builds are ``sameSemantics`` only when built from one
+    fingerprint — never across a batch rewritten in place over the same
+    dirs (a replay, or a read mid-write). A cache cut from one snapshot
+    is then neither served for another by its owner nor substituted
+    into another by Spark's cache lookup, while readers racing to build
+    one unchanged snapshot still agree."""
+    tag = tag or uuid.uuid4().hex
+
+    def reader():
+        return spark.read.option("sinkSnapshot", tag)
+
     live = batch_ids(out_dir, None if man is None else man["through_batch"])
     if man is None:
-        return read_batches(spark, out_dir, live)
-    gen = spark.read.parquet(os.path.join(out_dir, f"gen={man['gen']}"))
+        return _read_batch_dirs(reader(), out_dir, live)
+    gen = reader().parquet(os.path.join(out_dir, f"gen={man['gen']}"))
     if not live:
         return gen.withColumn("batch", F.lit(-1))
     return gen.withColumn("batch", F.lit(-1)).unionByName(
-        read_batches(spark, out_dir, live), allowMissingColumns=True
+        _read_batch_dirs(reader(), out_dir, live), allowMissingColumns=True
     )
 
 

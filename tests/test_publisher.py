@@ -108,6 +108,7 @@ def http_base(dau_table, wide_table):
     host, port = server.server_address
     yield f"http://{host}:{port}"
     server.shutdown()
+    server.server_close()
 
 
 def _get(url: str):
@@ -184,6 +185,7 @@ def _serve_once(dau, wide, path: str):
         return _get(f"http://{host}:{port}{path}")
     finally:
         server.shutdown()
+        server.server_close()
 
 
 def test_http_failure_is_a_500_with_json_body(dau_table):
@@ -370,6 +372,7 @@ def test_http_reflects_live_streaming_sink(spark, tmp_path):
         assert sum(out2["dauYd"].values()) == 2  # day-1 untouched
     finally:
         server.shutdown()
+        server.server_close()
 
 
 def test_cjk_query_matches_unspaced_sku(wide_table, spark):
@@ -485,3 +488,348 @@ def test_keyset_full_walk_reconstructs_total_order(wide_table, spark):
         walked.extend((r.create_time, r.detail_id) for r in rows)
         cursor = (rows[-1].create_time, rows[-1].detail_id)
     assert walked == full and len(walked) == 3
+
+
+def test_stats_by_item_runs_two_jobs(spark, wide_table):
+    """One /statsByItem aggregate is one shuffle: its map stage and its
+    result, no range-partition sampling job for a global sort (the
+    buckets are ordered driver-side)."""
+    from . import streaming_fixtures as fx
+
+    got, jobs = fx.count_jobs(
+        spark, lambda: stats_by_item_json(wide_table, "小米", "2024-01-02", "age")
+    )
+    assert got == [
+        {"name": "20岁到29岁", "value": 130.0},
+        {"name": "30岁及30岁以上", "value": 50.0},
+    ]
+    assert jobs <= 2, jobs
+
+
+# --- serving cache: the server's per-date slices ----------------------------
+
+
+def _write_sinks(spark, root, dau_table, wide_table):
+    """A dau sink (``dt`` reads back as DATE) and an order-wide sink
+    (partitioned by ``create_date``), two batches each."""
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        idempotent_partitioned_writer,
+    )
+
+    dau_dir, wide_dir = str(root / "dau"), str(root / "wide")
+    dau_w = idempotent_partitioned_writer(dau_dir, ["mid", "dt"], "dt")
+    wide_w = idempotent_partitioned_writer(wide_dir, ["detail_id"], "create_date")
+    rows = dau_table.collect()
+    dau_w(spark.createDataFrame(rows[:3], dau_table.schema), 0)
+    dau_w(spark.createDataFrame(rows[3:], dau_table.schema), 1)
+    wide = wide_table.withColumnRenamed("dt", "create_date")
+    wide_w(wide.filter("detail_id <= 3"), 0)
+    wide_w(wide.filter("detail_id > 3"), 1)
+    return dau_dir, wide_dir
+
+
+def _wide_frame(df, dt_type: str):
+    from pyspark.sql import functions as F
+
+    if dt_type == "date":
+        return df.withColumnRenamed("create_date", "dt")
+    return df.withColumn("dt", F.col("create_date").cast("string"))
+
+
+def _paths(valid: bool) -> list[str]:
+    from urllib.parse import quote
+
+    pair, one = quote("小米 手机"), quote("小米")
+    cursor = quote("2024-01-02 11:00:00")
+    if valid:
+        return [
+            "/dauRealtime?td=2024-01-02",
+            "/dauRealtime?td=2024-01-01",
+            "/dauRealtime?td=2030-12-31",
+            f"/statsByItem?itemName={pair}&date=2024-01-02&t=gender",
+            f"/statsByItem?itemName={one}&date=2024-01-01&t=age",
+            f"/detailByItem?date=2024-01-02&itemName={one}&pageNo=1&pageSize=2",
+            f"/detailByItem?date=2024-01-02&itemName={one}&pageNo=2&pageSize=2",
+            f"/detailByItem?date=2024-01-01&itemName={one}",
+            f"/detailByItem?date=2024-01-02&itemName={one}&afterTime=&afterId=&pageSize=2",
+            f"/detailByItem?date=2024-01-02&itemName={one}&afterTime={cursor}&afterId=2",
+        ]
+    return [
+        "/dauRealtime?td=2024-1-2",  # Spark's date cast accepts it
+        "/dauRealtime?td=abc",
+        "/dauRealtime",
+        f"/statsByItem?itemName={one}&date=abc&t=age",
+        f"/statsByItem?itemName={one}&date=abc&t=city",  # bad t wins
+        f"/statsByItem?itemName={one}&date=2024-01-02&t=city",
+        "/statsByItem?date=2024-01-02&t=age",
+        f"/detailByItem?date=abc&itemName={one}",
+        f"/detailByItem?date=abc&itemName={one}&pageNo=x",
+        f"/detailByItem?date=2024-01-02&itemName={one}&pageNo=0",
+        f"/detailByItem?date=2024-01-02&itemName={one}&afterTime={cursor}",
+        f"/detailByItem?date=abc&itemName={one}&afterTime={cursor}&afterId=y",
+        "/detailByItem?itemName=x",
+        "/nope",
+    ]
+
+
+def _answers(base: str, paths: list[str]) -> list:
+    """(status, body) per path; a 500 keeps its message's first line
+    (the rest quotes the plan, whose expression ids differ per call)."""
+    out = []
+    for p in paths:
+        status, body = _get(base + p)
+        out.append((p, status, body["error"].splitlines()[0] if status == 500 else body))
+    return out
+
+
+def _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths):
+    """The same routes with slicing switched off, over a fresh read of
+    each sink per request (a fresh read is a new relation, so Spark's
+    cache lookup cannot substitute the other server's slices into it)."""
+    from sparkstreaming_realtime_project_spark import http_api
+    from sparkstreaming_realtime_project_spark.http_api import (
+        publisher_server,
+        serve_in_background,
+    )
+    from sparkstreaming_realtime_project_spark.streaming import sinks
+
+    with monkeypatch.context() as m:
+        m.setattr(http_api._Slices, "get", lambda self, name, frame, *_: (frame, False))
+        server = publisher_server(
+            lambda: sinks._read_committed(spark, dau_dir),
+            lambda: _wide_frame(sinks._read_committed(spark, wide_dir), dt_type),
+        )
+        serve_in_background(server)
+        host, port = server.server_address
+        try:
+            return _answers(f"http://{host}:{port}", paths)
+        finally:
+            server.shutdown()
+            server.server_close()
+
+
+def _cached_server(spark, dau_dir, wide_dir, dt_type):
+    from sparkstreaming_realtime_project_spark.http_api import (
+        publisher_server,
+        serve_in_background,
+        sink_providers,
+    )
+    from sparkstreaming_realtime_project_spark.streaming.sinks import read_sink
+
+    dau, wide = sink_providers(spark, dau_dir, wide_dir)
+    if dt_type == "date":
+        wide = lambda: _wide_frame(read_sink(spark, wide_dir), "date")  # noqa: E731
+    server = publisher_server(dau, wide)
+    serve_in_background(server)
+    host, port = server.server_address
+    return server, f"http://{host}:{port}"
+
+
+@pytest.mark.parametrize("dt_type", ["string", "date"])
+def test_slices_answer_like_the_uncached_routes(
+    spark, dau_table, wide_table, tmp_path, monkeypatch, dt_type
+):
+    """Every route, its 400s and 500s included, answers from the slices
+    exactly what it answers with slicing off — cold and warm, with the
+    wide ``dt`` a string and a DATE (a malformed date fails the DATE
+    cast; when ``t`` is bad too, the 400 still wins)."""
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    paths = _paths(True) + _paths(False)
+    want = _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths)
+    assert [a[1] for a in want].count(500) >= 2  # the malformed dates
+    server, base = _cached_server(spark, dau_dir, wide_dir, dt_type)
+    try:
+        assert _answers(base, paths) == want  # cold: cuts the slices
+        assert _answers(base, paths) == want  # warm: serves them
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypatch):
+    """A running server answers like the uncached routes after a new
+    batch commits, after a batch is rewritten in place behind Spark's
+    back (a replay by another process: same dirs, new files) and after
+    ``compact_sink``."""
+    import shutil
+
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        compact_sink,
+        idempotent_partitioned_writer,
+    )
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    paths = _paths(True)[::2]  # dau td, dau no-day, stats, offset p2, keyset
+
+    def want():
+        return _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, "string", paths)
+
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    try:
+        assert _answers(base, paths) == want()
+        # a new batch: m5 active on 2024-01-02, a new 小米 order
+        idempotent_partitioned_writer(dau_dir, ["mid", "dt"], "dt")(
+            spark.createDataFrame([("m5", "2024-01-02", "02")], dau_table.schema), 2
+        )
+        idempotent_partitioned_writer(wide_dir, ["detail_id"], "create_date")(
+            spark.createDataFrame(
+                [(6, "2024-01-02", "小米 手机 9", "M", 19, 9.0, "2024-01-02 14:00:00")],
+                wide_table.schema,
+            ).withColumnRenamed("dt", "create_date"),
+            2,
+        )
+        after_batch = _answers(base, paths)
+        assert after_batch == want() and after_batch[0][2]["dauTotal"] == 4
+        # batch 2 rewritten in place with other rows, written elsewhere
+        # and moved in (Spark never sees a write to the sink's paths)
+        side = str(tmp_path / "side")
+        idempotent_partitioned_writer(side, ["mid", "dt"], "dt")(
+            spark.createDataFrame(
+                [("m6", "2024-01-02", "03"), ("m7", "2024-01-02", "03")],
+                dau_table.schema,
+            ),
+            2,
+        )
+        shutil.rmtree(f"{dau_dir}/batch=2")
+        shutil.move(f"{side}/batch=2", f"{dau_dir}/batch=2")
+        after_replay = _answers(base, paths)
+        assert after_replay == want() and after_replay[0][2]["dauTd"]["03"] == 2
+        compact_sink(spark, dau_dir, ["mid", "dt"])
+        compact_sink(spark, wide_dir, ["detail_id"], partition_col="create_date")
+        assert _answers(base, paths) == want()
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def _executions_after(spark, last: int) -> list:
+    status = spark._jsparkSession.sharedState().statusStore()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    lst = status.executionsList(max(0, status.executionsCount() - 16), 16)
+    return [lst.apply(i) for i in range(lst.size()) if lst.apply(i).executionId() > last]
+
+
+def _last_execution(spark) -> int:
+    ex = _executions_after(spark, -1)
+    return ex[-1].executionId() if ex else -1
+
+
+def test_repeated_request_reads_the_cached_slice(spark, dau_table, wide_table, tmp_path):
+    """The second identical request's executed plans scan the slice's
+    InMemoryRelation; none of them scans a parquet file."""
+    from urllib.parse import quote
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    path = f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t=age"
+    try:
+        assert _get(base + path)[0] == 200
+        last = _last_execution(spark)
+        assert _get(base + path)[0] == 200
+        plans = [e.physicalPlanDescription() for e in _executions_after(spark, last)]
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert plans
+    for plan in plans:
+        top = plan.split("InMemoryRelation")[0]  # the cached plan is quoted below it
+        assert "InMemoryTableScan" in top and "FileScan" not in top, plan
+
+
+def _persistent_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_concurrent_cold_requests_cut_one_slice_per_date(
+    spark, dau_table, wide_table, tmp_path
+):
+    """Requests racing on a cold server (twice as many threads as cores,
+    a short switch interval, two dates) leave exactly one cached slice
+    per date."""
+    import sys
+    import threading
+    from urllib.parse import quote
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    before = _persistent_rdds(spark)
+    n = 2 * (os.cpu_count() or 2)
+    gate, got = threading.Barrier(n), []
+
+    def request(i):
+        date = ("2024-01-01", "2024-01-02")[i % 2]
+        gate.wait()
+        got.append(_get(f"{base}/statsByItem?itemName={quote('小米')}&date={date}&t=age"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=request, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert sorted(s for s, _ in got) == [200] * n
+        assert sorted(server.slices._held) == [
+            ("wide", "2024-01-01"), ("wide", "2024-01-02"),
+        ]
+        assert _persistent_rdds(spark) == before + 2
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_server_close_releases_its_slices(spark, dau_table, wide_table, tmp_path):
+    """``server_close()`` brings the context's persistent-RDD count back
+    to where it was before the server cached anything."""
+    from urllib.parse import quote
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    before = _persistent_rdds(spark)
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    for p in [
+        "/dauRealtime?td=2024-01-02",
+        f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t=age",
+        f"/detailByItem?date=2024-01-01&itemName={quote('小米')}",
+    ]:
+        assert _get(base + p)[0] == 200
+    assert _persistent_rdds(spark) == before + 3
+    server.shutdown()
+    server.server_close()
+    assert _persistent_rdds(spark) == before
+
+
+def test_request_log_line(spark, dau_table, wide_table, caplog):
+    """One INFO line per request: route, status, ms and the slice state."""
+    import logging
+    import re
+
+    from sparkstreaming_realtime_project_spark.http_api import (
+        publisher_server,
+        serve_in_background,
+    )
+
+    wide = wide_table.withColumn("n", wide_table.detail_id)  # a frame no other test sliced
+    with caplog.at_level(logging.INFO, logger="sparkstreaming_realtime_project_spark.http_api"):
+        server = publisher_server(dau_table, wide)
+        serve_in_background(server)
+        host, port = server.server_address
+        try:
+            for p in ["/detailByItem?date=2024-01-02&itemName=x"] * 2 + ["/nope", "/dauRealtime"]:
+                _get(f"http://{host}:{port}{p}")
+        finally:
+            server.shutdown()
+            server.server_close()
+    lines = [r.getMessage() for r in caplog.records if r.name.endswith("http_api")]
+    assert len(lines) == 4, lines
+    pat = r"^(/\w+) (\d+) \d+\.\d ms slice=(\S+)$"
+    assert [re.match(pat, x).groups() for x in lines] == [
+        ("/detailByItem", "200", "miss"),
+        ("/detailByItem", "200", "hit"),
+        ("/nope", "404", "-"),
+        ("/dauRealtime", "400", "-"),
+    ]

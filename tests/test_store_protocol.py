@@ -28,11 +28,7 @@ from sparkstreaming_realtime_project_spark.streaming.incremental import (
     read_hll_estimate,
 )
 
-STREAMING = (
-    pathlib.Path(__file__).resolve().parents[1]
-    / "sparkstreaming_realtime_project_spark"
-    / "streaming"
-)
+PKG = pathlib.Path(__file__).resolve().parents[1] / "sparkstreaming_realtime_project_spark"
 
 # kind -> (write one batch, compact, read the store's answer)
 KINDS = {
@@ -198,16 +194,16 @@ def _batch_path_literals(source: str) -> list[int]:
 
 
 def test_only_sinks_spells_batch_dirs():
-    """One batch-store protocol: no streaming module other than sinks.py
-    builds a ``batch=`` path or a ``batch=*`` glob — they list, write,
-    read and sweep batch dirs through sinks' helpers."""
+    """One batch-store protocol: no streaming or plans module other than
+    sinks.py builds a ``batch=`` path or a ``batch=*`` glob — they list,
+    write, read and sweep batch dirs through sinks' helpers."""
     assert _batch_path_literals(
         'def f(r, b):\n    """batch=N layout"""\n'
         '    return os.path.join(r, f"batch={b}"), r + "/batch=*"\n'
     ) == [3, 3]
     offenders = {
         path.name: lines
-        for path in sorted(STREAMING.glob("*.py"))
+        for path in sorted([*PKG.glob("streaming/*.py"), *PKG.glob("plans/*.py")])
         if path.name != "sinks.py"
         and (lines := _batch_path_literals(path.read_text()))
     }

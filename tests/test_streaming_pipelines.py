@@ -46,6 +46,22 @@ from sparkstreaming_realtime_project_spark.streaming.sinks import (
 
 from . import streaming_fixtures as fx
 
+
+@pytest.fixture
+def cli(spark):
+    """The launcher's ``main``. It calls ``get_spark``, which on the shared
+    test session renames the app and resizes ``spark.sql.shuffle.partitions``
+    to the task slots; the fixture puts both back, since later plan-shape
+    tests (bucketed store joins) depend on the session's partition count."""
+    from sparkstreaming_realtime_project_spark.__main__ import main
+
+    keys = ("spark.app.name", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    yield main
+    for k, v in before.items():
+        spark.conf.set(k, v)
+
+
 def as_of():
     return F.lit("2024-06-01")
 
@@ -1242,19 +1258,17 @@ def test_order_wide_left_outer_emits_unmatched_detail(spark, tmp_path):
     assert str(got[99]["create_date"]) == "2024-01-01"
 
 
-def test_order_wide_launcher_left_outer_flag(spark, tmp_path):
+def test_order_wide_launcher_left_outer_flag(spark, tmp_path, cli):
     """Launcher smoke for --left-outer: flag parses, the drain completes,
     and matched rows land exactly as in inner mode (the outer-emission
     semantics themselves are covered by the pipeline-level test)."""
-    from sparkstreaming_realtime_project_spark.__main__ import main
-
     t0 = "2024-01-01 10:00:00"
     info_dir, detail_dir = str(tmp_path / "info"), str(tmp_path / "detail")
     fx._write_batches(info_dir, [[fx.info_row(1, t0)]])
     fx._write_batches(detail_dir, [[fx.detail_row(7, 1, t0)]])
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     with pytest.raises(SystemExit) as exc:
-        main([
+        cli([
             "order-wide",
             "--input-info", info_dir,
             "--input-detail", detail_dir,
@@ -1696,24 +1710,22 @@ def test_sink_reads_across_additive_schema_evolution(spark, tmp_path):
     assert set(rows) == {"k1", "k2"} and rows["k2"]["extra"] == "tagged"
 
 
-def test_compact_cli_subcommand(spark, tmp_path):
+def test_compact_cli_subcommand(spark, tmp_path, cli):
     """Launcher smoke for `compact`: folds batch dirs into a committed
     generation via the manifest protocol and reports the live count."""
-    from sparkstreaming_realtime_project_spark.__main__ import main
-
     out = str(tmp_path / "sink")
     spark.createDataFrame(
         [("k1", "2024-01-01"), ("k2", "2024-01-01"), ("k1", "2024-01-01")],
         "k string, dt string",
     ).write.partitionBy("dt").parquet(os.path.join(out, "batch=0"))
     with pytest.raises(SystemExit) as exc:
-        main(["compact", "--dir", out, "--keys", "k"])
+        cli(["compact", "--dir", out, "--keys", "k"])
     assert exc.value.code == 0
     assert sorted(os.listdir(out)) == ["_MANIFEST", "_MANIFEST.v0", "gen=0"]
     assert read_sink(spark, out).count() == 2  # k1 deduped
 
 
-def test_compact_store_cli_subcommand(spark, tmp_path):
+def test_compact_store_cli_subcommand(spark, tmp_path, cli):
     """Launcher smoke for `compact-store`: the agg sketch store folds
     batch dirs into one committed generation with read_agg_totals
     unchanged, and the suffix anchor store folds into its bucketed
@@ -1721,7 +1733,6 @@ def test_compact_store_cli_subcommand(spark, tmp_path):
     store-maintenance jobs."""
     from pyspark.sql import functions as F
 
-    from sparkstreaming_realtime_project_spark.__main__ import main
     from sparkstreaming_realtime_project_spark.streaming.incremental import (
         agg_write_batch,
         read_agg_totals,
@@ -1738,7 +1749,7 @@ def test_compact_store_cli_subcommand(spark, tmp_path):
         )
     before = sorted(read_agg_totals(spark, agg, ["k"]).collect())
     with pytest.raises(SystemExit) as exc:
-        main(["compact-store", "--dir", agg, "--kind", "agg",
+        cli(["compact-store", "--dir", agg, "--kind", "agg",
               "--keys", "k"])
     assert exc.value.code == 0
     assert sorted(read_agg_totals(spark, agg, ["k"]).collect()) == before
@@ -1761,7 +1772,7 @@ def test_compact_store_cli_subcommand(spark, tmp_path):
         os.path.join(suffix, "gramdf", "batch=0")
     )
     with pytest.raises(SystemExit) as exc:
-        main(["compact-store", "--dir", suffix, "--kind", "suffix",
+        cli(["compact-store", "--dir", suffix, "--kind", "suffix",
               "--buckets", "4"])
     assert exc.value.code == 0
     man = read_compaction_manifest(suffix)
@@ -1773,7 +1784,7 @@ def test_compact_store_cli_subcommand(spark, tmp_path):
     # is a cheap merged-dir reduction must REJECT it, not silently run
     # the full fold the operator chose --fanout to avoid
     with pytest.raises(SystemExit) as exc:
-        main(["compact-store", "--dir", agg, "--kind", "agg",
+        cli(["compact-store", "--dir", agg, "--kind", "agg",
               "--keys", "k", "--fanout", "2"])
     assert exc.value.code != 0
     assert "only supported for --kind suffix/minhash" in str(exc.value.code)
