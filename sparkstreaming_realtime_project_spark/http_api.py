@@ -22,24 +22,34 @@ modes read the ``date`` slice of the wide frame; ``/dauRealtime`` reads
 the ``td`` slice of the dau frame, which holds td and td-1 (the route
 derives td-1 inside the plan, so the slice does too).
 
-- A request first calls its provider. The slice it cut earlier is served
-  while the provider's frame ``sameSemantics`` the frame it was cut from
-  (over a sink dir, ``read_sink`` returns the same snapshot until a
-  commit, and every rebuilt snapshot is a new relation); otherwise the
-  old slice is unpersisted and a new one cut.
-- A new slice is persisted lazily: the request's own action fills it
-  (under AQE the fill is one extra job of that action), reading one
-  day's partition. A hit calls no ``persist()``.
-- Memory is bounded by the dates being served, not by the sink's
-  history; past the storage memory, Spark's LRU spills slices to disk.
+- A request first calls its provider. The slices cut earlier are
+  served while the provider's frame ``sameSemantics`` the frame they
+  were cut from (over a sink dir, ``read_sink`` returns the same
+  snapshot until a commit, and every rebuilt snapshot is a new
+  relation); otherwise every slice of the old snapshot is dropped.
+- A day's first request on a snapshot reads the provider's frame
+  uncached; its second cuts the slice and persists it lazily, so that
+  request's own action fills it (under AQE the fill is one extra job of
+  that action), reading one day's partition; later requests hit and call
+  no ``persist()``. A fill costs more than one uncached read, so a sink
+  that commits before a day is asked for twice (a snapshot that lives
+  for one request per day) is served as it is uncached, not refilled on
+  every request.
+- Memory: at most ``_DAYS_KEPT`` days per provider, the least recently
+  served dropped first, so it is bounded by the days being served and
+  not by the sink's history or by the dates clients make up; past the
+  storage memory, Spark's LRU spills slices to disk.
+- A dropped slice is unpersisted once no request still uses it (each
+  request counts as a user of its slice until its response is written),
+  so a fill in flight is never cut off and left unowned.
 - A slice whose cut does not plan (say a malformed ``date`` against a
   DATE column) is not kept: the route runs on the provider's frame and
   answers exactly what it answers uncached.
 - One lock guards the slice map (requests run on their own threads), and
-  ``server_close()`` unpersists every slice the server holds.
+  ``server_close()`` drops every slice the server holds.
 
 Logging: one INFO line per request on this module's logger (route,
-status, ms, slice hit/miss); the package installs no handler.
+status, ms, slice hit/fill/miss); the package installs no handler.
 
 Design notes:
 - stdlib ``http.server`` only — no web framework in the sandbox, and the
@@ -73,6 +83,7 @@ import json
 import logging
 import threading
 import time
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 from urllib.parse import parse_qs, urlparse
@@ -109,14 +120,15 @@ def sink_providers(spark, dau_dir: str, wide_dir: str) -> tuple[Provider, Provid
     DataFrame already built for that snapshot, so the server's cached
     slices of it stay valid). A commit — a new batch, a finished
     rewrite of one, ``compact_sink`` — makes the next call return a new
-    snapshot, and the server drops and re-cuts the slices of the old
-    one on their next request. A compacted sink (``gen=N`` plus later
-    batch dirs) serves like an uncompacted one, and ``compact_sink`` can
-    run while the server does (a request still reading files its sweep
-    removes gets a 500; the next request reads the new generation). The
-    order-wide sink is partitioned by ``create_date`` (read back as
-    DATE); the wide provider adds it as the string ``dt`` the publisher
-    plans filter on."""
+    snapshot: the server's next request on that sink drops every slice
+    of the old one, and each date is cut again from the new snapshot.
+    A compacted sink (``gen=N`` plus later batch dirs) serves like an
+    uncompacted one, and ``compact_sink`` can run while the server does
+    (a request still reading files its sweep removes gets a 500; the
+    next request reads the new generation). The order-wide sink is
+    partitioned by ``create_date`` (read back as DATE); the wide
+    provider adds it as the string ``dt`` the publisher plans filter
+    on."""
 
     def dau() -> DataFrame:
         return read_sink(spark, dau_dir)
@@ -135,39 +147,90 @@ def _json_default(o):
     raise TypeError(f"Object of type {type(o).__name__} is not JSON serializable")
 
 
+_DAYS_KEPT = 8  # days tracked per provider; the least recently served goes first
+
+
+class _Slice:
+    """One persisted day slice and the requests planning on it."""
+
+    __slots__ = ("frame", "users", "retired")
+
+    def __init__(self, frame: DataFrame) -> None:
+        self.frame, self.users, self.retired = frame, 0, False
+
+
 class _Slices:
     """Per-date slices of the provider frames, owned by one server:
-    (provider name, day) -> (frame cut from, persisted slice)."""
+    provider name -> (frame cut from, {day: slice, or None for a day
+    asked for once}, least recently served first). A slice dropped (its
+    snapshot superseded, pushed out by a newer day, or the server
+    closed) is unpersisted once no request uses it: a request still
+    filling it would otherwise rebuild its cache buffers after the
+    unpersist, and nothing would own them."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self._held: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+        self._held: dict[str, tuple[DataFrame, OrderedDict[str, _Slice | None]]] = {}
 
     def get(
         self, name: str, frame: DataFrame, day: str, where: Callable[[str], Column]
-    ) -> tuple[DataFrame, bool]:
-        """(the slice ``frame.filter(where(day))``, whether it was cached)."""
-        key = (name, day)
+    ) -> tuple[_Slice | None, str]:
+        """(the slice ``frame.filter(where(day))`` or None to read
+        ``frame`` itself, "hit" | "fill" | "miss"). A day's first request
+        on a snapshot is a miss, served uncached; its second cuts the
+        slice and fills it (the caller counts as a user until
+        :meth:`done`); later ones hit. A cut that does not plan is a
+        miss too."""
         with self._lock:
-            held = self._held.pop(key, None)
-            if held is not None:
-                if held[0] is frame or held[0].sameSemantics(frame):
-                    self._held[key] = held
-                    return held[1], True
-                held[1].unpersist(blocking=False)
-            try:
-                part = frame.filter(where(day)).persist(StorageLevel.MEMORY_AND_DISK)
-            except (PySparkException, Py4JError):  # the route's plan reports it
-                _log.debug("no slice %s", key, exc_info=True)
-                return frame, False
-            self._held[key] = (frame, part)
-            return part, False
+            cut_from, days = self._held.get(name, (None, OrderedDict()))
+            if cut_from is not frame and (
+                cut_from is None or not cut_from.sameSemantics(frame)
+            ):
+                for s in days.values():
+                    self._drop(s)
+                days = OrderedDict()
+                self._held[name] = (frame, days)
+            if day not in days:
+                days[day] = None
+                self._trim(days)
+                return None, "miss"
+            days.move_to_end(day)
+            s, state = days[day], "hit"
+            if s is None:
+                try:
+                    part = frame.filter(where(day)).persist(StorageLevel.MEMORY_AND_DISK)
+                except (PySparkException, Py4JError):  # the route's plan reports it
+                    _log.debug("no slice %s %s", name, day, exc_info=True)
+                    return None, "miss"
+                s, state = _Slice(part), "fill"
+                days[day] = s
+            s.users += 1
+            return s, state
+
+    def done(self, s: _Slice) -> None:
+        """The caller's action over ``s`` has finished."""
+        with self._lock:
+            s.users -= 1
+            if s.retired:
+                self._drop(s)
+
+    def _drop(self, s: _Slice | None) -> None:  # lock held
+        if s is None:
+            return
+        s.retired = True
+        if not s.users:
+            s.frame.unpersist(blocking=False)
+
+    def _trim(self, days: OrderedDict[str, _Slice | None]) -> None:  # lock held
+        while len(days) > _DAYS_KEPT:
+            self._drop(days.popitem(last=False)[1])
 
     def release(self) -> None:
         with self._lock:
-            held, self._held = list(self._held.values()), {}
-        for _, part in held:
-            part.unpersist(blocking=False)
+            held, self._held = self._held, {}
+            for _, days in held.values():
+                for s in days.values():
+                    self._drop(s)
 
 
 class _PublisherServer(ThreadingHTTPServer):
@@ -216,11 +279,18 @@ class _Handler(BaseHTTPRequestHandler):
         return vals[0]
 
     def _slice(self, name: str, frame: DataFrame, day: str, where) -> DataFrame:
-        part, hit = self.server.slices.get(name, frame, day, where)
-        self._slice_state = "hit" if hit else "miss"
-        return part
+        self._held, self._slice_state = self.server.slices.get(name, frame, day, where)
+        return frame if self._held is None else self._held.frame
 
     def do_GET(self) -> None:  # noqa: N802 (stdlib handler contract)
+        self._held = None
+        try:
+            self._route_request()
+        finally:
+            if self._held is not None:
+                self.server.slices.done(self._held)
+
+    def _route_request(self) -> None:
         self._t0, self._slice_state = time.perf_counter(), "-"
         url = urlparse(self.path)
         self._route = url.path

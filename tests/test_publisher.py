@@ -594,7 +594,7 @@ def _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths):
     from sparkstreaming_realtime_project_spark.streaming import sinks
 
     with monkeypatch.context() as m:
-        m.setattr(http_api._Slices, "get", lambda self, name, frame, *_: (frame, False))
+        m.setattr(http_api._Slices, "get", lambda self, *_: (None, "miss"))
         server = publisher_server(
             lambda: sinks._read_committed(spark, dau_dir),
             lambda: _wide_frame(sinks._read_committed(spark, wide_dir), dt_type),
@@ -630,16 +630,17 @@ def test_slices_answer_like_the_uncached_routes(
     spark, dau_table, wide_table, tmp_path, monkeypatch, dt_type
 ):
     """Every route, its 400s and 500s included, answers from the slices
-    exactly what it answers with slicing off — cold and warm, with the
-    wide ``dt`` a string and a DATE (a malformed date fails the DATE
-    cast; when ``t`` is bad too, the 400 still wins)."""
+    exactly what it answers with slicing off — uncached, filling and
+    warm, with the wide ``dt`` a string and a DATE (a malformed date
+    fails the DATE cast; when ``t`` is bad too, the 400 still wins)."""
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
     paths = _paths(True) + _paths(False)
     want = _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths)
     assert [a[1] for a in want].count(500) >= 2  # the malformed dates
     server, base = _cached_server(spark, dau_dir, wide_dir, dt_type)
     try:
-        assert _answers(base, paths) == want  # cold: cuts the slices
+        assert _answers(base, paths) == want  # first asks: uncached
+        assert _answers(base, paths) == want  # second: cut and fill the slices
         assert _answers(base, paths) == want  # warm: serves them
     finally:
         server.shutdown()
@@ -665,8 +666,15 @@ def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypat
         return _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, "string", paths)
 
     server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+
+    def served():
+        """The routes asked three times (uncached, fill, hit)."""
+        got = [_answers(base, paths) for _ in range(3)]
+        assert got[1] == got[0] and got[2] == got[0]
+        return got[0]
+
     try:
-        assert _answers(base, paths) == want()
+        assert served() == want()
         # a new batch: m5 active on 2024-01-02, a new 小米 order
         idempotent_partitioned_writer(dau_dir, ["mid", "dt"], "dt")(
             spark.createDataFrame([("m5", "2024-01-02", "02")], dau_table.schema), 2
@@ -678,7 +686,7 @@ def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypat
             ).withColumnRenamed("dt", "create_date"),
             2,
         )
-        after_batch = _answers(base, paths)
+        after_batch = served()
         assert after_batch == want() and after_batch[0][2]["dauTotal"] == 4
         # batch 2 rewritten in place with other rows, written elsewhere
         # and moved in (Spark never sees a write to the sink's paths)
@@ -692,11 +700,11 @@ def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypat
         )
         shutil.rmtree(f"{dau_dir}/batch=2")
         shutil.move(f"{side}/batch=2", f"{dau_dir}/batch=2")
-        after_replay = _answers(base, paths)
+        after_replay = served()
         assert after_replay == want() and after_replay[0][2]["dauTd"]["03"] == 2
         compact_sink(spark, dau_dir, ["mid", "dt"])
         compact_sink(spark, wide_dir, ["detail_id"], partition_col="create_date")
-        assert _answers(base, paths) == want()
+        assert served() == want()
     finally:
         server.shutdown()
         server.server_close()
@@ -715,14 +723,16 @@ def _last_execution(spark) -> int:
 
 
 def test_repeated_request_reads_the_cached_slice(spark, dau_table, wide_table, tmp_path):
-    """The second identical request's executed plans scan the slice's
-    InMemoryRelation; none of them scans a parquet file."""
+    """Once the slice is cut (on the second request for its day), a
+    repeated request's executed plans scan the slice's InMemoryRelation;
+    none of them scans a parquet file."""
     from urllib.parse import quote
 
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
     server, base = _cached_server(spark, dau_dir, wide_dir, "string")
     path = f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t=age"
     try:
+        assert _get(base + path)[0] == 200
         assert _get(base + path)[0] == 200
         last = _last_execution(spark)
         assert _get(base + path)[0] == 200
@@ -740,6 +750,13 @@ def _persistent_rdds(spark) -> int:
     return len(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+def _held(server) -> list[tuple[str, str]]:
+    """(provider, day) of every slice the server holds."""
+    return sorted(
+        (name, day) for name, (_, days) in server.slices._held.items() for day in days
+    )
+
+
 def test_concurrent_cold_requests_cut_one_slice_per_date(
     spark, dau_table, wide_table, tmp_path
 ):
@@ -753,7 +770,7 @@ def test_concurrent_cold_requests_cut_one_slice_per_date(
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
     server, base = _cached_server(spark, dau_dir, wide_dir, "string")
     before = _persistent_rdds(spark)
-    n = 2 * (os.cpu_count() or 2)
+    n = 2 * max(2, os.cpu_count() or 2)
     gate, got = threading.Barrier(n), []
 
     def request(i):
@@ -774,9 +791,7 @@ def test_concurrent_cold_requests_cut_one_slice_per_date(
         sys.setswitchinterval(interval)
     try:
         assert sorted(s for s, _ in got) == [200] * n
-        assert sorted(server.slices._held) == [
-            ("wide", "2024-01-01"), ("wide", "2024-01-02"),
-        ]
+        assert _held(server) == [("wide", "2024-01-01"), ("wide", "2024-01-02")]
         assert _persistent_rdds(spark) == before + 2
     finally:
         server.shutdown()
@@ -795,7 +810,7 @@ def test_server_close_releases_its_slices(spark, dau_table, wide_table, tmp_path
         "/dauRealtime?td=2024-01-02",
         f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t=age",
         f"/detailByItem?date=2024-01-01&itemName={quote('小米')}",
-    ]:
+    ] * 2:
         assert _get(base + p)[0] == 200
     assert _persistent_rdds(spark) == before + 3
     server.shutdown()
@@ -819,17 +834,92 @@ def test_request_log_line(spark, dau_table, wide_table, caplog):
         serve_in_background(server)
         host, port = server.server_address
         try:
-            for p in ["/detailByItem?date=2024-01-02&itemName=x"] * 2 + ["/nope", "/dauRealtime"]:
+            for p in ["/detailByItem?date=2024-01-02&itemName=x"] * 3 + ["/nope", "/dauRealtime"]:
                 _get(f"http://{host}:{port}{p}")
         finally:
             server.shutdown()
             server.server_close()
     lines = [r.getMessage() for r in caplog.records if r.name.endswith("http_api")]
-    assert len(lines) == 4, lines
+    assert len(lines) == 5, lines
     pat = r"^(/\w+) (\d+) \d+\.\d ms slice=(\S+)$"
     assert [re.match(pat, x).groups() for x in lines] == [
         ("/detailByItem", "200", "miss"),
+        ("/detailByItem", "200", "fill"),
         ("/detailByItem", "200", "hit"),
         ("/nope", "404", "-"),
         ("/dauRealtime", "400", "-"),
     ]
+
+
+def test_slices_stay_bounded(spark, dau_table, wide_table, tmp_path):
+    """Many distinct dates (made-up ones included) keep at most
+    ``_DAYS_KEPT`` slices per provider, and after a commit, requests for
+    one date leave only that date's slice of the new snapshot: every
+    slice of the old one is released, not just the one asked for again."""
+    from urllib.parse import quote
+
+    from sparkstreaming_realtime_project_spark.http_api import _DAYS_KEPT
+    from sparkstreaming_realtime_project_spark.streaming.sinks import (
+        idempotent_partitioned_writer,
+    )
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    before = _persistent_rdds(spark)
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    stats = f"{base}/statsByItem?itemName={quote('小米')}&t=age&date="
+    try:
+        dates = [f"2024-02-{d:02d}" for d in range(1, _DAYS_KEPT + 3)] + ["abc"]
+        for date in ["2024-01-01", "2024-01-02", *dates]:
+            assert _get(stats + date)[0] == 200  # uncached
+            assert _get(stats + date)[0] == 200  # cuts the slice
+        assert _held(server) == sorted(("wide", d) for d in dates[-_DAYS_KEPT:])
+        assert _persistent_rdds(spark) == before + _DAYS_KEPT
+        idempotent_partitioned_writer(wide_dir, ["detail_id"], "create_date")(
+            spark.createDataFrame(
+                [(6, "2024-01-02", "小米 手机 9", "M", 19, 9.0, "2024-01-02 14:00:00")],
+                wide_table.schema,
+            ).withColumnRenamed("dt", "create_date"),
+            2,
+        )
+        for _ in range(3):
+            status, body = _get(stats + "2024-01-02")
+            assert status == 200 and sum(b["value"] for b in body) == 180.0 + 9.0
+        assert _held(server) == [("wide", "2024-01-02")]
+        assert _persistent_rdds(spark) == before + 1
+        held = [s for _, days in server.slices._held.values() for s in days.values()]
+        assert all(s.users == 0 for s in held if s is not None)
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert _persistent_rdds(spark) == before
+
+
+def test_dropped_slice_outlives_its_last_user(spark, wide_table):
+    """A slice dropped while a request still uses it (a commit landed
+    mid-request) stays cached until that request is done, then is
+    unpersisted; nothing is left for Spark's cleaner."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from sparkstreaming_realtime_project_spark.http_api import _Slices
+    from sparkstreaming_realtime_project_spark.plans.serving import on_date
+
+    old, new = (wide_table.withColumn("snap", F.lit(n)) for n in (1, 2))
+    slices = _Slices()
+    assert slices.get("wide", old, "2024-01-02", on_date) == (None, "miss")
+    a, state = slices.get("wide", old, "2024-01-02", on_date)
+    assert state == "fill" and a.users == 1
+    assert a.frame.count() == 4  # the request's action fills the slice
+    assert slices.get("wide", new, "2024-01-02", on_date) == (None, "miss")  # a commit
+    assert a.retired
+    assert a.frame.storageLevel == StorageLevel.MEMORY_AND_DISK  # still in use
+    slices.done(a)
+    assert a.frame.storageLevel == StorageLevel.NONE
+    b, state = slices.get("wide", new, "2024-01-02", on_date)
+    again, state2 = slices.get("wide", new, "2024-01-02", on_date)
+    assert (state, state2) == ("fill", "hit") and again is b and b.users == 2
+    slices.release()  # the server closes with b in use
+    assert b.frame.storageLevel == StorageLevel.MEMORY_AND_DISK
+    slices.done(b)
+    slices.done(b)
+    assert b.frame.storageLevel == StorageLevel.NONE
