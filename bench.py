@@ -37,10 +37,12 @@ def main() -> None:
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     specs = [s for s in catalog.registry() if s.bench or s.name in EXTRA_BENCH]
-    # FIXED execution order (round 9): registry() rotates entries for
-    # the driver's correctness window, which silently rotated WHICH
-    # bench query ran first each round — and the first query absorbs
-    # residual session JIT/first-touch cost even past its warm pass
+    # FIXED execution order (round 9): registry() once rotated entries
+    # for the driver's correctness window (that order is now derived in
+    # __spark_entry__ and registry() is registration order), which
+    # silently rotated WHICH bench query ran first each round — and the
+    # first query absorbs residual session JIT/first-touch cost even
+    # past its warm pass
     # (the o_dedup_first_per_day +31% "regression" in the r8 driver
     # table was exactly this: the r8 rotation put it FIRST; measured
     # 0.60 s first vs 0.38-0.49 s when not first, identical plan).

@@ -49,7 +49,8 @@ derives td-1 inside the plan, so the slice does too).
   ``server_close()`` drops every slice the server holds.
 
 Logging: one INFO line per request on this module's logger (route,
-status, ms, slice hit/fill/miss); the package installs no handler.
+status, ms, slice hit/fill/miss), written after the response; the
+package installs no handler.
 
 Design notes:
 - stdlib ``http.server`` only — no web framework in the sandbox, and the
@@ -247,7 +248,7 @@ class _Handler(BaseHTTPRequestHandler):
     server: _PublisherServer
 
     def log_request(self, code="-", size="-") -> None:
-        pass  # _send logs each request once, with its timing
+        pass  # do_GET logs each request once, with its timing
 
     def log_message(self, format, *args) -> None:  # noqa: A002 (stdlib signature)
         _log.warning(format, *args)  # the stdlib's own error lines
@@ -256,10 +257,7 @@ class _Handler(BaseHTTPRequestHandler):
         body = json.dumps(
             payload, ensure_ascii=False, default=_json_default
         ).encode("utf-8")
-        _log.info(
-            "%s %d %.1f ms slice=%s", self._route, code,
-            (time.perf_counter() - self._t0) * 1000, self._slice_state,
-        )
+        self._code = code
         self.send_response(code)
         self.send_header("Content-Type", "application/json; charset=utf-8")
         self.send_header("Content-Length", str(len(body)))
@@ -283,17 +281,22 @@ class _Handler(BaseHTTPRequestHandler):
         return frame if self._held is None else self._held.frame
 
     def do_GET(self) -> None:  # noqa: N802 (stdlib handler contract)
-        self._held = None
+        t0 = time.perf_counter()
+        self._held, self._code, self._slice_state = None, "-", "-"
         try:
             self._route_request()
         finally:
             if self._held is not None:
                 self.server.slices.done(self._held)
+            # after the response is written: a log handler that raises
+            # cannot cost the client its status
+            _log.info(
+                "%s %s %.1f ms slice=%s", urlparse(self.path).path, self._code,
+                (time.perf_counter() - t0) * 1000, self._slice_state,
+            )
 
     def _route_request(self) -> None:
-        self._t0, self._slice_state = time.perf_counter(), "-"
         url = urlparse(self.path)
-        self._route = url.path
         # blanks kept: an EMPTY afterTime/afterId still selects keyset
         # mode below (required params still 400 on empty via _param).
         # Each route calls its provider and reads its params in the

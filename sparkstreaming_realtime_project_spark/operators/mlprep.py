@@ -36,13 +36,6 @@ __all__ = [
 _DEC = "decimal(18,6)"
 
 
-def _floor_round(col, n: int):
-    """House half-up rounding: floor(x*1eN + 0.5)/1eN — pins the exact-.5
-    case identically across engines (catalog header, failure mode (a))."""
-    p = float(10**n)
-    return F.floor(col * F.lit(p) + F.lit(0.5)) / F.lit(p)
-
-
 def target_encode_oof(
     df: DataFrame,
     key_col: str,

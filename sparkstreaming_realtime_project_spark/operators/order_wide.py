@@ -58,12 +58,3 @@ def order_wide(info: DataFrame, detail: DataFrame) -> DataFrame:
             "create_hour", F.date_format(F.to_timestamp("create_time"), "HH")
         )
     )
-
-
-def per_batch_full_outer(info: DataFrame, detail: DataFrame) -> DataFrame:
-    """J3 standalone: the reference's within-batch fullOuterJoin shape
-    (DwdOrderApp.scala:170-175) — exposed for parity testing; production
-    paths use the watermarked inner join which subsumes it."""
-    i = info.select(F.col("id").alias("order_id"), F.struct("*").alias("info"))
-    d = detail.select(F.col("order_id"), F.struct("*").alias("detail"))
-    return i.join(d, "order_id", "full_outer")

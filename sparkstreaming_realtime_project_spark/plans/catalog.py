@@ -3,7 +3,10 @@ testdata tables, each with a DuckDB-oracle SQL twin.
 
 This is the correctness surface the driver checks (CORRECTNESS_r{N}.json):
 for each entry, the Spark plan and the oracle SQL must produce identical
-row sets (names, schema, values). Conventions keeping the hash stable:
+row sets (names, schema, values). ``registry()`` lists entries in
+registration order; the order the driver sees is derived from the
+committed CORRECTNESS files in ``__spark_entry__``. Conventions keeping
+the hash stable:
 
 - every computed column is aliased identically on both sides;
 - timestamps leave the plan as epoch-micros (``unix_micros`` /
@@ -69,407 +72,10 @@ def _register(name, survey, sql, bench=False):
     return deco
 
 
-# Entries with a green row in the round-3 driver CORRECTNESS check
-# (CORRECTNESS_r03.json). The driver's per-round check covers only the first
-# 50 registry entries, so registry() floats entries WITHOUT a prior driver-
-# verified row (including anything newly registered) to the front of the list
-# and the already-verified ones to the back; all entries stay green under the
-# full local driver-replica (scripts/check_oracle.py) regardless of order.
-_DRIVER_VERIFIED_R3 = frozenset(
-    {
-        "q1_pricing_summary", "p_json_extract", "p_filter_route",
-        "p_explode_tokens", "p_cdc_decode", "j_dim_enrich", "j_order_wide",
-        "j_full_outer", "j_semi_anti", "j_asof_prev_order", "j_range_overlap",
-        "j_salted_skew", "w_rolling_7d", "a_dau_total", "a_dau_hourly",
-        "a_dau_compare", "a_stats_by_item_segment", "a_stats_by_item_band",
-        "a_rollup_totals", "a_percentiles", "f_text_match_highlight",
-        "f_age_from_birthday", "f_datetime_split", "q_detail_page",
-        "w_topk_per_group", "u_union_split", "o_dedup_first_per_day",
-        "o_window_tumbling", "o_window_sliding", "u_intersect_except",
-        "o_session_window", "x_dedup_exact", "x_dedup_ngram_jaccard",
-        "x_dedup_minhash_lsh", "x_simhash_signature", "x_simhash_near_pairs",
-        "x_dedup_embedding", "x_dedup_embedding_bucketed", "x_knn_bruteforce",
-        "x_knn_bucketed", "x_knn_multiprobe", "x_knn_ivf", "x_text_stats",
-        "x_lang_guess", "x_fingerprint", "x_multimodal_meta",
-        "x_multimodal_decode", "x_multimodal_resize",
-        "x_multimodal_frame_sample", "x_dedup_cluster",
-    }
-)
-
-
-# ROUND MAINTENANCE: at the start of each round, fold the previous
-# round's CORRECTNESS_r{N}.json green rows into a _DRIVER_VERIFIED_R{N}
-# set and extend registry()'s ordering chain (never-checked first, then
-# oldest-verified) so the 50-slot driver window keeps rotating over
-# entries without an external green row.
-#
-# Verified in the round-2 driver window (CORRECTNESS_r02.json) but absent
-# from r3's: they already have an external green row, so they queue BEHIND
-# entries that have never appeared in any driver check.
-_DRIVER_VERIFIED_R2 = frozenset(
-    {"x_tfidf_top_terms", "x_sample_stratified", "x_quality_filter",
-     "x_pack_greedy"}
-)
-
-
-# The round-4 CORRECTNESS artifact never landed in the repo, so these are
-# the entries that OCCUPIED the round-4 driver window (the first 50 of
-# registry() at the round-4 end commit) rather than a confirmed green set.
-# They queue at the very back (most recently exposed cohort) and every
-# one remains green under scripts/check_oracle.py at sf0.01. If
-# CORRECTNESS_r04.json surfaces with failures, pull those names out of
-# this set so they re-enter the window immediately.
-_DRIVER_WINDOW_R4 = frozenset(
-    {
-        "j_order_wide_decimal", "x_dedup_embedding_gemm", "x_knn_gemm",
-        "x_dedup_sorted_neighborhood", "x_dedup_cluster_star",
-        "x_chunk_overlap", "x_repetition_stats", "x_decontaminate",
-        "x_bm25_topk", "j_scd2_history", "x_sample_temperature",
-        "x_pii_scrub", "x_vocab_stats", "x_zipf_spectrum", "x_knn_pq",
-        "x_dedup_containment", "x_dedup_edit_distance", "x_inverted_index",
-        "x_shard_assign", "x_pagerank", "x_pagerank_dangling", "x_knn_ivfpq",
-        "x_ngram_freq", "x_boilerplate_score", "x_cms_user_counts",
-        "x_hll_distinct_users", "a_funnel_daily", "a_grouping_sets",
-        "a_pivot_daily_types", "w_event_gap_stats", "x_quantile_hist",
-        "x_text_normalize", "a_dau_cumulative", "q3_shipping_priority",
-        "x_anomaly_zscore", "x_dup_spans", "j_bloom_prune",
-        "a_retention_cohort", "x_unigram_logprob", "x_ann_recall",
-        "x_mixture_plan", "x_zorder_layout", "x_source_cap",
-        "x_corpus_pipeline", "x_split_train_val", "x_minhash_recall",
-        "x_span_scrub", "x_semantic_dedup", "x_dsir_weights",
-        "x_cross_dedup",
-    }
-)
-
-
-# Green in the round-5 driver window (CORRECTNESS_r05.json): 45 of 50.
-_DRIVER_VERIFIED_R5 = frozenset(
-    {
-        "a_cube_totals", "j_asof_forward", "p_cdc_compact",
-        "q10_returned_revenue", "q11_important_parts", "q13_order_count_dist",
-        "q14_promo_revenue_share", "q15_top_supplier", "q16_supplier_count",
-        "q17_small_qty_revenue", "q18_large_orders",
-        "q19_disjunctive_predicates", "q20_part_promotion",
-        "q21_waiting_suppliers", "q22_idle_rich_customers",
-        "q2_min_cost_supplier", "q4_priority_check", "q5_local_supplier_volume",
-        "q6_revenue_delta", "q7_nation_volume", "q8_market_share",
-        "q9_product_profit", "u_unpivot_measures", "w_rank_functions",
-        "x_cluster_balanced_sample", "x_contamination_overlap",
-        "x_dedup_keep_longest", "x_dedup_snm_multipass",
-        "x_embed_label_centroids", "x_gopher_quality_report", "x_group_sample",
-        "x_hard_negatives", "x_hll_merged_by_type", "x_key_skew_report",
-        "x_knn_randproj", "x_knn_sq8", "x_length_model_by_lang",
-        "x_pmi_collocations", "x_randproj_recall", "x_source_overlap",
-        "x_sq8_recall", "x_table_profile", "x_text_knn_e2e", "x_token_entropy",
-        "x_weighted_sample",
-    }
-)
-
-# RED in the round-5 driver window (hash-mismatch or canonicalizer error).
-# All five were driver-canon contract bugs (DuckDB HUGEINT sums landing as
-# pandas float64; one array-typed output column crashing the driver's row
-# sort), fixed this round — they re-queue at the VERY FRONT of registry()
-# so CORRECTNESS_r06 re-checks the fixes before anything else.
-_DRIVER_RED_R5 = frozenset(
-    {
-        "q12_priority_by_status", "x_corpus_datasheet",
-        "x_expectations_orders", "x_feature_hash_embed",
-        "x_ppl_bucket_sample",
-    }
-)
-
-
-# Green in the round-6 driver window (CORRECTNESS_r06.json): 50 of 50,
-# zero reds — the five _DRIVER_RED_R5 fixes confirmed on first driver
-# contact, 11 newly-registered r6 entries confirmed, and 34 of the
-# r4-exposed-unconfirmed cohort finally earned a hard green row. The 16
-# r4-cohort entries NOT in this set are the remaining driver-exposure
-# backlog and sit next in rotation priority.
-_DRIVER_VERIFIED_R6 = frozenset(
-    {
-        "a_dau_cumulative", "a_funnel_daily", "a_grouping_sets",
-        "a_pivot_daily_types", "a_session_conversion", "j_asof_nearest",
-        "j_order_wide_decimal", "j_scd2_asof", "j_scd2_history",
-        "q12_priority_by_status", "q3_shipping_priority", "w_event_gap_stats",
-        "w_value_functions", "x_bm25_topk", "x_boilerplate_score",
-        "x_chunk_overlap", "x_cms_user_counts", "x_compaction_plan",
-        "x_corpus_datasheet", "x_decontaminate", "x_dedup_cluster_star",
-        "x_dedup_containment", "x_dedup_edit_distance",
-        "x_dedup_embedding_gemm", "x_dedup_sorted_neighborhood",
-        "x_drift_report", "x_embed_covariance", "x_expectations_orders",
-        "x_feature_hash_embed", "x_hll_distinct_users", "x_inverted_index",
-        "x_knn_gemm", "x_knn_ivfpq", "x_knn_pq",
-        "x_multimodal_png_roundtrip", "x_ngram_freq", "x_ngram_novelty",
-        "x_pagerank", "x_pagerank_dangling", "x_pii_scrub",
-        "x_ppl_bucket_sample", "x_quantile_hist", "x_repetition_stats",
-        "x_sample_temperature", "x_shard_assign", "x_text_normalize",
-        "x_vocab_stats", "x_winnow_recall", "x_winnow_substring_pairs",
-        "x_zipf_spectrum",
-    }
-)
-
-# No reds in the round-6 driver window.
-_DRIVER_RED_R6 = frozenset()
-
-
-# Green in the round-7 driver window (CORRECTNESS_r07.json): 50 of 50,
-# zero reds — the 16-entry r4-cohort exposure backlog fully drained
-# (every catalog entry ever registered now has a driver-confirmed green
-# row), the 12 newly-registered r7 entries confirmed, plus stale r2/r3
-# greens re-confirmed.
-_DRIVER_VERIFIED_R7 = frozenset(
-    {
-        "a_dau_compare", "a_dau_hourly", "a_dau_total",
-        "a_retention_cohort", "a_stats_by_item_band",
-        "a_stats_by_item_segment", "j_asof_prev_order", "j_bloom_prune",
-        "j_dim_enrich", "j_full_outer", "j_order_wide", "j_range_overlap",
-        "j_salted_skew", "j_semi_anti", "p_cdc_decode", "p_explode_tokens",
-        "p_filter_route", "p_json_extract", "q1_pricing_summary",
-        "w_rolling_7d", "x_ann_recall", "x_anomaly_zscore",
-        "x_audio_resample", "x_bpe_segment", "x_cms_join_size",
-        "x_corpus_pipeline", "x_cross_dedup", "x_dsir_weights",
-        "x_dup_spans", "x_hybrid_rrf", "x_k_anonymity",
-        "x_kn_bigram_logprob", "x_knn_pca", "x_mg_topk", "x_minhash_recall",
-        "x_mixture_plan", "x_multimodal_wav_roundtrip", "x_pack_greedy",
-        "x_pca_power", "x_pca_project", "x_quality_filter",
-        "x_sample_stratified", "x_semantic_dedup", "x_source_cap",
-        "x_span_scrub", "x_split_train_val", "x_tfidf_top_terms",
-        "x_triangle_counts", "x_unigram_logprob", "x_zorder_layout",
-    }
-)
-
-# No reds in the round-7 driver window.
-_DRIVER_RED_R7 = frozenset()
-
-
-# Green in the round-8 driver window (CORRECTNESS_r08.json): 50 of 50,
-# zero reds — the 30 newly-registered r8 entries confirmed plus the
-# stalest r2/r3-cohort greens (f_*/q_*/w_*/u_*/o_* and the dedup
-# headline family) re-confirmed.
-_DRIVER_VERIFIED_R8 = frozenset(
-    {
-        "x_interval_union", "x_skyline", "x_ewma_deviation",
-        "x_markov_transitions", "x_record_linkage", "x_entity_resolution",
-        "x_changelog_merge", "x_snapshot_diff", "x_l_diversity",
-        "x_mg_topk_stream", "x_link_prediction", "x_linkage_em",
-        "x_t_closeness", "x_cluster_split", "x_shard_manifest",
-        "x_markov_surprise", "x_hll_stream", "x_benford_audit",
-        "x_cms_stream", "x_agg_store_stream", "x_anomaly_mad", "x_ks_drift",
-        "x_ecdf_normalize", "x_ivf_stream", "x_exact_quantiles",
-        "x_gap_fill", "x_attribution_last_touch", "x_rfm_segmentation",
-        "x_basket_lift", "x_cusum_shift", "a_rollup_totals", "a_percentiles",
-        "f_text_match_highlight", "f_age_from_birthday", "f_datetime_split",
-        "q_detail_page", "w_topk_per_group", "u_union_split",
-        "o_dedup_first_per_day", "o_window_tumbling", "o_window_sliding",
-        "u_intersect_except", "o_session_window", "x_dedup_exact",
-        "x_dedup_ngram_jaccard", "x_dedup_minhash_lsh",
-        "x_simhash_signature", "x_simhash_near_pairs", "x_dedup_embedding",
-        "x_dedup_embedding_bucketed",
-    }
-)
-
-# No reds in the round-8 driver window.
-_DRIVER_RED_R8 = frozenset()
-
-
-# Green in the round-9 driver window (CORRECTNESS_r09.json): 50 of 50,
-# zero reds — the 29 newly-registered r9 entries confirmed plus the
-# r2/r3-cohort knn + multimodal families and the q5/q6/q18 TPC-H
-# shapes re-confirmed on current testdata.
-_DRIVER_VERIFIED_R9 = frozenset(
-    {
-        "a_cube_totals", "q18_large_orders", "q5_local_supplier_volume",
-        "q6_revenue_delta", "u_unpivot_measures", "x_ab_power_analysis",
-        "x_ab_proportion_test", "x_abc_pareto", "x_attribution_linear",
-        "x_autocorrelation", "x_blocking_quality", "x_changepoint_single",
-        "x_churn_risk", "x_cohort_ltv", "x_dedup_cluster", "x_ewma_keyed",
-        "x_fingerprint", "x_fk_orphans", "x_functional_deps",
-        "x_funnel_ordered", "x_gini_concentration", "x_hard_negatives",
-        "x_hll_merged_by_type", "x_knn_bruteforce", "x_knn_bucketed",
-        "x_knn_ivf", "x_knn_multiprobe", "x_lang_guess",
-        "x_length_model_by_lang", "x_matryoshka_recall", "x_minhash_stream",
-        "x_multimodal_decode", "x_multimodal_frame_sample",
-        "x_multimodal_meta", "x_multimodal_resize", "x_nb_calibration",
-        "x_nb_pr_curve", "x_nb_quality", "x_nb_quality_eval",
-        "x_new_vs_returning", "x_path_topk", "x_pk_profile", "x_psi_stream",
-        "x_quantiles_by_group", "x_seasonality_weekday", "x_stickiness",
-        "x_text_stats", "x_weighted_sample", "x_welch_ttest",
-        "x_winsorized_mean",
-    }
-)
-
-# No reds in the round-9 driver window.
-_DRIVER_RED_R9 = frozenset()
-
-
-# Green in the round-10 driver window (CORRECTNESS_r10.json): 50 of 50,
-# zero reds — the 41 newly-registered r10 entries confirmed plus
-# w_rank_functions / x_dedup_snm_multipass / x_group_sample /
-# x_key_skew_report / x_pmi_collocations / x_source_overlap /
-# x_table_profile / x_token_entropy / x_text_knn_e2e re-confirmed.
-_DRIVER_VERIFIED_R10 = frozenset(
-    {
-        "a_dau_hourly_zerofill", "f_text_match_cjk", "j_order_wide_full",
-        "j_order_wide_outer", "p_merge_into", "q_detail_snippet",
-        "w_rank_functions", "x_aqp_estimate", "x_assortativity",
-        "x_bfs_hops", "x_cate_by_stratum", "x_chi2_independence",
-        "x_conformal_interval", "x_decayed_engagement",
-        "x_dedup_snm_multipass", "x_degree_powerlaw", "x_did",
-        "x_domain_caps", "x_feature_pit", "x_funnel_windowed",
-        "x_group_sample", "x_impute_hierarchical", "x_ivm_group_agg",
-        "x_kaplan_meier", "x_kaplan_meier_by_segment", "x_key_skew_report",
-        "x_knn_filtered", "x_knn_filtered_recall", "x_label_propagation",
-        "x_labeler_agreement", "x_mutual_info", "x_pmi_collocations",
-        "x_pseudonymize", "x_readability", "x_seasonal_anomaly",
-        "x_seasonal_naive_backtest", "x_session_bounce",
-        "x_significant_terms", "x_source_overlap", "x_stratified_ate",
-        "x_stutter_trim", "x_table_profile", "x_target_encode_oof",
-        "x_text_knn_e2e", "x_time_split_embargo", "x_token_entropy",
-        "x_trend_ols", "x_url_canonical_dedup", "x_weighted_quantiles",
-        "x_woe_iv",
-    }
-)
-
-# No reds in the round-10 driver window.
-_DRIVER_RED_R10 = frozenset()
-
-
-# Green in the round-11 driver window (CORRECTNESS_r11.json): 50 of 50,
-# zero reds — the 4 newly-registered r11 entries (suffix span family,
-# keyset pagination, distributed BPE trainer) confirmed plus the stalest
-# r5-era cohort (TPC-H q2/q4/q7-q22 shapes, knn quantization family,
-# dedup verify family) re-confirmed.
-_DRIVER_VERIFIED_R11 = frozenset(
-    {
-        "j_asof_forward", "j_order_wide_decimal", "j_scd2_history",
-        "p_cdc_compact", "q10_returned_revenue", "q11_important_parts",
-        "q13_order_count_dist", "q14_promo_revenue_share",
-        "q15_top_supplier", "q16_supplier_count",
-        "q17_small_qty_revenue", "q19_disjunctive_predicates",
-        "q20_part_promotion", "q21_waiting_suppliers",
-        "q22_idle_rich_customers", "q2_min_cost_supplier",
-        "q4_priority_check", "q7_nation_volume", "q8_market_share",
-        "q9_product_profit", "q_detail_keyset", "x_bm25_topk",
-        "x_bpe_train", "x_chunk_overlap", "x_cluster_balanced_sample",
-        "x_contamination_overlap", "x_decontaminate",
-        "x_dedup_cluster_star", "x_dedup_containment",
-        "x_dedup_edit_distance", "x_dedup_embedding_gemm",
-        "x_dedup_keep_longest", "x_dedup_sorted_neighborhood",
-        "x_embed_label_centroids", "x_gopher_quality_report",
-        "x_inverted_index", "x_knn_gemm", "x_knn_pq", "x_knn_randproj",
-        "x_knn_sq8", "x_pii_scrub", "x_randproj_recall",
-        "x_repetition_stats", "x_sample_temperature", "x_shard_assign",
-        "x_sq8_recall", "x_suffix_recall", "x_suffix_span_pairs",
-        "x_vocab_stats", "x_zipf_spectrum",
-    }
-)
-
-# No reds in the round-11 driver window.
-_DRIVER_RED_R11 = frozenset()
-
-
-# Green in the round-12 driver window (CORRECTNESS_r12.json): 50 of 50,
-# zero reds — the 4 newly-registered r12 entries (streaming suffix twin
-# + driver-exposed scrubs) confirmed plus the 31-entry r6 cohort and the
-# front of the r7 cohort re-confirmed.
-_DRIVER_VERIFIED_R12 = frozenset(
-    {
-        "a_dau_cumulative", "a_dau_hourly", "a_dau_total", "a_funnel_daily",
-        "a_grouping_sets", "a_pivot_daily_types", "a_session_conversion",
-        "j_asof_nearest", "j_asof_prev_order", "j_dim_enrich",
-        "j_full_outer", "j_order_wide", "j_range_overlap", "j_salted_skew",
-        "j_scd2_asof", "j_semi_anti", "p_cdc_decode", "p_explode_tokens",
-        "p_filter_route", "p_json_extract", "q12_priority_by_status",
-        "q1_pricing_summary", "q3_shipping_priority", "w_event_gap_stats",
-        "w_rolling_7d", "w_value_functions", "x_boilerplate_score",
-        "x_cms_user_counts", "x_compaction_plan", "x_corpus_datasheet",
-        "x_drift_report", "x_embed_covariance", "x_expectations_orders",
-        "x_feature_hash_embed", "x_hll_distinct_users", "x_knn_ivfpq",
-        "x_multimodal_png_roundtrip", "x_ngram_freq", "x_ngram_novelty",
-        "x_pagerank", "x_pagerank_dangling", "x_ppl_bucket_sample",
-        "x_quantile_hist", "x_suffix_scrub", "x_suffix_self_scrub",
-        "x_suffix_stream", "x_suffix_stream_scrub", "x_text_normalize",
-        "x_winnow_recall", "x_winnow_substring_pairs",
-    }
-)
-
-# No reds in the round-12 driver window.
-_DRIVER_RED_R12 = frozenset()
-
-
 def registry() -> list[QuerySpec]:
-    """Driver-window priority: RED beats never-checked beats green.
-
-    1. driver-RED entries (none after r6 — CORRECTNESS_r06 was 50/50
-       green) — re-verify first when any exist;
-    2. never-driver-checked entries (registration order — oldest waiting
-       first, so every entry lands in the driver's 50-slot CORRECTNESS
-       window within ceil(N/50) rounds);
-    3. confirmed-green cohorts by exposure staleness — r2 (oldest green
-       row), r3, r5, r6, r7, r8, r9, r10, r11 (most recent). A name's
-       LATEST green row decides its cohort (r11 re-greens of
-       earlier-cohort entries live in the r11 cohort). The r4 exposure
-       backlog drained in r7 — every registered entry now has a
-       driver-confirmed green row.
-
-    Round 13 continues the rotation (VERDICT r12 #1): ≤5 new entries,
-    so the driver's 50-slot window lands on the 35-entry r7 cohort
-    (last externally confirmed in round 7) plus the front of the r8
-    cohort.
-
-    All entries stay green under the full local driver-replica
-    (scripts/check_oracle.py) regardless of order."""
-    seen = (
-        _DRIVER_VERIFIED_R3 | _DRIVER_VERIFIED_R2 | _DRIVER_WINDOW_R4
-        | _DRIVER_VERIFIED_R5 | _DRIVER_RED_R5 | _DRIVER_VERIFIED_R6
-        | _DRIVER_VERIFIED_R7 | _DRIVER_VERIFIED_R8 | _DRIVER_VERIFIED_R9
-        | _DRIVER_VERIFIED_R10 | _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12
-    )
-    r6n = (
-        _DRIVER_VERIFIED_R6 | _DRIVER_VERIFIED_R7 | _DRIVER_VERIFIED_R8
-        | _DRIVER_VERIFIED_R9 | _DRIVER_VERIFIED_R10 | _DRIVER_VERIFIED_R11
-        | _DRIVER_VERIFIED_R12
-    )
-    r7n = (
-        _DRIVER_VERIFIED_R7 | _DRIVER_VERIFIED_R8 | _DRIVER_VERIFIED_R9
-        | _DRIVER_VERIFIED_R10 | _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12
-    )
-    r8n = (
-        _DRIVER_VERIFIED_R8 | _DRIVER_VERIFIED_R9 | _DRIVER_VERIFIED_R10
-        | _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12
-    )
-    r9n = (
-        _DRIVER_VERIFIED_R9 | _DRIVER_VERIFIED_R10 | _DRIVER_VERIFIED_R11
-        | _DRIVER_VERIFIED_R12
-    )
-    r10n = _DRIVER_VERIFIED_R10 | _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12
-    r11n = _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12
-    r12n = _DRIVER_VERIFIED_R12
-    red = [q for q in _REGISTRY if q.name in _DRIVER_RED_R12]
-    never = [q for q in _REGISTRY if q.name not in seen]
-    r4 = [q for q in _REGISTRY
-          if q.name in _DRIVER_WINDOW_R4 and q.name not in r6n]
-    r2 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R2 and q.name not in r6n]
-    r3 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R3 and q.name not in r6n]
-    r5 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R5 and q.name not in r6n]
-    r6 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R6 and q.name not in r7n]
-    r7 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R7 and q.name not in r8n]
-    r8 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R8 and q.name not in r9n]
-    r9 = [q for q in _REGISTRY
-          if q.name in _DRIVER_VERIFIED_R9 and q.name not in r10n]
-    r10 = [q for q in _REGISTRY
-           if q.name in _DRIVER_VERIFIED_R10 and q.name not in r11n]
-    r11 = [q for q in _REGISTRY
-           if q.name in _DRIVER_VERIFIED_R11 and q.name not in r12n]
-    r12 = [q for q in _REGISTRY if q.name in r12n]
-    return (red + never + r4 + r2 + r3 + r5 + r6 + r7 + r8 + r9 + r10
-            + r11 + r12)
+    """Every entry in registration order. The driver's window order is
+    derived from the committed CORRECTNESS files in ``__spark_entry__``."""
+    return list(_REGISTRY)
 
 
 def _t(spark, sf_dir, name):
@@ -10649,11 +10255,6 @@ def x_minhash_stream(spark, sf_dir):
     )
 
 
-# Round 13 (rotation round; registered with x_suffix_stream_compacted,
-# x_suffix_stream_leveled and x_minhash_stream_leveled below — 4 new
-# registrations total, inside the <=5 cap).
-
-
 @_register(
     "x_minhash_stream_compacted",
     "at-rest store compaction equivalence for the MinHash twin "
@@ -14302,10 +13903,8 @@ def x_kaplan_meier_by_segment(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round 11 (rotation round: these 4 are the ONLY new registrations, per
-# VERDICT r10 #1 — the rest of the driver window re-verifies the stalest
-# green cohort). Suffix-grade pairwise substring dedup, keyset
-# pagination, distributed BPE training.
+# Suffix-grade pairwise substring dedup, keyset pagination, distributed
+# BPE training.
 # ---------------------------------------------------------------------------
 
 
@@ -14539,12 +14138,9 @@ def x_bpe_train(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round 12 (rotation round: these 4 are the ONLY new registrations —
-# inside VERDICT r11 #1's <=5 cap; the driver window otherwise
-# re-verifies the r6/r7 green cohorts). The suffix family's apply
-# steps (cross-doc and within-doc scrubs, promised for this round in
-# their r11 docstrings), its streaming sequential-ingest twin
-# (VERDICT r11 #3), and the scrub-on-ingest composition of the two.
+# The suffix family's apply steps (cross-doc and within-doc scrubs), its
+# streaming sequential-ingest twin, and the scrub-on-ingest composition
+# of the two.
 # ---------------------------------------------------------------------------
 
 
@@ -14867,13 +14463,6 @@ def x_suffix_stream_scrub(spark, sf_dir):
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("n_removed").cast("long").alias("n_removed"),
     )
-
-
-# Round 13 (rotation round: 4 new registrations — this one,
-# x_suffix_stream_leveled above, and x_minhash_stream_compacted +
-# x_minhash_stream_leveled beside the minhash twin — inside VERDICT
-# r12 #1's <=5 cap while the driver window re-confirms the r7 cohort;
-# #2 asks for exactly this entry).
 
 
 @_register(

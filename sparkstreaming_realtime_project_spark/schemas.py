@@ -1,5 +1,5 @@
 """Schema system: the reference's compile-time case-class schemas as
-StructTypes (SURVEY.md §1.1-1.2), plus the driver testdata table schemas.
+StructTypes (SURVEY.md §1.1-1.2), plus the driver testdata table names.
 
 Reference citations:
 - log envelope: sparkStreaming-realtime/.../app/OdsBaseLogApp.scala:111-201
@@ -19,13 +19,11 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 
@@ -171,37 +169,6 @@ DIM_BASE_PROVINCE_SCHEMA = _struct(
 )
 
 # --- driver testdata tables (TESTDATA.md) ---
-
-EVENTS_SCHEMA = _struct(
-    [
-        ("event_id", LongType()),
-        ("ts", TimestampType()),
-        ("user_id", LongType()),
-        ("event_type", StringType()),
-        ("value", DoubleType()),
-        ("props", StringType()),
-    ]
-)
-
-EVENT_PROPS_SCHEMA = _struct([("k", LongType())])
-
-DOCUMENTS_SCHEMA = _struct(
-    [
-        ("doc_id", LongType()),
-        ("text", StringType()),
-        ("lang", StringType()),
-        ("source", StringType()),
-        ("n_chars", LongType()),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = _struct(
-    [
-        ("vec_id", LongType()),
-        ("embedding", ArrayType(FloatType())),
-        ("label", IntegerType()),
-    ]
-)
 
 TESTDATA_TABLES = (
     "region",

@@ -14,8 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Resolved-relation cache, keyed by (applicationId, sf_dir, table): each
 # spark.read.parquet call runs a driver-side footer/schema job (~0.1-0.2 s
 # locally; a full file-listing round-trip against object storage at

@@ -5,7 +5,6 @@ import pytest
 from sparkstreaming_realtime_project_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_CORRECT = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
@@ -18,8 +17,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
-
-
-@pytest.fixture(scope="session")
-def sf_correct() -> str:
-    return SF_CORRECT

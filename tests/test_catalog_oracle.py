@@ -38,80 +38,58 @@ def test_rows_only_runs(spark, sf_dir, spec):
     assert df.count() >= 0
 
 
-def test_registry_rotation_order():
-    """The driver's CORRECTNESS window covers only the first 50 registry
-    entries — registry() must order by priority: driver-RED (fixed,
-    awaiting re-verification) beats never-checked beats confirmed-green
-    (stalest exposure first). Otherwise red fixes go unverified or
-    entries starve outside the window forever. (The r4
-    exposed-unconfirmed tier drained to zero in round 7 — every
-    registered entry now has a confirmed green row.)"""
-    from sparkstreaming_realtime_project_spark.plans.catalog import (
-        _DRIVER_RED_R12,
-        _DRIVER_VERIFIED_R2,
-        _DRIVER_VERIFIED_R3,
-        _DRIVER_VERIFIED_R5,
-        _DRIVER_VERIFIED_R6,
-        _DRIVER_VERIFIED_R7,
-        _DRIVER_VERIFIED_R8,
-        _DRIVER_VERIFIED_R9,
-        _DRIVER_VERIFIED_R10,
-        _DRIVER_VERIFIED_R11,
-        _DRIVER_VERIFIED_R12,
-        _DRIVER_WINDOW_R4,
-        registry,
-    )
+_GREEN = {"rows_match": True, "hash_match": True, "err": None}
+_RED = {"rows_match": True, "hash_match": False, "err": None}
 
-    names = [s.name for s in registry()]
-    green = (
-        _DRIVER_VERIFIED_R2 | _DRIVER_VERIFIED_R3 | _DRIVER_VERIFIED_R5
-        | _DRIVER_VERIFIED_R6 | _DRIVER_VERIFIED_R7 | _DRIVER_VERIFIED_R8
-        | _DRIVER_VERIFIED_R9 | _DRIVER_VERIFIED_R10
-        | _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12 | _DRIVER_WINDOW_R4
-    )
 
-    def tier(n):
-        if n in _DRIVER_RED_R12:
-            return 0  # red beats...
-        if n not in green:
-            return 1  # ...never-checked beats...
-        return 2  # ...confirmed green
+def test_window_order_rule():
+    """Newest row decides: red, then no row, then green by oldest
+    newest-green round; registration order within a group. Rounds arrive
+    unsorted (r10 before r9) and round 4 is missing."""
+    from __spark_entry__ import window_order
 
-    tiers = [tier(n) for n in names]
-    assert tiers == sorted(tiers), (
-        "registry() rotation out of priority order: "
-        f"{[n for n, t, ts in zip(names, tiers, sorted(tiers)) if t != ts][:5]}"
-    )
-    # confirmed-green back-fill is ordered stalest-exposure-first; a
-    # name's LATEST green row decides its cohort
-    latest = {}
-    for rank, cohort_set in enumerate(
-        [
-            _DRIVER_VERIFIED_R2,
-            _DRIVER_VERIFIED_R3,
-            _DRIVER_WINDOW_R4,
-            _DRIVER_VERIFIED_R5,
-            _DRIVER_VERIFIED_R6,
-            _DRIVER_VERIFIED_R7,
-            _DRIVER_VERIFIED_R8,
-            _DRIVER_VERIFIED_R9,
-            _DRIVER_VERIFIED_R10,
-            _DRIVER_VERIFIED_R11,
-            _DRIVER_VERIFIED_R12,
-        ]
-    ):
-        for n in cohort_set:
-            latest[n] = max(latest.get(n, -1), rank)
-    # r4 was exposure (not confirmation); its unconfirmed members all
-    # went green in r7, so rank them with their r7 standing
-    green_tail = [n for n in names if tier(n) == 2]
-    ranks = [latest[n] for n in green_tail]
-    # the r4-exposed cohort members re-greened in r6/r7 take the later
-    # rank via max(); ordering must be non-decreasing
-    assert ranks == sorted(ranks), (
-        f"stale-first back-fill violated near: "
-        f"{[n for n, r, rs in zip(green_tail, ranks, sorted(ranks)) if r != rs][:5]}"
-    )
+    rows_only = {"rows_match": True, "hash_match": None, "err": None}
+    rounds = {
+        10: {"fixed": _GREEN, "broke": {**_GREEN, "err": "boom"}, "late": _GREEN},
+        9: {"fixed": _RED, "broke": _GREEN, "late": _GREEN, "mid": rows_only},
+        5: {"old": _GREEN, "late": _RED},
+        3: {"oldest": _GREEN, "old": _RED, "mid": _GREEN},
+    }
+    names = ["late", "fresh", "fixed", "oldest", "broke", "old", "mid", "new"]
+    assert window_order(names, rounds) == [
+        "broke",  # green in r9, red in r10
+        "fresh", "new",  # no row
+        "oldest", "old", "mid",  # newest green r3, r5 (after a red), r9
+        "late", "fixed",  # newest green r10 (fixed: after a red in r9)
+    ]
+    assert window_order(["b", "a"], {1: {"a": _GREEN}, 2: {"a": _RED}}) == ["a", "b"]
+
+
+def test_driver_window_skips_the_newest_round():
+    """On the committed files the driver's first 50 names share none with
+    the newest round, and its greens are the stalest greens."""
+    import __spark_entry__ as E
+
+    rounds = E._committed_rounds()
+    assert sorted(rounds)[:4] == [1, 2, 3, 5]
+    first50 = list(E.queries())[:50]
+    assert not set(first50) & set(rounds[max(rounds)])
+    newest = {n: r for r in sorted(rounds) for n in rounds[r]}
+    green = {n: r for n, r in newest.items() if E._green(rounds[r][n])}
+    shown = sorted(green[n] for n in first50 if n in green)
+    assert shown == sorted(green.values())[: len(shown)]
+
+
+def test_driver_contract(spark):
+    """queries() names every entry once; oracle_sql() holds exactly the
+    entries with SQL, in the same order; entry() builds a plan."""
+    import __spark_entry__ as E
+
+    names = list(E.queries())
+    assert sorted(names) == sorted(s.name for s in catalog.registry())
+    with_sql = {s.name for s in SPECS}
+    assert list(E.oracle_sql()) == [n for n in names if n in with_sql]
+    assert E.entry(spark).collect()
 
 
 def _flat_duck_types(con, sql):

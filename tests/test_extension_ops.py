@@ -4,6 +4,7 @@ exact baseline."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -628,6 +629,41 @@ def test_sql_literal_seeds_hash_the_same_bytes_on_both_branches(spark):
                     assert {tuple(r) for r in got.collect()} == cells, (
                         raw, seed, key,
                     )
+    finally:
+        spark.conf.set(conf, old)
+
+
+_LITERAL = st.lists(  # quotes, backslashes, escape-looking pairs, any UTF-8 text
+    st.sampled_from(["'", "\\", '"', "\\'", "\\n", "\\u0041"])
+    | st.characters(exclude_categories=("Cs",)),
+    max_size=8,
+).map("".join)
+
+
+@given(seed=_LITERAL, salt=_LITERAL)
+@settings(max_examples=6, deadline=None)  # 4 Spark jobs per example
+def test_sql_literal_seeds_hash_the_callers_bytes(spark, seed, salt):
+    """Property form of the example above, over any seed and salt."""
+    import hashlib
+
+    from sparkstreaming_realtime_project_spark.operators import sketches as sk
+
+    def md5(text: str) -> str:
+        return hashlib.md5(text.encode()).hexdigest()
+
+    df = spark.createDataFrame([(["x", "小米"], "k1")], "toks array<string>, k string")
+    cells = [(j, int(md5(f"{salt}{j}:k1")[:8], 16) % 64, 1) for j in range(4)]
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf)
+    try:
+        for raw in ("false", "true"):
+            spark.conf.set(conf, raw)
+            toks = df.select(dd.token_md5s("toks", seed), dd.token_md5s(F.col("toks"), seed))
+            assert list(toks.first()) == [[md5(seed + t) for t in ("x", "小米")]] * 2, raw
+            both = sk.cms_sketch(df, "k", d=4, w=64, salt=salt).unionByName(
+                sk.cms_sketch(df.withColumnRenamed("k", "k-1"), "k-1", d=4, w=64, salt=salt)
+            )
+            assert sorted(map(tuple, both.collect())) == sorted(cells * 2), raw
     finally:
         spark.conf.set(conf, old)
 

@@ -172,6 +172,30 @@ def test_http_errors(http_base):
     assert status == 404
 
 
+def test_raising_log_handler_keeps_the_status(http_base):
+    """The request line is logged after the response is written, so a
+    logging handler that raises on every record cannot turn a request
+    into a dropped connection."""
+    import logging
+
+    class Raising(logging.Handler):
+        def emit(self, record):
+            raise RuntimeError("log sink down")
+
+    log = logging.getLogger("sparkstreaming_realtime_project_spark.http_api")
+    handler, level = Raising(), log.level
+    log.addHandler(handler)
+    log.setLevel(logging.INFO)
+    try:
+        status, out = _get(f"{http_base}/dauRealtime?td=2024-01-02")
+        assert status == 200 and out["dauTotal"] == 3
+        status, out = _get(f"{http_base}/dauRealtime")
+        assert status == 400 and "td" in out["error"]
+    finally:
+        log.removeHandler(handler)
+        log.setLevel(level)
+
+
 def _serve_once(dau, wide, path: str):
     from sparkstreaming_realtime_project_spark.http_api import (
         publisher_server,
@@ -822,11 +846,15 @@ def test_request_log_line(spark, dau_table, wide_table, caplog):
     """One INFO line per request: route, status, ms and the slice state."""
     import logging
     import re
+    import time
 
     from sparkstreaming_realtime_project_spark.http_api import (
         publisher_server,
         serve_in_background,
     )
+
+    def lines():
+        return [r.getMessage() for r in caplog.records if r.name.endswith("http_api")]
 
     wide = wide_table.withColumn("n", wide_table.detail_id)  # a frame no other test sliced
     with caplog.at_level(logging.INFO, logger="sparkstreaming_realtime_project_spark.http_api"):
@@ -834,15 +862,19 @@ def test_request_log_line(spark, dau_table, wide_table, caplog):
         serve_in_background(server)
         host, port = server.server_address
         try:
-            for p in ["/detailByItem?date=2024-01-02&itemName=x"] * 3 + ["/nope", "/dauRealtime"]:
+            paths = ["/detailByItem?date=2024-01-02&itemName=x"] * 3 + ["/nope", "/dauRealtime"]
+            for i, p in enumerate(paths, 1):
                 _get(f"http://{host}:{port}{p}")
+                # the line is logged just after the response is written
+                deadline = time.monotonic() + 10
+                while len(lines()) < i and time.monotonic() < deadline:
+                    time.sleep(0.01)
         finally:
             server.shutdown()
             server.server_close()
-    lines = [r.getMessage() for r in caplog.records if r.name.endswith("http_api")]
-    assert len(lines) == 5, lines
+    assert len(lines()) == 5, lines()
     pat = r"^(/\w+) (\d+) \d+\.\d ms slice=(\S+)$"
-    assert [re.match(pat, x).groups() for x in lines] == [
+    assert [re.match(pat, x).groups() for x in lines()] == [
         ("/detailByItem", "200", "miss"),
         ("/detailByItem", "200", "fill"),
         ("/detailByItem", "200", "hit"),

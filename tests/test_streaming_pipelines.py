@@ -47,6 +47,15 @@ from sparkstreaming_realtime_project_spark.streaming.sinks import (
 from . import streaming_fixtures as fx
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _release_dim_caches(spark):
+    """The pipelines persist their dim sides until the caller releases
+    them (operators/enrich.py); this module's queries are the callers, so
+    the cache leaves with the module instead of pinning later modules."""
+    yield
+    spark.catalog.clearCache()
+
+
 @pytest.fixture
 def cli(spark):
     """The launcher's ``main``. It calls ``get_spark``, which on the shared
@@ -90,7 +99,9 @@ def dau_run(spark, tmp_path_factory):
         as_of=as_of(),
     )
     q = run_to_completion(writer)
-    return q, read_sink(spark, out).cache()
+    sink = read_sink(spark, out).cache()
+    yield q, sink
+    sink.unpersist()
 
 
 def test_dau_dedup_and_filtering(dau_run):
@@ -162,10 +173,13 @@ def split_out(spark, tmp_path_factory):
         text_stream(spark, str(tmp / "in"), max_files_per_trigger=1), out, ckpt
     )
     run_to_completion(writer)
-    return {
+    sinks = {
         name: read_sink(spark, os.path.join(out, name)).cache()
         for name in ("error", "page", "display", "action", "start", "corrupt")
     }
+    yield sinks
+    for sink in sinks.values():
+        sink.unpersist()
 
 
 def test_split_err_exclusive_routing(split_out):
@@ -325,7 +339,9 @@ def order_sink(spark, tmp_path_factory):
         as_of=as_of(),
     )
     run_to_completion(writer, timeout=180)
-    return read_sink(spark, out).cache()
+    sink = read_sink(spark, out).cache()
+    yield sink
+    sink.unpersist()
 
 
 def test_order_wide_cross_batch_join(order_sink):
