@@ -218,7 +218,12 @@ def order_wide_pipeline(
 
     Both sides carry event-time from create_time; state for unmatched rows
     lives in the state store until the watermark passes (the Redis
-    SETEX/EXPIRE 24 h buffers, :205-248). Join condition bounds detail
+    SETEX/EXPIRE 24 h buffers, :205-248). Under the session's join state
+    format 3 (``session.py``) each shuffle partition keeps ONE RocksDB
+    store holding both sides' key-to-row-count and row buffers as
+    virtual column families; a checkpoint started under format 2 keeps
+    its four stores per partition (one per buffer) for its lifetime, as
+    the offset log pins the format. Join condition bounds detail
     time within [info_time - lateness, info_time + lateness] so Spark can
     evict state (required for stream-stream joins). Output rows are
     OrderWide-shaped (J5) keyed detail_id, partitioned by create_date —

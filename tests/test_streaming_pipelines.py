@@ -59,16 +59,14 @@ def _release_dim_caches(spark):
 @pytest.fixture
 def cli(spark):
     """The launcher's ``main``. It calls ``get_spark``, which on the shared
-    test session renames the app and resizes ``spark.sql.shuffle.partitions``
-    to the task slots; the fixture puts both back, since later plan-shape
-    tests (bucketed store joins) depend on the session's partition count."""
+    test session re-applies the package's fixed confs (the values the
+    session started with) and renames the app, but derives nothing: the
+    partition count stays. The fixture puts the app name back."""
     from sparkstreaming_realtime_project_spark.__main__ import main
 
-    keys = ("spark.app.name", "spark.sql.shuffle.partitions")
-    before = {k: spark.conf.get(k) for k in keys}
+    before = spark.conf.get("spark.app.name")
     yield main
-    for k, v in before.items():
-        spark.conf.set(k, v)
+    spark.conf.set("spark.app.name", before)
 
 
 def as_of():
@@ -320,7 +318,7 @@ def test_kafka_frame_shape(spark):
 
 
 @pytest.fixture(scope="module")
-def order_sink(spark, tmp_path_factory):
+def order_run(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("orderwide")
     fx.write_order_fixture(str(tmp / "info"), str(tmp / "detail"))
     out, ckpt = str(tmp / "out"), str(tmp / "ckpt")
@@ -338,10 +336,15 @@ def order_sink(spark, tmp_path_factory):
         dim_province=dim_province,
         as_of=as_of(),
     )
-    run_to_completion(writer, timeout=180)
+    q = run_to_completion(writer, timeout=180)
     sink = read_sink(spark, out).cache()
-    yield sink
+    yield q, sink
     sink.unpersist()
+
+
+@pytest.fixture
+def order_sink(order_run):
+    return order_run[1]
 
 
 def test_order_wide_cross_batch_join(order_sink):
@@ -892,22 +895,168 @@ def test_checkpoint_keeps_its_partition_count_across_restart(spark, tmp_path):
     }
 
 
-def test_get_spark_sizes_shuffle_partitions_to_task_slots(spark):
-    """No ``shuffle_partitions``: one partition per task slot. An explicit
-    argument or an ``extra_conf`` entry overrides it. ``get_spark``
-    returns the running session, so the test restores its value."""
-    from sparkstreaming_realtime_project_spark.session import get_spark
+def test_fresh_join_has_one_state_store_per_shuffle_partition(spark, order_run):
+    """A fresh stream-stream join keeps its four buffers in ONE store per
+    partition (join state format 3), not four."""
+    q, _ = order_run
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _store_instances(q) == {partitions}
+
+
+def test_join_checkpoint_keeps_its_state_format_across_restart(spark, tmp_path):
+    """A checkpoint started under join state format 2 keeps its four
+    stores per partition when restarted under the session's format 3,
+    and the buffered rows they hold: run 2's detail joins run 1's info,
+    and run 2's info joins run 1's detail."""
+    from sparkstreaming_realtime_project_spark.session import JOIN_STATE_FORMAT
+
+    t0 = "2024-01-01 10:00:00"
+    info_dir, detail_dir = tmp_path / "info", tmp_path / "detail"
+    fx._write_batches(str(info_dir), [[fx.info_row(1, t0)]])
+    fx._write_batches(str(detail_dir), [[fx.detail_row(90, 2, t0)]])
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run_once():
+        writer = order_wide_pipeline(
+            file_stream(spark, str(info_dir), ORDER_INFO_SCHEMA),
+            file_stream(spark, str(detail_dir), ORDER_DETAIL_SCHEMA),
+            out,
+            ckpt,
+        )
+        return run_to_completion(writer, timeout=180)
 
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    before = {k: spark.conf.get(k) for k in (key, JOIN_STATE_FORMAT)}
+    assert before[JOIN_STATE_FORMAT] == "3"
     try:
-        s = get_spark(app_name="tests")
-        assert s.conf.get(key) == str(s.sparkContext.defaultParallelism)
-        assert get_spark(app_name="tests", shuffle_partitions=3).conf.get(key) == "3"
-        s = get_spark(app_name="tests", extra_conf={key: "5"})
-        assert s.conf.get(key) == "5"
+        spark.conf.set(key, "2")
+        spark.conf.set(JOIN_STATE_FORMAT, "2")
+        assert _store_instances(run_once()) == {4 * 2}
+        spark.conf.set(JOIN_STATE_FORMAT, before[JOIN_STATE_FORMAT])
+        (info_dir / "batch-001.json").write_text(fx.info_row(2, t0) + "\n")
+        (detail_dir / "batch-001.json").write_text(fx.detail_row(91, 1, t0) + "\n")
+        assert _store_instances(run_once()) == {4 * 2}
     finally:
-        spark.conf.set(key, before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+    got = {(r["order_id"], r["detail_id"]) for r in read_sink(spark, out).collect()}
+    assert got == {(1, 91), (2, 90)}
+
+
+def test_started_defaults_pick_commits_by_default_filesystem():
+    """Rename commits only on a local default filesystem; join state
+    format 3 only with the RocksDB provider; partitions = task slots."""
+    from sparkstreaming_realtime_project_spark import session as S
+
+    local = S.started_defaults(S.ROCKSDB, "file:///", 4)
+    assert local == {
+        S.SHUFFLE_PARTITIONS: "4",
+        S.JOIN_STATE_FORMAT: "3",
+        S.CHECKPOINT_MANAGER: S.RENAME_COMMITS,
+    }
+    for fs in ("hdfs://nn:8020", "s3a://bucket/", "abfs://c@a.dfs.core.windows.net"):
+        assert S.started_defaults(S.ROCKSDB, fs, 4) == {
+            S.SHUFFLE_PARTITIONS: "4", S.JOIN_STATE_FORMAT: "3",
+        }
+    hdfs_backed = (
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    )
+    assert S.started_defaults(hdfs_backed, "file:///", 2) == {
+        S.SHUFFLE_PARTITIONS: "2", S.CHECKPOINT_MANAGER: S.RENAME_COMMITS,
+    }
+
+
+def test_get_spark_on_a_running_session_derives_nothing(spark):
+    """Called on a running session, ``get_spark`` keeps the partition
+    count, join state format and checkpoint manager the session holds;
+    an explicit argument or an ``extra_conf`` entry still applies."""
+    from sparkstreaming_realtime_project_spark import session as S
+
+    held = {
+        S.SHUFFLE_PARTITIONS: "7",
+        S.JOIN_STATE_FORMAT: "2",
+        S.CHECKPOINT_MANAGER: "org.apache.spark.sql.execution.streaming."
+        "checkpointing.FileContextBasedCheckpointFileManager",
+    }
+    before = {k: spark.conf.get(k) for k in held}
+    try:
+        for k, v in held.items():
+            spark.conf.set(k, v)
+        s = S.get_spark(app_name="tests")
+        assert {k: s.conf.get(k) for k in held} == held
+        s = S.get_spark(app_name="tests", shuffle_partitions=3)
+        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "3"
+        s = S.get_spark(
+            app_name="tests", shuffle_partitions=3,
+            extra_conf={S.SHUFFLE_PARTITIONS: "5"},
+        )
+        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "5"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def _run_in_new_process(script: str, *args: str) -> None:
+    """Run ``script`` in a fresh interpreter (its own JVM, so the suite's
+    session lives on) and expect it to print ``ok``."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (root, os.environ.get("PYTHONPATH")) if p
+        ),
+    }
+    res = subprocess.run(
+        [sys.executable, "-c", script, *args],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0 and res.stdout.strip().endswith("ok"), res.stderr[-3000:]
+
+
+def test_get_spark_sizes_shuffle_partitions_to_task_slots():
+    """A session ``get_spark`` starts gets one partition per task slot,
+    join state format 3 and rename commits (the default filesystem is
+    local); an explicit argument or ``extra_conf`` entry wins over each."""
+    import textwrap
+
+    _run_in_new_process(textwrap.dedent(
+        """
+        from sparkstreaming_realtime_project_spark import session as S
+
+        small = {"spark.driver.memory": "512m"}
+        s = S.get_spark(app_name="t", master="local[2]", extra_conf=small)
+        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "2"
+        assert s.conf.get(S.JOIN_STATE_FORMAT) == "3"
+        assert s.conf.get(S.CHECKPOINT_MANAGER) == S.RENAME_COMMITS
+        s.stop()
+        s = S.get_spark(
+            app_name="t", master="local[2]", shuffle_partitions=3, extra_conf=small
+        )
+        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "3"
+        s.stop()
+        mine = (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileContextBasedCheckpointFileManager"
+        )
+        explicit = {
+            S.SHUFFLE_PARTITIONS: "5", S.JOIN_STATE_FORMAT: "2",
+            S.CHECKPOINT_MANAGER: mine,
+        }
+        s = S.get_spark(
+            app_name="t", master="local[2]", shuffle_partitions=3,
+            extra_conf={**small, **explicit},
+        )
+        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "5"
+        assert s.conf.get(S.JOIN_STATE_FORMAT) == "2"
+        assert s.conf.get(S.CHECKPOINT_MANAGER) == mine
+        s.stop()
+        print("ok")
+        """
+    ))
 
 
 def test_quota_per_key_caps_across_batches(spark, tmp_path):
@@ -1531,8 +1680,6 @@ def test_read_sink_snapshot_under_concurrent_readers(spark, tmp_path):
 def test_read_sink_new_context_builds_a_new_snapshot(tmp_path):
     """A snapshot kept under one SparkContext is never returned under
     the next one (a separate process, so the suite's session lives on)."""
-    import subprocess
-    import sys
     import textwrap
 
     script = textwrap.dedent(
@@ -1567,18 +1714,7 @@ def test_read_sink_new_context_builds_a_new_snapshot(tmp_path):
         print("ok")
         """
     )
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {
-        **os.environ,
-        "PYTHONPATH": os.pathsep.join(
-            p for p in (root, os.environ.get("PYTHONPATH")) if p
-        ),
-    }
-    res = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path / "sink")],
-        cwd=root, env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert res.returncode == 0 and res.stdout.strip().endswith("ok"), res.stderr[-3000:]
+    _run_in_new_process(script, str(tmp_path / "sink"))
 
 
 def test_crawl_frontier_dedup_on_canonical_url(spark, tmp_path):
