@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sparkstreaming_realtime_project_spark.operators.distributed import (
+from sparkstreaming_realtime_project_spark.operators.caching import (
     release_persisted,
 )
 from sparkstreaming_realtime_project_spark.plans import catalog
@@ -136,7 +136,7 @@ def main() -> None:
             runs.append(time.perf_counter() - start)
             spark.catalog.clearCache()
         timings[spec.name] = round(sorted(runs)[len(runs) // 2], 3)
-        release_persisted()  # drop prefix_sums handles with the cache
+        release_persisted()  # drop the builders' cuts with the cache
         probes.append(_calib())
     calib_after = probes[-1]
 

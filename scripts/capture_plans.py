@@ -12,7 +12,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from sparkstreaming_realtime_project_spark.operators.distributed import (
+from sparkstreaming_realtime_project_spark.operators.caching import (
     release_persisted,
 )
 from sparkstreaming_realtime_project_spark.plans import catalog

@@ -14,7 +14,7 @@ import time
 
 sys.path.insert(0, ".")
 
-from sparkstreaming_realtime_project_spark.operators.distributed import (
+from sparkstreaming_realtime_project_spark.operators.caching import (
     release_persisted,
 )
 from sparkstreaming_realtime_project_spark.plans import catalog
@@ -42,10 +42,10 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 - report, keep going
             status, msg = False, f"EXC {type(e).__name__}: {e}"
         dt = time.time() - t0
-        # Several entries return persisted frames (caller-unpersists
-        # contract); drop them so cached blocks don't accumulate across
-        # the 90+ entries of a full run. release_persisted also empties
-        # the prefix_sums handle registry (the handles pin plan objects
+        # Builders leave their cuts cached for the consuming action;
+        # drop them so cached blocks don't accumulate across the 290
+        # entries of a full run. release_persisted also empties the
+        # registry of cuts taken outside a scope (it pins plan objects
         # even after clearCache).
         spark.catalog.clearCache()
         release_persisted()

@@ -33,6 +33,10 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F
 
 from sparkstreaming_realtime_project_spark.operators import dedup as dd
+from sparkstreaming_realtime_project_spark.operators.caching import (
+    cached,
+    release_persisted,
+)
 from sparkstreaming_realtime_project_spark.operators import graph as gr
 from sparkstreaming_realtime_project_spark.operators import mlprep as ml
 from sparkstreaming_realtime_project_spark.operators import similarity as sim
@@ -174,22 +178,20 @@ def main() -> None:
                 threshold=0.8, max_bucket=50,
             )
             row["minhash_pairs"] = p.count()
-            p.unpersist()
+            release_persisted()
 
         def run_ngram():
             p = dd.ngram_jaccard_dedup_pairs(
                 docs, "text", "doc_id", n=3, threshold=0.8, max_df=50
             )
             row["ngram_pairs"] = p.count()
-            p.unpersist()
+            release_persisted()
 
         def run_suffix():
             p = dd.suffix_span_pairs(
                 docs, "text", "doc_id", k=8, min_len=16, max_df=64,
-                materialize=True,
             )
             row["suffix_spans"] = p.count()
-            p.unpersist()
 
         if want("minhash"):
             row["minhash_s"] = timed(run_minhash)
@@ -198,10 +200,8 @@ def main() -> None:
         def run_selfspans():
             p = dd.suffix_self_spans(
                 docs, "text", "doc_id", k=8, min_len=16, max_df=64,
-                materialize=True,
             )
             row["self_spans"] = p.count()
-            p.unpersist()
 
         if want("suffix"):
             row["suffix_s"] = timed(run_suffix)
@@ -214,21 +214,22 @@ def main() -> None:
         wp = {}
 
         def run_winnow():
-            p = dd.winnow_substring_pairs(
+            # cut: the triangle stage reads the same pair graph
+            p = cached(dd.winnow_substring_pairs(
                 docs, "text", "doc_id", n=3, w=4, max_df=50
-            )
+            ))
             row["winnow_pairs"] = p.count()
             wp["pairs"] = p
 
         def run_triangles():
             t = gr.triangle_counts(wp["pairs"], "doc_a", "doc_b")
             row["tri_nodes"] = t.count()
-            wp["pairs"].unpersist()
+            release_persisted()
 
         def run_kn():
-            out = ts.kn_bigram_logprob(docs, "text", "doc_id", materialize=True)
+            out = ts.kn_bigram_logprob(docs, "text", "doc_id")
             row["kn_docs"] = out.count()
-            out.unpersist()
+            release_persisted()
 
         # triangle consumes winnow's pair graph: selecting it
         # auto-runs the winnow stage (its timing is recorded only when
@@ -240,7 +241,7 @@ def main() -> None:
             if want("triangle"):
                 row["triangle_s"] = timed(run_triangles)
             else:
-                wp["pairs"].unpersist()
+                release_persisted()
         if want("kn_bigram"):
             row["kn_bigram_s"] = timed(run_kn)
 

@@ -192,22 +192,21 @@ def main(argv: list[str] | None = None) -> None:
             return
         if args.name not in specs:
             sys.exit(f"unknown query {args.name!r} (try --list)")
+        from .operators.caching import cache_scope
+
         spark = get_spark(app_name=f"query-{args.name}")
         spark.sparkContext.setLogLevel("WARN")
-        df = specs[args.name].spark(spark, args.sf_dir)
-        if args.explain:
-            df.explain("formatted")
-        if args.out:
-            df.write.mode("overwrite").parquet(args.out)
-            print(f"wrote {args.out}")
-        else:
-            df.show(args.limit, truncate=False)
-        # release the prefix_sums handle registry after the consuming
-        # action — the discipline callers looping entries must follow
-        # (one-shot here, but the CLI is the copy-paste template)
-        from .operators.distributed import release_persisted
-
-        release_persisted()
+        # the scope owns the caches the plan's builders cut and releases
+        # them after the consuming action
+        with cache_scope():
+            df = specs[args.name].spark(spark, args.sf_dir)
+            if args.explain:
+                df.explain("formatted")
+            if args.out:
+                df.write.mode("overwrite").parquet(args.out)
+                print(f"wrote {args.out}")
+            else:
+                df.show(args.limit, truncate=False)
         return
 
     spark = get_spark(app_name=f"app-{args.app}")

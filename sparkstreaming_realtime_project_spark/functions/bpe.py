@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.caching import cache_scope, cached
+
 
 def _merge_pass(tokens: list[str], pair: tuple[str, str], glue: str) -> list[str]:
     out: list[str] = []
@@ -73,10 +75,11 @@ def train_merges_distributed(
     (count DESC, left ASC, right ASC — `train_merges`' exact
     tie-break; the collect is model-sized, the centroid precedent);
     (3) one narrow greedy-left fold applying the winning merge
-    everywhere. State is persisted per round and the previous round
-    released, so round r's plan is O(1) deep, not r folds deep (the
-    pagerank localCheckpoint discipline — an unpersisted chain re-runs
-    every earlier fold inside round r's explode).
+    everywhere. Each round's state is a ``cached()`` cut that the next
+    round's argmax collect fills, so round r reads round r-1's cache
+    instead of re-running every earlier fold inside its explode; the
+    training's ``cache_scope`` releases the rounds' states when it
+    ends.
 
     At 100 TB: rounds are aggregates over (pair -> count) — shuffle
     keys are token pairs with partial aggregation, never all-pairs,
@@ -90,11 +93,11 @@ def train_merges_distributed(
     early and the output has fewer than ``n_merges`` rows.
     """
     spark = df.sparkSession
-    state = df.select(F.col(tok_col).alias("s")).filter(F.size("s") > 1)
-    state = state.persist()
-    state.count()
     merges: list[tuple[int, str, str, int]] = []
-    try:
+    with cache_scope():
+        state = cached(
+            df.select(F.col(tok_col).alias("s")).filter(F.size("s") > 1)
+        )
         for rank in range(1, n_merges + 1):
             pairs = state.select(
                 F.explode(
@@ -122,18 +125,11 @@ def train_merges_distributed(
             # pairs ever again, and size 1 would turn the pair-window
             # sequence(1, size-1) DESCENDING (Spark infers step -1),
             # indexing past the array
-            nxt = (
+            state = cached(
                 state.select(
                     apply_merges_col(F.col("s"), [(left, right)], glue).alias("s")
-                )
-                .filter(F.size("s") > 1)
-                .persist()
+                ).filter(F.size("s") > 1)
             )
-            nxt.count()
-            state.unpersist()
-            state = nxt
-    finally:
-        state.unpersist()
     return spark.createDataFrame(
         merges,
         "merge_rank int, merge_left string, merge_right string, pair_count bigint",

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .caching import cached
 from .textstats import STOPWORDS, _count_in
 from .dedup import spread, tokens_expr
 
@@ -531,7 +532,6 @@ def dsir_weights(
     id_col: str,
     target_pred: Column,
     n_buckets: int = 256,
-    materialize: bool = False,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every raw
@@ -547,10 +547,8 @@ def dsir_weights(
 
     Scale shape: the token explode feeds (a) the bucket-count aggregate
     — n_buckets result rows, model-sized — and (b) the per-doc score
-    join; ``materialize=True`` caches it so the dominant pass runs once
-    (released before returning, the returned frame persisted —
-    caller unpersists); the bucket LM table and its two scalar totals ride a
-    broadcast, so the only data-sized shuffle is the per-doc groupBy.
+    join, so it is a ``cached()`` cut and the dominant pass runs once;
+    the bucket LM table and its two scalar totals ride a broadcast, so the only data-sized shuffle is the per-doc groupBy.
     The bucket hash is the md5 first byte (not xxhash) so an external
     SQL engine can replay it; at 100 TB the feature space would move to
     ~2^20 buckets of token n-grams — same plan, bigger broadcast.
@@ -565,7 +563,7 @@ def dsir_weights(
     toks = spread(base, "doc_id").select(
         "doc_id", "in_target", tokens_expr("__text").alias("t")
     )
-    ex = toks.select(
+    ex = cached(toks.select(
         "doc_id",
         "in_target",
         F.explode("t").alias("term"),
@@ -573,9 +571,7 @@ def dsir_weights(
         "b",
         F.conv(F.substring(F.md5("term"), 1, 2), 16, 10).cast("int")
         % n_buckets,
-    )
-    if materialize:
-        ex = ex.persist()
+    ))
     counts = ex.groupBy("b").agg(
         F.count(F.lit(1)).alias("cr"),
         F.sum("in_target").alias("ct"),
@@ -601,18 +597,13 @@ def dsir_weights(
             F.round(F.sum("w"), 4).alias("dsir_logratio"),
         )
     )
-    out = scored.select(
+    return scored.select(
         "doc_id",
         "n_tokens",
         "dsir_logratio",
         "in_target",
         (F.col("dsir_logratio") > 0).cast("int").alias("selected"),
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        ex.unpersist()
-    return out
 
 
 def score_bucket_sample(
@@ -708,7 +699,6 @@ def contamination_overlap(
     id_col: str = "doc_id",
     n: int = 8,
     threshold: float = 0.1,
-    materialize: bool = False,
 ) -> DataFrame:
     """Exact benchmark-contamination report: for every training document
     (rows where ``bench_pred`` is false), the fraction of its word
@@ -735,10 +725,9 @@ def contamination_overlap(
     from .dedup import with_shingles
 
     # the shingle projection feeds three consumers (benchmark gram set,
-    # per-doc sizes, the hits explode) — materialize=True caches it so
-    # the corpus tokenizes once, not three times (same contract as
-    # with_shingles: the session/bench clears the cache when done)
-    sh = with_shingles(docs, text_col, id_col, n, materialize=materialize)
+    # per-doc sizes, the hits explode): one cut, so the corpus
+    # tokenizes once, not three times
+    sh = cached(with_shingles(docs, text_col, id_col, n))
     flags = docs.select(
         F.col(id_col).alias("id"), bench_pred.alias("__is_bench")
     )
@@ -781,7 +770,6 @@ def ngram_novelty(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    materialize: bool = False,
 ) -> DataFrame:
     """Ingestion-order novelty curve: per document, the fraction of its
     distinct word n-grams not present in ANY lower-id document — the
@@ -797,10 +785,9 @@ def ngram_novelty(
     is that of exact dedup, not O(docs x prefix)."""
     from .dedup import with_shingles
 
-    # the shingle frame feeds both sides of the owner self-join —
-    # materialize=True caches it so the corpus tokenizes once (session/
-    # bench clears the cache when done, the with_shingles contract)
-    sh = with_shingles(docs, text_col, id_col, n, materialize=materialize)
+    # the shingle frame feeds both sides of the owner self-join
+    # (through the gram explode): one cut, so the corpus tokenizes once
+    sh = cached(with_shingles(docs, text_col, id_col, n))
     grams = sh.select("id", F.explode("shingles").alias("g"))
     owners = grams.groupBy("g").agg(F.min("id").alias("owner"))
     novel = (

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .caching import cached
 from .sqltext import plain_ident, plain_literal
 
 _HEX = "0123456789abcdef"
@@ -242,17 +243,14 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def with_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, materialize: bool = False
+    df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
-    """Project (id, shingles). ``materialize=True`` caches the projection:
-    the shingle array is consumed 3x downstream (signature, candidate
-    sides a/b, verify) and re-tokenizing the corpus each time costs more
-    than one cached pass.
-
-    persist (NOT localCheckpoint): lineage is kept, so an evicted or lost
-    block is recomputed instead of silently/irrecoverably gone — the
-    difference between a correct answer under memory pressure or executor
-    loss and a wrong one. Partitioning is BY id (hash), not round-robin:
+    """Project (id, shingles), lazily: a consumer that reads the shingle
+    array more than once (signature, candidate sides a/b, verify) cuts
+    it with ``cached()`` — re-tokenizing the corpus per consumer costs
+    more than one cached pass. A cache (NOT localCheckpoint) keeps the
+    lineage, so an evicted or lost block is recomputed instead of
+    silently gone. Partitioning is BY id (hash), not round-robin:
     deterministic row placement, and downstream per-id operations reuse
     the partitioning.
 
@@ -269,11 +267,7 @@ def with_shingles(
         "id",
     )
     toks = src.select("id", tokens_expr("__text").alias("t"))
-    out = toks.select("id", shingles_from_tokens("t", n).alias("shingles"))
-    if materialize:
-        out = out.persist()
-        out.count()  # eager materialization
-    return out
+    return toks.select("id", shingles_from_tokens("t", n).alias("shingles"))
 
 
 def _ppjoin_prefix(
@@ -379,12 +373,11 @@ def jaccard_pairs(
         # Capped candidates, then exact full-array verify below — the
         # intersection must NOT be counted on the capped table (that
         # underestimates jaccard for any pair sharing high-df shingles).
-        # NOTE: built UNPERSISTED here, so the self-join computes the
-        # prefix twice when the input sits on a cache (AQE exchange
-        # reuse does not cross InMemoryRelation subtrees — see
-        # OPTIMIZATION_r14.md); ngram_jaccard_dedup_pairs persists
-        # the prefix between the two sides instead of calling this
-        # branch.
+        # NOTE: built uncut here, so the self-join computes the prefix
+        # twice when the input sits on a cache (AQE exchange reuse does
+        # not cross InMemoryRelation subtrees — see OPTIMIZATION_r14.md);
+        # ngram_jaccard_dedup_pairs cuts the prefix between the two
+        # sides instead of calling this branch.
         prefix = _ppjoin_prefix(shingled, threshold, max_df)
         candidates = _ppjoin_candidates(prefix, threshold)
     if candidates is None:
@@ -441,46 +434,25 @@ def ngram_jaccard_dedup_pairs(
     threshold: float = 0.8,
     max_df: int | None = None,
 ) -> DataFrame:
-    """text -> shingles -> df-capped candidates -> exact-Jaccard pairs,
-    with cache hygiene: the shingle projection (consumed by the prefix
-    pipeline and the verify join) is cached for the computation and
-    released before returning — the (small) verified pair list is
-    materialized eagerly so repeated calls don't accumulate cached
-    shingle blocks. The RETURNED frame is persisted — unpersist it when
-    done.
+    """text -> shingles -> df-capped candidates -> exact-Jaccard pairs.
+    The shingle projection is a ``cached()`` cut: the prefix pipeline
+    and the verify join both read it (uncapped, both sides of the
+    count-based intersection do).
 
-    The capped path persists the PPJOIN PREFIX table once (r14): AQE
+    The capped path also cuts the PPJOIN PREFIX table (r14): AQE
     exchange reuse does not cross InMemoryRelation subtrees (measured,
-    OPTIMIZATION_r14.md), so building the prefix lazily over the
-    shingle cache executed the whole explode -> df -> rank chain TWICE
-    — once per self-join side, one of them as a 40 MiB broadcast hash
-    build of the exploded table (the r13 plan). With the prefix cached,
-    its single-subtree fill job also fills the shingle cache en route
-    (the r13 standalone with_shingles count job is gone — there is no
-    second cold subtree left to race it), and the self-join reads the
-    small capped prefix twice for free. Measured at sf0.1: 1.95 ->
-    1.49 s, pairs identical (OPTIMIZATION_r14.md, ngram14)."""
+    OPTIMIZATION_r14.md), so building the prefix uncut over the shingle
+    cache executed the whole explode -> df -> rank chain TWICE — once
+    per self-join side, one of them as a 40 MiB broadcast hash build of
+    the exploded table (the r13 plan). With the prefix cut, the
+    self-join reads the small capped prefix twice. Measured at sf0.1:
+    1.95 -> 1.49 s, pairs identical (OPTIMIZATION_r14.md, ngram14)."""
+    shingled = cached(with_shingles(df, text_col, id_col, n))
     if max_df is None:
-        # uncapped exact path: no prefix table exists; the count-based
-        # intersection consumes the shingle table on both join sides,
-        # so the eager cache fill stays (lazy, the two sides race to
-        # fill it and duplicate the tokenize+shingle pass).
-        shingled = with_shingles(df, text_col, id_col, n, materialize=True)
-        pairs = jaccard_pairs(shingled, threshold).persist()
-        pairs.count()
-        shingled.unpersist()
-        return pairs
-    shingled = with_shingles(
-        df, text_col, id_col, n, materialize=False
-    ).persist()
-    prefix = _ppjoin_prefix(shingled, threshold, max_df).persist()
-    prefix.count()  # one job fills the shingle AND prefix caches
+        return jaccard_pairs(shingled, threshold)
+    prefix = cached(_ppjoin_prefix(shingled, threshold, max_df))
     cands = _ppjoin_candidates(prefix, threshold)
-    pairs = jaccard_pairs(shingled, threshold, candidates=cands).persist()
-    pairs.count()
-    prefix.unpersist()
-    shingled.unpersist()
-    return pairs
+    return jaccard_pairs(shingled, threshold, candidates=cands)
 
 
 def minhash_signature(
@@ -664,46 +636,28 @@ def minhash_dedup_pairs(
     hashing to the ~3x-cheaper JVM hash for production runs where no
     DuckDB oracle needs to replay the pipeline (see minhash_signature).
 
-    The SIGNATURE frame (shingles + h0..h{k-1}) is the one materialized
-    cut: it feeds the band self-join (both sides), the bucket-size cap,
-    and the shingle arrays for the verify join — caching upstream of the
-    signature would recompute the 16 seeded hash passes once per
-    consumer. The signature cache is released before returning: the
-    (small) verified pair list is materialized eagerly, so repeated
-    library calls don't accumulate cached signature blocks in the
-    session. The RETURNED frame is persisted — unpersist it when done."""
-    shingled = with_shingles(df, text_col, id_col, n, materialize=False)
-    # already spread by id inside with_shingles; persist the signature
-    # cut LAZILY (r13): the eager count() paid a full standalone
-    # signature pass (scan + 4 seeded md5 passes + cache write) before
-    # the candidate job even started. Lazy, the first stage that
-    # touches the signature fills the cache en route and the remaining
-    # consumers (self-join far side, bucket cap, verify arrays) read
-    # it; measured 2.64 -> 1.94 s at sf0.1 on its own, identical pairs.
-    # The final pairs.count() below still materializes everything
-    # before sig.unpersist(), so the unpersist never races the cache.
-    sig = minhash_signature(shingled, k, hash_fn=hash_fn).persist()
-    # persist the capped band table once (r14): AQE exchange reuse does
-    # not cross InMemoryRelation subtrees (OPTIMIZATION_r14.md), so
-    # the band self-join over the sig cache executed the explode ->
-    # exchange(band,key) -> count-window chain TWICE, one side as a
-    # 9 MiB broadcast hash build. The banded.count() fill job is one
-    # subtree, so it fills the sig cache en route (no race), and the
-    # self-join then reads the small capped band table twice for free.
-    # Measured at sf0.1: 1.55 -> 1.43 s, pairs identical
-    # (OPTIMIZATION_r14.md, minhash14).
-    banded = _capped_by_count(
-        band_keys(sig, k, bands, hash_fn=hash_fn), ["band", "key"], max_bucket
-    ).persist()
-    banded.count()
-    pairs = jaccard_pairs(
+    The SIGNATURE frame (shingles + h0..h{k-1}) is a ``cached()`` cut:
+    it feeds the band table and the shingle arrays for the verify join —
+    caching upstream of the signature would recompute the 16 seeded hash
+    passes once per consumer. The capped band table is cut too (r14):
+    AQE exchange reuse does not cross InMemoryRelation subtrees
+    (OPTIMIZATION_r14.md), so the band self-join over the signature
+    cache executed the explode -> exchange(band,key) -> count-window
+    chain TWICE, one side as a 9 MiB broadcast hash build. Cut, the
+    self-join reads the small capped band table twice. Measured at
+    sf0.1: 1.55 -> 1.43 s, pairs identical (OPTIMIZATION_r14.md,
+    minhash14)."""
+    shingled = with_shingles(df, text_col, id_col, n)
+    sig = cached(minhash_signature(shingled, k, hash_fn=hash_fn))
+    banded = cached(
+        _capped_by_count(
+            band_keys(sig, k, bands, hash_fn=hash_fn), ["band", "key"], max_bucket
+        )
+    )
+    return jaccard_pairs(
         sig.select("id", "shingles"), threshold,
         candidates=_band_candidates(banded),
-    ).persist()
-    pairs.count()
-    banded.unpersist()
-    sig.unpersist()
-    return pairs
+    )
 
 
 def token_md5s(tok_col: str | Column, seed: str = "") -> Column:
@@ -911,14 +865,13 @@ def connected_components(
     ``pairs``: (doc_a, doc_b) columns. ``nodes``: one column of ids.
     The RETURNED frame reads the final round's locally-checkpointed
     labels; checkpoint blocks are released by the ContextCleaner once
-    the frame is garbage-collected (caller unpersist is a harmless
-    no-op).
+    the frame is garbage-collected. The edge list every round reads is
+    a ``cached()`` cut.
     """
     id_col = nodes.columns[0]
-    edges = (
+    edges = cached(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .persist()
     )
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("lbl")
@@ -944,7 +897,6 @@ def connected_components(
         labels = new_full.select("node", "lbl")
         if n_changed == 0:
             break
-    edges.unpersist()
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("lbl").alias("cluster_id"),
@@ -983,19 +935,11 @@ def sorted_neighborhood_pairs(
     """
     # ONE tokenization pass: the cached token projection feeds both the
     # sort keys and the shingle sets (calling with_shingles separately
-    # would re-tokenize the corpus — the exact cost its persist exists
-    # to avoid).
-    toks = _snm_tokens(docs, text_col, id_col).persist()
-    sh = toks.select("id", shingles_from_tokens("t", n).alias("shingles")).persist()
+    # would re-tokenize the corpus); the shingles feed both verify sides.
+    toks = cached(_snm_tokens(docs, text_col, id_col))
+    sh = cached(toks.select("id", shingles_from_tokens("t", n).alias("shingles")))
     cand = _snm_candidates(_snm_head_key(toks), window)
-    # cache hygiene as in ngram_jaccard_dedup_pairs: the small verified
-    # pair list is materialized eagerly, the shingle cache released.
-    # The RETURNED frame is persisted — unpersist it when done.
-    out = jaccard_pairs(sh, threshold, candidates=cand).persist()
-    out.count()
-    sh.unpersist()
-    toks.unpersist()
-    return out
+    return jaccard_pairs(sh, threshold, candidates=cand)
 
 
 def _snm_tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1064,20 +1008,15 @@ def sorted_neighborhood_pairs_multipass(
     rotation recovers near-dups whose divergence happens to sit inside
     pass 1's key — the standard mitigation for SNM's key-locality
     recall hole, at exactly 2x the candidate-generation cost and ONE
-    shared verify. Returns (doc_a, doc_b, jaccard), persisted (caller
-    unpersists)."""
-    toks = _snm_tokens(docs, text_col, id_col).persist()
-    sh = toks.select("id", shingles_from_tokens("t", n).alias("shingles")).persist()
+    shared verify. Returns (doc_a, doc_b, jaccard)."""
+    toks = cached(_snm_tokens(docs, text_col, id_col))
+    sh = cached(toks.select("id", shingles_from_tokens("t", n).alias("shingles")))
     cand = (
         _snm_candidates(_snm_head_key(toks), window)
         .union(_snm_candidates(_snm_tail_key(toks), window))
         .distinct()
     )
-    out = jaccard_pairs(sh, threshold, candidates=cand).persist()
-    out.count()
-    sh.unpersist()
-    toks.unpersist()
-    return out
+    return jaccard_pairs(sh, threshold, candidates=cand)
 
 
 def connected_components_star(
@@ -1315,13 +1254,10 @@ def containment_dedup_pairs(
     max_df: int | None = None,
 ) -> DataFrame:
     """text -> shingles -> df-capped candidates -> exact containment
-    pairs, with the same cache hygiene as ngram_jaccard_dedup_pairs.
-    The RETURNED frame is persisted — unpersist it when done."""
-    shingled = with_shingles(df, text_col, id_col, n, materialize=True)
-    pairs = containment_pairs(shingled, threshold, max_df=max_df).persist()
-    pairs.count()
-    shingled.unpersist()
-    return pairs
+    pairs; the shingle projection is cut as in
+    ngram_jaccard_dedup_pairs."""
+    shingled = cached(with_shingles(df, text_col, id_col, n))
+    return containment_pairs(shingled, threshold, max_df=max_df)
 
 
 def edit_distance_pairs(
@@ -1446,7 +1382,6 @@ def duplicate_spans(
     id_col: str,
     k: int = 8,
     min_docs: int = 2,
-    materialize: bool = False,
 ) -> DataFrame:
     """Exact repeated-substring span detection: for every document, the
     maximal token spans whose every k-token window also appears in at
@@ -1475,10 +1410,9 @@ def duplicate_spans(
     At 100 TB the gram explode is the dominant cost (x ~n_tokens rows),
     the same footprint as the shingle path MinHash already pays; the
     span-merge window is per-doc-bounded. The explode feeds BOTH the
-    duplicated-gram aggregate and the hits join — ``materialize=True``
-    caches it so the dominant stage runs once (tfidf_top_terms pattern:
-    cache released before returning, the RETURNED frame persisted,
-    caller unpersists). Output: one row per maximal duplicated span
+    duplicated-gram aggregate and the hits join, so it is a ``cached()``
+    cut and the dominant stage runs once. Output: one row per maximal
+    duplicated span
     (doc_id, span_start, span_end, n_grams), token positions 1-based
     inclusive.
     """
@@ -1487,7 +1421,7 @@ def duplicate_spans(
     toks = spread(df.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("toks")
     )
-    grams = (
+    grams = cached(
         toks.filter(F.size("toks") >= k)
         .select(
             "doc_id",
@@ -1500,8 +1434,6 @@ def duplicate_spans(
         )
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "g")
     )
-    if materialize:
-        grams = grams.persist()
     dup = (
         grams.groupBy("g")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -1523,7 +1455,7 @@ def duplicate_spans(
             F.sum("new_span").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
     )
-    out = (
+    return (
         islands.groupBy("doc_id", "span_id")
         .agg(
             F.min("pos").alias("span_start"),
@@ -1532,11 +1464,6 @@ def duplicate_spans(
         )
         .select("doc_id", "span_start", "span_end", "n_grams")
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        grams.unpersist()
-    return out
 
 
 def scrub_repeated_spans(
@@ -1545,7 +1472,6 @@ def scrub_repeated_spans(
     id_col: str,
     k: int = 8,
     min_docs: int = 2,
-    materialize: bool = False,
 ) -> DataFrame:
     """Cross-document span REMOVAL: the apply step of duplicate_spans.
     Every maximal duplicated span is kept in exactly one document — the
@@ -1574,13 +1500,13 @@ def scrub_repeated_spans(
     original byte text. Docs with < k tokens or no duplicated windows
     pass through with n_removed = 0.
 
-    ``materialize=True`` caches the gram explode (consumed by the
-    aggregate and the removable join) and releases it before returning.
+    The gram explode is a ``cached()`` cut: the ownership aggregate and
+    the removable join both read it.
     """
     toks = spread(df.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("doc_id"), tokens_expr(text_col).alias("toks")
     )
-    grams = (
+    grams = cached(
         toks.filter(F.size("toks") >= k)
         .select(
             "doc_id",
@@ -1593,8 +1519,6 @@ def scrub_repeated_spans(
         )
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "g")
     )
-    if materialize:
-        grams = grams.persist()
     own = (
         grams.groupBy("g")
         .agg(
@@ -1642,7 +1566,7 @@ def scrub_repeated_spans(
     kept = F.filter(
         F.col("toks"), lambda x, i: ~F.array_contains(covered, i + F.lit(1))
     )
-    out = (
+    return (
         toks.join(cov, "doc_id", "left")
         .select("doc_id", "toks", kept.alias("kept"))
         .select(
@@ -1652,11 +1576,6 @@ def scrub_repeated_spans(
             (F.size("toks") - F.size("kept")).alias("n_removed"),
         )
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        grams.unpersist()
-    return out
 
 
 def suffix_anchors(
@@ -1763,7 +1682,6 @@ def suffix_span_pairs(
     k: int = 8,
     min_len: int = 16,
     max_df: int | None = 64,
-    materialize: bool = False,
 ) -> DataFrame:
     """PAIRWISE maximal common token substrings — the suffix-array-grade
     signal of Lee et al. 2021 ("Deduplicating Training Data Makes
@@ -1807,15 +1725,13 @@ def suffix_span_pairs(
     per maximal shared span: (doc_a, doc_b, a_start, a_end, b_start,
     b_end, span_len), token positions 1-based inclusive.
 
-    ``materialize=True`` caches the gram explode and releases it before
-    returning. Since the r13 count-window df-cap the anchor plan has a
+    No cut: since the r13 count-window df-cap the anchor plan has a
     single consumer subtree (the window; the self-join's far side is a
-    ReusedExchange of it), so leave it False unless a CALLER composes
-    extra consumers on top — the persist then only buys a cache write.
+    ReusedExchange of it), so a cache would only buy a cache write
+    (measured 2.56 -> 1.26 s at sf0.1 together with the window cap,
+    spans identical).
     """
     grams = suffix_anchors(df, text_col, id_col, k)
-    if materialize:
-        grams = grams.persist()
     # df-cap as a COUNT WINDOW over the join key, not aggregate-then-
     # join-back (r13): the "allowed grams" table is vocabulary-sized
     # (the cap drops only hot grams), so the old groupBy(g) -> join
@@ -1838,12 +1754,7 @@ def suffix_span_pairs(
         "b.pos AS pb",
         "a.pos - b.pos AS diag",
     )
-    out = suffix_runs_to_spans(matches, k, min_len, ["doc_a", "doc_b"])
-    if materialize:
-        out = out.persist()
-        out.count()
-        grams.unpersist()
-    return out
+    return suffix_runs_to_spans(matches, k, min_len, ["doc_a", "doc_b"])
 
 
 def suffix_self_spans(
@@ -1853,7 +1764,6 @@ def suffix_self_spans(
     k: int = 8,
     min_len: int = 16,
     max_df: int | None = 64,
-    materialize: bool = False,
 ) -> DataFrame:
     """WITHIN-document maximal repeated substrings — the self-repeat
     half of Lee et al. substring dedup that `suffix_span_pairs`
@@ -1877,8 +1787,6 @@ def suffix_self_spans(
     x_suffix_self_scrub's span stage (round 12).
     """
     grams = suffix_anchors(df, text_col, id_col, k)
-    if materialize:
-        grams = grams.persist()
     # window-count df-cap, same rewrite as suffix_span_pairs (r13):
     # one hash(g) exchange instead of aggregate + join-back.
     anchors = _capped_by_count(grams, ["g"], max_df)
@@ -1896,15 +1804,10 @@ def suffix_self_spans(
     )
     # dist IS the diagonal here, so (doc_id, dist, diag) partitions
     # identically to (doc_id, dist) and dist stays an output column
-    out = suffix_runs_to_spans(
+    return suffix_runs_to_spans(
         matches.withColumn("diag", F.col("dist")), k, min_len,
         ["doc_id", "dist"],
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        grams.unpersist()
-    return out
 
 
 def suffix_scrub(
@@ -1914,7 +1817,6 @@ def suffix_scrub(
     k: int = 8,
     min_len: int = 16,
     max_df: int | None = 64,
-    materialize: bool = False,
 ) -> DataFrame:
     """One-copy-survives REMOVAL at suffix-span precision — the apply
     step of `suffix_span_pairs`, the Lee et al. 2021 policy on
@@ -1936,27 +1838,16 @@ def suffix_scrub(
     Output (doc_id, clean_text, n_tokens, n_removed) — same contract as
     scrub_repeated_spans; clean_text is the normalized token stream.
     Registered as x_suffix_scrub (round 12) with a DuckDB coverage-
-    rebuild twin.
-
-    ``materialize`` passes through to the pair stage: True persists
-    both the pair table (released here once the scrub result is
-    counted) and the result; False keeps the whole chain lazy — the
-    pair plan is consumed exactly once (the coverage explode), so
-    nothing is paid twice, and no forced persist is thrown away.
+    rebuild twin. No cut: the pair plan is consumed exactly once (the
+    coverage explode).
     """
     pairs = suffix_span_pairs(
-        df, text_col, id_col, k=k, min_len=min_len, max_df=max_df,
-        materialize=materialize,
+        df, text_col, id_col, k=k, min_len=min_len, max_df=max_df
     )
     removable = pairs.select(
         F.col("doc_b").alias("doc_id"), "b_start", "b_end"
     )
-    out = scrub_coverage(df, text_col, id_col, removable)
-    if materialize:
-        out = out.persist()
-        out.count()
-        pairs.unpersist()
-    return out
+    return scrub_coverage(df, text_col, id_col, removable)
 
 
 def scrub_coverage(
@@ -2009,7 +1900,6 @@ def suffix_self_scrub(
     k: int = 8,
     min_len: int = 16,
     max_df: int | None = 64,
-    materialize: bool = False,
 ) -> DataFrame:
     """First-occurrence-survives WITHIN-document repeat removal — the
     apply step of `suffix_self_spans` (templated pages repeating their
@@ -2021,21 +1911,13 @@ def suffix_self_scrub(
 
     Output (doc_id, clean_text, n_tokens, n_removed) — the
     suffix_scrub contract. Registered as x_suffix_self_scrub (round
-    12). ``materialize`` passes through to the span stage exactly as
-    in suffix_scrub: lazy mode never pays a persist it then
-    discards."""
+    12). No cut, as in suffix_scrub."""
     spans = suffix_self_spans(
-        df, text_col, id_col, k=k, min_len=min_len, max_df=max_df,
-        materialize=materialize,
+        df, text_col, id_col, k=k, min_len=min_len, max_df=max_df
     )
-    out = scrub_coverage(
+    return scrub_coverage(
         df, text_col, id_col, spans.select("doc_id", "b_start", "b_end")
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        spans.unpersist()
-    return out
 
 
 def suffix_span_recall(
@@ -2056,20 +1938,20 @@ def suffix_span_recall(
 
     One row: (n_truth_pairs, n_found_pairs, pair_recall,
     truth_token_mass, found_token_mass, mass_recall). Quadratic only on
-    the uncapped TRUTH side — the graded path is the capped one.
+    the uncapped TRUTH side — the graded path is the capped one. Each
+    span table feeds its pair count and its token mass, so both are
+    ``cached()`` cuts.
     """
-    truth = suffix_span_pairs(
-        df, text_col, id_col, k=k, min_len=min_len, max_df=None,
-        materialize=True,
-    )
-    found = suffix_span_pairs(
-        df, text_col, id_col, k=k, min_len=min_len, max_df=max_df,
-        materialize=True,
-    )
+    truth = cached(suffix_span_pairs(
+        df, text_col, id_col, k=k, min_len=min_len, max_df=None
+    ))
+    found = cached(suffix_span_pairs(
+        df, text_col, id_col, k=k, min_len=min_len, max_df=max_df
+    ))
     tp = truth.select("doc_a", "doc_b").distinct()
     fp = found.select("doc_a", "doc_b").distinct()
     hit = tp.join(fp, ["doc_a", "doc_b"], "left_semi")
-    out = (
+    return (
         tp.agg(F.count(F.lit(1)).alias("n_truth_pairs"))
         .crossJoin(
             F.broadcast(hit.agg(F.count(F.lit(1)).alias("n_found_pairs")))
@@ -2120,12 +2002,7 @@ def suffix_span_recall(
                 / F.lit(1e4)
             ).alias("mass_recall"),
         )
-        .persist()
     )
-    out.count()
-    truth.unpersist()
-    found.unpersist()
-    return out
 
 
 def cross_dedup(
@@ -2160,9 +2037,9 @@ def cross_dedup(
     >= threshold near-dup.
 
     Returns one row per TRAIN doc: (doc_id, exact_dup, near_dup, keep)
-    with keep = NOT (exact_dup OR near_dup). The returned frame is
-    persisted and eagerly materialized (intermediate signature caches
-    are released before returning) — unpersist it when done.
+    with keep = NOT (exact_dup OR near_dup). Each corpus' shingle
+    projection feeds its signature and the verify join, so both are
+    ``cached()`` cuts.
     """
     fp_h = holdout.select(F.md5(F.col(text_col)).alias("fp")).distinct()
     exact_ids = (
@@ -2171,8 +2048,8 @@ def cross_dedup(
         .select("id")
     )
 
-    sh_t = with_shingles(train, text_col, id_col, n, materialize=True)
-    sh_h = with_shingles(holdout, text_col, id_col, n, materialize=True)
+    sh_t = cached(with_shingles(train, text_col, id_col, n))
+    sh_h = cached(with_shingles(holdout, text_col, id_col, n))
     bands_t = band_keys(minhash_signature(sh_t, k), k, bands)
     bands_h = band_keys(minhash_signature(sh_h, k), k, bands)
     # count-window bucket cap (r13) — see _capped_by_count; the
@@ -2200,7 +2077,7 @@ def cross_dedup(
         .distinct()
     )
 
-    out = (
+    return (
         train.select(F.col(id_col).alias("doc_id"))
         .join(
             exact_ids.withColumn("__ex", F.lit(True)),
@@ -2223,12 +2100,7 @@ def cross_dedup(
                   | F.coalesce(F.col("__nr"), F.lit(False)))
             ).alias("keep"),
         )
-        .persist()
     )
-    out.count()
-    sh_t.unpersist()
-    sh_h.unpersist()
-    return out
 
 
 def winnow_fingerprints(
@@ -2237,7 +2109,6 @@ def winnow_fingerprints(
     id_col: str,
     n: int = 3,
     w: int = 4,
-    materialize: bool = False,
 ) -> DataFrame:
     """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
     algorithm): hash every POSITIONAL token n-gram, slide a window of w
@@ -2257,16 +2128,14 @@ def winnow_fingerprints(
     their whole token string as the single gram, and docs with fewer
     than w grams keep their global minimum — every doc fingerprints.
 
-    Returns (id, n_grams, fps sorted-distinct array<string>).
-
-    ``materialize=True`` persists-and-counts the result (caller
-    unpersists) — REQUIRED before any consumer that explodes ``fps``:
-    a downstream Generate collapses the projection barrier between the
-    gram pass and the window pass, inlining the whole gram-hash
-    transform into the per-window ``slice`` lambda — O(m^2) md5 per doc
-    (measured 35x at sf0.1). The projected-column discipline that
-    protects multi-ref aliases inside plain selects does NOT survive
-    Generate; a persisted cut does.
+    Returns (id, n_grams, fps sorted-distinct array<string>) as a
+    ``cached()`` cut — REQUIRED before any consumer that explodes
+    ``fps``: a downstream Generate collapses the projection barrier
+    between the gram pass and the window pass, inlining the whole
+    gram-hash transform into the per-window ``slice`` lambda — O(m^2)
+    md5 per doc (measured 35x at sf0.1). The projected-column
+    discipline that protects multi-ref aliases inside plain selects
+    does NOT survive Generate; a cached relation does.
     """
     src = spread(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")),
@@ -2288,15 +2157,11 @@ def winnow_fingerprints(
             lambda j: F.array_min(F.slice("h", j, w)),
         ),
     ).otherwise(F.array(F.array_min(F.col("h"))))
-    out = h.select(
+    return cached(h.select(
         "id",
         F.size("h").alias("n_grams"),
         F.array_sort(F.array_distinct(fps)).alias("fps"),
-    )
-    if materialize:
-        out = out.persist()
-        out.count()
-    return out
+    ))
 
 
 def winnow_recall(
@@ -2318,40 +2183,40 @@ def winnow_recall(
     runs (pigeonhole slack), which the exact verify downstream resolves.
 
     One row: (n_truth, n_covered, recall, n_candidates). ``fps``: a
-    pre-materialized fingerprint index to grade (and share across
-    consumers) instead of recomputing one — forwarded to
-    `winnow_substring_pairs`."""
+    fingerprint index to grade (and share across consumers) instead of
+    recomputing one — forwarded to `winnow_substring_pairs`. The truth
+    gram explode (both self-join sides) and the candidate pairs (the
+    coverage join and the candidate count) are ``cached()`` cuts."""
     run_len = w + n - 1
     src = spread(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")),
         "id",
     )
-    toks = src.select("id", tokens_expr("__text").alias("t")).persist()
-    toks.count()
+    toks = src.select("id", tokens_expr("__text").alias("t"))
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.size("t") - (run_len - 1)),
             lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, run_len))),
         )
     )
-    ex = (
-        toks.filter(F.size("t") >= run_len)
-        .select("id", F.explode(grams).alias("g"))
-        .persist()
+    ex = cached(
+        toks.filter(F.size("t") >= run_len).select(
+            "id", F.explode(grams).alias("g")
+        )
     )
-    ex.count()
     a, b = ex.alias("a"), ex.alias("b")
     truth = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
         .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
         .distinct()
     )
-    pairs = winnow_substring_pairs(
-        df, text_col, id_col, n=n, w=w, max_df=None, fps=fps
+    cand = cached(
+        winnow_substring_pairs(
+            df, text_col, id_col, n=n, w=w, max_df=None, fps=fps
+        ).select("doc_a", "doc_b")
     )
-    cand = pairs.select("doc_a", "doc_b")
     covered = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
-    out = (
+    return (
         truth.agg(F.count(F.lit(1)).alias("n_truth"))
         .crossJoin(F.broadcast(covered.agg(F.count(F.lit(1)).alias("n_covered"))))
         .crossJoin(
@@ -2363,13 +2228,7 @@ def winnow_recall(
             F.round(F.col("n_covered") / F.col("n_truth"), 4).alias("recall"),
             "n_candidates",
         )
-        .persist()
     )
-    out.count()
-    toks.unpersist()
-    ex.unpersist()
-    pairs.unpersist()
-    return out
 
 
 def winnow_substring_pairs(
@@ -2391,37 +2250,28 @@ def winnow_substring_pairs(
     substring-dedup INDEX (docs-x-density rows, w/2 x smaller than a
     full shingle index).
 
-    Returns (doc_a, doc_b, n_shared) with doc_a < doc_b. The RETURNED
-    frame is persisted (caller unpersists); the fingerprint frame is the
-    one materialized cut (see winnow_fingerprints: exploding an
-    unmaterialized fps column inlines the gram pass into the window
-    lambda — O(m^2) per doc), released before returning.
+    Returns (doc_a, doc_b, n_shared) with doc_a < doc_b. The
+    fingerprint frame is the one cut (see winnow_fingerprints: exploding
+    an uncut fps column inlines the gram pass into the window lambda —
+    O(m^2) per doc).
 
-    ``fps``: an already-materialized (id, n_grams, fps) frame from
-    `winnow_fingerprints` (or an equivalent stored index) — the
-    fingerprint table IS the reusable substring index, so consumers
-    that need it more than once per process (the recall grader, a
-    dedup pass, a plagiarism report) should compute it once and pass
-    it in; ownership (unpersist/cleanup) then stays with the caller.
-    It must already be a materialized cut (persisted or read from
-    storage) — see the Generate-trap note above."""
-    own_fps = fps is None
-    if own_fps:
-        fps = winnow_fingerprints(df, text_col, id_col, n, w, materialize=True)
+    ``fps``: an (id, n_grams, fps) frame from `winnow_fingerprints` (or
+    an equivalent stored index) — the fingerprint table IS the reusable
+    substring index, so consumers that need it more than once per
+    process (the recall grader, a dedup pass, a plagiarism report)
+    should compute it once and pass it in. It must already be a cut
+    (cached or read from storage) — see the Generate-trap note above."""
+    if fps is None:
+        fps = winnow_fingerprints(df, text_col, id_col, n, w)
     ex = fps.select(F.col("id"), F.explode("fps").alias("fp"))
     # count-window df-cap (r13) — see _capped_by_count; the self-join
     # below is on fp, so it reuses the window's hash(fp) exchange.
     capped = _capped_by_count(ex, ["fp"], max_df)
     a, b = capped.alias("a"), capped.alias("b")
-    pairs = (
+    return (
         a.join(
             b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id"))
         )
         .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .persist()
     )
-    pairs.count()
-    if own_fps:
-        fps.unpersist()
-    return pairs

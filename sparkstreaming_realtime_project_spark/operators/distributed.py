@@ -21,30 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# Every frame prefix_sums persists, so long-lived sessions (a driver
-# looping hundreds of catalog entries without clearCache) can release
-# them wholesale: callers that can't unpersist per-handle call
-# release_persisted() after their consuming action. bench.py and
-# scripts/check_oracle.py already clear the whole cache per entry; this
-# is the targeted release for sessions that shouldn't nuke unrelated
-# cached relations.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> int:
-    """Unpersist every frame prefix_sums has cached this process and
-    return how many were released. Safe to call at any time — a
-    consumer that re-reads a released result recomputes it (each
-    branch's labels were already materialized into the result)."""
-    n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
+# release_persisted stays importable from here: perfbench's query phase
+# imports it from this module
+from .caching import cached, release_persisted  # noqa: F401
 
 
 def prefix_sums(
@@ -68,24 +47,21 @@ def prefix_sums(
     Deterministic regardless of where the sampled range boundaries
     land.
 
-    The range-partitioned frame is PERSISTED before fanning out to its
+    The range-partitioned frame is a ``cached()`` cut shared by its
     two consumers (the within-partition window and the per-partition
-    totals). Without the cache the two branches only share one physical
+    totals). Without the cut the two branches only share one physical
     exchange when Spark's exchange-reuse dedup fires; if it doesn't
     (``spark.sql.exchange.reuse=false``, plan-canonicalization drift),
     each branch re-samples its own range boundaries and the ``_pid``
     labels disagree between branches — silently corrupting the offsets.
-    Persisting makes both branches read the SAME materialized partitions
-    by construction. The cache entry stays resident until LRU eviction
-    (per-block recompute after eviction reuses the already-fixed
-    partitioner, so labels stay consistent); callers looping over many
-    prefix_sums calls should checkpoint/unpersist at their level."""
-    d = (
-        df.repartitionByRange(*[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    Both branches read the one cached relation, whose partitioner is
+    fixed once, so the labels agree by construction (an evicted block
+    is recomputed under the same partitioner)."""
+    d = cached(
+        df.repartitionByRange(*[F.col(c) for c in order_cols]).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
-    _PERSISTED.append(d)
     w_in = Window.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -300,7 +276,8 @@ def exact_quantiles(
         else F.sum(F.col(weight_col).cast("bigint"))
     )
     per_v = df.groupBy(F.col(value_col).alias("v")).agg(cnt.alias("c"))
-    cums = prefix_sums(per_v, ["v"], ["c"]).persist()
+    # the cumulated domain feeds the total and every quantile's select
+    cums = cached(prefix_sums(per_v, ["v"], ["c"]))
     n = cums.agg(F.max("c_cum").alias("n"))
     out = None
     for p in probs:
@@ -318,7 +295,4 @@ def exact_quantiles(
             )
         )
         out = sel if out is None else out.unionByName(sel)
-    out = out.persist()
-    out.count()
-    cums.unpersist()
     return out

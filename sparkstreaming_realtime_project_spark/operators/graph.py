@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .caching import cached
+
 __all__ = [
     "pagerank",
     "triangle_counts",
@@ -46,7 +48,7 @@ def pagerank(
     Execution shape (the 100 TB argument): per iteration ONE equi-join
     of the O(nodes) rank table against the edge list on the source key
     and ONE groupBy on the destination — the standard distributed PR
-    topology. The edge list is persisted once and reused across rounds;
+    topology. The edge list is a ``cached()`` cut every round reads;
     rank state is eagerly localCheckpoint'ed per round — materialized
     AND lineage-cut, so the per-round plan stays O(1) however many
     iterations the caller asks for (same discipline as
@@ -64,40 +66,33 @@ def pagerank(
     convergence is a fixed iteration count, not an epsilon test — both
     standard for the fixed-round variant; feed an undirected
     (symmetrized) edge list and there are no dangling nodes at all.
-
-    The RETURNED frame is persisted (every intermediate cut is released
-    before returning) — unpersist it when done.
     """
-    e0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    nodes = (
+    e0 = cached(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    nodes = cached(
         e0.select(F.col("src").alias("node"))
         .union(e0.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     n = nodes.count()
     # Fold the static 1/outdeg weight into the edge list ONCE: each
     # iteration is then a single rank-edge equi-join (the rank side is
-    # node-sized — AQE broadcasts it when it fits, leaving the persisted
+    # node-sized — AQE broadcasts it when it fits, leaving the cached
     # edge list unshuffled) instead of a ranks-deg-edges three-way join
     # re-paying the degree join every round.
     deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # deg stays an integer and the contribution stays the single
     # division r/deg — identical float op sequence to the unfused form,
     # so the oracle's unrolled recurrence matches bit-for-bit.
-    e = e0.join(deg, "src").select("src", "dst", "deg").persist()
-    e.count()
-    e0.unpersist()
+    e = cached(e0.join(deg, "src").select("src", "dst", "deg"))
     base = (1.0 - damping) / n
 
     dang = None
     if redistribute_dangling:
         # dangling = nodes that never appear as a source (node-sized,
         # computed once; empty for a symmetrized edge list)
-        dang = nodes.join(
+        dang = cached(nodes.join(
             e.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-        ).persist()
-        dang.count()
+        ))
 
     # per-round eager localCheckpoint, not persist: a round references
     # ranks twice under redistribute_dangling (contrib join + dangling
@@ -131,21 +126,13 @@ def pagerank(
                 inter_round,
             ).alias("r"),
         ).localCheckpoint(eager=True)
-    out = ranks.select("node", F.round("r", out_round).alias("pagerank")).persist()
-    out.count()  # materialize before releasing every intermediate cut
-    ranks.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    if dang is not None:
-        dang.unpersist()
-    return out
+    return ranks.select("node", F.round("r", out_round).alias("pagerank"))
 
 
 def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected graph, by DEGREE-ORIENTED wedge join (Schank/Wagner;
@@ -166,19 +153,17 @@ def triangle_counts(
     integer keys; counts are exact integers, the coefficient
     2T/(d(d-1)) is emitted in the floor-round form both engines replay.
 
-    ``materialize`` (default False): the canonical edge set, degree
-    table and oriented edges each feed SEVERAL plan branches, so the
-    LAZY plan recomputes the upstream per branch — a real cost when
-    building ``edges`` is expensive (an uncached self-join: the
-    skewed-hub probe measured 6x, 15 s -> 2.6 s at 90k edges,
-    materialized). But materialization is NOT free: the persist +
-    count barriers break whole-stage pipelining of the wedge -> close
-    -> count chain, and on triangle-DENSE graphs that pipelining is
-    the dominant win (the disjoint-copy winnow-graph probe measured
-    the opposite 6x: 4 s lazy vs 24 s materialized at 1.3M edges /
-    6.5M triangles). Default lazy; opt in when your edge subtree is
-    expensive to recompute and triangle volume is moderate — or
-    persist ``edges`` yourself and keep the lazy plan.
+    No cuts: the canonical edge set, degree table and oriented edges
+    each feed SEVERAL plan branches, so the plan recomputes the
+    upstream per branch — a real cost when building ``edges`` is
+    expensive (an uncached self-join: the skewed-hub probe measured
+    6x, 15 s -> 2.6 s at 90k edges, materialized). But cuts are NOT
+    free: they break whole-stage pipelining of the wedge -> close ->
+    count chain, and on triangle-DENSE graphs that pipelining is the
+    dominant win (the disjoint-copy winnow-graph probe measured the
+    opposite 6x: 4 s lazy vs 24 s materialized at 1.3M edges / 6.5M
+    triangles). A caller whose edge subtree is expensive passes
+    ``cached(edges)`` and keeps this plan lazy.
 
     Returns (node, degree, n_triangles, clustering_coeff) for every
     node of the edge set, zeros included — dropping triangle-free nodes
@@ -192,16 +177,12 @@ def triangle_counts(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    if materialize:
-        und = und.persist()
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    if materialize:
-        deg = deg.persist()
     # orient by (degree, id): da/db are small per-node attributes joined
     # in; the (deg, id) pair is packed into one sortable struct compare
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
@@ -219,8 +200,6 @@ def triangle_counts(
             F.when(lt, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
         )
     )
-    if materialize:
-        ori = ori.persist()
     e1 = ori.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
     e2 = ori.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     # wedge (u; x, y) with x before y in the same (degree, id) order the
@@ -248,7 +227,7 @@ def triangle_counts(
         )
         / F.lit(1e6),
     ).otherwise(F.lit(0.0))
-    out = (
+    return (
         deg.join(per_node, "node", "left")
         .fillna(0, subset=["n_triangles"])
         .select(
@@ -258,13 +237,6 @@ def triangle_counts(
             coeff.alias("clustering_coeff"),
         )
     )
-    if materialize:
-        out = out.persist()
-        out.count()  # node-sized; release the edge-sized intermediates
-        ori.unpersist()
-        deg.unpersist()
-        und.unpersist()
-    return out
 
 
 def jaccard_link_prediction(
@@ -272,7 +244,6 @@ def jaccard_link_prediction(
     src: str = "src",
     dst: str = "dst",
     min_common: int = 2,
-    materialize: bool = False,
     max_center_degree: int | None = None,
 ) -> DataFrame:
     """Neighbor-overlap link prediction (Liben-Nowell & Kleinberg,
@@ -309,13 +280,9 @@ def jaccard_link_prediction(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    if materialize:
-        und = und.persist()  # feeds sym AND the existing-edge anti-join
     sym = und.unionAll(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    if materialize:
-        sym = sym.persist()  # feeds the degree agg AND both wedge sides
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -353,18 +320,12 @@ def jaccard_link_prediction(
         F.col("common").cast("double") / union.cast("double") * F.lit(1e6)
         + F.lit(0.5)
     ) / F.lit(1e6)
-    out = scored.select(
+    return scored.select(
         F.col("x").alias("node_x"),
         F.col("y").alias("node_y"),
         F.col("common").cast("long").alias("common"),
         jacc.alias("jacc"),
     )
-    if materialize:
-        out = out.persist()
-        out.count()  # candidate-sized; release edge-sized intermediates
-        sym.unpersist()
-        und.unpersist()
-    return out
 
 
 def label_propagation(
@@ -400,10 +361,8 @@ def label_propagation(
     this extends the repo's graph family (pagerank, triangles, link
     prediction) with the community primitive a dedup/linkage pipeline
     uses to group near-duplicate clusters into families.
-
-    The RETURNED frame is persisted — unpersist when done.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
+    e = cached(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -424,10 +383,7 @@ def label_propagation(
             .select("node", "lbl")
             .localCheckpoint(eager=True)
         )
-    out = labels.select("node", F.col("lbl").alias("community")).persist()
-    out.count()
-    e.unpersist()
-    return out
+    return labels.select("node", F.col("lbl").alias("community"))
 
 
 def bfs_hops(
@@ -456,10 +412,8 @@ def bfs_hops(
     form (level_i = neighbors of level_{i-1}; hops = min level per
     node): equivalent results, quadratic-ish cost — the oracle is the
     baseline, the anti-join pruned path is the engine.
-
-    The RETURNED frame is persisted — unpersist when done.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
+    e = cached(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     visited = sources.select(
         F.col(node).alias("node"), F.lit(0).alias("hops")
     ).localCheckpoint(eager=True)
@@ -478,7 +432,4 @@ def bfs_hops(
             nxt.select("node", F.lit(h).alias("hops"))
         ).localCheckpoint(eager=True)
         frontier = nxt
-    out = visited.persist()
-    out.count()
-    e.unpersist()
-    return out
+    return visited

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .caching import cache_scope, cached
+
 
 def linkage_pairs(
     df: DataFrame,
@@ -136,81 +138,80 @@ def linkage_em(
       A feature observed on ZERO rows keeps its current estimate.
     """
     k = len(flag_cols)
-    # persist + materialize the pattern frame: every EM iteration takes
+    p, ms, us = float(p0), [float(m0)] * k, [float(u0)] * k
+    # the pattern frame is a cut for the fit: every EM iteration takes
     # one action over it, and without the cut each action re-runs the
     # whole data-sized pair generation + aggregate
-    pat = pairs.groupBy(
-        *[F.col(c).cast("int").alias(f"g{j}") for j, c in enumerate(flag_cols)]
-    ).agg(F.count(F.lit(1)).cast("double").alias("n")).persist()
-    pat.count()
-    p, ms, us = float(p0), [float(m0)] * k, [float(u0)] * k
-    cur = pat
-    for _ in range(iters):
-        pm = F.lit(p)
-        pu = F.lit(1.0 - p)
-        for j in range(k):
-            gcol = F.col(f"g{j}")
-            pm = pm * (
-                F.when(gcol.isNull(), F.lit(1.0))
-                .when(gcol == 1, F.lit(ms[j]))
-                .otherwise(F.lit(1.0 - ms[j]))
-            )
-            pu = pu * (
-                F.when(gcol.isNull(), F.lit(1.0))
-                .when(gcol == 1, F.lit(us[j]))
-                .otherwise(F.lit(1.0 - us[j]))
-            )
-        r = F.floor(pm / (pm + pu) * F.lit(4096.0) + F.lit(0.5)) / F.lit(
-            4096.0
-        )
-        agg = cur.select(
-            (F.col("n") * r).alias("rn"),
-            ((F.lit(1.0) - r) * F.col("n")).alias("sn"),
-            F.col("n"),
-            *[
-                (F.col("n") * r * F.col(f"g{j}")).alias(f"rg{j}")
-                for j in range(k)
-            ],
-            *[
-                ((F.lit(1.0) - r) * F.col("n") * F.col(f"g{j}")).alias(
-                    f"sg{j}"
+    with cache_scope():
+        pat = cached(pairs.groupBy(
+            *[F.col(c).cast("int").alias(f"g{j}") for j, c in enumerate(flag_cols)]
+        ).agg(F.count(F.lit(1)).cast("double").alias("n")))
+        for _ in range(iters):
+            pm = F.lit(p)
+            pu = F.lit(1.0 - p)
+            for j in range(k):
+                gcol = F.col(f"g{j}")
+                pm = pm * (
+                    F.when(gcol.isNull(), F.lit(1.0))
+                    .when(gcol == 1, F.lit(ms[j]))
+                    .otherwise(F.lit(1.0 - ms[j]))
                 )
-                for j in range(k)
-            ],
-            # per-feature M-step denominators: responsibility mass over
-            # the rows where the feature was OBSERVED (non-null flag) —
-            # null-flag pairs carry no evidence about feature j
-            *[
-                F.when(F.col(f"g{j}").isNotNull(), F.col("n") * r).alias(
-                    f"rnj{j}"
+                pu = pu * (
+                    F.when(gcol.isNull(), F.lit(1.0))
+                    .when(gcol == 1, F.lit(us[j]))
+                    .otherwise(F.lit(1.0 - us[j]))
                 )
+            r = F.floor(pm / (pm + pu) * F.lit(4096.0) + F.lit(0.5)) / F.lit(
+                4096.0
+            )
+            agg = pat.select(
+                (F.col("n") * r).alias("rn"),
+                ((F.lit(1.0) - r) * F.col("n")).alias("sn"),
+                F.col("n"),
+                *[
+                    (F.col("n") * r * F.col(f"g{j}")).alias(f"rg{j}")
+                    for j in range(k)
+                ],
+                *[
+                    ((F.lit(1.0) - r) * F.col("n") * F.col(f"g{j}")).alias(
+                        f"sg{j}"
+                    )
+                    for j in range(k)
+                ],
+                # per-feature M-step denominators: responsibility mass over
+                # the rows where the feature was OBSERVED (non-null flag) —
+                # null-flag pairs carry no evidence about feature j
+                *[
+                    F.when(F.col(f"g{j}").isNotNull(), F.col("n") * r).alias(
+                        f"rnj{j}"
+                    )
+                    for j in range(k)
+                ],
+                *[
+                    F.when(
+                        F.col(f"g{j}").isNotNull(), (F.lit(1.0) - r) * F.col("n")
+                    ).alias(f"snj{j}")
+                    for j in range(k)
+                ],
+            ).agg(
+                F.sum("rn").alias("rn"),
+                F.sum("sn").alias("sn"),
+                F.sum("n").alias("nn"),
+                *[F.sum(f"rg{j}").alias(f"rg{j}") for j in range(k)],
+                *[F.sum(f"sg{j}").alias(f"sg{j}") for j in range(k)],
+                *[F.sum(f"rnj{j}").alias(f"rnj{j}") for j in range(k)],
+                *[F.sum(f"snj{j}").alias(f"snj{j}") for j in range(k)],
+            )
+            row = agg.first()
+            p = row["rn"] / row["nn"]
+            ms = [
+                row[f"rg{j}"] / row[f"rnj{j}"] if row[f"rnj{j}"] else ms[j]
                 for j in range(k)
-            ],
-            *[
-                F.when(
-                    F.col(f"g{j}").isNotNull(), (F.lit(1.0) - r) * F.col("n")
-                ).alias(f"snj{j}")
+            ]
+            us = [
+                row[f"sg{j}"] / row[f"snj{j}"] if row[f"snj{j}"] else us[j]
                 for j in range(k)
-            ],
-        ).agg(
-            F.sum("rn").alias("rn"),
-            F.sum("sn").alias("sn"),
-            F.sum("n").alias("nn"),
-            *[F.sum(f"rg{j}").alias(f"rg{j}") for j in range(k)],
-            *[F.sum(f"sg{j}").alias(f"sg{j}") for j in range(k)],
-            *[F.sum(f"rnj{j}").alias(f"rnj{j}") for j in range(k)],
-            *[F.sum(f"snj{j}").alias(f"snj{j}") for j in range(k)],
-        )
-        row = agg.first()
-        p = row["rn"] / row["nn"]
-        ms = [
-            row[f"rg{j}"] / row[f"rnj{j}"] if row[f"rnj{j}"] else ms[j]
-            for j in range(k)
-        ]
-        us = [
-            row[f"sg{j}"] / row[f"snj{j}"] if row[f"snj{j}"] else us[j]
-            for j in range(k)
-        ]
+            ]
     scale = float(10**decimals)
 
     def _r(x: float) -> float:
@@ -218,7 +219,6 @@ def linkage_em(
 
         return math.floor(x * scale + 0.5) / scale
 
-    pat.unpersist()
     spark = pairs.sparkSession
     out = [
         (

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .caching import cached
+
 
 def interval_union(
     df: DataFrame,
@@ -296,7 +298,7 @@ def markov_surprise(
     Shape: ONE windowed lead pass over the data — the global model is
     DERIVED from the per-key transition counts (sum over keys of tf ==
     the corpus transition count, so no second scan; the per-key frame
-    is persisted across its two consumers and released after). Model
+    is a ``cached()`` cut shared by its two consumers). Model
     probabilities are floor-rounded (1e-6) exactly like
     markov_transitions', so both engines ln the identical double; the
     per-key sum shares the kn_bigram_logprob determinism posture
@@ -314,16 +316,14 @@ def markov_surprise(
     seq = df.withColumn("_nxt", F.lead(state_col).over(w)).filter(
         F.col("_nxt").isNotNull()
     )
-    ut = (
+    # feeds BOTH the model and the scoring join
+    ut = cached(
         seq.groupBy(
             F.col(key_col),
             F.col(state_col).alias("from_state"),
             F.col("_nxt").alias("to_state"),
-        )
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+        ).agg(F.count(F.lit(1)).alias("tf"))
     )
-    ut.count()  # materialize: feeds BOTH the model and the scoring join
     counts = ut.groupBy("from_state", "to_state").agg(
         F.sum("tf").alias("n")
     )
@@ -345,13 +345,10 @@ def markov_surprise(
         * F.lit(scale)
         + F.lit(0.5)
     ) / F.lit(scale)
-    out = scored.groupBy(key_col).agg(
+    return scored.groupBy(key_col).agg(
         F.sum("tf").cast("long").alias("n_transitions"),
         surprise.alias("surprise"),
-    ).persist()
-    out.count()
-    ut.unpersist()
-    return out
+    )
 
 
 def cusum_shift(

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .caching import cache_scope, cached
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -299,15 +301,15 @@ def ivf_centroids(
     unquantized centroids can differ in final ulps between runs/engines
     and flip boundary assignments — quantized, the model is reproducible
     bit-for-bit anywhere (what lets a SQL oracle replay the training)."""
-    e = embeddings.select(
-        as_double_vec(vec_col).alias("v"), F.col(id_col).alias("id")
-    ).persist()
-    dim = len(e.select("v").first()["v"])
-    cents = [
-        list(r["v"]) for r in e.orderBy("id").limit(n_centroids).collect()
-    ]
     spark = embeddings.sparkSession
-    try:
+    with cache_scope():
+        e = cached(embeddings.select(
+            as_double_vec(vec_col).alias("v"), F.col(id_col).alias("id")
+        ))
+        dim = len(e.select("v").first()["v"])
+        cents = [
+            list(r["v"]) for r in e.orderBy("id").limit(n_centroids).collect()
+        ]
         for _ in range(iters):
             assigned = _attach(e, _cents_col(spark, cents)).select(
                 _cell_expr(F.col("v")).alias("cid"), "v"
@@ -330,8 +332,6 @@ def ivf_centroids(
                 [by_cid[c][p] for p in range(dim)] if c in by_cid else cents[c]
                 for c in range(n_centroids)
             ]
-    finally:
-        e.unpersist()
     return cents
 
 
@@ -781,8 +781,8 @@ def pq_codebooks(
         [seeds[j][s * sd : (s + 1) * sd] for j in range(k)] for s in range(m)
     ]
     spark = embeddings.sparkSession
-    ep = e.persist()
-    try:
+    with cache_scope():
+        ep = cached(e)
         for _ in range(iters):
             assigned = _attach(ep, _books_col(spark, books)).select(
                 "v", _codes_expr(F.col("v"), m, sd).alias("codes")
@@ -816,8 +816,6 @@ def pq_codebooks(
                 ]
                 for s in range(m)
             ]
-    finally:
-        ep.unpersist()
     return books
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .caching import cached
 from .sqltext import plain_ident, plain_literal
 
 __all__ = ["cms_bucket", "cms_sketch", "cms_estimate", "cms_self_join_size", "mg_topk"]
@@ -363,18 +364,17 @@ def mg_topk(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w = Window.partitionBy("g").orderBy(F.col("cnt").desc(), F.col("key"))
-    # rank-filter BEFORE persisting: the rn <= m+1 predicate adjacent to
-    # the window triggers WindowGroupLimit (partial per-partition top-k
-    # before the shuffle), so neither the sort nor the materialized
-    # frame ever holds more than groups x (m+1) rows — persisting the
-    # unfiltered rank would both block that pushdown and cache the
-    # whole key domain
-    ranked = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= m + 1)
-        .persist()
+    # rank-filter BEFORE the cut (ranked feeds the kept counters and
+    # the eps table): the rn <= m+1 predicate adjacent to the window
+    # triggers WindowGroupLimit (partial per-partition top-k before the
+    # shuffle), so neither the sort nor the cached frame ever holds more
+    # than groups x (m+1) rows — caching the unfiltered rank would both
+    # block that pushdown and cache the whole key domain
+    ranked = cached(
+        counts.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") <= m + 1
+        )
     )
-    ranked.count()
     kept = ranked.filter(F.col("rn") <= m)
     eps = (
         ranked.filter(F.col("rn") == m + 1)
@@ -393,7 +393,7 @@ def mg_topk(
         )
     )
     wk = Window.orderBy(F.col("est").desc(), F.col("key"))
-    out = (
+    return (
         per_key.crossJoin(F.broadcast(total_eps))
         .select(
             "key",
@@ -406,11 +406,7 @@ def mg_topk(
         .withColumn("rank", F.row_number().over(wk))
         .filter(F.col("rank") <= k)
         .select("rank", "key", "est", "upper_bound", "n_groups_kept")
-        .persist()
     )
-    out.count()
-    ranked.unpersist()
-    return out
 
 
 def cms_self_join_size(

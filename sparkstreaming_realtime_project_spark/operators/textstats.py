@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .caching import cached
 from .dedup import shingles_from_tokens, spread, tokens_expr
 
 # Marker stopwords per language for the n-gram-free heuristic. Priority
@@ -230,7 +231,7 @@ def bm25_topk(
 
 
 def tfidf_top_terms(
-    df: DataFrame, text_col: str, id_col: str, k: int = 5, materialize: bool = False
+    df: DataFrame, text_col: str, id_col: str, k: int = 5
 ) -> DataFrame:
     """Top-k terms per document by TF-IDF (idf = ln(N/df), no smoothing).
 
@@ -254,20 +255,15 @@ def tfidf_top_terms(
         "doc_id",
     )
     toks = src.select("doc_id", tokens_expr("__text").alias("t"))
-    tf = (
+    # tf feeds both the score join and the document-frequency
+    # aggregation; without a cut the tokenize+explode+partial-agg
+    # subtree runs twice (Catalyst does not auto-reuse the exchange
+    # across the two consumers). One cached pass at corpus scale.
+    tf = cached(
         toks.select("doc_id", F.explode("t").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    if materialize:
-        # tf feeds both the score join and the document-frequency
-        # aggregation; without a cut the tokenize+explode+partial-agg
-        # subtree runs twice (Catalyst does not auto-reuse the exchange
-        # across the two consumers). One cached pass at corpus scale.
-        # The cache is released before returning (result materialized
-        # eagerly below) so repeated calls don't leak cached blocks;
-        # the RETURNED frame is then persisted — caller unpersists.
-        tf = tf.persist()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -283,16 +279,11 @@ def tfidf_top_terms(
         )
     )
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
-    out = (
+    return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("doc_id", "term", "tf", "tfidf", "rnk")
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        tf.unpersist()
-    return out
 
 
 def _term_freq(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -520,7 +511,7 @@ def pmi_collocations(
     global sort, no window. All counts are exact integers so the score
     is deterministic; ln + round(4) on both engines.
     """
-    grams = _bigram_occurrences(df, text_col, id_col).persist()
+    grams = cached(_bigram_occurrences(df, text_col, id_col))
     # unigram counts come from the token stream itself (bigram-derived
     # words would double-count interior positions)
     src = spread(
@@ -541,7 +532,7 @@ def pmi_collocations(
     )
     ca = ucnt.select(F.col("w").alias("wa"), F.col("cw").alias("ca"))
     cb = ucnt.select(F.col("w").alias("wb"), F.col("cw").alias("cb"))
-    out = (
+    return (
         big.join(ca, "wa")
         .join(cb, "wb")
         .crossJoin(F.broadcast(totals))
@@ -559,10 +550,6 @@ def pmi_collocations(
         .orderBy(F.col("pmi").desc(), "gram")
         .limit(k)
     )
-    res = out.persist()
-    res.count()
-    grams.unpersist()
-    return res
 
 
 def boilerplate_score(
@@ -570,7 +557,6 @@ def boilerplate_score(
     text_col: str,
     id_col: str,
     common_min: int = 50,
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-document boilerplate ratio: the share of a doc's bigram
     occurrences whose corpus frequency is >= ``common_min``. High ratio
@@ -581,14 +567,10 @@ def boilerplate_score(
     Shape: bigram explode -> join against the (small, thresholded)
     frequency table -> per-doc aggregate. The frequency side is an
     aggregate of the same scan, thresholded before the join so the
-    joined table is the common-gram head, not the corpus tail.
-    ``materialize=True`` caches the gram explode feeding both consumers
-    (tfidf_top_terms' pattern: cache released before returning, the
-    RETURNED frame persisted — caller unpersists).
+    joined table is the common-gram head, not the corpus tail. The gram
+    explode feeding both consumers is a ``cached()`` cut.
     """
-    grams = _bigram_occurrences(df, text_col, id_col)
-    if materialize:
-        grams = grams.persist()
+    grams = cached(_bigram_occurrences(df, text_col, id_col))
     common = (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -596,7 +578,7 @@ def boilerplate_score(
         .select("gram")
     )
     flagged = grams.join(common.withColumn("is_common", F.lit(1)), "gram", "left")
-    out = (
+    return (
         flagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
@@ -610,11 +592,6 @@ def boilerplate_score(
             ),
         )
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        grams.unpersist()
-    return out
 
 
 def normalize_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -645,9 +622,7 @@ def normalize_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def unigram_logprob(
-    df: DataFrame, text_col: str, id_col: str, materialize: bool = False
-) -> DataFrame:
+def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Per-document unigram-LM quality score: the mean token negative
     log-probability under the corpus' own unigram model — the cheap,
     model-free stand-in for the perplexity filters of CCNet/Gopher
@@ -666,20 +641,17 @@ def unigram_logprob(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")),
         "doc_id",
     )
-    tf = (
+    # tf feeds the vocabulary fold AND the score join — same
+    # two-consumer cut as tfidf_top_terms
+    tf = cached(
         src.select("doc_id", F.explode(tokens_expr("__text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    if materialize:
-        # tf feeds the vocabulary fold AND the score join — same
-        # two-consumer cut as tfidf_top_terms (cache released before
-        # returning; the RETURNED frame is persisted, caller unpersists)
-        tf = tf.persist()
     vocab = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("__total"))
     scored = tf.join(vocab, "term").crossJoin(F.broadcast(total))
-    out = (
+    return (
         scored.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
@@ -691,11 +663,6 @@ def unigram_logprob(
         )
         .select("doc_id", "n_tokens", "avg_neg_logp")
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        tf.unpersist()
-    return out
 
 
 # Gopher-rule bounds (Rae et al. 2021 §A1.1, adapted to the synthetic
@@ -794,7 +761,6 @@ def kn_bigram_logprob(
     text_col: str,
     id_col: str,
     discount: float = 0.75,
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-document bigram negative log-prob under an interpolated
     Kneser-Ney model trained on the corpus itself (Chen & Goodman 1998
@@ -845,16 +811,13 @@ def kn_bigram_logprob(
             )
         ).alias("b"),
     )
-    dbg = bg.groupBy(
+    # dbg feeds the model folds AND the score join — the same
+    # two-consumer cut as unigram_logprob's tf frame; c12 feeds the
+    # model join and its three folds
+    dbg = cached(bg.groupBy(
         "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
-    ).agg(F.count(F.lit(1)).alias("tf"))
-    if materialize:
-        # dbg feeds the model folds AND the score join — the same
-        # two-consumer cut as unigram_logprob's tf frame
-        dbg = dbg.persist()
-    c12 = dbg.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
-    if materialize:
-        c12 = c12.persist()
+    ).agg(F.count(F.lit(1)).alias("tf")))
+    c12 = cached(dbg.groupBy("w1", "w2").agg(F.sum("tf").alias("c12")))
     c1 = c12.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_fwd")
     )
@@ -873,7 +836,7 @@ def kn_bigram_logprob(
         .crossJoin(F.broadcast(bt))
         .select("w1", "w2", p.alias("__p"))
     )
-    out = (
+    return (
         dbg.join(model, ["w1", "w2"])
         .groupBy("doc_id")
         .agg(
@@ -887,12 +850,6 @@ def kn_bigram_logprob(
             ).alias("avg_neg_logp"),
         )
     )
-    if materialize:
-        out = out.persist()
-        out.count()
-        dbg.unpersist()
-        c12.unpersist()
-    return out
 
 
 def nb_token_classifier(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import highlight, match_and_highlight_sql, text_match
+from ..operators.caching import cache_scope, cached
 from ..sources.batch import load_table
 
 # Fixed parameters (events span 2024-01; lineitem dates are TPC-H classic).
@@ -959,7 +960,8 @@ def f_datetime_split(spark, sf_dir):
         F.unix_millis("ts").alias("ts_ms"),
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("create_time"),
     )
-    # the exact derivation operators/order_wide.py:56-59 applies in prod
+    # the exact create_date/create_hour derivation order_wide_pipeline
+    # (streaming/pipelines.py) applies in prod
     return s.select(
         "event_id",
         "ts_ms",
@@ -1947,18 +1949,12 @@ def _winnow_fps(spark, sf_dir: str, n: int = 3, w: int = 4) -> DataFrame:
         import shutil
         import tempfile
 
-        fps = _dd.winnow_fingerprints(
-            _t(spark, sf_dir, "documents"),
-            "text",
-            "doc_id",
-            n=n,
-            w=w,
-            materialize=True,
-        )
         path = tempfile.mkdtemp(prefix="spark_winnow_fps_")
         atexit.register(shutil.rmtree, path, ignore_errors=True)
-        fps.write.mode("overwrite").parquet(path)
-        fps.unpersist()
+        with cache_scope():
+            _dd.winnow_fingerprints(
+                _t(spark, sf_dir, "documents"), "text", "doc_id", n=n, w=w
+            ).write.mode("overwrite").parquet(path)
         _WINNOW_FPS_PATHS[key] = path
     return spark.read.parquet(_WINNOW_FPS_PATHS[key])
 
@@ -1971,19 +1967,18 @@ def _cluster_labels(spark, sf_dir: str) -> DataFrame:
         import tempfile
 
         docs = _t(spark, sf_dir, "documents")
-        # ngram_jaccard_dedup_pairs releases the shingle cache itself; the
-        # (persisted) pair list is tiny and feeds every propagation round.
-        pairs = _dd.ngram_jaccard_dedup_pairs(
-            docs, "text", "doc_id", n=3, threshold=0.8, max_df=_MAX_DF
-        )
-        labs = _cc(pairs, docs.select("doc_id"))
         path = tempfile.mkdtemp(prefix="spark_cluster_labels_")
         # process-lifetime cache, process-lifetime files: remove the
         # materialized labels on interpreter exit so repeated runs
         # don't accumulate parquet in the temp dir
         atexit.register(shutil.rmtree, path, ignore_errors=True)
-        labs.write.mode("overwrite").parquet(path)
-        pairs.unpersist()
+        # the scope releases the pair pipeline's and the propagation's
+        # caches once the labels are on disk
+        with cache_scope():
+            pairs = _dd.ngram_jaccard_dedup_pairs(
+                docs, "text", "doc_id", n=3, threshold=0.8, max_df=_MAX_DF
+            )
+            _cc(pairs, docs.select("doc_id")).write.mode("overwrite").parquet(path)
         _CLUSTER_LABEL_PATHS[key] = path
     return spark.read.parquet(_CLUSTER_LABEL_PATHS[key])
 
@@ -2049,9 +2044,7 @@ def x_dedup_cluster_star(spark, sf_dir):
     pairs = _dd.ngram_jaccard_dedup_pairs(
         docs, "text", "doc_id", n=3, threshold=0.8, max_df=_MAX_DF
     )
-    out = _dd.connected_components_star(pairs, docs.select("doc_id"))
-    pairs.unpersist()
-    return out
+    return _dd.connected_components_star(pairs, docs.select("doc_id"))
 
 
 @_register(
@@ -2075,7 +2068,7 @@ def x_dedup_cluster_star(spark, sf_dir):
 )
 def x_tfidf_top_terms(spark, sf_dir):
     return _ts.tfidf_top_terms(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", 5, materialize=True
+        _t(spark, sf_dir, "documents"), "text", "doc_id", 5
     )
 
 
@@ -2568,10 +2561,6 @@ def x_knn_pq(spark, sf_dir):
     """,
 )
 def x_dedup_containment(spark, sf_dir):
-    # Return the persisted pair list itself (caller/bench clears cache):
-    # unpersisting before the driver materializes would re-execute the
-    # whole shingle->candidate->verify pipeline UNCACHED — measured 12.4s
-    # vs ~5s at sf0.1 for exactly that reason.
     return _dd.containment_dedup_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
         n=3, threshold=0.9, max_df=_MAX_DF,
@@ -2730,9 +2719,6 @@ def x_pagerank(spark, sf_dir):
     edges = e0.select(p.alias("src"), s.alias("dst")).union(
         e0.select(s.alias("src"), p.alias("dst"))
     )
-    # Return the persisted (node, pagerank) frame directly: unpersisting
-    # before the driver materializes would re-run every rank iteration
-    # uncached (caller/bench clears cache when done).
     return _gr.pagerank(edges, iters=3, damping=0.85, inter_round=9, out_round=6)
 
 
@@ -2795,7 +2781,7 @@ def x_pagerank_dangling(spark, sf_dir):
         F.concat(F.lit("p:"), F.col("p").cast("string")).alias("src"),
         F.concat(F.lit("s:"), F.col("s").cast("string")).alias("dst"),
     )
-    out = _gr.pagerank(
+    return _gr.pagerank(
         edges,
         iters=3,
         damping=0.85,
@@ -2803,9 +2789,6 @@ def x_pagerank_dangling(spark, sf_dir):
         out_round=6,
         redistribute_dangling=True,
     )
-    # Persisted result returned as-is — see x_pagerank on why unpersisting
-    # here would force an uncached re-run of the whole iteration chain.
-    return out
 
 
 def _ivfpq_sql(
@@ -3018,8 +3001,7 @@ def x_ngram_freq(spark, sf_dir):
 )
 def x_boilerplate_score(spark, sf_dir):
     return _ts.boilerplate_score(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", common_min=50,
-        materialize=True,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", common_min=50
     )
 
 
@@ -3484,8 +3466,7 @@ def x_anomaly_zscore(spark, sf_dir):
 )
 def x_dup_spans(spark, sf_dir):
     return _dd.duplicate_spans(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", k=8, min_docs=2,
-        materialize=True,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", k=8, min_docs=2
     )
 
 
@@ -3582,9 +3563,7 @@ def a_retention_cohort(spark, sf_dir):
     """,
 )
 def x_unigram_logprob(spark, sf_dir):
-    return _ts.unigram_logprob(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", materialize=True
-    )
+    return _ts.unigram_logprob(_t(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 # layout / evaluation / planning (round 3 additions) -------------------------
@@ -3865,7 +3844,7 @@ def x_split_train_val(spark, sf_dir):
 )
 def x_minhash_recall(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    sh = _dd.with_shingles(docs, "text", "doc_id", 3, materialize=True)
+    sh = cached(_dd.with_shingles(docs, "text", "doc_id", 3))
     # truth: exact Jaccard over ALL shared-shingle candidates (complete
     # for threshold > 0 — a qualifying pair shares at least one shingle)
     truth = _dd.jaccard_pairs(sh, 0.8).select("doc_a", "doc_b")
@@ -3878,10 +3857,7 @@ def x_minhash_recall(spark, sf_dir):
     hits = truth.join(found, ["doc_a", "doc_b"]).agg(
         F.count(F.lit(1)).alias("n_hits")
     )
-    # The result is three scalars: evaluate them eagerly so the cached
-    # shingle frame can be released before returning (the lazy form would
-    # leave `sh` pinned in executor memory for the rest of the session).
-    row = (
+    return (
         nt.crossJoin(nf)
         .crossJoin(hits)
         .select(
@@ -3890,11 +3866,6 @@ def x_minhash_recall(spark, sf_dir):
             "n_hits",
             F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
         )
-        .first()
-    )
-    sh.unpersist()
-    return spark.createDataFrame(
-        [row], schema="n_truth bigint, n_lsh bigint, n_hits bigint, recall double"
     )
 
 
@@ -3943,8 +3914,7 @@ def x_minhash_recall(spark, sf_dir):
 )
 def x_span_scrub(spark, sf_dir):
     return _dd.scrub_repeated_spans(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", k=8, min_docs=2,
-        materialize=True,
+        _t(spark, sf_dir, "documents"), "text", "doc_id", k=8, min_docs=2
     )
 
 
@@ -4057,7 +4027,7 @@ def _md5_byte_sql(x: str) -> str:
 def x_dsir_weights(spark, sf_dir):
     return _cx.dsir_weights(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
-        F.col("lang") == "en", materialize=True,
+        F.col("lang") == "en",
     )
 
 
@@ -4293,9 +4263,7 @@ _PPL_RATES = {1: 0.5, 4: 0.25}
     """,
 )
 def x_ppl_bucket_sample(spark, sf_dir):
-    lp = _ts.unigram_logprob(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", materialize=True
-    )
+    lp = _ts.unigram_logprob(_t(spark, sf_dir, "documents"), "text", "doc_id")
     return _cx.score_bucket_sample(
         lp, "avg_neg_logp", "doc_id", n_buckets=4, rates=_PPL_RATES, salt="ppl"
     )
@@ -5218,15 +5186,13 @@ def x_feature_hash_embed(spark, sf_dir):
     """,
 )
 def x_text_knn_e2e(spark, sf_dir):
-    emb = _sim.feature_hash_embed(
+    # the embedding feeds both the base and the query side
+    emb = cached(_sim.feature_hash_embed(
         _t(spark, sf_dir, "documents"), "text", "doc_id", dim=_FH_DIM
-    ).persist()
-    out = _sim.knn_bruteforce(
+    ))
+    return _sim.knn_bruteforce(
         emb, emb.filter(F.col("id") < 3), k=3, id_col="id"
-    ).persist()
-    out.count()
-    emb.unpersist()
-    return out
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -6494,8 +6460,7 @@ _CONTAM_N, _CONTAM_BENCH = 8, "src0"
 def x_contamination_overlap(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return _cx.contamination_overlap(
-        docs, F.col("source") == _CONTAM_BENCH, n=_CONTAM_N, threshold=0.1,
-        materialize=True,
+        docs, F.col("source") == _CONTAM_BENCH, n=_CONTAM_N, threshold=0.1
     )
 
 
@@ -6812,9 +6777,7 @@ def a_session_conversion(spark, sf_dir):
     """,
 )
 def x_ngram_novelty(spark, sf_dir):
-    return _cx.ngram_novelty(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", 3, materialize=True
-    )
+    return _cx.ngram_novelty(_t(spark, sf_dir, "documents"), "text", "doc_id", 3)
 
 
 _SCD2_ASOF_US = 1_705_276_800_000_000  # 2024-01-15 00:00:00 UTC, epoch micros
@@ -7185,11 +7148,12 @@ def x_triangle_counts(spark, sf_dir):
     edges = a.join(
         b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p"))
     ).select(F.col("a.p").alias("src"), F.col("b.p").alias("dst"))
-    # the lineitem self-join edge subtree is expensive and uncached —
-    # lazy recompute per branch measured 17-20 s vs ~6 s materialized
-    # at sf0.1 (the dense-graph pipelining loss is smaller than the
-    # recompute cost here; x_link_prediction is the opposite case)
-    return _gr.triangle_counts(edges, "src", "dst", materialize=True)
+    # the lineitem self-join edge subtree is expensive and feeds every
+    # branch of the triangle plan — lazy recompute per branch measured
+    # 17-20 s vs ~6 s materialized at sf0.1 (the dense-graph pipelining
+    # loss is smaller than the recompute cost here; x_link_prediction
+    # is the opposite case), so the edges are a cut
+    return _gr.triangle_counts(cached(edges), "src", "dst")
 
 
 @_register(
@@ -7221,9 +7185,7 @@ def x_triangle_counts(spark, sf_dir):
     """,
 )
 def x_kn_bigram_logprob(spark, sf_dir):
-    return _ts.kn_bigram_logprob(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", materialize=True
-    )
+    return _ts.kn_bigram_logprob(_t(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 _MG_GROUPS, _MG_M, _MG_K = 8, 2, 20
@@ -7297,7 +7259,6 @@ def x_mg_topk(spark, sf_dir):
         "upper_bound",
         "n_groups_kept",
     ).join(tru, "key")
-    summary.unpersist()
     return out.select(
         "rank", "key", "est", "upper_bound", "n_groups_kept", "true_cnt"
     )
@@ -8139,15 +8100,12 @@ def _mg_stream_store(spark, sf_dir: str) -> str:
 )
 def x_mg_topk_stream(spark, sf_dir):
     store = _mg_stream_store(spark, sf_dir)
-    out = _inc.read_mg_topk(spark, store, k=_MGS_K, m=_MGS_M)
-    res = out.select(
+    return _inc.read_mg_topk(spark, store, k=_MGS_K, m=_MGS_M).select(
         F.col("rank").cast("long").alias("rank"),
         "key",
         "est",
         "upper_bound",
     )
-    out.unpersist()
-    return res
 
 
 _LP_MIN_COMMON, _LP_TOPK = 2, 5
@@ -10159,17 +10117,19 @@ def _minhash_stream_store(
             store_sigs, store_bands = read_signature_store_slices(
                 spark, store, new_sigs, new_bands
             )
-            decisions = dedup_batch_against_store(
-                new_sigs, new_bands, store_sigs, store_bands,
-                threshold=0.8, max_bucket=_MAX_BUCKET,
-            ).persist()
-            write_batch(decisions, decisions_dir, b)
-            accepted = decisions.filter(F.col("dup_of").isNull()).select(
-                F.col("doc_id").alias("id")
-            )
-            for sub, new in (("sigs", new_sigs), ("bands", new_bands)):
-                write_batch(new.join(accepted, "id"), os.path.join(store, sub), b)
-            decisions.unpersist()
+            with cache_scope():
+                decisions = cached(dedup_batch_against_store(
+                    new_sigs, new_bands, store_sigs, store_bands,
+                    threshold=0.8, max_bucket=_MAX_BUCKET,
+                ))
+                write_batch(decisions, decisions_dir, b)
+                accepted = decisions.filter(F.col("dup_of").isNull()).select(
+                    F.col("doc_id").alias("id")
+                )
+                for sub, new in (("sigs", new_sigs), ("bands", new_bands)):
+                    write_batch(
+                        new.join(accepted, "id"), os.path.join(store, sub), b
+                    )
             if compact:
                 compact_minhash_store(spark, store, buckets=8,
                                       fanout=fanout)
@@ -13974,14 +13934,9 @@ _SUFFIX_GRAMS_SQL = f"""toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents)
     bench=True,
 )
 def x_suffix_span_pairs(spark, sf_dir):
-    # materialize=False (r13): under the count-window df-cap the anchor
-    # table has exactly ONE consumer subtree (the window; the self-join
-    # reuses it via ReusedExchange), so persist+eager-count only added a
-    # cache write plus a standalone job — measured 2.56 -> 1.26 s at
-    # sf0.1 together with the window cap, spans identical.
     out = _dd.suffix_span_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
-        k=8, min_len=16, max_df=64, materialize=False,
+        k=8, min_len=16, max_df=64,
     )
     return out.withColumn("span_len", F.col("span_len").cast("long"))
 

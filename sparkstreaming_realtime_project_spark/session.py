@@ -50,10 +50,11 @@ case and merely *sized down* locally:
   trigger, and the median trigger wall of the dashboard apps did not
   fall (1290 -> 1359 ms, 5 pairs on a 4-core host).
 
-The derived defaults (slot count, join state format, checkpoint manager)
-are applied only to a session ``get_spark`` starts; called on a running
-session it changes only what the caller passes. An ``extra_conf`` entry
-always wins.
+The fixed and derived defaults (slot count, join state format,
+checkpoint manager) and the app name are applied only to a session
+``get_spark`` starts; called on a running session it changes only
+``shuffle_partitions`` and the ``extra_conf`` entries. An ``extra_conf``
+entry always wins.
 """
 
 from __future__ import annotations
@@ -93,29 +94,36 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.ui.enabled", "false")
-        .config(PROVIDER, ROCKSDB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
     extra = extra_conf or {}
-    for k, v in extra.items():
-        builder = builder.config(k, v)
-    starting = SparkContext._active_spark_context is None
-    spark = builder.getOrCreate()
-    conf = {}
-    if starting:
+    running = SparkContext._active_spark_context is not None
+    conf: dict[str, str] = {}
+    if running:
+        # a running session keeps its confs and app name: a builder
+        # carrying options would copy every one of them onto it
+        spark = SparkSession.builder.getOrCreate()
+    else:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        builder = (
+            SparkSession.builder.appName(app_name)
+            .master(master or f"local[{cpus}]")
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+            .config("spark.sql.adaptive.skewJoin.enabled", "true")
+            .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .config("spark.sql.session.timeZone", "UTC")
+            .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
+            .config("spark.sql.parquet.filterPushdown", "true")
+            .config("spark.ui.enabled", "false")
+            .config(PROVIDER, ROCKSDB)
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            )
+        )
+        for k, v in extra.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
         # the slot count and default filesystem are known only once the
         # context is up
         conf = started_defaults(
@@ -125,7 +133,11 @@ def get_spark(
         )
     if shuffle_partitions:
         conf[SHUFFLE_PARTITIONS] = str(shuffle_partitions)
+    # an extra_conf entry wins; the builder already applied them to a
+    # session it started
+    if running:
+        conf.update(extra)
     for k, v in conf.items():
-        if k not in extra:
+        if running or k not in extra:
             spark.conf.set(k, v)
     return spark

@@ -47,6 +47,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.caching import cache_scope, cached
 from ..operators.dedup import (
     band_keys,
     jaccard_pairs,
@@ -342,27 +343,26 @@ def streaming_minhash_dedup(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         _guard_store_checkpoint(store_dir, checkpoint)
-        shingled = with_shingles(batch_df, text_col, id_col, n).persist()
-        new_sigs = shingled.select("id", "shingles")
-        new_bands = band_keys(minhash_signature(shingled, k), k, bands).persist()
-        store_sigs, band_slices = read_signature_store_slices(
-            spark, store_dir, new_sigs, new_bands, exclude_batch=batch_id
-        )
-        decisions = dedup_batch_against_store(
-            new_sigs, new_bands, store_sigs, band_slices, threshold, max_bucket
-        ).persist()
-        write_batch(decisions, decisions_dir, batch_id)
-        accepted = decisions.filter(F.col("dup_of").isNull()).select(
-            F.col("doc_id").alias("id")
-        )
-        for sub, new in (("sigs", new_sigs), ("bands", new_bands)):
-            write_batch(
-                new.join(accepted, "id"), os.path.join(store_dir, sub),
-                batch_id,
+        with cache_scope():
+            shingled = cached(with_shingles(batch_df, text_col, id_col, n))
+            new_sigs = shingled.select("id", "shingles")
+            new_bands = cached(band_keys(minhash_signature(shingled, k), k, bands))
+            store_sigs, band_slices = read_signature_store_slices(
+                spark, store_dir, new_sigs, new_bands, exclude_batch=batch_id
             )
-        decisions.unpersist()
-        new_bands.unpersist()
-        shingled.unpersist()
+            decisions = cached(dedup_batch_against_store(
+                new_sigs, new_bands, store_sigs, band_slices, threshold,
+                max_bucket,
+            ))
+            write_batch(decisions, decisions_dir, batch_id)
+            accepted = decisions.filter(F.col("dup_of").isNull()).select(
+                F.col("doc_id").alias("id")
+            )
+            for sub, new in (("sigs", new_sigs), ("bands", new_bands)):
+                write_batch(
+                    new.join(accepted, "id"), os.path.join(store_dir, sub),
+                    batch_id,
+                )
 
     return (
         doc_stream.writeStream.foreachBatch(write)
@@ -941,8 +941,8 @@ def capped_batch_anchors(
     (a semi-join-pruned aggregate, never an O(corpus) recount).
 
     Every later branch of the per-batch plan (each store slice and the
-    in-batch self-join) reads this frame, so a caller that persists it
-    plans and runs the cap's aggregates once per batch
+    in-batch self-join) reads this frame, so a caller that cuts it
+    (``cached()``) plans and runs the cap's aggregates once per batch
     (suffix_ingest_batch does)."""
     if max_df is None:
         return new_anchors
@@ -1019,8 +1019,8 @@ def suffix_batch_against_store(
     """The per-batch span decision as one pure plan:
     capped_batch_spans over capped_batch_anchors. Nothing in it is
     cached, so every branch re-plans the cap; the ingest body
-    (suffix_ingest_batch) persists the capped frame between the two
-    steps instead."""
+    (suffix_ingest_batch) cuts the capped frame between the two steps
+    instead."""
     return capped_batch_spans(
         capped_batch_anchors(new_anchors, store_gramdf, max_df),
         store_anchors, k, min_len,
@@ -1052,11 +1052,11 @@ def suffix_ingest_batch(
     The store read excludes ``batch_id`` (the phantom-dir replay guard
     of _tail).
 
-    The batch owns at most two caches, both released before return:
-    the capped batch anchors, which the df-cap aggregates fill once and
-    every store slice and the sibling self-join read; and, with
-    ``clean_dir``, the spans, which feed both the decisions and the
-    scrub. The store writes re-derive the anchors from ``batch_df``
+    The batch's ``cache_scope`` owns at most two cuts, both released
+    before return: the capped batch anchors, which the df-cap
+    aggregates fill once and every store slice and the sibling
+    self-join read; and, with ``clean_dir``, the spans, which feed both
+    the decisions and the scrub. The store writes re-derive the anchors from ``batch_df``
     (one narrow tokenize pass) rather than cache a third frame."""
     from ..operators.dedup import scrub_coverage
 
@@ -1066,11 +1066,11 @@ def suffix_ingest_batch(
         batch_df.sparkSession, store_dir, new_anchors, new_gramdf,
         exclude_batch=batch_id,
     )
-    capped = capped_batch_anchors(new_anchors, store_gramdf, max_df).persist()
-    spans = capped_batch_spans(capped, anchor_slices, k, min_len)
-    if clean_dir is not None:
-        spans = spans.persist()
-    try:
+    with cache_scope():
+        capped = cached(capped_batch_anchors(new_anchors, store_gramdf, max_df))
+        spans = capped_batch_spans(capped, anchor_slices, k, min_len)
+        if clean_dir is not None:
+            spans = cached(spans)
         write_batch(spans, decisions_dir, batch_id)
         if clean_dir is not None:
             removable = spans.select(
@@ -1082,9 +1082,6 @@ def suffix_ingest_batch(
             )
         write_batch(new_anchors, os.path.join(store_dir, "anchors"), batch_id)
         write_batch(new_gramdf, os.path.join(store_dir, "gramdf"), batch_id)
-    finally:
-        spans.unpersist()
-        capped.unpersist()
 
 
 def streaming_suffix_dedup(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.dates import derive_dt_hr
+from ..operators.caching import cache_scope, cached
 from ..operators.cdc import decode_op, parse_cdc, route_dims, route_facts
 from ..schemas import CDC_ENVELOPE_SCHEMA
 from ..operators.enrich import enrich_province, enrich_user
@@ -100,18 +101,17 @@ def log_split_pipeline(raw_stream: DataFrame, out_root: str, checkpoint: str):
     silently."""
     from ..operators.log_split import corrupt_log
 
-    # foreachBatch receives the RAW batch; parse once, fan out six ways.
+    outputs = {
+        name: (lambda b, n=name: split_all(b)[n])
+        for name in ("error", "page", "display", "action", "start")
+    }
+    outputs["corrupt"] = corrupt_log
+    route = split_writer(outputs, out_root)
+
+    # foreachBatch receives the RAW batch; parse once (split_writer cuts
+    # the parsed batch), fan out six ways.
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        p = parse_log(batch_df, keep_raw=True).persist()
-        try:
-            outputs = {
-                name: (lambda b, n=name: split_all(b)[n])
-                for name in ("error", "page", "display", "action", "start")
-            }
-            outputs["corrupt"] = corrupt_log
-            split_writer(outputs, out_root)(p, batch_id)
-        finally:
-            p.unpersist()
+        route(parse_log(batch_df, keep_raw=True), batch_id)
 
     return (
         raw_stream.writeStream.foreachBatch(write)
@@ -159,8 +159,8 @@ def cdc_route_pipeline(
             ).select(F.col("_raw").alias("raw_value"), reason.alias("reason")),
             f"{out_root}/corrupt", batch_id,
         )
-        decoded = decode_op(parse_cdc(batch_df)).persist()
-        try:
+        with cache_scope():
+            decoded = cached(decode_op(parse_cdc(batch_df)))
             # Single pass per side: partitionBy writes every topic/table
             # directory in ONE job — no driver round-trip, no dependence on
             # topic cardinality (replaces a collect()+filter-per-topic loop
@@ -192,8 +192,6 @@ def cdc_route_pipeline(
             write_batch(
                 latest, f"{out_root}/dims", batch_id, partition_by="table"
             )
-        finally:
-            decoded.unpersist()
 
     return (
         raw_stream.writeStream.foreachBatch(write)

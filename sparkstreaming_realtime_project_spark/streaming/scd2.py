@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.caching import cache_scope, cached
 from .sinks import batch_dir, batch_ids, read_batches, write_batch
 
 
@@ -131,36 +132,35 @@ def scd2_apply_batch(
     """One batch of SCD2 maintenance (the foreachBatch body, exposed so
     the replay/crash discipline is testable without a stream)."""
     spark = batch_df.sparkSession
-    new = batch_df.select(
-        F.col(key_col).alias("key"),
-        F.col(value_col).alias("value"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col(order_col).cast("long").alias("ord"),
-    ).persist()
-    if new.isEmpty():
-        new.unpersist()
-        return
-    affected = new.select("key").distinct()
-    # committed dirs only (a crashed first batch leaves a dir with no
-    # readable files — schema inference would fail) and strictly earlier
-    # batches only: a replayed batch must not read its own crashed
-    # attempt's partial output, nor overwrite a path its plan still
-    # reads.
-    earlier = [b for b in _committed(store_dir) if b < batch_id]
-    if earlier:
-        # affected-key semi-join FIRST so the max-batch aggregate runs
-        # on changed keys' rows, not the whole store
-        hist = read_batches(spark, store_dir, earlier).join(affected, "key")
-        latest = hist.groupBy("key").agg(F.max("batch").alias("batch"))
-        prior = (
-            hist.join(latest, ["key", "batch"])
-            .select("key", "value", F.col("valid_from_us").alias("ts_us"), "ord")
-        )
-        merged = prior.unionByName(new)
-    else:
-        merged = new
-    write_batch(scd2_intervals(merged), store_dir, batch_id)
-    new.unpersist()
+    with cache_scope():
+        new = cached(batch_df.select(
+            F.col(key_col).alias("key"),
+            F.col(value_col).alias("value"),
+            F.unix_micros(F.col(ts_col)).alias("ts_us"),
+            F.col(order_col).cast("long").alias("ord"),
+        ))
+        if new.isEmpty():
+            return
+        affected = new.select("key").distinct()
+        # committed dirs only (a crashed first batch leaves a dir with no
+        # readable files — schema inference would fail) and strictly earlier
+        # batches only: a replayed batch must not read its own crashed
+        # attempt's partial output, nor overwrite a path its plan still
+        # reads.
+        earlier = [b for b in _committed(store_dir) if b < batch_id]
+        if earlier:
+            # affected-key semi-join FIRST so the max-batch aggregate runs
+            # on changed keys' rows, not the whole store
+            hist = read_batches(spark, store_dir, earlier).join(affected, "key")
+            latest = hist.groupBy("key").agg(F.max("batch").alias("batch"))
+            prior = (
+                hist.join(latest, ["key", "batch"])
+                .select("key", "value", F.col("valid_from_us").alias("ts_us"), "ord")
+            )
+            merged = prior.unionByName(new)
+        else:
+            merged = new
+        write_batch(scd2_intervals(merged), store_dir, batch_id)
 
 
 def scd2_sink(

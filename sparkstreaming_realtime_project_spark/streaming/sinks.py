@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.caching import cache_scope, cached
+
 
 def batch_dir(root: str, batch_id: int) -> str:
     return os.path.join(root, f"batch={batch_id}")
@@ -541,37 +543,35 @@ def merge_into(
         F.lit(True).alias("__s"),
     )
     t = tgt.withColumn("__t", F.lit(True))
-    j = t.join(s, on=key_cols, how="full_outer").persist()
-    stats = j.groupBy().agg(
-        F.sum(F.when(F.col("__t") & F.col("__s") & ~F.col("__del"), 1)
-              .otherwise(0)).alias("updated"),
-        F.sum(F.when(F.col("__t") & F.col("__s") & F.col("__del"), 1)
-              .otherwise(0)).alias("deleted"),
-        F.sum(F.when(F.col("__t").isNull() & ~F.col("__del"), 1)
-              .otherwise(0)).alias("inserted"),
-        F.sum(F.when(F.col("__s").isNull(), 1).otherwise(0)).alias("kept"),
-    ).collect()[0]
-    merged = j.filter(
-        # survivors: kept targets, updates, inserts — not deletes, not
-        # delete-flagged non-matches
-        F.col("__s").isNull() | ~F.col("__del")
-    ).select(
-        *key_cols,
-        *[
-            F.when(F.col("__s").isNotNull(), F.col(f"__src_{c}"))
-            .otherwise(F.col(c))
-            .alias(c)
-            for c in val_cols
-        ],
-    )
-    through = -1 if man is None else man["through_batch"]
-    high = max(batch_ids(out_dir, through), default=through)
-    try:
+    with cache_scope():
+        j = cached(t.join(s, on=key_cols, how="full_outer"))
+        stats = j.groupBy().agg(
+            F.sum(F.when(F.col("__t") & F.col("__s") & ~F.col("__del"), 1)
+                  .otherwise(0)).alias("updated"),
+            F.sum(F.when(F.col("__t") & F.col("__s") & F.col("__del"), 1)
+                  .otherwise(0)).alias("deleted"),
+            F.sum(F.when(F.col("__t").isNull() & ~F.col("__del"), 1)
+                  .otherwise(0)).alias("inserted"),
+            F.sum(F.when(F.col("__s").isNull(), 1).otherwise(0)).alias("kept"),
+        ).collect()[0]
+        merged = j.filter(
+            # survivors: kept targets, updates, inserts — not deletes, not
+            # delete-flagged non-matches
+            F.col("__s").isNull() | ~F.col("__del")
+        ).select(
+            *key_cols,
+            *[
+                F.when(F.col("__s").isNotNull(), F.col(f"__src_{c}"))
+                .otherwise(F.col(c))
+                .alias(c)
+                for c in val_cols
+            ],
+        )
+        through = -1 if man is None else man["through_batch"]
+        high = max(batch_ids(out_dir, through), default=through)
         gen_dir = commit_generation(
             out_dir, merged, high, partition_col, retain_generations
         )
-    finally:
-        j.unpersist()
     return {
         "gen": int(gen_dir.rsplit("=", 1)[1]),
         "updated": int(stats.updated),
@@ -698,16 +698,14 @@ def split_writer(outputs: dict[str, "DataFrameFn"], out_root: str):
     its own directory (OdsBaseLogApp.scala:93-208 wrote 5 Kafka topics).
 
     ``outputs`` maps name -> function(batch_df) -> DataFrame. The batch is
-    persisted once and reused — the reference's pageLogDStream.cache()
-    idiom (DwdDauApp.scala:70,81, P14)."""
+    cached once per trigger and reused — the reference's
+    pageLogDStream.cache() idiom (DwdDauApp.scala:70,81, P14)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
+        with cache_scope():
+            batch_df = cached(batch_df)
             for name, fn in outputs.items():
                 write_batch(fn(batch_df), os.path.join(out_root, name), batch_id)
-        finally:
-            batch_df.unpersist()
 
     return write
 

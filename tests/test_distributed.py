@@ -204,37 +204,3 @@ def test_ntile_exact_no_keyless_window_over_data(spark):
     assert "rangepartitioning" in plan
     assert "ntile" not in plan
     spark.catalog.clearCache()
-
-
-def test_release_persisted_frees_prefix_sum_caches(spark):
-    """Every prefix_sums call persists its range-partitioned frame;
-    release_persisted() must free them all (long-session hygiene) and
-    a consumer re-collecting after release still gets correct sums."""
-    from sparkstreaming_realtime_project_spark.operators.distributed import (
-        release_persisted,
-    )
-
-    release_persisted()  # drain anything earlier tests left behind
-    from sparkstreaming_realtime_project_spark.operators.distributed import (
-        _PERSISTED,
-    )
-
-    # earlier tests may leave localCheckpoint RDDs that only the
-    # ContextCleaner reclaims (clearCache doesn't touch them, and it
-    # runs CONCURRENTLY) — so assert on the module's own persisted-
-    # handle registry, not on a racy JVM-wide persistent-RDD count
-    jsc = spark.sparkContext._jsc.sc()
-    base = jsc.getPersistentRDDs().size()
-    df = spark.createDataFrame([(i, 1) for i in range(40)], "k int, one int")
-    out = prefix_sums(df, ["k"], ["one"])
-    before = {r["k"]: r["one_cum"] for r in out.collect()}
-    assert len(_PERSISTED) == 1  # the range-partitioned frame is tracked
-    assert release_persisted() == 1
-    assert not _PERSISTED
-    # the JVM count can only have gone down or stayed level: our frame
-    # was freed and the cleaner never adds
-    assert jsc.getPersistentRDDs().size() <= base
-    assert release_persisted() == 0  # idempotent
-    # recompute after release is still exact (labels already baked in)
-    assert {r["k"]: r["one_cum"] for r in out.collect()} == before
-    release_persisted()

@@ -158,7 +158,7 @@ def test_jaccard_df_cap_drops_only_boilerplate(spark, sf_dir):
     corpus the capped and uncapped answers agree (near-dup pairs share
     rare shingles by construction)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = dd.with_shingles(docs, "text", "doc_id", 3, materialize=True)
+    sh = dd.with_shingles(docs, "text", "doc_id", 3)
     capped = {
         (r["doc_a"], r["doc_b"])
         for r in dd.jaccard_pairs(sh, 0.8, max_df=10).collect()
@@ -933,7 +933,7 @@ def test_sorted_neighborhood_contained_and_linear(spark, sf_dir):
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
     got = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in snm.collect()}
     snm.unpersist()
-    sh = dd.with_shingles(docs, "text", "doc_id", 3, materialize=True)
+    sh = dd.with_shingles(docs, "text", "doc_id", 3)
     exact = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
         for r in dd.jaccard_pairs(sh, 0.8).collect()
@@ -1638,9 +1638,7 @@ def test_winnow_shared_fps_index_identical_and_caller_owned(spark, sf_dir):
             docs, "text", "doc_id", n=3, w=4, max_df=50
         ).collect()
     }
-    idx = dd.winnow_fingerprints(
-        docs, "text", "doc_id", n=3, w=4, materialize=True
-    )
+    idx = dd.winnow_fingerprints(docs, "text", "doc_id", n=3, w=4)
     try:
         shared = {
             (r["doc_a"], r["doc_b"], r["n_shared"])
@@ -2628,7 +2626,7 @@ def test_suffix_span_pairs_exact(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = dd2.suffix_span_pairs(
-        df, "text", "doc_id", k=8, min_len=16, max_df=None, materialize=True
+        df, "text", "doc_id", k=8, min_len=16, max_df=None
     )
     got = {
         (r.doc_a, r.doc_b, r.a_start, r.a_end, r.b_start, r.b_end, r.span_len)
@@ -2794,7 +2792,7 @@ def test_suffix_recall_hot_boilerplate_cap_binds(spark):
     assert 0 < r.pair_recall < 0.01
     # and the surviving pair's span is the unique one, exactly
     found = dd2.suffix_span_pairs(
-        df, "text", "doc_id", k=8, min_len=16, max_df=8, materialize=True
+        df, "text", "doc_id", k=8, min_len=16, max_df=8
     )
     got = {(p.doc_a, p.doc_b, p.span_len) for p in found.collect()}
     found.unpersist()
@@ -2836,7 +2834,7 @@ def test_suffix_span_cap_healing_bridges_hot_interior(spark):
     rows += [(10 + j, f"f{j}_1 {H} f{j}_2") for j in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = dd2.suffix_span_pairs(
-        df, "text", "doc_id", k=8, min_len=16, max_df=8, materialize=True
+        df, "text", "doc_id", k=8, min_len=16, max_df=8
     )
     got = [
         (r.doc_a, r.doc_b, r.span_len)
@@ -2864,7 +2862,7 @@ def test_suffix_scrub_pair_precision(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = dd2.suffix_scrub(
-        df, "text", "doc_id", k=8, min_len=16, max_df=None, materialize=True
+        df, "text", "doc_id", k=8, min_len=16, max_df=None
     )
     got = {r.doc_id: (r.clean_text, r.n_tokens, r.n_removed) for r in out.collect()}
     out.unpersist()
@@ -2933,7 +2931,7 @@ def test_suffix_self_spans_within_doc_repeats(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = dd2.suffix_self_spans(
-        df, "text", "doc_id", k=8, min_len=16, max_df=None, materialize=True
+        df, "text", "doc_id", k=8, min_len=16, max_df=None
     )
     got = {
         (r.doc_id, r.dist, r.a_start, r.a_end, r.b_start, r.b_end, r.span_len)
@@ -3004,7 +3002,7 @@ def test_suffix_self_scrub_keeps_first_occurrence(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = dd2.suffix_self_scrub(
-        df, "text", "doc_id", k=8, min_len=16, max_df=None, materialize=True
+        df, "text", "doc_id", k=8, min_len=16, max_df=None
     )
     got = {r.doc_id: (r.clean_text.split(), r.n_removed) for r in out.collect()}
     out.unpersist()

@@ -718,8 +718,8 @@ def test_plan_default_no_cartesian(spark, sf_dir, name):
 
 
 def test_suffix_span_pairs_plan(spark, sf_dir):
-    """Round-11 suffix dedup contracts (un-materialized plan — the
-    catalog path persists the gram cut, which would hide the shape):
+    """Round-11 suffix dedup contracts (the plan has no cut that would
+    hide the shape):
     the df-cap + diagonal merge must be a gram-keyed equi-join plus a
     fine-grained (pair, diag)-KEYED run merge — never a nested-loop or
     cartesian pair blow-up, and no single-task global window. Since r14
@@ -732,7 +732,7 @@ def test_suffix_span_pairs_plan(spark, sf_dir):
 
     df = dd.suffix_span_pairs(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        k=8, min_len=16, max_df=64, materialize=False,
+        k=8, min_len=16, max_df=64,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the df-cap count window survives; the run merge is an aggregate
@@ -760,7 +760,7 @@ def test_detail_keyset_plan(spark, sf_dir):
 
 
 def test_suffix_scrub_plan(spark, sf_dir):
-    """Round-12 scrub contracts (un-materialized): the apply step must
+    """Round-12 scrub contracts (no cut): the apply step must
     keep the text out of every shuffle — the coverage side that joins
     back onto the token arrays is a doc_id-keyed aggregate of POSITION
     lists — and stays equi-join-only (no cartesian/nested-loop), with
@@ -775,7 +775,7 @@ def test_suffix_scrub_plan(spark, sf_dir):
         (dd.suffix_scrub, r"doc_a#\d+L?, doc_b#\d+L?, diag#\d+"),
         (dd.suffix_self_scrub, r"doc_id#\d+L?, dist#\d+"),
     ):
-        df = fn(docs, "text", "doc_id", materialize=False)
+        df = fn(docs, "text", "doc_id")
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan and "NestedLoop" not in plan
         assert re.search(part, plan), f"{fn.__name__}: run-merge window lost"

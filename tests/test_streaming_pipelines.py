@@ -58,15 +58,11 @@ def _release_dim_caches(spark):
 
 @pytest.fixture
 def cli(spark):
-    """The launcher's ``main``. It calls ``get_spark``, which on the shared
-    test session re-applies the package's fixed confs (the values the
-    session started with) and renames the app, but derives nothing: the
-    partition count stays. The fixture puts the app name back."""
+    """The launcher's ``main``. It calls ``get_spark``, which leaves the
+    shared test session's confs and app name as they are."""
     from sparkstreaming_realtime_project_spark.__main__ import main
 
-    before = spark.conf.get("spark.app.name")
-    yield main
-    spark.conf.set("spark.app.name", before)
+    return main
 
 
 def as_of():
@@ -995,6 +991,24 @@ def test_get_spark_on_a_running_session_derives_nothing(spark):
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+def test_get_spark_on_a_running_session_keeps_caller_confs(spark):
+    """A conf the caller changed on the running session, and the app
+    name, survive a second ``get_spark``: none of the package's fixed
+    confs is copied back onto the session."""
+    from sparkstreaming_realtime_project_spark import session as S
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    name = spark.conf.get("spark.app.name")
+    try:
+        spark.conf.set(key, "1234")
+        s = S.get_spark(app_name="x")
+        assert s.conf.get(key) == "1234"
+        assert s.conf.get("spark.app.name") == name
+    finally:
+        spark.conf.set(key, before)
 
 
 def _run_in_new_process(script: str, *args: str) -> None:
