@@ -35,19 +35,12 @@ def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> DataFrame:
     compares with the string *td* by casting, and a driver-side string
     compare would not.
     """
+    yd = F.date_format(F.date_sub(F.to_date(F.lit(td)), 1), "yyyy-MM-dd")
     return (
-        dau.filter(dau_days(td))
+        dau.filter(F.col("dt").isin([td]) | (F.col("dt") == yd))
         .groupBy((F.col("dt") == td).alias("is_td"), "hr")
         .agg(F.count(key).alias("ct"))
     )
-
-
-def dau_days(td: str) -> Column:
-    """The rows :func:`dau_realtime` reads: ``dt`` is *td* or the day
-    before it, td-1 derived inside the plan (Spark's date cast accepts
-    more spellings of *td* than an ISO parse does)."""
-    yd = F.date_format(F.date_sub(F.to_date(F.lit(td)), 1), "yyyy-MM-dd")
-    return F.col("dt").isin([td]) | (F.col("dt") == yd)
 
 
 def on_date(date: str, date_col: str = "dt") -> Column:

@@ -111,16 +111,22 @@ def http_base(dau_table, wide_table):
     server.server_close()
 
 
-def _get(url: str):
-    import json
-    from urllib.request import urlopen
+def _get_raw(url: str) -> tuple[int, bytes]:
     from urllib.error import HTTPError
+    from urllib.request import urlopen
 
     try:
         with urlopen(url) as resp:
-            return resp.status, json.loads(resp.read().decode("utf-8"))
+            return resp.status, resp.read()
     except HTTPError as e:
-        return e.code, json.loads(e.read().decode("utf-8"))
+        return e.code, e.read()
+
+
+def _get(url: str):
+    import json
+
+    status, body = _get_raw(url)
+    return status, json.loads(body.decode("utf-8"))
 
 
 def test_http_dau_realtime(http_base):
@@ -335,12 +341,17 @@ def test_http_reflects_live_streaming_sink(spark, tmp_path):
     mode, serve read_sink via the HTTP façade, then land MORE source
     files and replay — the SAME running server must reflect the second
     run's committed state on its next request (the analog of the
-    reference's Spring app querying live daily ES indices)."""
+    reference's Spring app querying live daily ES indices). The test
+    owns the dim projections the dau query caches and releases them."""
     import json as _json
 
     from sparkstreaming_realtime_project_spark.http_api import (
         publisher_server,
         serve_in_background,
+    )
+    from sparkstreaming_realtime_project_spark.operators.enrich import (
+        province_side,
+        user_side,
     )
     from sparkstreaming_realtime_project_spark.sources.streams import text_stream
     from sparkstreaming_realtime_project_spark.streaming.pipelines import dau_pipeline
@@ -349,6 +360,7 @@ def test_http_reflects_live_streaming_sink(spark, tmp_path):
 
     from . import streaming_fixtures as fx
 
+    before = _persistent_rdds(spark)
     in_dir, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     fx.write_log_fixture(in_dir)
     dim_user, dim_province = fx.dim_frames(spark)
@@ -397,6 +409,9 @@ def test_http_reflects_live_streaming_sink(spark, tmp_path):
     finally:
         server.shutdown()
         server.server_close()
+        user_side(dim_user).unpersist()
+        province_side(dim_province).unpersist()
+    assert _persistent_rdds(spark) == before
 
 
 def test_cjk_query_matches_unspaced_sku(wide_table, spark):
@@ -483,6 +498,35 @@ def test_http_detail_keyset_error_contracts(http_base):
         f"{http_base}/detailByItem?date=2024-01-02&itemName={q}&pageSize="
     )
     assert status == 200 and out["total"] == 3
+
+
+def test_http_paging_params_out_of_range_are_400s(http_base):
+    """A page number below 1, a negative page size, or a size or page
+    end past Spark's int limit is a client fault: 400 with a JSON error body
+    naming the param, in both /detailByItem modes (Spark would fail the
+    plan with a 500). A zero page size is a count-only page."""
+    from urllib.parse import quote
+
+    base = f"{http_base}/detailByItem?date=2024-01-02&itemName={quote('小米')}"
+    for query, name in [
+        ("&pageNo=0", "pageNo"),
+        ("&pageNo=-1", "pageNo"),
+        ("&pageSize=-5", "pageSize"),
+        ("&pageSize=100000000000", "pageSize"),
+        ("&pageNo=2147483648", "pageNo"),
+        ("&pageNo=2&pageSize=2147483647", "pageNo"),
+        ("&pageNo=3&pageSize=1073741823", "pageNo"),
+        ("&afterTime=&afterId=&pageSize=-1", "pageSize"),
+        ("&afterTime=&afterId=&pageSize=100000000000", "pageSize"),
+    ]:
+        status, out = _get(base + query)
+        assert status == 400 and name in out["error"], (query, status, out)
+    status, out = _get(base + "&pageSize=0")
+    assert status == 200 and out == {"total": 3, "detail": []}
+    status, out = _get(base + "&pageNo=2&pageSize=1073741823")
+    assert status == 200 and out == {"total": 3, "detail": []}
+    status, out = _get(base + "&pageSize=2147483647")
+    assert status == 200 and [d["detail_id"] for d in out["detail"]] == [4, 2, 1]
 
 
 def test_keyset_full_walk_reconstructs_total_order(wide_table, spark):
@@ -581,6 +625,7 @@ def _paths(valid: bool) -> list[str]:
     return [
         "/dauRealtime?td=2024-1-2",  # Spark's date cast accepts it
         "/dauRealtime?td=abc",
+        "/dauRealtime?td=2024-13-45",
         "/dauRealtime",
         f"/statsByItem?itemName={one}&date=abc&t=age",
         f"/statsByItem?itemName={one}&date=abc&t=city",  # bad t wins
@@ -607,9 +652,10 @@ def _answers(base: str, paths: list[str]) -> list:
 
 
 def _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths):
-    """The same routes with slicing switched off, over a fresh read of
-    each sink per request (a fresh read is a new relation, so Spark's
-    cache lookup cannot substitute the other server's slices into it)."""
+    """The same routes with slicing and stored responses switched off,
+    over a fresh read of each sink per request (a fresh read is a new
+    relation, so Spark's cache lookup cannot substitute the other
+    server's slices into it)."""
     from sparkstreaming_realtime_project_spark import http_api
     from sparkstreaming_realtime_project_spark.http_api import (
         publisher_server,
@@ -618,7 +664,8 @@ def _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths):
     from sparkstreaming_realtime_project_spark.streaming import sinks
 
     with monkeypatch.context() as m:
-        m.setattr(http_api._Slices, "get", lambda self, *_: (None, "miss"))
+        m.setattr(http_api._Slices, "get", lambda self, *_: (None, None, None, "miss"))
+        m.setattr(http_api._Slices, "keep", lambda self, *_: None)
         server = publisher_server(
             lambda: sinks._read_committed(spark, dau_dir),
             lambda: _wide_frame(sinks._read_committed(spark, wide_dir), dt_type),
@@ -656,16 +703,32 @@ def test_slices_answer_like_the_uncached_routes(
     """Every route, its 400s and 500s included, answers from the slices
     exactly what it answers with slicing off — uncached, filling and
     warm, with the wide ``dt`` a string and a DATE (a malformed date
-    fails the DATE cast; when ``t`` is bad too, the 400 still wins)."""
+    fails the DATE cast; when ``t`` is bad too, the 400 still wins).
+    With the response store on, every 200 is stored and a repeat
+    answers its stored bytes; no 400, 404 or 500 is ever stored."""
+    from sparkstreaming_realtime_project_spark import http_api
+
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
     paths = _paths(True) + _paths(False)
     want = _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, dt_type, paths)
     assert [a[1] for a in want].count(500) >= 2  # the malformed dates
+    assert {a[1] for a in want} == {200, 400, 404, 500}
+    assert next(st for p, st, _ in want if p.endswith("pageNo=0")) == 400
     server, base = _cached_server(spark, dau_dir, wide_dir, dt_type)
     try:
-        assert _answers(base, paths) == want  # first asks: uncached
-        assert _answers(base, paths) == want  # second: cut and fill the slices
-        assert _answers(base, paths) == want  # warm: serves them
+        with monkeypatch.context() as m:  # the slices alone
+            m.setattr(http_api._Slices, "keep", lambda self, *_: None)
+            assert _answers(base, paths) == want  # first asks: uncached
+            assert _answers(base, paths) == want  # second: cut and fill the slices
+            assert _answers(base, paths) == want  # warm: serves them
+        stored = [_get_raw(base + p) for p in paths]  # misses; each 200 stored
+        ok = [i for i, (status, _) in enumerate(stored) if status == 200]
+        assert [s[1] for s in want] == [s for s, _ in stored]
+        assert sum(len(s.bodies) for s in server.slices._held.values()) == len(ok)
+        again = [_get_raw(base + p) for p in paths]  # the 200s hit
+        assert [again[i] for i in ok] == [stored[i] for i in ok]
+        assert _answers(base, paths) == want
+        assert sum(len(s.bodies) for s in server.slices._held.values()) == len(ok)
     finally:
         server.shutdown()
         server.server_close()
@@ -675,7 +738,8 @@ def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypat
     """A running server answers like the uncached routes after a new
     batch commits, after a batch is rewritten in place behind Spark's
     back (a replay by another process: same dirs, new files) and after
-    ``compact_sink``."""
+    ``compact_sink``: each drops the changed sink's stored responses and
+    slices, and only that sink's."""
     import shutil
 
     from sparkstreaming_realtime_project_spark.streaming.sinks import (
@@ -684,17 +748,25 @@ def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypat
     )
 
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
-    paths = _paths(True)[::2]  # dau td, dau no-day, stats, offset p2, keyset
+    # dau td, dau no-day, stats, then three pages of one wide day (its
+    # slice's miss, fill and hit)
+    paths = _paths(True)[::2] + _paths(True)[9:]
 
     def want():
         return _uncached_answers(monkeypatch, spark, dau_dir, wide_dir, "string", paths)
 
     server, base = _cached_server(spark, dau_dir, wide_dir, "string")
 
-    def served():
-        """The routes asked three times (uncached, fill, hit)."""
+    def served(changed=("dau", "wide")):
+        """The routes asked three times (slice miss, fill and hit within
+        the wide day, then stored responses); ``changed`` names the
+        sinks whose snapshot a commit replaced since the last call."""
+        held = dict(server.slices._held)
         got = [_answers(base, paths) for _ in range(3)]
         assert got[1] == got[0] and got[2] == got[0]
+        for name, snap in held.items():
+            assert (server.slices._held[name] is not snap) == (name in changed), name
+        assert ("wide", "2024-01-02") in _held(server, cut=True)
         return got[0]
 
     try:
@@ -724,7 +796,7 @@ def test_slices_follow_commits(spark, dau_table, wide_table, tmp_path, monkeypat
         )
         shutil.rmtree(f"{dau_dir}/batch=2")
         shutil.move(f"{side}/batch=2", f"{dau_dir}/batch=2")
-        after_replay = served()
+        after_replay = served(changed=("dau",))
         assert after_replay == want() and after_replay[0][2]["dauTd"]["03"] == 2
         compact_sink(spark, dau_dir, ["mid", "dt"])
         compact_sink(spark, wide_dir, ["detail_id"], partition_col="create_date")
@@ -748,19 +820,23 @@ def _last_execution(spark) -> int:
 
 def test_repeated_request_reads_the_cached_slice(spark, dau_table, wide_table, tmp_path):
     """Once the slice is cut (on the second request for its day), a
-    repeated request's executed plans scan the slice's InMemoryRelation;
-    none of them scans a parquet file."""
+    later request for that day's executed plans scan the slice's
+    InMemoryRelation; none of them scans a parquet file. A repeated
+    request runs no plan at all: its response is stored."""
     from urllib.parse import quote
 
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
     server, base = _cached_server(spark, dau_dir, wide_dir, "string")
-    path = f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t=age"
+    path = f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t="
     try:
-        assert _get(base + path)[0] == 200
-        assert _get(base + path)[0] == 200
+        assert _get(base + path + "age")[0] == 200
+        assert _get(base + path + "gender")[0] == 200
         last = _last_execution(spark)
-        assert _get(base + path)[0] == 200
+        assert _get(base + path.replace(quote("小米"), quote("手机")) + "age")[0] == 200
         plans = [e.physicalPlanDescription() for e in _executions_after(spark, last)]
+        last = _last_execution(spark)
+        assert _get(base + path + "gender")[0] == 200
+        assert _executions_after(spark, last) == []
     finally:
         server.shutdown()
         server.server_close()
@@ -774,10 +850,14 @@ def _persistent_rdds(spark) -> int:
     return len(spark.sparkContext._jsc.getPersistentRDDs())
 
 
-def _held(server) -> list[tuple[str, str]]:
-    """(provider, day) of every slice the server holds."""
+def _held(server, cut: bool = False) -> list[tuple[str, str]]:
+    """(provider, day) of every day the server tracks, or only of the
+    days it holds a slice of."""
     return sorted(
-        (name, day) for name, (_, days) in server.slices._held.items() for day in days
+        (name, day)
+        for name, snap in server.slices._held.items()
+        for day, s in snap.days.items()
+        if s is not None or not cut
     )
 
 
@@ -785,8 +865,8 @@ def test_concurrent_cold_requests_cut_one_slice_per_date(
     spark, dau_table, wide_table, tmp_path
 ):
     """Requests racing on a cold server (twice as many threads as cores,
-    a short switch interval, two dates) leave exactly one cached slice
-    per date."""
+    a short switch interval, two dates, a different page each) leave
+    exactly one cached slice per date."""
     import sys
     import threading
     from urllib.parse import quote
@@ -800,7 +880,10 @@ def test_concurrent_cold_requests_cut_one_slice_per_date(
     def request(i):
         date = ("2024-01-01", "2024-01-02")[i % 2]
         gate.wait()
-        got.append(_get(f"{base}/statsByItem?itemName={quote('小米')}&date={date}&t=age"))
+        got.append(_get(
+            f"{base}/detailByItem?itemName={quote('小米')}&date={date}"
+            f"&pageNo={i // 2 + 1}&pageSize=1"
+        ))
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
@@ -822,28 +905,75 @@ def test_concurrent_cold_requests_cut_one_slice_per_date(
         server.server_close()
 
 
+def test_concurrent_identical_cold_requests_agree(spark, dau_table, wide_table, tmp_path):
+    """Identical requests racing on a cold server all answer 200 with the
+    same bytes, and the server keeps one body for them."""
+    import sys
+    import threading
+    from urllib.parse import quote
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    n = 2 * max(2, os.cpu_count() or 2)
+    gate, got = threading.Barrier(n), []
+    url = f"{base}/detailByItem?itemName={quote('小米')}&date=2024-01-02&pageSize=2"
+
+    def request():
+        gate.wait()
+        got.append(_get_raw(url))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=request) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert len(got) == n and {s for s, _ in got} == {200}
+        assert len({b for _, b in got}) == 1
+        assert [len(s.bodies) for s in server.slices._held.values()] == [1]
+        assert _get_raw(url) == got[0]
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
 def test_server_close_releases_its_slices(spark, dau_table, wide_table, tmp_path):
     """``server_close()`` brings the context's persistent-RDD count back
-    to where it was before the server cached anything."""
+    to where it was before the server cached anything, and empties the
+    response store."""
     from urllib.parse import quote
 
     dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
     before = _persistent_rdds(spark)
     server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    stats = f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t="
+    detail = f"/detailByItem?date=2024-01-01&itemName={quote('小米')}"
     for p in [
+        "/dauRealtime?td=2024-01-02",  # stored, then answered from the store
         "/dauRealtime?td=2024-01-02",
-        f"/statsByItem?itemName={quote('小米')}&date=2024-01-02&t=age",
-        f"/detailByItem?date=2024-01-01&itemName={quote('小米')}",
-    ] * 2:
+        stats + "age",  # each wide day: a miss, then a different page fills it
+        stats + "gender",
+        detail,
+        detail + "&pageSize=1",
+    ]:
         assert _get(base + p)[0] == 200
-    assert _persistent_rdds(spark) == before + 3
+    assert _persistent_rdds(spark) == before + 2
+    assert sum(len(s.bodies) for s in server.slices._held.values()) == 5
     server.shutdown()
     server.server_close()
     assert _persistent_rdds(spark) == before
+    assert server.slices._held == {}
 
 
 def test_request_log_line(spark, dau_table, wide_table, caplog):
-    """One INFO line per request: route, status, ms and the slice state."""
+    """One INFO line per request: route, status, ms, the slice state and
+    the response state."""
     import logging
     import re
     import time
@@ -862,7 +992,9 @@ def test_request_log_line(spark, dau_table, wide_table, caplog):
         serve_in_background(server)
         host, port = server.server_address
         try:
-            paths = ["/detailByItem?date=2024-01-02&itemName=x"] * 3 + ["/nope", "/dauRealtime"]
+            detail = "/detailByItem?date=2024-01-02&itemName=x&pageNo="
+            paths = [detail + "1", detail + "2", detail + "3", detail + "3",
+                     "/dauRealtime?td=2024-01-02", "/nope", "/dauRealtime"]
             for i, p in enumerate(paths, 1):
                 _get(f"http://{host}:{port}{p}")
                 # the line is logged just after the response is written
@@ -872,14 +1004,16 @@ def test_request_log_line(spark, dau_table, wide_table, caplog):
         finally:
             server.shutdown()
             server.server_close()
-    assert len(lines()) == 5, lines()
-    pat = r"^(/\w+) (\d+) \d+\.\d ms slice=(\S+)$"
+    assert len(lines()) == 7, lines()
+    pat = r"^(/\w+) (\d+) \d+\.\d ms slice=(\S+) resp=(\S+)$"
     assert [re.match(pat, x).groups() for x in lines()] == [
-        ("/detailByItem", "200", "miss"),
-        ("/detailByItem", "200", "fill"),
-        ("/detailByItem", "200", "hit"),
-        ("/nope", "404", "-"),
-        ("/dauRealtime", "400", "-"),
+        ("/detailByItem", "200", "miss", "miss"),
+        ("/detailByItem", "200", "fill", "miss"),
+        ("/detailByItem", "200", "hit", "miss"),
+        ("/detailByItem", "200", "-", "hit"),
+        ("/dauRealtime", "200", "-", "miss"),
+        ("/nope", "404", "-", "-"),
+        ("/dauRealtime", "400", "-", "-"),
     ]
 
 
@@ -903,7 +1037,7 @@ def test_slices_stay_bounded(spark, dau_table, wide_table, tmp_path):
         dates = [f"2024-02-{d:02d}" for d in range(1, _DAYS_KEPT + 3)] + ["abc"]
         for date in ["2024-01-01", "2024-01-02", *dates]:
             assert _get(stats + date)[0] == 200  # uncached
-            assert _get(stats + date)[0] == 200  # cuts the slice
+            assert _get(stats.replace("age", "gender") + date)[0] == 200  # cuts the slice
         assert _held(server) == sorted(("wide", d) for d in dates[-_DAYS_KEPT:])
         assert _persistent_rdds(spark) == before + _DAYS_KEPT
         idempotent_partitioned_writer(wide_dir, ["detail_id"], "create_date")(
@@ -913,12 +1047,12 @@ def test_slices_stay_bounded(spark, dau_table, wide_table, tmp_path):
             ).withColumnRenamed("dt", "create_date"),
             2,
         )
-        for _ in range(3):
-            status, body = _get(stats + "2024-01-02")
+        for t in ("age", "gender", "age"):  # miss, fill, stored
+            status, body = _get(stats.replace("age", t) + "2024-01-02")
             assert status == 200 and sum(b["value"] for b in body) == 180.0 + 9.0
         assert _held(server) == [("wide", "2024-01-02")]
         assert _persistent_rdds(spark) == before + 1
-        held = [s for _, days in server.slices._held.values() for s in days.values()]
+        held = [s for snap in server.slices._held.values() for s in snap.days.values()]
         assert all(s.users == 0 for s in held if s is not None)
     finally:
         server.shutdown()
@@ -934,24 +1068,74 @@ def test_dropped_slice_outlives_its_last_user(spark, wide_table):
     from pyspark.sql import functions as F
 
     from sparkstreaming_realtime_project_spark.http_api import _Slices
-    from sparkstreaming_realtime_project_spark.plans.serving import on_date
 
     old, new = (wide_table.withColumn("snap", F.lit(n)) for n in (1, 2))
     slices = _Slices()
-    assert slices.get("wide", old, "2024-01-02", on_date) == (None, "miss")
-    a, state = slices.get("wide", old, "2024-01-02", on_date)
+
+    def get(frame):
+        _, body, s, state = slices.get("wide", frame, ("route",), "2024-01-02")
+        assert body is None
+        return s, state
+
+    assert get(old) == (None, "miss")
+    a, state = get(old)
     assert state == "fill" and a.users == 1
     assert a.frame.count() == 4  # the request's action fills the slice
-    assert slices.get("wide", new, "2024-01-02", on_date) == (None, "miss")  # a commit
+    assert get(new) == (None, "miss")  # a commit
     assert a.retired
     assert a.frame.storageLevel == StorageLevel.MEMORY_AND_DISK  # still in use
     slices.done(a)
     assert a.frame.storageLevel == StorageLevel.NONE
-    b, state = slices.get("wide", new, "2024-01-02", on_date)
-    again, state2 = slices.get("wide", new, "2024-01-02", on_date)
+    b, state = get(new)
+    again, state2 = get(new)
     assert (state, state2) == ("fill", "hit") and again is b and b.users == 2
     slices.release()  # the server closes with b in use
     assert b.frame.storageLevel == StorageLevel.MEMORY_AND_DISK
     slices.done(b)
     slices.done(b)
     assert b.frame.storageLevel == StorageLevel.NONE
+
+
+def test_stored_responses_stay_bounded(spark, dau_table, wide_table, tmp_path, monkeypatch):
+    """A provider's stored bodies never pass ``_BODY_BYTES`` in all: the
+    least recently served go first, and a body larger than the bound is
+    not kept and pushes nothing out. Every answer is unchanged."""
+    from urllib.parse import quote
+
+    from sparkstreaming_realtime_project_spark import http_api
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    detail = f"/detailByItem?date=2024-01-02&itemName={quote('小米')}"
+    pages = [(1, 1), (2, 1), (3, 1), (1, 3)]  # (pageNo, pageSize)
+    path = {p: f"{detail}&pageNo={p[0]}&pageSize={p[1]}" for p in pages}
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+    try:
+        want = {p: _get_raw(base + path[p]) for p in pages}
+    finally:
+        server.shutdown()
+        server.server_close()
+    size = {p: len(want[p][1]) for p in pages}
+    bound = 2 * max(size[p] for p in pages[:3])
+    assert size[(1, 1)] + size[(2, 1)] + size[(3, 1)] > bound < size[(1, 3)]
+    monkeypatch.setattr(http_api, "_BODY_BYTES", bound)
+    server, base = _cached_server(spark, dau_dir, wide_dir, "string")
+
+    def stored():
+        snap = server.slices._held["wide"]
+        assert snap.size == sum(map(len, snap.bodies.values())) <= bound
+        return [k[-2:] for k in snap.bodies]
+
+    try:
+        for p, kept in [
+            ((1, 1), [(1, 1)]),
+            ((2, 1), [(1, 1), (2, 1)]),
+            ((1, 1), [(2, 1), (1, 1)]),  # a hit is served most recently
+            ((3, 1), [(1, 1), (3, 1)]),  # the least recently served goes
+            ((1, 3), [(1, 1), (3, 1)]),  # too large to keep
+            ((1, 3), [(1, 1), (3, 1)]),
+        ]:
+            assert _get_raw(base + path[p]) == want[p]
+            assert stored() == kept, p
+    finally:
+        server.shutdown()
+        server.server_close()

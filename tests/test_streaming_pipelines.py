@@ -1011,9 +1011,87 @@ def test_get_spark_on_a_running_session_keeps_caller_confs(spark):
         spark.conf.set(key, before)
 
 
-def _run_in_new_process(script: str, *args: str) -> None:
-    """Run ``script`` in a fresh interpreter (its own JVM, so the suite's
-    session lives on) and expect it to print ``ok``."""
+_GET_SPARK_SCRIPT = """
+from sparkstreaming_realtime_project_spark import session as S
+
+small = {"spark.driver.memory": "512m"}
+s = S.get_spark(app_name="t", master="local[2]", extra_conf=small)
+assert s.conf.get(S.SHUFFLE_PARTITIONS) == "2"
+assert s.conf.get(S.JOIN_STATE_FORMAT) == "3"
+assert s.conf.get(S.CHECKPOINT_MANAGER) == S.RENAME_COMMITS
+s.stop()
+s = S.get_spark(
+    app_name="t", master="local[2]", shuffle_partitions=3, extra_conf=small
+)
+assert s.conf.get(S.SHUFFLE_PARTITIONS) == "3"
+s.stop()
+mine = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+explicit = {
+    S.SHUFFLE_PARTITIONS: "5", S.JOIN_STATE_FORMAT: "2",
+    S.CHECKPOINT_MANAGER: mine,
+}
+s = S.get_spark(
+    app_name="t", master="local[2]", shuffle_partitions=3,
+    extra_conf={**small, **explicit},
+)
+assert s.conf.get(S.SHUFFLE_PARTITIONS) == "5"
+assert s.conf.get(S.JOIN_STATE_FORMAT) == "2"
+assert s.conf.get(S.CHECKPOINT_MANAGER) == mine
+s.stop()
+"""
+
+_NEW_CONTEXT_SCRIPT = """
+from pyspark.sql import SparkSession
+from sparkstreaming_realtime_project_spark.streaming import sinks
+
+def session():
+    return (
+        SparkSession.builder.master("local[1]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "512m")
+        .getOrCreate()
+    )
+
+s1 = session()
+sinks.idempotent_partitioned_writer(out, ["k"], "p")(
+    s1.createDataFrame([("k1", "v1", 1)], "k string, v string, p int"), 0
+)
+first = sinks.read_sink(s1, out)
+assert sinks.read_sink(s1, out) is first
+s1.stop()
+s2 = session()
+second = sinks.read_sink(s2, out)
+assert second is not first
+assert sinks.read_sink(s2, out) is second
+assert len(sinks._SNAPSHOTS) == 1
+assert [tuple(r) for r in second.collect()] == [("k1", "v1", 1)]
+s2.stop()
+"""
+
+# Runs each script in turn, in its own namespace, and prints
+# {name: "ok" or its traceback} as the last line.
+_RUNNER = """
+import json, sys, traceback
+results = {}
+for name, (src, env) in json.loads(sys.argv[1]).items():
+    try:
+        exec(compile(src, name, "exec"), {"__name__": name, **env})
+        results[name] = "ok"
+    except BaseException:
+        results[name] = traceback.format_exc()
+print(json.dumps(results))
+"""
+
+
+@pytest.fixture(scope="module")
+def new_process(tmp_path_factory) -> dict[str, str]:
+    """The scripts that need a fresh interpreter (its own JVM, so the
+    suite's session lives on), run one after the other in ONE such
+    interpreter, which starts one JVM for both: {name: "ok" or the
+    script's traceback}. Each script stops every session it starts."""
     import subprocess
     import sys
 
@@ -1024,53 +1102,25 @@ def _run_in_new_process(script: str, *args: str) -> None:
             p for p in (root, os.environ.get("PYTHONPATH")) if p
         ),
     }
+    scripts = {
+        "get_spark": (_GET_SPARK_SCRIPT, {}),
+        "new_context": (
+            _NEW_CONTEXT_SCRIPT, {"out": str(tmp_path_factory.mktemp("new_context") / "sink")}
+        ),
+    }
     res = subprocess.run(
-        [sys.executable, "-c", script, *args],
+        [sys.executable, "-c", _RUNNER, json.dumps(scripts)],
         cwd=root, env=env, capture_output=True, text=True, timeout=300,
     )
-    assert res.returncode == 0 and res.stdout.strip().endswith("ok"), res.stderr[-3000:]
+    assert res.returncode == 0, res.stderr[-3000:]
+    return json.loads(res.stdout.strip().splitlines()[-1])
 
 
-def test_get_spark_sizes_shuffle_partitions_to_task_slots():
+def test_get_spark_sizes_shuffle_partitions_to_task_slots(new_process):
     """A session ``get_spark`` starts gets one partition per task slot,
     join state format 3 and rename commits (the default filesystem is
     local); an explicit argument or ``extra_conf`` entry wins over each."""
-    import textwrap
-
-    _run_in_new_process(textwrap.dedent(
-        """
-        from sparkstreaming_realtime_project_spark import session as S
-
-        small = {"spark.driver.memory": "512m"}
-        s = S.get_spark(app_name="t", master="local[2]", extra_conf=small)
-        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "2"
-        assert s.conf.get(S.JOIN_STATE_FORMAT) == "3"
-        assert s.conf.get(S.CHECKPOINT_MANAGER) == S.RENAME_COMMITS
-        s.stop()
-        s = S.get_spark(
-            app_name="t", master="local[2]", shuffle_partitions=3, extra_conf=small
-        )
-        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "3"
-        s.stop()
-        mine = (
-            "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileContextBasedCheckpointFileManager"
-        )
-        explicit = {
-            S.SHUFFLE_PARTITIONS: "5", S.JOIN_STATE_FORMAT: "2",
-            S.CHECKPOINT_MANAGER: mine,
-        }
-        s = S.get_spark(
-            app_name="t", master="local[2]", shuffle_partitions=3,
-            extra_conf={**small, **explicit},
-        )
-        assert s.conf.get(S.SHUFFLE_PARTITIONS) == "5"
-        assert s.conf.get(S.JOIN_STATE_FORMAT) == "2"
-        assert s.conf.get(S.CHECKPOINT_MANAGER) == mine
-        s.stop()
-        print("ok")
-        """
-    ))
+    assert new_process["get_spark"] == "ok", new_process["get_spark"]
 
 
 def test_quota_per_key_caps_across_batches(spark, tmp_path):
@@ -1691,44 +1741,10 @@ def test_read_sink_snapshot_under_concurrent_readers(spark, tmp_path):
     }
 
 
-def test_read_sink_new_context_builds_a_new_snapshot(tmp_path):
+def test_read_sink_new_context_builds_a_new_snapshot(new_process):
     """A snapshot kept under one SparkContext is never returned under
     the next one (a separate process, so the suite's session lives on)."""
-    import textwrap
-
-    script = textwrap.dedent(
-        """
-        import sys
-        from pyspark.sql import SparkSession
-        from sparkstreaming_realtime_project_spark.streaming import sinks
-
-        def session():
-            return (
-                SparkSession.builder.master("local[1]")
-                .config("spark.ui.enabled", "false")
-                .config("spark.driver.memory", "512m")
-                .getOrCreate()
-            )
-
-        out = sys.argv[1]
-        s1 = session()
-        sinks.idempotent_partitioned_writer(out, ["k"], "p")(
-            s1.createDataFrame([("k1", "v1", 1)], "k string, v string, p int"), 0
-        )
-        first = sinks.read_sink(s1, out)
-        assert sinks.read_sink(s1, out) is first
-        s1.stop()
-        s2 = session()
-        second = sinks.read_sink(s2, out)
-        assert second is not first
-        assert sinks.read_sink(s2, out) is second
-        assert len(sinks._SNAPSHOTS) == 1
-        assert [tuple(r) for r in second.collect()] == [("k1", "v1", 1)]
-        s2.stop()
-        print("ok")
-        """
-    )
-    _run_in_new_process(script, str(tmp_path / "sink"))
+    assert new_process["new_context"] == "ok", new_process["new_context"]
 
 
 def test_crawl_frontier_dedup_on_canonical_url(spark, tmp_path):
