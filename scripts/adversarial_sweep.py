@@ -18,8 +18,14 @@ frames with lazy caches (operators/caching.py): under AQE a cache stage
 fills a cut before its consumers read it; without AQE plain RDD block
 caching fills it from whichever consumer runs first. So every cut's
 shared-read assumption (prefix_sums' one range partitioning above all)
-is checked under both fill paths. Each set runs in a fresh interpreter, so no
-session state or process-level memo of one set leaks into the other.
+is checked under both fill paths. A third set, ``escaped_literals``, turns on
+``spark.sql.parser.escapedStringLiterals``: the parser then keeps a string
+literal's backslashes as written, and a raw ``r'…'`` literal keeps its
+opening quote, so every builder that splices a literal or a regex into
+parsed SQL (``tokens_expr``, ``text_match``/``highlight``, the serving
+plans) must spell it for the session's setting. Each set runs in a fresh
+interpreter, so no session state or process-level memo of one set leaks
+into the others.
 
 Run once per round after registry changes:
 ``python scripts/adversarial_sweep.py [sf_dir] [entry ...]``.
@@ -42,6 +48,7 @@ CONF_SETS = {
         "spark.sql.autoBroadcastJoinThreshold": "1KB",
     },
     "no_aqe": {"spark.sql.adaptive.enabled": "false"},
+    "escaped_literals": {"spark.sql.parser.escapedStringLiterals": "true"},
 }
 
 

@@ -63,6 +63,17 @@ cache answering a repeated search from memory until the index refreshes.
 - One lock guards both (requests run on their own threads), and
   ``server_close()`` drops every slice and response the server holds.
 
+Cost of a miss: a request that misses the stored responses builds its
+route's plan and runs its Spark job(s), nothing more. The builders
+construct from parsed SQL fragments (plans/serving.py docstring:
+guarded names and literals, one parse instead of a py4j Column chain),
+under a session whose Python call-site capture is off
+(``session.get_spark``). ``/detailByItem``'s offset mode runs its total
+and its page as two concurrent actions (``publisher.detail_by_item_json``);
+the total is an aggregate of its own, not an ``Observation`` on the
+page, which counts only the rows the page pulls and never reports for
+a page at or past the end.
+
 Logging: one INFO line per request on this module's logger (route,
 status, ms, ``slice=hit|fill|miss|-``, ``resp=hit|miss|-``: ``-`` for a
 request that never looked its response up, such as a 404 or a missing

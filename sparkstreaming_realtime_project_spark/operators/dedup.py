@@ -24,12 +24,12 @@ throughput (same topology).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .caching import cached
-from .sqltext import plain_ident, plain_literal
+from .sqltext import plain_ident, plain_literal, regex_literal
 
 _HEX = "0123456789abcdef"
 
@@ -61,13 +61,15 @@ def tokens_expr(text_col: str | Column) -> Column:
     profile: the expression-heavy builders spent 0.3-0.8 s per plan
     build in py4j, ~3x more than Catalyst itself). The parsed tree is
     the same filter(split(lower(..)))) expression, so plans and results
-    are bit-identical. The regex is a RAW string literal (r'\\s+'):
-    unlike '\\\\s+', its meaning does not flip if a host session enables
-    the Hive-compat spark.sql.parser.escapedStringLiterals flag
-    (ADVICE r13) — the parsed branch now matches the Column branch
-    under every parser config."""
+    are bit-identical. The split regex is spelled by
+    ``sqltext.regex_literal`` for the session's
+    spark.sql.parser.escapedStringLiterals, so the parsed branch matches
+    the Column branch under either setting (a raw r'\\s+' literal does
+    not: with the flag on it parses with a leading quote and splits
+    nothing)."""
     if isinstance(text_col, str) and plain_ident(text_col):
-        return F.expr(f"filter(split(lower({text_col}), r'\\s+'), t -> t != '')")
+        split = regex_literal(SparkSession.active(), r"\s+")
+        return F.expr(f"filter(split(lower({text_col}), {split}), t -> t != '')")
     if isinstance(text_col, str):
         text_col = F.col(text_col)
     return F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != F.lit(""))

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import re
 
+ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
+
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
@@ -29,3 +31,20 @@ def plain_literal(text: str) -> bool:
     else takes the caller's Column-API branch (``F.lit``), where no
     parser is involved."""
     return "'" not in text and "\\" not in text
+
+
+def regex_literal(spark, pattern: str) -> str | None:
+    """``pattern`` as a single-quoted SQL string literal that parses back
+    to exactly ``pattern`` under ``spark``'s current
+    ``spark.sql.parser.escapedStringLiterals``: backslashes doubled when
+    the parser unescapes them (the default), verbatim when the flag is
+    on. None for a pattern holding a quote or ending in a backslash,
+    which one spelling cannot carry through both lexers; the caller then
+    takes its Column-API branch. A raw literal (``r'\\s+'``) is no
+    way out: with the flag on, Spark 4.1 keeps the raw literal's opening
+    quote in its value, so ``r'\\s+'`` reads as ``'\\s+``."""
+    if "'" in pattern or pattern.endswith("\\"):
+        return None
+    if spark.conf.get(ESCAPED_LITERALS) == "true":
+        return f"'{pattern}'"
+    return "'" + pattern.replace("\\", "\\\\") + "'"

@@ -19,6 +19,9 @@ reader (no gmall_dau_info_1018 skew).
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 
 from .serving import (
@@ -27,6 +30,35 @@ from .serving import (
     detail_by_item_keyset,
     stats_by_item,
 )
+
+
+T = TypeVar("T")
+U = TypeVar("U")
+
+
+def _beside(first: Callable[[], T], second: Callable[[], U]) -> tuple[T, U]:
+    """``(first(), second())`` with ``first`` run on an
+    ``InheritableThread`` while ``second`` runs here, so the caller's job
+    group and other local properties tag the jobs of both. An error is
+    raised as running them one after the other would: ``first``'s before
+    ``second``'s."""
+    out: dict = {}
+
+    def run() -> None:
+        try:
+            out["value"] = first()
+        except BaseException as e:  # noqa: BLE001 (re-raised on the caller's thread)
+            out["error"] = e
+
+    t = InheritableThread(target=run)
+    t.start()
+    try:
+        b = second()
+    finally:
+        t.join()
+        if "error" in out:
+            raise out["error"]
+    return out["value"], b
 
 
 def dau_realtime_json(dau: DataFrame, td: str, key: str = "mid") -> dict:
@@ -65,14 +97,22 @@ def detail_by_item_json(
 ) -> dict:
     """GET /detailByItem?date&itemName&pageNo&pageSize
     (PublisherController.java:44-58): {"total": N, "detail": [rows]} with
-    sku_name highlighted in the page slice."""
+    sku_name highlighted in the page slice.
+
+    The total and the page are two actions run at the same time
+    (:func:`_beside`), so a request waits for the slower of them rather
+    than their sum. The total is its own aggregate, not an
+    ``Observation`` on the page: an observed count counts the rows the
+    page's plan happens to pull through it, not the day's matches, and
+    over a page at or past the end it never reports, so
+    ``Observation.get`` blocks."""
     total_df, page_df = detail_by_item(
         wide, date, item_name, page_no=page_no, page_size=page_size
     )
-    total_rows = total_df.collect()
+    total_rows, page_rows = _beside(total_df.collect, page_df.collect)
     return {
         "total": total_rows[0]["total"] if total_rows else 0,
-        "detail": [r.asDict() for r in page_df.collect()],
+        "detail": [r.asDict() for r in page_rows],
     }
 
 

@@ -50,11 +50,22 @@ case and merely *sized down* locally:
   trigger, and the median trigger wall of the dashboard apps did not
   fall (1290 -> 1359 ms, 5 pairs on a 4-core host).
 
+- PySpark's DataFrame call-site capture is off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``pyspark.sql.functions`` and Column builder walks the Python
+  stack and makes extra JVM round trips to record where it was called
+  from, so plan construction costs several times its py4j floor.
+  Off, an analysis or execution error loses its ``== DataFrame ==``
+  block naming the Python line that built the failing expression; the
+  error class, message and SQL context stay. PySpark reads the conf
+  once per process, from the first active session that asks, and keeps
+  the answer: a later session with another value does not change it.
+
 The fixed and derived defaults (slot count, join state format,
-checkpoint manager) and the app name are applied only to a session
-``get_spark`` starts; called on a running session it changes only
-``shuffle_partitions`` and the ``extra_conf`` entries. An ``extra_conf``
-entry always wins.
+checkpoint manager, call-site capture) and the app name are applied
+only to a session ``get_spark`` starts; called on a running session it
+changes only ``shuffle_partitions`` and the ``extra_conf`` entries. An
+``extra_conf`` entry always wins.
 """
 
 from __future__ import annotations
@@ -68,6 +79,7 @@ from pyspark.sql import SparkSession
 PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+CALL_SITES = "spark.python.sql.dataFrameDebugging.enabled"
 JOIN_STATE_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
 CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 RENAME_COMMITS = (
@@ -94,6 +106,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The running session, or a new one with the module's defaults.
+
+    A session started here has call-site capture off: its error
+    messages carry no ``== DataFrame ==`` call-site block, and PySpark
+    caches that answer once per process, so a later session started
+    with ``extra_conf={CALL_SITES: "true"}`` reads the conf as true but
+    PySpark keeps capture off until the process restarts."""
     extra = extra_conf or {}
     running = SparkContext._active_spark_context is not None
     conf: dict[str, str] = {}
@@ -116,6 +135,7 @@ def get_spark(
             .config("spark.sql.parquet.filterPushdown", "true")
             .config("spark.ui.enabled", "false")
             .config(PROVIDER, ROCKSDB)
+            .config(CALL_SITES, "false")
             .config(
                 "spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

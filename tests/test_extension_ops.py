@@ -668,6 +668,69 @@ def test_sql_literal_seeds_hash_the_callers_bytes(spark, seed, salt):
         spark.conf.set(conf, old)
 
 
+_QUERY = st.lists(  # quotes, backslashes, regex metacharacters, CJK, Latin words, blanks
+    st.sampled_from(["'", "\\", "\\b", ".", "*", "(", ")", "[", "$1", "|", "+", "?"])
+    | st.sampled_from(["小", "米", "手机", "δδ", "Spark", "join", "a.b", " ", "\t"]),
+    max_size=6,
+).map("".join) | st.sampled_from(["", " ", "\t \n"])
+
+
+@given(query=_QUERY)
+@settings(max_examples=8, deadline=None)  # 4 Spark jobs per example
+def test_text_builders_parse_to_the_column_branch(spark, query):
+    """text_match/highlight over a column NAME build from parsed SQL when
+    the query passes the literal guard, else from Columns; either way
+    they select and render the rows the Column branch does, whether or
+    not the parser unescapes backslashes (escapedStringLiterals)."""
+    from sparkstreaming_realtime_project_spark.functions import text as T
+    from sparkstreaming_realtime_project_spark.operators.sqltext import plain_literal
+
+    texts = [
+        "小米 手机 12", "Spark JOIN demo", "a.b (c) $1 x|y+z? [q]", "it's \\b",
+        "δδ Δδ", query, f"pre {query} post", None,
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf)
+    try:
+        for raw in ("false", "true"):
+            spark.conf.set(conf, raw)
+            parsed = T.text_match_sql(spark, "s", query) is not None
+            assert parsed == plain_literal(query), (raw, query)
+            got, want = (
+                sorted(
+                    df.filter(match("s", query))
+                    .select(hl("s", query).alias("h"))
+                    .collect(),
+                    key=str,
+                )
+                for match, hl in (
+                    (T.text_match, T.highlight),
+                    (lambda c, q: T.text_match(F.col(c), q), lambda c, q: T.highlight(F.col(c), q)),
+                )
+            )
+            assert got == want, (raw, query)
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_tokens_expr_splits_under_either_parser_setting(spark):
+    """The parsed ``tokens_expr`` splits on whitespace with
+    escapedStringLiterals on too: a raw r'\\s+' literal kept its opening
+    quote there and split nothing, so every parsed tokenizer read a
+    document as one token."""
+    df = spark.createDataFrame([("a b\tc",)], "s string")
+    conf = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(conf)
+    try:
+        for raw in ("false", "true"):
+            spark.conf.set(conf, raw)
+            got = df.select(dd.tokens_expr("s"), dd.tokens_expr(F.col("s"))).first()
+            assert list(got) == [["a", "b", "c"]] * 2, raw
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_suffix_runs_to_spans_pair_cols_named_like_fold_fields(spark):
     """Pair columns named s/e or bmin/bmax (the fold's old field names)
     give the same spans as any other names."""

@@ -574,6 +574,36 @@ def test_stats_by_item_runs_two_jobs(spark, wide_table):
     assert jobs <= 2, jobs
 
 
+def test_serving_builders_parse_to_the_column_branch_plans(
+    spark, dau_table, wide_table, monkeypatch
+):
+    """Every serving builder given plain names and literals builds from
+    parsed SQL, and its plans are the ones its Column-API branch (taken
+    when the literal guard refuses) builds for the same arguments."""
+    from sparkstreaming_realtime_project_spark.functions import text
+    from sparkstreaming_realtime_project_spark.plans import serving
+
+    cursor = "2024-01-02 11:00:00"
+
+    def build():
+        return [
+            serving.dau_realtime(dau_table, "2024-01-02"),
+            serving.stats_by_item(wide_table, "小米 手机", "2024-01-02", "gender"),
+            serving.stats_by_item(wide_table, "小米", "2024-01-02", "age"),
+            *serving.detail_by_item(wide_table, "2024-01-02", "小米", 2, 2),
+            serving.detail_by_item_keyset(wide_table, "2024-01-02", "小米", after=(cursor, 2)),
+            serving.detail_by_item_keyset(wide_table, "2024-01-02", "小米", after=(cursor, 2**40)),
+        ]
+
+    parsed = build()
+    with monkeypatch.context() as m:
+        for mod in (serving, text):
+            m.setattr(mod, "plain_literal", lambda _: False)
+        column = build()
+    assert [p.sameSemantics(c) for p, c in zip(parsed, column)] == [True] * len(parsed)
+    assert [p.collect() for p in parsed] == [c.collect() for c in column]
+
+
 # --- serving cache: the server's per-date slices ----------------------------
 
 
@@ -1139,3 +1169,91 @@ def test_stored_responses_stay_bounded(spark, dau_table, wide_table, tmp_path, m
     finally:
         server.shutdown()
         server.server_close()
+
+
+# --- /detailByItem: the total beside the page --------------------------------
+
+
+def _sequential(first, second):
+    return first(), second()
+
+
+def test_detail_total_beside_page_answers_like_the_sequential_path(
+    spark, dau_table, wide_table, tmp_path, monkeypatch
+):
+    """The offset route runs its total beside its page. A page past the
+    end, ``pageSize=0``, an item with no match and a malformed date
+    against a DATE ``dt`` answer the status and body they answer with
+    the two actions run one after the other."""
+    from urllib.parse import quote
+
+    from sparkstreaming_realtime_project_spark.plans import publisher
+
+    dau_dir, wide_dir = _write_sinks(spark, tmp_path, dau_table, wide_table)
+    one = quote("小米")
+    paths = [
+        f"/detailByItem?date=2024-01-02&itemName={one}&pageNo=3&pageSize=2",
+        f"/detailByItem?date=2024-01-02&itemName={one}&pageSize=0",
+        f"/detailByItem?date=2024-01-02&itemName={quote('不存在')}",
+        f"/detailByItem?date=abc&itemName={one}",
+    ]
+
+    def answers():
+        server, base = _cached_server(spark, dau_dir, wide_dir, "date")
+        try:
+            return _answers(base, paths)
+        finally:
+            server.shutdown()
+            server.server_close()
+
+    got = answers()
+    with monkeypatch.context() as m:
+        m.setattr(publisher, "_beside", _sequential)
+        want = answers()
+    assert got == want
+    assert [a[1:] for a in want[:3]] == [
+        (200, {"total": 3, "detail": []}),
+        (200, {"total": 3, "detail": []}),
+        (200, {"total": 0, "detail": []}),
+    ]
+    assert want[3][1] == 500
+
+
+def test_detail_total_and_page_jobs_carry_the_callers_job_group(
+    spark, wide_table, monkeypatch
+):
+    """Both actions of ``detail_by_item_json`` run under the job group
+    the caller set: the group counts as many jobs as it does with the
+    actions run one after the other on the caller's thread."""
+    from sparkstreaming_realtime_project_spark.plans import publisher
+
+    from . import streaming_fixtures as fx
+
+    def call():
+        return detail_by_item_json(wide_table, "2024-01-02", "小米", page_no=1, page_size=2)
+
+    got, jobs = fx.count_jobs(spark, call)
+    with monkeypatch.context() as m:
+        m.setattr(publisher, "_beside", _sequential)
+        want, seq_jobs = fx.count_jobs(spark, call)
+    assert got == want and got["total"] == 3
+    assert jobs == seq_jobs >= 2, (jobs, seq_jobs)
+
+
+def test_beside_raises_like_the_sequential_order(spark):
+    """The first call's error wins when both fail; the second's
+    surfaces when it fails alone; values come back in call order."""
+    from sparkstreaming_realtime_project_spark.plans.publisher import _beside
+
+    def fail(msg):
+        def f():
+            raise RuntimeError(msg)
+        return f
+
+    assert _beside(lambda: 1, lambda: 2) == (1, 2)
+    with pytest.raises(RuntimeError, match="first"):
+        _beside(fail("first"), fail("second"))
+    with pytest.raises(RuntimeError, match="second"):
+        _beside(lambda: 1, fail("second"))
+    with pytest.raises(RuntimeError, match="first"):
+        _beside(fail("first"), lambda: 2)

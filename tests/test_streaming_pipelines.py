@@ -1012,6 +1012,7 @@ def test_get_spark_on_a_running_session_keeps_caller_confs(spark):
 
 
 _GET_SPARK_SCRIPT = """
+from pyspark.errors import utils as E
 from sparkstreaming_realtime_project_spark import session as S
 
 small = {"spark.driver.memory": "512m"}
@@ -1019,6 +1020,17 @@ s = S.get_spark(app_name="t", master="local[2]", extra_conf=small)
 assert s.conf.get(S.SHUFFLE_PARTITIONS) == "2"
 assert s.conf.get(S.JOIN_STATE_FORMAT) == "3"
 assert s.conf.get(S.CHECKPOINT_MANAGER) == S.RENAME_COMMITS
+assert s.conf.get(S.CALL_SITES) == "false"
+assert E.is_debugging_enabled() is False
+E._enable_debugging_cache = None  # PySpark's once-per-process answer
+assert E.is_debugging_enabled() is False  # read again from this session
+s.stop()
+s = S.get_spark(app_name="t", master="local[2]", extra_conf={**small, S.CALL_SITES: "true"})
+assert s.conf.get(S.CALL_SITES) == "true"
+E._enable_debugging_cache = None
+assert E.is_debugging_enabled() is True
+assert S.get_spark(app_name="u").conf.get(S.CALL_SITES) == "true"  # running: left alone
+E._enable_debugging_cache = None
 s.stop()
 s = S.get_spark(
     app_name="t", master="local[2]", shuffle_partitions=3, extra_conf=small
@@ -1118,8 +1130,10 @@ def new_process(tmp_path_factory) -> dict[str, str]:
 
 def test_get_spark_sizes_shuffle_partitions_to_task_slots(new_process):
     """A session ``get_spark`` starts gets one partition per task slot,
-    join state format 3 and rename commits (the default filesystem is
-    local); an explicit argument or ``extra_conf`` entry wins over each."""
+    join state format 3, rename commits (the default filesystem is
+    local) and call-site capture off, which PySpark then reports as off;
+    an explicit argument or ``extra_conf`` entry wins over each, and
+    ``get_spark`` on a running session leaves the capture conf alone."""
     assert new_process["get_spark"] == "ok", new_process["get_spark"]
 
 
