@@ -22,8 +22,8 @@ is checked under both fill paths. A third set, ``escaped_literals``, turns on
 ``spark.sql.parser.escapedStringLiterals``: the parser then keeps a string
 literal's backslashes as written, and a raw ``r'…'`` literal keeps its
 opening quote, so every builder that splices a literal or a regex into
-parsed SQL (``tokens_expr``, ``text_match``/``highlight``, the serving
-plans) must spell it for the session's setting. Each set runs in a fresh
+parsed SQL (``dedup.tokens_expr`` and the other ``sqltext``-guarded
+fragments) must spell it for the session's setting. Each set runs in a fresh
 interpreter, so no session state or process-level memo of one set leaks
 into the others.
 

@@ -64,15 +64,15 @@ cache answering a repeated search from memory until the index refreshes.
   ``server_close()`` drops every slice and response the server holds.
 
 Cost of a miss: a request that misses the stored responses builds its
-route's plan and runs its Spark job(s), nothing more. The builders
-construct from parsed SQL fragments (plans/serving.py docstring:
-guarded names and literals, one parse instead of a py4j Column chain),
-under a session whose Python call-site capture is off
-(``session.get_spark``). ``/detailByItem``'s offset mode runs its total
-and its page as two concurrent actions (``publisher.detail_by_item_json``);
-the total is an aggregate of its own, not an ``Observation`` on the
-page, which counts only the rows the page pulls and never reports for
-a page at or past the end.
+route's plan and runs its Spark job(s), nothing more. The builders use
+the Column API with every request value as a literal, never as SQL
+text (plans/serving.py docstring: Spark's parser would substitute
+``${...}`` variables in it), under a session whose Python call-site
+capture is off (``session.get_spark``). ``/detailByItem``'s offset mode
+runs its total and its page as two concurrent actions
+(``publisher.detail_by_item_json``); the total is an aggregate of its
+own, not an ``Observation`` on the page, which counts only the rows the
+page pulls and never reports for a page at or past the end.
 
 Logging: one INFO line per request on this module's logger (route,
 status, ms, ``slice=hit|fill|miss|-``, ``resp=hit|miss|-``: ``-`` for a

@@ -27,10 +27,14 @@ def plain_ident(name: str) -> bool:
 def plain_literal(text: str) -> bool:
     """True when ``text`` can be spliced into a single-quoted SQL string
     literal as-is: no quote and no backslash, so the parsed bytes do
-    not depend on ``spark.sql.parser.escapedStringLiterals``. Anything
-    else takes the caller's Column-API branch (``F.lit``), where no
-    parser is involved."""
-    return "'" not in text and "\\" not in text
+    not depend on ``spark.sql.parser.escapedStringLiterals``, and no
+    ``$``, so Spark's variable substitution
+    (``spark.sql.variable.substitute``, on by default), which rewrites
+    ``${env:X}``, ``${system:X}`` and ``${<conf>}`` in the SQL text before
+    parsing and ignores quotes, cannot change or leak into the value.
+    Anything else takes the caller's Column-API branch (``F.lit``), where
+    no parser is involved."""
+    return not any(c in text for c in "'\\$")
 
 
 def regex_literal(spark, pattern: str) -> str | None:
@@ -39,11 +43,12 @@ def regex_literal(spark, pattern: str) -> str | None:
     ``spark.sql.parser.escapedStringLiterals``: backslashes doubled when
     the parser unescapes them (the default), verbatim when the flag is
     on. None for a pattern holding a quote or ending in a backslash,
-    which one spelling cannot carry through both lexers; the caller then
-    takes its Column-API branch. A raw literal (``r'\\s+'``) is no
-    way out: with the flag on, Spark 4.1 keeps the raw literal's opening
+    which one spelling cannot carry through both lexers, or holding a
+    ``$``, which variable substitution may rewrite (see
+    :func:`plain_literal`); the caller then takes its Column-API
+    branch. A raw literal (``r'\\s+'``) is no way out: with the flag on, Spark 4.1 keeps the raw literal's opening
     quote in its value, so ``r'\\s+'`` reads as ``'\\s+``."""
-    if "'" in pattern or pattern.endswith("\\"):
+    if "'" in pattern or "$" in pattern or pattern.endswith("\\"):
         return None
     if spark.conf.get(ESCAPED_LITERALS) == "true":
         return f"'{pattern}'"

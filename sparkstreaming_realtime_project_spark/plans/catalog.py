@@ -734,7 +734,7 @@ def a_stats_by_item_segment(spark, sf_dir):
         .otherwise(F.col("c_mktsegment"))
     )
     return (
-        li.join(F.broadcast(p.filter(text_match("p_name", PART_QUERY))),
+        li.join(F.broadcast(p.filter(text_match(F.col("p_name"), PART_QUERY))),
                 li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -766,7 +766,7 @@ def a_stats_by_item_band(spark, sf_dir):
         .otherwise("30plus")
     )
     return (
-        li.join(F.broadcast(p.filter(text_match("p_name", PART_QUERY))),
+        li.join(F.broadcast(p.filter(text_match(F.col("p_name"), PART_QUERY))),
                 li.l_partkey == p.p_partkey)
         .groupBy(band.alias("name"))
         .agg(F.round(F.sum("l_extendedprice"), 2).alias("value"))
@@ -853,8 +853,8 @@ _DOC_HL_SQL = (
 )
 def f_text_match_highlight(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return docs.filter(text_match("text", ITEM_QUERY)).select(
-        "doc_id", highlight("text", ITEM_QUERY).alias("sku_name")
+    return docs.filter(text_match(F.col("text"), ITEM_QUERY)).select(
+        "doc_id", highlight(F.col("text"), ITEM_QUERY).alias("sku_name")
     )
 
 
@@ -903,8 +903,8 @@ def f_text_match_cjk(spark, sf_dir):
     sku = docs.select(
         "doc_id", F.concat(brand, model, kind).alias("sku_name")
     )
-    return sku.filter(text_match("sku_name", CJK_QUERY)).select(
-        "doc_id", highlight("sku_name", CJK_QUERY).alias("sku_name")
+    return sku.filter(text_match(F.col("sku_name"), CJK_QUERY)).select(
+        "doc_id", highlight(F.col("sku_name"), CJK_QUERY).alias("sku_name")
     )
 
 
@@ -983,11 +983,11 @@ def f_datetime_split(spark, sf_dir):
 def q_detail_page(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return (
-        docs.filter(text_match("text", ITEM_QUERY))
+        docs.filter(text_match(F.col("text"), ITEM_QUERY))
         .orderBy(F.col("n_chars").desc(), "doc_id")
         .offset(20)
         .limit(20)
-        .select("doc_id", "n_chars", highlight("text", ITEM_QUERY).alias("sku_name"))
+        .select("doc_id", "n_chars", highlight(F.col("text"), ITEM_QUERY).alias("sku_name"))
     )
 
 
@@ -12277,7 +12277,7 @@ def q_detail_snippet(spark, sf_dir):
             for t in toks
         ]
     )
-    m = docs.filter(text_match("text", ITEM_QUERY)).select(
+    m = docs.filter(text_match(F.col("text"), ITEM_QUERY)).select(
         "doc_id", "text", pos.alias("pos")
     )
     start = F.greatest(F.lit(1), F.col("pos") - _SNIP_BEFORE).cast("int")
@@ -13993,7 +13993,7 @@ def x_suffix_recall(spark, sf_dir):
 )
 def q_detail_keyset(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    matched = docs.filter(text_match("text", ITEM_QUERY))
+    matched = docs.filter(text_match(F.col("text"), ITEM_QUERY))
     cursor = (
         matched.orderBy(F.col("n_chars").desc(), "doc_id")
         .offset(19)
@@ -14010,7 +14010,7 @@ def q_detail_keyset(spark, sf_dir):
         .limit(20)
         .select(
             "doc_id", "n_chars",
-            highlight("text", ITEM_QUERY).alias("sku_name"),
+            highlight(F.col("text"), ITEM_QUERY).alias("sku_name"),
         )
     )
 

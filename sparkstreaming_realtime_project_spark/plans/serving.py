@@ -13,16 +13,15 @@ touches one partition, exactly like the reference's daily ES index
 
 Construction rule: a dashboard request that misses the server's stored
 responses builds one of these plans, so building must cost little next
-to the plan's own Spark job(s). Every ``pyspark.sql.functions`` builder
-is a py4j round trip (plus a Python stack walk when PySpark's call-site
-capture is on, which ``session.get_spark`` turns off). So each builder
-writes its filters, group keys and aggregates as parsed SQL fragments,
-the ``dedup.tokens_expr`` idiom: one parse per fragment instead of a
-Column chain. Column names go in only through ``sqltext.plain_ident``
-(backquoted), the date, item and keyset cursor only through
-``sqltext.plain_literal``; when a guard refuses, the builder takes its
-Column-API branch. Both branches build the same expressions over the
-same plan shape, so plans and answers do not depend on the branch.
+to the plan's own Spark job(s). The builders use the Column API, with
+every request value (day, item, keyset cursor) entering as ``F.lit``,
+under a session whose PySpark call-site capture is off
+(``session.get_spark``), which cuts each Column builder's cost about
+5x. Request text never goes through Spark's SQL parser: the parser
+substitutes ``${<conf>}``, ``${system:X}`` and ``${env:X}`` in the text
+before it lexes quotes (``spark.sql.variable.substitute``), so a value
+spliced into a parsed fragment could change the answer or leak a conf,
+a JVM property or an environment variable into an error body.
 """
 
 from __future__ import annotations
@@ -30,40 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import highlight, highlight_sql, text_match, text_match_sql
-from ..operators.sqltext import plain_ident, plain_literal
-
-_LONG_MAX = 2**63 - 1
-
-
-def _idents(*names: str) -> bool:
-    return all(plain_ident(n) for n in names)
-
-
-def _item_on_date_sql(
-    wide: DataFrame, item: str, date: str, name_col: str, date_col: str
-) -> str | None:
-    """``on_date(date, date_col) & text_match(name_col, item)`` as SQL
-    text (the same ``And`` tree), or None when a guard refuses."""
-    match = text_match_sql(wide.sparkSession, name_col, item)
-    if match is None or not (plain_ident(date_col) and plain_literal(date)):
-        return None
-    return f"`{date_col}` = '{date}' AND ({match})"
-
-
-def _matched(wide: DataFrame, item: str, date: str, name_col: str, date_col: str) -> DataFrame:
-    """The rows of ``wide`` on ``date`` whose ``name_col`` matches ``item``."""
-    sql = _item_on_date_sql(wide, item, date, name_col, date_col)
-    if sql is not None:
-        return wide.filter(sql)
-    return wide.filter(on_date(date, date_col) & text_match(F.col(name_col), item))
-
-
-def _highlighted(page: DataFrame, item: str, name_col: str) -> DataFrame:
-    """``page`` with ``name_col`` replaced by its highlight for ``item``."""
-    sql = highlight_sql(page.sparkSession, name_col, item)
-    hl = F.expr(sql) if sql is not None else highlight(F.col(name_col), item)
-    return page.withColumn(name_col, hl)
+from ..functions.text import highlight, text_match
 
 
 def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> DataFrame:
@@ -81,13 +47,6 @@ def dau_realtime(dau: DataFrame, td: str, key: str = "mid") -> DataFrame:
     compares with the string *td* by casting, and a driver-side string
     compare would not.
     """
-    if plain_literal(td) and plain_ident(key):
-        yd = f"date_format(date_sub(to_date('{td}'), 1), 'yyyy-MM-dd')"
-        return (
-            dau.filter(f"`dt` IN ('{td}') OR `dt` = {yd}")
-            .groupBy(F.expr(f"`dt` = '{td}' AS is_td"), "hr")
-            .agg(F.expr(f"count(`{key}`) AS ct"))
-        )
     yd = F.date_format(F.date_sub(F.to_date(F.lit(td)), 1), "yyyy-MM-dd")
     return (
         dau.filter(F.col("dt").isin([td]) | (F.col("dt") == yd))
@@ -122,20 +81,9 @@ def stats_by_item(
     the aggregation — one pass, no post-processing. The (at most three)
     buckets come back unordered: a global sort would add a sampling job
     and a second shuffle, so ``stats_by_item_json`` orders them."""
-    matched = _matched(wide, item_name, date, name_col, date_col)
-    if t not in ("gender", "age"):
-        raise ValueError(f"t must be 'gender' or 'age', got {t!r}")
-    if _idents(gender_col, age_col, amount_col):
-        g, a = f"`{gender_col}`", f"`{age_col}`"
-        grp_sql = (
-            f"CASE WHEN {g} = 'F' THEN '女' WHEN {g} = 'M' THEN '男' ELSE {g} END"
-            if t == "gender"
-            else f"CASE WHEN {a} < 20 THEN '20岁以下' WHEN {a} <= 29 THEN '20岁到29岁'"
-            " ELSE '30岁及30岁以上' END"
-        )
-        return matched.groupBy(F.expr(f"{grp_sql} AS name")).agg(
-            F.expr(f"round(sum(`{amount_col}`), 2) AS value")
-        )
+    matched = wide.filter(
+        on_date(date, date_col) & text_match(F.col(name_col), item_name)
+    )
     if t == "gender":
         grp = (
             F.when(F.col(gender_col) == "F", "女")
@@ -148,6 +96,8 @@ def stats_by_item(
             .when(F.col(age_col) <= 29, "20岁到29岁")
             .otherwise("30岁及30岁以上")
         )
+    else:
+        raise ValueError(f"t must be 'gender' or 'age', got {t!r}")
     return (
         matched.groupBy(grp.alias("name"))
         .agg(F.round(F.sum(amount_col), 2).alias("value"))
@@ -178,13 +128,19 @@ def detail_by_item(
     offset N only sorts the single day's matches (ES has the same
     window limit).
     """
-    matched = _matched(wide, item_name, date, name_col, date_col)
-    total = matched.agg(F.expr("count(1) AS total"))
+    matched = wide.filter(
+        on_date(date, date_col) & text_match(F.col(name_col), item_name)
+    )
+    total = matched.agg(F.count(F.lit(1)).alias("total"))
     ordered = matched.orderBy(
         F.col(order_cols[0]).desc(), *[F.col(c) for c in order_cols[1:]]
     )
-    page = ordered.offset((page_no - 1) * page_size).limit(page_size)
-    return total, _highlighted(page, item_name, name_col)
+    page = (
+        ordered.offset((page_no - 1) * page_size)
+        .limit(page_size)
+        .withColumn(name_col, highlight(F.col(name_col), item_name))
+    )
+    return total, page
 
 
 def detail_by_item_keyset(
@@ -214,23 +170,17 @@ def detail_by_item_keyset(
     `q_detail_keyset` catalog entry (oracle = the OFFSET form).
     """
     ct, did = order_cols
-    matched = _matched(wide, item_name, date, name_col, date_col)
+    matched = wide.filter(
+        on_date(date, date_col) & text_match(F.col(name_col), item_name)
+    )
     if after is not None:
         after_ct, after_id = after
-        if (
-            _idents(ct, did) and isinstance(after_ct, str) and plain_literal(after_ct)
-            and type(after_id) is int and 0 <= after_id <= _LONG_MAX
-        ):
-            # an int literal past the int range is a bigint, as F.lit makes it
-            aid = f"{after_id}L" if after_id >= 2**31 else str(after_id)
-            after_sql = f"'{after_ct}'"
-            matched = matched.filter(
-                f"`{ct}` < {after_sql} OR (`{ct}` = {after_sql} AND `{did}` > {aid})"
-            )
-        else:
-            matched = matched.filter(
-                (F.col(ct) < F.lit(after_ct))
-                | ((F.col(ct) == F.lit(after_ct)) & (F.col(did) > F.lit(after_id)))
-            )
-    page = matched.orderBy(F.col(ct).desc(), F.col(did)).limit(page_size)
-    return _highlighted(page, item_name, name_col)
+        matched = matched.filter(
+            (F.col(ct) < F.lit(after_ct))
+            | ((F.col(ct) == F.lit(after_ct)) & (F.col(did) > F.lit(after_id)))
+        )
+    return (
+        matched.orderBy(F.col(ct).desc(), F.col(did))
+        .limit(page_size)
+        .withColumn(name_col, highlight(F.col(name_col), item_name))
+    )

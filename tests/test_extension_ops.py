@@ -4,7 +4,7 @@ exact baseline."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -633,17 +633,20 @@ def test_sql_literal_seeds_hash_the_same_bytes_on_both_branches(spark):
         spark.conf.set(conf, old)
 
 
-_LITERAL = st.lists(  # quotes, backslashes, escape-looking pairs, any UTF-8 text
-    st.sampled_from(["'", "\\", '"', "\\'", "\\n", "\\u0041"])
+_LITERAL = st.lists(  # quotes, backslashes, escape-looking pairs, variables, any UTF-8 text
+    st.sampled_from(["'", "\\", '"', "\\'", "\\n", "\\u0041", "${spark.app.name}"])
     | st.characters(exclude_categories=("Cs",)),
     max_size=8,
 ).map("".join)
 
 
 @given(seed=_LITERAL, salt=_LITERAL)
+@example(seed="${spark.app.name}", salt="${system:user.name}")
 @settings(max_examples=6, deadline=None)  # 4 Spark jobs per example
 def test_sql_literal_seeds_hash_the_callers_bytes(spark, seed, salt):
-    """Property form of the example above, over any seed and salt."""
+    """Property form of the example above, over any seed and salt. A
+    ``${...}`` seed or salt hashes as written: the parser's variable
+    substitution must not rewrite it into a conf or JVM property."""
     import hashlib
 
     from sparkstreaming_realtime_project_spark.operators import sketches as sk
@@ -664,52 +667,6 @@ def test_sql_literal_seeds_hash_the_callers_bytes(spark, seed, salt):
                 sk.cms_sketch(df.withColumnRenamed("k", "k-1"), "k-1", d=4, w=64, salt=salt)
             )
             assert sorted(map(tuple, both.collect())) == sorted(cells * 2), raw
-    finally:
-        spark.conf.set(conf, old)
-
-
-_QUERY = st.lists(  # quotes, backslashes, regex metacharacters, CJK, Latin words, blanks
-    st.sampled_from(["'", "\\", "\\b", ".", "*", "(", ")", "[", "$1", "|", "+", "?"])
-    | st.sampled_from(["小", "米", "手机", "δδ", "Spark", "join", "a.b", " ", "\t"]),
-    max_size=6,
-).map("".join) | st.sampled_from(["", " ", "\t \n"])
-
-
-@given(query=_QUERY)
-@settings(max_examples=8, deadline=None)  # 4 Spark jobs per example
-def test_text_builders_parse_to_the_column_branch(spark, query):
-    """text_match/highlight over a column NAME build from parsed SQL when
-    the query passes the literal guard, else from Columns; either way
-    they select and render the rows the Column branch does, whether or
-    not the parser unescapes backslashes (escapedStringLiterals)."""
-    from sparkstreaming_realtime_project_spark.functions import text as T
-    from sparkstreaming_realtime_project_spark.operators.sqltext import plain_literal
-
-    texts = [
-        "小米 手机 12", "Spark JOIN demo", "a.b (c) $1 x|y+z? [q]", "it's \\b",
-        "δδ Δδ", query, f"pre {query} post", None,
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "s string")
-    conf = "spark.sql.parser.escapedStringLiterals"
-    old = spark.conf.get(conf)
-    try:
-        for raw in ("false", "true"):
-            spark.conf.set(conf, raw)
-            parsed = T.text_match_sql(spark, "s", query) is not None
-            assert parsed == plain_literal(query), (raw, query)
-            got, want = (
-                sorted(
-                    df.filter(match("s", query))
-                    .select(hl("s", query).alias("h"))
-                    .collect(),
-                    key=str,
-                )
-                for match, hl in (
-                    (T.text_match, T.highlight),
-                    (lambda c, q: T.text_match(F.col(c), q), lambda c, q: T.highlight(F.col(c), q)),
-                )
-            )
-            assert got == want, (raw, query)
     finally:
         spark.conf.set(conf, old)
 

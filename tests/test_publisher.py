@@ -529,6 +529,64 @@ def test_http_paging_params_out_of_range_are_400s(http_base):
     assert status == 200 and [d["detail_id"] for d in out["detail"]] == [4, 2, 1]
 
 
+def test_http_params_are_not_variable_substituted(spark, dau_table, wide_table):
+    """Spark's parser rewrites ``${<conf>}``, ``${system:X}`` and
+    ``${env:X}`` in SQL text (spark.sql.variable.substitute, on by
+    default), quotes or not. A td, date, itemName or afterTime spelled
+    that way must stay the literal text: every route answers as it does
+    with substitution off, although the referenced conf and system
+    property hold a real item, day and cursor."""
+    from urllib.parse import quote
+
+    from sparkstreaming_realtime_project_spark.http_api import (
+        publisher_server,
+        serve_in_background,
+    )
+
+    canaries = {"item": "小米", "day": "2024-01-02", "cursor": "2024-01-02 12:00:00"}
+    one = quote("小米")
+    paths = []
+    for ref in ("spark.publisher.{}", "system:publisher.{}"):
+        v = {k: quote("${" + ref.format(k) + "}") for k in canaries}
+        paths += [
+            f"/dauRealtime?td={v['day']}",
+            f"/statsByItem?itemName={v['item']}&date=2024-01-02&t=gender",
+            f"/statsByItem?itemName={one}&date={v['day']}&t=age",
+            f"/detailByItem?date={v['day']}&itemName={one}&pageSize=2",
+            f"/detailByItem?date=2024-01-02&itemName={v['item']}&pageSize=2",
+            f"/detailByItem?date=2024-01-02&itemName={one}&afterTime={v['cursor']}&afterId=2",
+            f"/detailByItem?date={v['day']}&itemName={one}&afterTime=&afterId=&pageSize=2",
+        ]
+
+    def answers(substitute: str):
+        spark.conf.set("spark.sql.variable.substitute", substitute)
+        server = publisher_server(dau_table, wide_table)  # no stored answers
+        serve_in_background(server)
+        host, port = server.server_address
+        try:
+            return _answers(f"http://{host}:{port}", paths)
+        finally:
+            server.shutdown()
+            server.server_close()
+
+    system = spark._jvm.java.lang.System
+    old = spark.conf.get("spark.sql.variable.substitute")
+    try:
+        for k, value in canaries.items():
+            spark.conf.set(f"spark.publisher.{k}", value)
+            system.setProperty(f"publisher.{k}", value)
+        spark.conf.set("spark.sql.variable.substitute", "true")
+        assert spark.sql("SELECT '${system:publisher.item}' AS v").first().v == "小米"
+        got, want = answers("true"), answers("false")
+    finally:
+        spark.conf.set("spark.sql.variable.substitute", old)
+        for k in canaries:
+            spark.conf.unset(f"spark.publisher.{k}")
+            system.clearProperty(f"publisher.{k}")
+    assert got == want
+    assert [a[1] for a in want] == [500, 200, 200, 200, 200, 200, 200] * 2
+
+
 def test_keyset_full_walk_reconstructs_total_order(wide_table, spark):
     """Walking keyset pages to exhaustion must reproduce EXACTLY the
     full (create_time DESC, detail_id ASC) match sequence — no row
@@ -572,36 +630,6 @@ def test_stats_by_item_runs_two_jobs(spark, wide_table):
         {"name": "30岁及30岁以上", "value": 50.0},
     ]
     assert jobs <= 2, jobs
-
-
-def test_serving_builders_parse_to_the_column_branch_plans(
-    spark, dau_table, wide_table, monkeypatch
-):
-    """Every serving builder given plain names and literals builds from
-    parsed SQL, and its plans are the ones its Column-API branch (taken
-    when the literal guard refuses) builds for the same arguments."""
-    from sparkstreaming_realtime_project_spark.functions import text
-    from sparkstreaming_realtime_project_spark.plans import serving
-
-    cursor = "2024-01-02 11:00:00"
-
-    def build():
-        return [
-            serving.dau_realtime(dau_table, "2024-01-02"),
-            serving.stats_by_item(wide_table, "小米 手机", "2024-01-02", "gender"),
-            serving.stats_by_item(wide_table, "小米", "2024-01-02", "age"),
-            *serving.detail_by_item(wide_table, "2024-01-02", "小米", 2, 2),
-            serving.detail_by_item_keyset(wide_table, "2024-01-02", "小米", after=(cursor, 2)),
-            serving.detail_by_item_keyset(wide_table, "2024-01-02", "小米", after=(cursor, 2**40)),
-        ]
-
-    parsed = build()
-    with monkeypatch.context() as m:
-        for mod in (serving, text):
-            m.setattr(mod, "plain_literal", lambda _: False)
-        column = build()
-    assert [p.sameSemantics(c) for p, c in zip(parsed, column)] == [True] * len(parsed)
-    assert [p.collect() for p in parsed] == [c.collect() for c in column]
 
 
 # --- serving cache: the server's per-date slices ----------------------------
